@@ -430,8 +430,7 @@ object Bench {
     lpaIncrSpeedup.foreach(x => md ++=
       (f"- INCREMENTAL LPA (persistent per-(dst,label) counts + ±delta%n" +
         f"  exchange below the active·2 ≤ V gate) vs full recount every%n" +
-        f"  superstep, same kernel: $x%.2f× end-to-end; the win concentrates%n" +
-        "  in small-frontier supersteps (tail iters drop ~5×)\n"))
+        f"  superstep, same kernel: $x%.2f× end-to-end\n"))
     convOpt.foreach { case (it, sec, nr) => md ++=
       (f"- iterations to convergence (per-vertex |Δrank| ≤ 1e-6): $it%n" +
         f"  ($sec%.1f s loop at $hiCores cores on the $nr-repo E/16 table;%n" +

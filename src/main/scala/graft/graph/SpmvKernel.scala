@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructFiel
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 import graft.ckpt.IterMetrics
+import graft.graph.TilePacks._
 
 /** Tile-compiled kernel fast path for the superstep loop — the "drive
   * the loop below Catalyst" half of the engine, generalized to the
@@ -84,54 +85,8 @@ import graft.ckpt.IterMetrics
   */
 object SpmvKernel {
 
-  /** Minimal open-addressing Long→Int map (linear probing, splitmix
-    * finalizer) for the compile phase: a binarySearch per edge was the
-    * compile bottleneck (460M edges × ~20 probes); this is O(1) with
-    * two primitive arrays and no boxing. Build-time only. */
-  private final class LongIntMap(expected: Int) {
-    private val cap = Integer.highestOneBit(math.max(16, expected * 2) * 2 - 1)
-    private val mask = cap - 1
-    private val keys = new Array[Long](cap)
-    private val vals = new Array[Int](cap)
-    private val used = new Array[Boolean](cap)
-    private def idx(k: Long): Int = {
-      var h = k * -7046029254386353131L
-      h ^= h >>> 32
-      (h & mask).toInt
-    }
-    def put(k: Long, v: Int): Unit = {
-      var i = idx(k)
-      while (used(i) && keys(i) != k) i = (i + 1) & mask
-      keys(i) = k; vals(i) = v; used(i) = true
-    }
-    /** Probing stops at the first never-used slot (no deletes exist),
-      * so an absent key FAILS FAST instead of spinning — reachable
-      * from user input via checkpoint resume (stateFromDF): a snapshot
-      * from a different graph carries vids this compile never slotted. */
-    def get(k: Long): Int = {
-      var i = idx(k)
-      while (used(i)) {
-        if (keys(i) == k) return vals(i)
-        i = (i + 1) & mask
-      }
-      throw new IllegalArgumentException(
-        s"vid $k is not present in the compiled graph " +
-          "(resuming from a checkpoint of a different edge table?)")
-    }
-    /** Non-throwing probe for the salted compile path, where a tile
-      * source may legitimately be absent (a mirror). */
-    def getOrElse(k: Long, dflt: Int): Int = {
-      var i = idx(k)
-      while (used(i)) {
-        if (keys(i) == k) return vals(i)
-        i = (i + 1) & mask
-      }
-      dflt
-    }
-  }
-
   /** splitmix64 finalizer — the deterministic spread for salted-hub
-    * chunk routing (public-domain constant, same family as LongIntMap's
+    * chunk routing (public-domain constant, same family as LongTable's
     * probe hash). */
   private def mix(z0: Long): Long = {
     var z = z0 + 0x9E3779B97F4A7C15L
@@ -171,47 +126,31 @@ object SpmvKernel {
   private[graph] final case class EdgeChunk(
       srcs: Array[Long], dsts: Array[Long], ws: Array[Double]) // ws null → unweighted
 
-  /** Open-addressing Long→Long counter with growth — compile-phase
-    * degree/distinct bookkeeping (boxed HashMap was measured as the
-    * dominant constant in the old per-edge tuple shuffles). */
-  private final class LongCounter(initialCap: Int) {
-    private var cap = Integer.highestOneBit(math.max(16, initialCap) * 2 - 1)
-    private var mask = cap - 1
-    private var keys = new Array[Long](cap)
-    private var vals = new Array[Long](cap)
-    private var used = new Array[Boolean](cap)
-    private var n = 0
-    private def idx(k: Long): Int = {
-      var h = k * -7046029254386353131L
-      h ^= h >>> 32
-      (h & mask).toInt
+  /** P per-target EdgeChunk builders — the one bucketing loop of the
+    * compile scan, the hub re-route and compilePartition's
+    * per-destination split. `drain(q)` releases q's builders as it hands
+    * out the chunk: result() copies, so holding a drained builder
+    * doubles the chunk's bytes; across all P builders that peak OOM'd an
+    * 8-partition compile of the 460M-edge table (each partition stages
+    * E/8 edges through these buffers). */
+  private final class ChunkBuilder(P: Int, weighted: Boolean) {
+    private val bS = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
+    private val bD = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
+    private val bW = if (weighted) Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofDouble) else null
+    def add(q: Int, s: Long, d: Long, w: Double): Unit = {
+      bS(q) += s; bD(q) += d
+      if (bW != null) bW(q) += w
     }
-    private def insertRaw(k: Long, v: Long): Unit = {
-      var i = idx(k)
-      while (used(i) && keys(i) != k) i = (i + 1) & mask
-      if (!used(i)) { used(i) = true; keys(i) = k; n += 1 }
-      vals(i) += v
+    /** q's chunk, or null when no edge went to q. */
+    def drain(q: Int): EdgeChunk = {
+      val ss = bS(q).result(); bS(q) = null
+      val dd = bD(q).result(); bD(q) = null
+      val ww = if (bW != null) { val w = bW(q).result(); bW(q) = null; w } else null
+      if (ss.isEmpty) null else EdgeChunk(ss, dd, ww)
     }
-    private def grow(): Unit = {
-      val ok = keys; val ov = vals; val ou = used
-      cap <<= 1; mask = cap - 1
-      keys = new Array[Long](cap); vals = new Array[Long](cap)
-      used = new Array[Boolean](cap); n = 0
-      var i = 0
-      while (i < ok.length) { if (ou(i)) insertRaw(ok(i), ov(i)); i += 1 }
-    }
-    def add(k: Long, d: Long): Unit = {
-      if ((n + 1) * 3 >= cap * 2) grow()
-      insertRaw(k, d)
-    }
-    def foreachEntry(f: (Long, Long) => Unit): Unit = {
-      var i = 0
-      while (i < cap) { if (used(i)) f(keys(i), vals(i)); i += 1 }
-    }
-    def entriesAbove(floor: Long): List[(Long, Long)] = {
-      var out = List.empty[(Long, Long)]
-      foreachEntry((k, v) => if (v > floor) out = (k, v) :: out)
-      out
+    def chunks: Iterator[(Int, EdgeChunk)] = Iterator.range(0, P).flatMap { q =>
+      val c = drain(q)
+      if (c == null) Iterator.empty else Iterator.single((q, c))
     }
   }
 
@@ -260,15 +199,15 @@ object SpmvKernel {
     * vp:711-784), and the partition's changed count, read back
     * driver-side through `sc.runJob` for an exactly-once convergence
     * count. `counts` is the LPA mode's persistent per-(slot, label)
-    * multiset (null for every other program, and null on the state a
-    * FULL LPA superstep consumes — fresh init or checkpoint resume). */
+    * count store (null for every other program, and on fresh init or
+    * checkpoint resume, where the next LPA superstep runs FULL). */
   private[graph] final case class PartState(
       values: Array[Double],
       active: Array[Long],
       changed: Long,
-      counts: SlotMultiset = null)
+      counts: SlotCounts = null)
 
-  private def bitGet(bits: Array[Long], i: Int): Boolean =
+  private[graph] def bitGet(bits: Array[Long], i: Int): Boolean =
     (bits(i >>> 6) & (1L << (i & 63))) != 0
 
   /** Combined (owned ++ mirror) views of a partition's superstep
@@ -305,13 +244,6 @@ object SpmvKernel {
 
   final case class KernelResult(state: DataFrame, iterations: Int,
                                 metrics: Seq[IterMetrics], checksum: Double)
-
-  // pack formats for the per-tile accumulator exchange
-  private final val FmtDense = 0
-  private final val FmtSparse = 1
-  // LPA label-count triples (dstLocal, label, count) — the mode
-  // combiner's partial aggregate, which is a multiset not a scalar
-  private final val FmtLabels = 2
 
   /** Per-row edge-combine into a dense accumulator — the specialized
     * inner loops (one per combiner × edge-op × weightedness) the
@@ -500,14 +432,17 @@ object SpmvKernel {
       kernel.zipPartitions(keyed, preservesPartitioning = false) { (kIt, rIt) =>
         val kp = kIt.next()
         val n = kp.vids.length
-        val slot = new LongIntMap(n)
-        var i = 0
-        while (i < n) { slot.put(kp.vids(i), i); i += 1 }
+        val slot = LongTable.positions(kp.vids)
         val values = new Array[Double](n * width)
         val bits = new Array[Long]((n + 63) >>> 6)
         var changed = 0L
         rIt.foreach { case (v, (vs, act)) =>
-          val s = slot.get(v)
+          // reachable from user input: a snapshot of a different graph
+          // carries vids this compile never slotted
+          val s = slot.get(v, -1L).toInt
+          if (s < 0) throw new IllegalArgumentException(
+            s"vid $v is not present in the compiled graph " +
+              "(resuming from a checkpoint of a different edge table?)")
           System.arraycopy(vs, 0, values, s * width, width)
           if (act) { bits(s >>> 6) |= 1L << (s & 63); changed += 1 }
         }
@@ -821,21 +756,30 @@ object SpmvKernel {
       * not fit the KernelProgram Sum/Min contract; it gets its own
       * stage pair over the same tiles:
       *
-      *  - the FIRST superstep (fresh init or checkpoint resume)
-      *    pre-aggregates each tile into (dstLocal, label, count)
-      *    triples — the analog of Catalyst's map-side partial count —
-      *    and stage 2 builds a PERSISTENT per-(slot, label) count
-      *    table ([[LabelTable]]) while arg-maxing every vertex;
-      *  - every LATER superstep is INCREMENTAL: only sources whose
-      *    label changed last superstep ship (+newLabel, −prevLabel)
-      *    deltas over their out-edges, the table absorbs them, and
-      *    only touched destinations re-arg-max — O(changed-edge) work
-      *    and exchange instead of O(E), shrinking with the frontier
-      *    exactly like the scalar SpMSpV mode. The table always
-      *    equals the full recount (every −1 removes a contribution a
-      *    prior +1 added), and an untouched destination's mode cannot
-      *    have moved, so labels AND iteration counts are identical to
-      *    the full pass (KernelSpec asserts both vs the engine).
+      *  - stage 1 pre-aggregates each tile into (dstLocal, label,
+      *    ±count) triples ([[LabelCounts.packLabelDeltas]]) — the
+      *    analog of Catalyst's map-side partial count;
+      *  - stage 2 buckets the incoming triples by slot and merges them
+      *    into a PERSISTENT per-(slot, label) count store
+      *    ([[SlotCounts]]), then re-arg-maxes every slot it fed.
+      *
+      * A superstep runs FULL or INCREMENTAL through that one path. A
+      * full superstep ships +1 per edge for every source's label and
+      * merges from empty counts. An incremental one ships (+newLabel,
+      * −prevLabel) only from sources whose label changed last
+      * superstep and merges into the previous counts, so only touched
+      * destinations re-arg-max — O(changed-edge) work and exchange
+      * instead of O(E), shrinking with the frontier exactly like the
+      * scalar SpMSpV mode. The counts always equal the full recount
+      * (every −1 removes a contribution a prior +1 added), and an
+      * untouched destination's mode cannot have moved, so labels AND
+      * iteration counts are identical either way. Incremental needs
+      * the previous superstep's counts (so never right after init or
+      * resume) and ships TWO contributions per changed-source edge
+      * where full ships one per edge — cheaper only once under half
+      * the vertices still change, hence the active·2 ≤ V gate.
+      * `incremental = false` forces full supersteps (the A/B twin the
+      * bench's full-only row and the parity spec use).
       *
       * The arg-max uses the SAME deterministic tie-break as
       * algos.LabelPropagation (max count, then min label); counts are
@@ -849,7 +793,8 @@ object SpmvKernel {
       * shape first (GraphShaping — algos.LabelPropagation.run's
       * shaping), or use LabelPropagation.runKernel which does both. */
     def lpa(maxIters: Int, lineageTruncateEvery: Int = 20,
-            ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
+            ckpt: Option[graft.ckpt.CheckpointManager] = None,
+            incremental: Boolean = true): KernelResult = {
       val P = parts
       val cols = Seq("label")
       // Internal state is TWO doubles per slot: [label, prevLabel].
@@ -900,44 +845,25 @@ object SpmvKernel {
         if (init0._2 != null) sc.broadcast(init0._2) else null
       var prev: RDD[PartState] = null
       var iter = resumed.map(_._1).getOrElse(0)
-      // A superstep runs FULL (every source ships its tile's complete
-      // label counts; the destination side rebuilds the persistent
-      // LabelTable from scratch and arg-maxes every fed vertex —
-      // identical work to the pre-incremental loop) or INCREMENTAL
-      // (only sources that changed last superstep ship (dst, newLabel,
-      // +1) / (dst, prevLabel, −1) deltas, the table absorbs them, and
-      // only touched destinations re-arg-max — O(changed-edge) work).
-      // Labels and iteration counts are provably identical either way:
-      // the table always equals the full per-(dst,label) recount, and
-      // an untouched destination's mode cannot have moved. Mode choice
-      // per superstep: incremental needs a table from the previous
-      // superstep (so never right after init/resume) and ships TWO
-      // contributions per changed-source edge where full ships one per
-      // edge — cheaper only once under half the vertices still change,
-      // hence the active·2 ≤ V gate (GRAFT_LPA_FULL or the
-      // graft.lpa.incremental=false session conf force full-only —
-      // the A/B lever the BENCH numbers and the parity spec use).
-      val incrEnabled = !sys.env.contains("GRAFT_LPA_FULL") &&
-        spark.conf.get("graft.lpa.incremental", "true") != "false"
       var haveCounts = false
 
       while (active > 0 && iter < maxIters) {
         val t0 = System.nanoTime()
         val hubBcLocal = hubBc
-        val incremental = haveCounts && incrEnabled && active * 2 <= numVertices
+        val incr = haveCounts && incremental && active * 2 <= numVertices
         val msgs: RDD[((Int, Int), Array[Byte])] =
           kernel.zipPartitions(state, preservesPartitioning = false) { (kIt, sIt) =>
             val kp = kIt.next(); val ps = sIt.next()
             val p = TaskContext.getPartitionId()
             val (values, act, _) = combinedInputs(kp, ps, 2,
               if (hubBcLocal == null) null else hubBcLocal.value)
+            val rows = if (incr) act else null
+            val table = new LongTable(64)
             Iterator.range(0, P).flatMap { q =>
               val t = kp.tiles(q)
               if (t == null) Iterator.empty
               else {
-                val out =
-                  if (incremental) packLabelDeltas(t, values, act)
-                  else packLabelCounts(t, values)
+                val out = LabelCounts.packLabelDeltas(t, values, rows, table)
                 if (out == null) Iterator.empty else Iterator.single(((q, p), out))
               }
             }
@@ -947,90 +873,33 @@ object SpmvKernel {
           preservesPartitioning = false) { (mIt, kIt, sIt) =>
           val kp = kIt.next(); val old = sIt.next()
           val n = kp.vids.length
-          // Copy-on-write at SLOT granularity: a retried/recomputed
-          // task must see the OLD counts untouched (same contract as
-          // the values clone). The incremental pass clones only the
-          // per-slot POINTER arrays (O(V/P)) and rebuilds the inner
-          // arrays of touched slots (O(changed)) — never an
-          // O(table-size) pool copy, which would put a term
-          // proportional to E back into every small-frontier superstep.
-          // buffer this partition's packs (already byte arrays; the
-          // absorb holds them all transitively anyway) so the pooled
-          // table can be pre-sized to the exact incoming triple count
-          val packs = mIt.toArray
-          var totalNe = 0L
-          var pi = 0
-          while (pi < packs.length) {
-            totalNe += java.nio.ByteBuffer.wrap(packs(pi)._2).getInt(4)
-            pi += 1
-          }
-          val expected = math.min(totalNe, Int.MaxValue.toLong).toInt
-          val full = if (incremental) null else new LabelTable(n, expected)
-          val snap = if (incremental) old.counts.toSlotCounts else null
-          // incremental deltas land in their own small pooled table
-          // first, then merge per touched slot
-          val into = if (incremental) new LabelTable(n, expected) else full
+          val fed = LabelCounts.bucketBySlot(n, mIt, kp.inSlots)
+          val base = if (incr) old.counts else SlotCounts.empty(n)
+          val counts = base.merged(fed, new LongTable(64))
+          // arg-max every fed slot with the deterministic tie-break (max
+          // count, min label). An unfed slot's mode is unchanged by
+          // construction, and a slot with no live label keeps its label,
+          // exactly like the Engine's left-outer apply.
           val nv = old.values.clone()
           val bits = new Array[Long]((n + 63) >>> 6)
           var changed = 0L
-          // absorb every incoming tile's (slot, label, ±count) triples;
-          // the touched list drives the incremental merge+arg-max pass
-          val touched = new scala.collection.mutable.ArrayBuilder.ofInt
-          val seen = if (incremental) new Array[Boolean](n) else null
-          packs.foreach { case ((_, p), bytes) =>
-            val slots = kp.inSlots(p)
-            val bb = java.nio.ByteBuffer.wrap(bytes)
-            val ne = bb.getInt(4)
-            bb.position(8)
-            val ib = bb.asIntBuffer()
-            bb.position(8 + 4 * ne)
-            val db = bb.asDoubleBuffer()
-            bb.position(8 + 12 * ne)
-            val cb = bb.asIntBuffer()
-            var t = 0
-            while (t < ne) {
-              val slot = slots(ib.get(t))
-              into.add(slot, java.lang.Double.doubleToRawLongBits(db.get(t)), cb.get(t))
-              if (seen != null && !seen(slot)) { seen(slot) = true; touched += slot }
-              t += 1
-            }
-          }
-          // arg-max with the deterministic tie-break (max count, min
-          // label): full mode visits every slot with in-messages, the
-          // incremental mode only slots whose counts moved — an
-          // untouched slot's mode is unchanged by construction. Slots
-          // with no triples keep their label, exactly like the
-          // Engine's left-outer apply.
-          val mult: SlotMultiset = if (incremental) snap else full
-          def applySlot(slot: Int): Unit = {
-            val bestBits = mult.argmax(slot)
-            if (bestBits != Long.MinValue) {
-              val best = java.lang.Double.longBitsToDouble(bestBits)
-              if (best != nv(slot * 2)) {
-                nv(slot * 2 + 1) = nv(slot * 2)
-                nv(slot * 2) = best
-                bits(slot >>> 6) |= 1L << (slot & 63)
-                changed += 1
+          var slot = 0
+          while (slot < n) {
+            if (fed.offsets(slot + 1) > fed.offsets(slot)) {
+              val bestBits = counts.argmax(slot)
+              if (bestBits != Long.MinValue) {
+                val best = java.lang.Double.longBitsToDouble(bestBits)
+                if (best != nv(slot * 2)) {
+                  nv(slot * 2 + 1) = nv(slot * 2)
+                  nv(slot * 2) = best
+                  bits(slot >>> 6) |= 1L << (slot & 63)
+                  changed += 1
+                }
               }
             }
+            slot += 1
           }
-          if (incremental) {
-            val ts = touched.result()
-            val counter = new LabelCounter
-            var j = 0
-            while (j < ts.length) {
-              snap.mergeSlot(ts(j), into, counter)
-              applySlot(ts(j))
-              j += 1
-            }
-          } else {
-            var slot = 0
-            while (slot < n) {
-              if (full.nonEmptyAt(slot)) applySlot(slot)
-              slot += 1
-            }
-          }
-          Iterator.single(PartState(nv, bits, changed, mult))
+          Iterator.single(PartState(nv, bits, changed, counts))
         }.persist(StorageLevel.MEMORY_AND_DISK)
 
         if (lineageTruncateEvery > 0 && (iter + 1) % lineageTruncateEvery == 0)
@@ -1081,7 +950,314 @@ object SpmvKernel {
     def unpersist(): Unit = kernel.unpersist(false)
   }
 
-  private def packDense(acc: Array[Double]): Array[Byte] = {
+  /** Compile an edge table (src, dst[, w]) into the tiled kernel form.
+    * Three one-time shuffles: edges→hash(src), vertex-universe dedup,
+    * and the tile-destination-list exchange that precomputes every
+    * (p,q) slot mapping (+ one more, hub-edge re-routing, ONLY when a
+    * hub breaches the salting chunk). Deterministic: tile edges sorted
+    * (src, dst), tile destination lists sorted, so recompiles are
+    * bit-identical.
+    *
+    * `hubChunk` caps how many of one source's edges may concentrate in
+    * a single partition before the source row is SALTED — split across
+    * partitions in chunks keyed by hash(dst), the same rationale as
+    * the DataFrame engine's salted CSR (Adjacency.scala:89-105):
+    * message duplication is correct for gather, and stage 2 already
+    * merges by destination. 0 (the default) = auto:
+    * max(65536, E/(4·parts)) — only a vertex owning more than a
+    * quarter-partition of edges triggers, so ordinary graphs compile
+    * byte-identically to the unsalted layout. Receiving partitions get
+    * MIRROR source slots whose state is refreshed each superstep from
+    * a hub broadcast harvested by the convergence-count job (O(#hubs)
+    * ≤ 4·parts values — driver traffic in the kilobytes). */
+  def compile(edges: DataFrame, parts: Int, hubChunk: Long = 0L): CompiledGraph = {
+    val spark = edges.sparkSession
+    val weighted = edges.columns.contains("w")
+    val hp = new HashPartitioner(parts)
+    val idPart = new IdPartitioner(parts)
+    val P = parts
+    val wtd = weighted
+
+    // InternalRow scan (no per-row Row allocation) bucketed map-side
+    // into PACKED per-target EdgeChunks: the old per-edge boxed-tuple
+    // partitionBy was the compile's dominant cost (profiled 2.4 s of a
+    // 7.2 s compile at 28.8M edges/32c under Kryo, worse under the SQL
+    // session's JavaSerializer); the chunk exchange moves the same
+    // bytes as ~P² primitive-array records.
+    val scan =
+      (if (weighted)
+        edges.selectExpr("CAST(src AS LONG)", "CAST(dst AS LONG)",
+          "CAST(COALESCE(w, 1.0) AS DOUBLE)")
+      else
+        edges.selectExpr("CAST(src AS LONG)", "CAST(dst AS LONG)"))
+        .queryExecution.toRdd
+    val eParts: RDD[(Int, EdgeChunk)] = scan.mapPartitions { it =>
+      val cb = new ChunkBuilder(P, wtd)
+      it.foreach { ir =>
+        val s = ir.getLong(0)
+        cb.add(hp.getPartition(s), s, ir.getLong(1), if (wtd) ir.getDouble(2) else 0.0)
+      }
+      cb.chunks
+    }.partitionBy(idPart).persist(StorageLevel.MEMORY_AND_DISK)
+
+    // hub detection + total edge count in ONE pass (which also
+    // materializes the chunk cache). Per-source counts are exact
+    // per-partition out-degrees here because un-salted routing is
+    // hash(src) — every source's edges sit wholly in one partition.
+    // The old separate degree reduceByKey + vertex reduceByKey tuple
+    // shuffles (profiled 0.6 s + 4.4 s at 28.8M/32c) are gone: degrees
+    // are recomputed partition-locally in compilePartition, and the
+    // vertex universe rides a packed distinct-vid chunk exchange below.
+    val floor = if (hubChunk > 0) hubChunk else 65536L
+    val (totalE, hubCands) = eParts.mapPartitions { it =>
+      var n = 0L
+      val cnt = new LongTable(1 << 12)
+      it.foreach { case (_, c) =>
+        var i = 0
+        n += c.srcs.length
+        while (i < c.srcs.length) { cnt.add(c.srcs(i), 1L); i += 1 }
+      }
+      Iterator.single((n, Iterator.range(0, cnt.size)
+        .filter(j => cnt.valueAt(j) > floor).map(j => (cnt.keyAt(j), cnt.valueAt(j))).toList))
+    }.fold((0L, List.empty[(Long, Long)])) {
+      case ((n1, l1), (n2, l2)) => (n1 + n2, l1 ::: l2)
+    }
+    val chunk =
+      if (hubChunk > 0) hubChunk
+      else math.max(65536L, totalE / (4L * parts))
+    val hubMap: Map[Long, Long] = hubCands.filter(_._2 > chunk).toMap
+
+    // distinct-vid chunks to each vid's owner partition (replaces the
+    // verts reduceByKey): per partition one dedup set over its chunk
+    // cache, then one packed array per owner
+    val vChunks: RDD[(Int, Array[Long])] = eParts.mapPartitions { it =>
+      val set = new LongTable(1 << 12)
+      it.foreach { case (_, c) =>
+        var i = 0
+        while (i < c.srcs.length) { set.put(c.srcs(i), 0L); set.put(c.dsts(i), 0L); i += 1 }
+      }
+      val bufs = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
+      var j = 0
+      while (j < set.size) { val v = set.keyAt(j); bufs(hp.getPartition(v)) += v; j += 1 }
+      Iterator.range(0, P).flatMap { q =>
+        val a = bufs(q).result()
+        if (a.isEmpty) Iterator.empty else Iterator.single((q, a))
+      }
+    }.partitionBy(idPart)
+
+    // hub edges re-route to a salted partition: chunk k = hash(dst) %
+    // nChunks, target = hash(src, k) — deterministic, so recompiles
+    // stay bit-identical. Non-hub graphs skip the extra shuffle.
+    val eTiles: RDD[(Int, EdgeChunk)] =
+      if (hubMap.isEmpty) eParts
+      else {
+        val hm = hubMap // bounded: ≤ E/chunk entries (≤ 4·parts in auto)
+        val ck = chunk
+        eParts.mapPartitions { it =>
+          val cb = new ChunkBuilder(P, wtd)
+          it.foreach { case (_, c) =>
+            var i = 0
+            while (i < c.srcs.length) {
+              val s = c.srcs(i); val d = c.dsts(i)
+              val target = hm.get(s) match {
+                case Some(dg) =>
+                  val nc = math.min((dg + ck - 1) / ck, P.toLong).toInt
+                  val k = ((mix(d) >>> 33) % nc).toInt
+                  ((mix(s + 31L * (k + 1)) >>> 33) % P).toInt
+                case None => hp.getPartition(s)
+              }
+              cb.add(target, s, d, if (wtd) c.ws(i) else 0.0)
+              i += 1
+            }
+          }
+          cb.chunks
+        }.partitionBy(idPart)
+      }
+
+    // No materializing count() here: the nV/nE fold job below computes
+    // `compiled` in its meta shuffle-map stage, which caches these
+    // partitions as a side effect — one job fewer per compile.
+    val compiled: RDD[(KernelPartition, Array[Array[Long]])] =
+      vChunks.zipPartitions(eTiles, preservesPartitioning = true) { (vIt, eIt) =>
+        Iterator.single(compilePartition(parts, hp, hubMap, vIt, eIt, weighted))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+
+    // one-time exchange of each tile's (sorted) destination-id list to
+    // its owner partition → per-(p,q) slot mappings
+    val meta: RDD[(Int, (Int, Array[Long]))] = compiled
+      .mapPartitionsWithIndex { (p, it) =>
+        val (_, dstVids) = it.next()
+        Iterator.range(0, parts).flatMap(q =>
+          if (dstVids(q) == null) Iterator.empty
+          else Iterator.single((q, (p, dstVids(q)))))
+      }.partitionBy(idPart)
+
+    val kernel: RDD[KernelPartition] = compiled.zipPartitions(meta,
+      preservesPartitioning = false) { (cIt, mIt) =>
+      val (kp, _) = cIt.next()
+      val vidSlot = LongTable.positions(kp.vids)
+      val inSlots = new Array[Array[Int]](parts)
+      mIt.foreach { case (_, (p, dstVids)) =>
+        val arr = new Array[Int](dstVids.length)
+        var i = 0
+        while (i < dstVids.length) {
+          arr(i) = vidSlot.get(dstVids(i), -1L).toInt
+          i += 1
+        }
+        inSlots(p) = arr
+      }
+      Iterator.single(kp.copy(inSlots = inSlots))
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+
+    val (nV, nE, nMir) = kernel
+      .map(kp => (kp.vids.length.toLong,
+        kp.tiles.map(t => if (t == null) 0L else t.nEdges.toLong).sum,
+        kp.mirrorVids.length.toLong))
+      .fold((0L, 0L, 0L)) { case ((v1, e1, m1), (v2, e2, m2)) =>
+        (v1 + v2, e1 + e2, m1 + m2) }
+    eParts.unpersist(false) // kernel + compiled are materialized now
+    compiled.unpersist(false)
+    new CompiledGraph(kernel, spark, parts, nV, nE, weighted, nMir)
+  }
+
+  private def compilePartition(
+      P: Int, hp: HashPartitioner, hubMap: Map[Long, Long],
+      vIt: Iterator[(Int, Array[Long])], eIt: Iterator[(Int, EdgeChunk)],
+      weighted: Boolean): (KernelPartition, Array[Array[Long]]) = {
+    // owned vid universe: merge the per-sender distinct-vid chunks,
+    // sort, dedup in place
+    val vb = new scala.collection.mutable.ArrayBuilder.ofLong
+    vIt.foreach { case (_, a) => vb ++= a }
+    val vids = sortedDistinct(vb.result())
+    val nOwned = vids.length
+    val vidSlot = LongTable.positions(vids)
+    val deg = new Array[Long](nOwned)
+
+    // bucket edges by destination partition, counting owned out-degrees
+    // as they stream by (un-salted sources are wholly local, so the
+    // local count IS the out-degree; salted hubs are overridden from
+    // hubMap below) and collecting the sources a salted compile routed
+    // here that this partition does NOT own
+    val cb = new ChunkBuilder(P, weighted)
+    val mirrorB = new scala.collection.mutable.ArrayBuilder.ofLong
+    eIt.foreach { case (_, c) =>
+      var i = 0
+      while (i < c.srcs.length) {
+        val s = c.srcs(i); val d = c.dsts(i)
+        cb.add(hp.getPartition(d), s, d, if (weighted) c.ws(i) else 0.0)
+        val sl = vidSlot.get(s, -1L).toInt
+        if (sl < 0) mirrorB += s else deg(sl) += 1
+        i += 1
+      }
+    }
+    // owned salted hubs: the local count misses the chunks routed to
+    // other partitions — the hub map carries the full out-degree
+    hubMap.foreach { case (h, dg) =>
+      val sl = vidSlot.get(h, -1L).toInt
+      if (sl >= 0) deg(sl) = dg
+    }
+    // sorted, deduped mirror list → deterministic mirror slot order
+    val mirrorVids = sortedDistinct(mirrorB.result())
+    val mirrorSlot = LongTable.positions(mirrorVids)
+    def slotOf(s: Long): Int = {
+      val o = vidSlot.get(s, -1L).toInt
+      if (o >= 0) o else nOwned + mirrorSlot.get(s, -1L).toInt
+    }
+
+    // combined invDeg: owned (from the local counts / hub override
+    // above) ++ mirror (from the hub map — a mirror is by construction
+    // a hub, whose full out-degree the map carries)
+    val invDeg = new Array[Double](nOwned + mirrorVids.length)
+    var di0 = 0
+    while (di0 < nOwned) {
+      if (deg(di0) > 0) invDeg(di0) = 1.0 / deg(di0)
+      di0 += 1
+    }
+    var mi = 0
+    while (mi < mirrorVids.length) {
+      invDeg(nOwned + mi) = 1.0 / hubMap(mirrorVids(mi))
+      mi += 1
+    }
+    // owned vids that are salted hubs (mirrored in other partitions):
+    // their state is harvested for the hub broadcast every superstep
+    val ownedHubSlots = hubMap.keysIterator
+      .map(h => vidSlot.get(h, -1L).toInt).filter(_ >= 0).toArray
+    java.util.Arrays.sort(ownedHubSlots)
+
+    val tiles = new Array[Tile](P)
+    val dstVids = new Array[Array[Long]](P)
+    var q = 0
+    while (q < P) {
+      val chunk = cb.drain(q)
+      if (chunk != null) {
+        val ss = chunk.srcs; val dd = chunk.dsts; val ww = chunk.ws
+        val n = ss.length
+        // deterministic tile layout: edges in ascending SOURCE-SLOT
+        // order (slot fits an Int, so (slot<<32 | idx) sorts as one
+        // primitive long — no boxed comparator). Per-destination sums
+        // are then added in ascending-source order every compile; dst
+        // order within a source row is irrelevant to the sums. Mirror
+        // slots sort after owned slots — also deterministic.
+        val order = new Array[Long](n)
+        var oi = 0
+        while (oi < n) { order(oi) = (slotOf(ss(oi)).toLong << 32) | oi; oi += 1 }
+        java.util.Arrays.sort(order)
+        // sorted distinct destination list → tile-local ids
+        val tileDsts = sortedDistinct(dd.clone())
+        val dstIdx = LongTable.positions(tileDsts)
+
+        val srcSlotsB = new scala.collection.mutable.ArrayBuilder.ofInt
+        val offsetsB = new scala.collection.mutable.ArrayBuilder.ofInt
+        val dstLocal = new Array[Int](n)
+        val wOut = if (ww != null) new Array[Double](n) else null
+        var lastSlot = -1
+        var k = 0
+        while (k < n) {
+          val slot = (order(k) >>> 32).toInt
+          val e = order(k).toInt
+          if (slot != lastSlot) {
+            srcSlotsB += slot
+            offsetsB += k
+            lastSlot = slot
+          }
+          dstLocal(k) = dstIdx.get(dd(e), -1L).toInt
+          if (wOut != null) wOut(k) = ww(e)
+          k += 1
+        }
+        offsetsB += n
+        tiles(q) = Tile(srcSlotsB.result(), offsetsB.result(), dstLocal, wOut, tileDsts.length)
+        dstVids(q) = tileDsts
+      }
+      q += 1
+    }
+    (KernelPartition(vids, deg, invDeg, mirrorVids, ownedHubSlots, tiles,
+      inSlots = null), dstVids)
+  }
+
+  /** `raw` sorted ascending with duplicates dropped (sorts in place). */
+  private def sortedDistinct(raw: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(raw)
+    var u = -1; var i = 0
+    while (i < raw.length) {
+      if (u < 0 || raw(i) != raw(u)) { u += 1; raw(u) = raw(i) }
+      i += 1
+    }
+    java.util.Arrays.copyOf(raw, u + 1)
+  }
+}
+
+/** The per-tile exchange formats: one byte array per tile message, a
+  * header of (format:int, count:int), then the payload — dense doubles,
+  * sparse (idx:int…, val:double…), or LPA (dstLocal:int…, label:double…,
+  * count:int…) triples. */
+private[graph] object TilePacks {
+  final val FmtDense = 0
+  final val FmtSparse = 1
+  // LPA label-count triples (dstLocal, label, count) — the mode
+  // combiner's partial aggregate, which is a multiset not a scalar
+  final val FmtLabels = 2
+
+  def packDense(acc: Array[Double]): Array[Byte] = {
     val bytes = new Array[Byte](8 + acc.length * 8)
     val bb = java.nio.ByteBuffer.wrap(bytes)
     bb.putInt(0, FmtDense); bb.putInt(4, acc.length)
@@ -1092,7 +1268,7 @@ object SpmvKernel {
 
   /** Dense accumulator → whichever pack ships fewer bytes (sparse
     * entry = 12 bytes vs dense slot = 8). `identity` marks absent. */
-  private def packBest(acc: Array[Double], identity: Double): Array[Byte] = {
+  def packBest(acc: Array[Double], identity: Double): Array[Byte] = {
     var nnz = 0
     var i = 0
     while (i < acc.length) { if (acc(i) != identity) nnz += 1; i += 1 }
@@ -1117,7 +1293,7 @@ object SpmvKernel {
     * packed-long primitive sort (deterministic sum fold order), merge
     * runs with the combiner, and pack sparse. Never touches an
     * nDsts-sized array. */
-  private def packSparseAssembled(rows: Array[Int], srcSlots: Array[Int],
+  def packSparseAssembled(rows: Array[Int], srcSlots: Array[Int],
                                   offsets: Array[Int], dstLocal: Array[Int],
                                   w: Array[Double], vids: Array[Long],
                                   values: Array[Double], invDeg: Array[Double],
@@ -1172,90 +1348,262 @@ object SpmvKernel {
     bytes
   }
 
-  /** Stage-1 LPA tile pass: count labels per destination — sort the
-    * tile's (dstLocal, edge) pairs (one primitive long sort, same
-    * trick as packSparseAssembled), then per-destination sort the
-    * label values and run-length encode. Output: (dstLocal:int,
-    * label:double, count:int) triples packed as FmtLabels — the
-    * tile-level partial count (Catalyst's map-side combine analog)
-    * that the exchange ships. */
-  private def packLabelCounts(t: Tile, values: Array[Double]): Array[Byte] = {
-    val srcSlots = t.srcSlots; val offsets = t.offsets; val dstLocal = t.dstLocal
-    val n = t.nEdges
-    val order = new Array[Long](n)
-    val labs = new Array[Double](n)
-    var k = 0
-    var i = 0
-    while (i < srcSlots.length) {
-      val lab = values(srcSlots(i) * 2) // [label, prev] stride
-      var e = offsets(i); val end = offsets(i + 1)
-      while (e < end) {
-        order(k) = (dstLocal(e).toLong << 32) | k
-        labs(k) = lab
-        k += 1; e += 1
-      }
-      i += 1
-    }
-    java.util.Arrays.sort(order)
-    val outD = new scala.collection.mutable.ArrayBuilder.ofInt
-    val outL = new scala.collection.mutable.ArrayBuilder.ofDouble
-    val outC = new scala.collection.mutable.ArrayBuilder.ofInt
-    val scratch = new Array[Double](n)
-    var nnz = 0
-    var t2 = 0
-    while (t2 < n) {
-      val d = (order(t2) >>> 32).toInt
-      var len = 0
-      while (t2 < n && (order(t2) >>> 32).toInt == d) {
-        scratch(len) = labs(order(t2).toInt)
-        len += 1; t2 += 1
-      }
-      java.util.Arrays.sort(scratch, 0, len)
-      var j = 0
-      while (j < len) {
-        val lab = scratch(j)
-        var c = 1
-        j += 1
-        while (j < len && scratch(j) == lab) { c += 1; j += 1 }
-        outD += d; outL += lab; outC += c; nnz += 1
-      }
-    }
-    packTriples(outD.result(), outL.result(), outC.result(), nnz)
+  /** (dstLocal, label, count) triples → one FmtLabels byte pack. */
+  def packTriples(dd: Array[Int], ll: Array[Double], cc: Array[Int],
+                          nnz: Int): Array[Byte] = {
+    val bytes = new Array[Byte](8 + 16 * nnz)
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    bb.putInt(0, FmtLabels); bb.putInt(4, nnz)
+    bb.position(8)
+    bb.asIntBuffer().put(dd, 0, nnz)
+    bb.position(8 + 4 * nnz)
+    bb.asDoubleBuffer().put(ll, 0, nnz)
+    bb.position(8 + 12 * nnz)
+    bb.asIntBuffer().put(cc, 0, nnz)
+    bytes
+  }
+}
+
+/** The kernel's one hash table: primitive open-addressing Long→Long
+  * with insertion-order enumeration (`keyAt`/`valueAt` for j < size),
+  * an O(size) `clear`, and doubling growth clamped at 2^30 slots. It
+  * slots vids and tile destinations at compile time, counts hub
+  * out-degrees, re-slots checkpointed state, and folds LPA label
+  * counts (keys = raw label bits). Every Long is a valid key; a
+  * separate `used` mark tells free slots apart, and with no deletes a
+  * probe stops at the first free slot, so an absent key costs one
+  * short probe run. Layout (split key/value arrays, triangular
+  * probing) was picked over interleaved key/value and over linear
+  * probing by traced compile.task_cpu_ms and superstep.lpa.apply_cpu_ms
+  * (perfbench fresh_graph and kernel_loops, 4 cores). */
+private[graph] final class LongTable(expected: Int) {
+  private var mask = LongTable.capacityFor(expected) - 1
+  private var keys = new Array[Long](mask + 1)
+  private var vals = new Array[Long](mask + 1)
+  private var used = new Array[Boolean](mask + 1)
+  private var order = new Array[Int](LongTable.maxFill(mask + 1)) // slot of the j-th key
+  private var n = 0
+
+  def size: Int = n
+  def keyAt(j: Int): Long = keys(order(j))
+  def valueAt(j: Int): Long = vals(order(j))
+
+  /** The slot holding `k`, or the free slot where it would go. */
+  private def find(k: Long): Int = {
+    var h = k * -7046029254386353131L
+    h ^= h >>> 32
+    var i = h.toInt & mask
+    var step = 1 // triangular probing: visits every slot of a power-of-two table
+    while (used(i) && keys(i) != k) { i = (i + step) & mask; step += 1 }
+    i
   }
 
-  /** Stage-1 INCREMENTAL LPA tile pass: ship per-(dst, label) count
-    * DELTAS from the sources that changed last superstep — +1 for the
-    * new label and −1 for the previous one per frontier edge, folded
-    * per destination (a ± pair that cancels ships nothing). The
-    * destination's persistent LabelTable absorbs the triples, keeping
-    * it equal to the full recount at O(changed-edge) cost — the
-    * SpMSpV frontier idea applied to the multiset combiner. Returns
-    * null when the tile has no active rows or every delta cancels. */
-  private def packLabelDeltas(t: Tile, values: Array[Double],
-                              act: Array[Long]): Array[Byte] = {
+  /** The slot holding `k`, inserting it with value 0 when absent. */
+  private def slot(k: Long): Int = {
+    var i = find(k)
+    if (!used(i)) {
+      if (n == order.length) { grow(); i = find(k) }
+      used(i) = true; keys(i) = k; vals(i) = 0L
+      order(n) = i; n += 1
+    }
+    i
+  }
+
+  def get(k: Long, dflt: Long): Long = {
+    val i = find(k)
+    if (used(i)) vals(i) else dflt
+  }
+  def put(k: Long, v: Long): Unit = {
+    val i = slot(k) // may grow, replacing `vals`
+    vals(i) = v
+  }
+  def add(k: Long, d: Long): Unit = {
+    val i = slot(k)
+    vals(i) += d
+  }
+
+  def clear(): Unit = {
+    var j = 0
+    while (j < n) { used(order(j)) = false; j += 1 }
+    n = 0
+  }
+
+  private def grow(): Unit = {
+    val ok = keys; val ov = vals; val oo = order; val on = n
+    val cap = LongTable.grownCapacity(mask + 1)
+    mask = cap - 1
+    keys = new Array[Long](cap); vals = new Array[Long](cap)
+    used = new Array[Boolean](cap); order = new Array[Int](LongTable.maxFill(cap))
+    n = 0
+    var j = 0
+    while (j < on) { put(ok(oo(j)), ov(oo(j))); j += 1 }
+  }
+}
+
+private[graph] object LongTable {
+  /** Largest capacity: one more doubling would overflow the Int index
+    * space deep inside a task, so growth past it fails with the limit
+    * instead (more than ~7·10^8 keys in one partition means the
+    * partition count is wrong for the data). */
+  final val MaxCapacity = 1 << 30
+
+  def grownCapacity(cap: Int): Int = {
+    if (cap >= MaxCapacity)
+      throw new IllegalStateException(
+        s"LongTable capacity would exceed 2^30 slots (at $cap) — " +
+          "raise the partition count so per-partition key cardinality fits")
+    cap << 1
+  }
+
+  /** Smallest power-of-two capacity holding `expected` keys at load ≤ 1/2. */
+  private def capacityFor(expected: Int): Int = {
+    var c = 16
+    while (c / 2 < expected) c = grownCapacity(c)
+    c
+  }
+
+  /** Keys a table of capacity `cap` holds before it grows (load 2/3). */
+  private def maxFill(cap: Int): Int = (cap / 3) * 2
+
+  /** ks(i) → i over distinct keys — a vid or destination slot index. */
+  def positions(ks: Array[Long]): LongTable = {
+    val t = new LongTable(ks.length)
+    var i = 0
+    while (i < ks.length) { t.put(ks(i), i); i += 1 }
+    t
+  }
+}
+
+/** The LPA mode's PERSISTENT per-(state-slot, label) counts — the
+  * destination-side aggregation state an LPA superstep arg-maxes over
+  * and the incremental superstep carries across iterations, so it only
+  * has to absorb deltas from changed sources instead of recounting
+  * every in-edge (the frontier idea applied to the multiset combiner;
+  * the reference has no analog — its min-label LPA rides the scalar
+  * frontier kernel). Each slot holds its live (labelBits, count) pairs
+  * interleaved in one Array[Long] (null = no live label). Counts are
+  * exact and strictly positive (by induction: every −1 removes a
+  * contribution a prior +1 added). Bounded by Σ distinct (dst, label)
+  * pairs alive ≤ the partition's in-edge count — the same order as the
+  * compiled tiles themselves. */
+private[graph] final class SlotCounts(private val bySlot: Array[Array[Long]])
+    extends Serializable {
+
+  /** Arg-max over the slot's live labels — max count, ties toward the
+    * smallest label (LPA labels are nonnegative vertex ids, whose IEEE
+    * bit pattern is order-isomorphic to the value, so the raw-bits `<`
+    * IS the label `<` — identical to algos.LabelPropagation's
+    * max(struct(cnt, -label))). Long.MinValue when the slot has no live
+    * label (then the caller keeps its label). */
+  def argmax(slot: Int): Long = {
+    val e = bySlot(slot)
+    var bestCnt = 0L
+    var bestKey = Long.MinValue
+    if (e != null) {
+      var i = 0
+      while (i < e.length) {
+        val c = e(i + 1)
+        if (c > bestCnt || (c == bestCnt && e(i) < bestKey)) { bestCnt = c; bestKey = e(i) }
+        i += 2
+      }
+    }
+    bestKey
+  }
+
+  /** These counts with every fed slot's bucket merged in, dropping
+    * labels whose counts net to zero. Copy-on-write at SLOT
+    * granularity: the result shares every unfed slot's array and this
+    * receiver stays untouched, so a retried or recomputed task sees the
+    * old counts (the contract a persisted PartState requires) — O(V/P)
+    * pointer copy plus O(fed entries), never an O(E) pool copy, which
+    * would put a term proportional to E back into every small-frontier
+    * superstep. `table` is the caller's scratch. */
+  def merged(fed: SlotBuckets, table: LongTable): SlotCounts = {
+    val next = bySlot.clone()
+    var slot = 0
+    while (slot < next.length) {
+      val from = fed.offsets(slot); val until = fed.offsets(slot + 1)
+      if (until > from) {
+        table.clear()
+        val e = bySlot(slot)
+        if (e != null) {
+          var i = 0
+          while (i < e.length) { table.add(e(i), e(i + 1)); i += 2 }
+        }
+        var k = from
+        while (k < until) { table.add(fed.labs(k), fed.cnts(k)); k += 1 }
+        var live = 0
+        var j = 0
+        while (j < table.size) { if (table.valueAt(j) != 0L) live += 1; j += 1 }
+        if (live == 0) next(slot) = null
+        else {
+          val out = new Array[Long](2 * live)
+          var o = 0
+          j = 0
+          while (j < table.size) {
+            val c = table.valueAt(j)
+            if (c != 0L) { out(o) = table.keyAt(j); out(o + 1) = c; o += 2 }
+            j += 1
+          }
+          next(slot) = out
+        }
+      }
+      slot += 1
+    }
+    new SlotCounts(next)
+  }
+}
+
+private[graph] object SlotCounts {
+  /** No labels anywhere — the base a FULL superstep merges into. */
+  def empty(nSlots: Int): SlotCounts = new SlotCounts(new Array[Array[Long]](nSlots))
+}
+
+/** A destination partition's incoming LPA triples bucketed by state
+  * slot: a flat CSR (`offsets` by slot, then label bits and ±counts in
+  * arrival order). A slot is FED when its bucket is non-empty. */
+private[graph] final class SlotBuckets(val offsets: Array[Int], val labs: Array[Long],
+                                       val cnts: Array[Int])
+
+private[graph] object LabelCounts {
+  import graft.graph.SpmvKernel.{Tile, bitGet}
+
+  /** Stage-1 LPA tile pass: per destination, the net (label, ±count)
+    * contributions of the tile's source rows, packed as FmtLabels
+    * triples. `rows == null` is a FULL pass: every source ships +1 for
+    * its label over each out-edge. Otherwise only sources whose bit is
+    * set in `rows` ship — +1 for the new label and −1 for the previous
+    * one per out-edge — which keeps the destination's counts equal to
+    * the full recount at O(changed-edge) cost. Contributions are
+    * grouped by destination with one primitive long sort of
+    * (dstLocal << 32 | index) and folded in `table`; a ± pair that
+    * cancels ships nothing. Returns null when nothing ships. */
+  def packLabelDeltas(t: Tile, values: Array[Double], rows: Array[Long],
+                      table: LongTable): Array[Byte] = {
     val srcSlots = t.srcSlots; val offsets = t.offsets; val dstLocal = t.dstLocal
     val rowsB = new scala.collection.mutable.ArrayBuilder.ofInt
     var aEdges = 0
     var i = 0
     while (i < srcSlots.length) {
-      if (bitGet(act, srcSlots(i))) {
+      if (rows == null || bitGet(rows, srcSlots(i))) {
         rowsB += i; aEdges += offsets(i + 1) - offsets(i)
       }
       i += 1
     }
-    val rows = rowsB.result()
-    if (rows.isEmpty) return null
-    // up to two contributions per frontier edge: (+new, −prev)
-    val order = new Array[Long](2 * aEdges)
-    val labs = new Array[Long](2 * aEdges)
-    val sign = new Array[Int](2 * aEdges)
+    val shipping = rowsB.result()
+    if (shipping.isEmpty) return null
+    // up to two contributions per shipping edge: (+new, −prev)
+    val maxK = if (rows == null) aEdges else 2 * aEdges
+    val order = new Array[Long](maxK)
+    val labs = new Array[Long](maxK)
+    val sign = new Array[Int](maxK)
     var k = 0
     var r = 0
-    while (r < rows.length) {
-      val i2 = rows(r); val slot = srcSlots(i2)
+    while (r < shipping.length) {
+      val i2 = shipping(r); val slot = srcSlots(i2)
       val cur = java.lang.Double.doubleToRawLongBits(values(slot * 2))
       val prevD = values(slot * 2 + 1)
-      val hasPrev = !prevD.isNaN
+      val hasPrev = rows != null && !prevD.isNaN
       val prevBits =
         if (hasPrev) java.lang.Double.doubleToRawLongBits(prevD) else 0L
       var e = offsets(i2); val end = offsets(i2 + 1)
@@ -1272,23 +1620,22 @@ object SpmvKernel {
     val outD = new scala.collection.mutable.ArrayBuilder.ofInt
     val outL = new scala.collection.mutable.ArrayBuilder.ofDouble
     val outC = new scala.collection.mutable.ArrayBuilder.ofInt
-    val counter = new LabelCounter
     var nnz = 0
     var t2 = 0
     while (t2 < k) {
       val d = (order(t2) >>> 32).toInt
-      counter.reset()
+      table.clear()
       while (t2 < k && (order(t2) >>> 32).toInt == d) {
         val j = order(t2).toInt
-        counter.add(java.lang.Double.longBitsToDouble(labs(j)), sign(j))
+        table.add(labs(j), sign(j))
         t2 += 1
       }
       var j = 0
-      while (j < counter.entries) {
-        val c = counter.countAt(j)
+      while (j < table.size) {
+        val c = table.valueAt(j)
         if (c != 0L) {
           outD += d
-          outL += java.lang.Double.longBitsToDouble(counter.keyBitsAt(j))
+          outL += java.lang.Double.longBitsToDouble(table.keyAt(j))
           outC += c.toInt
           nnz += 1
         }
@@ -1296,740 +1643,44 @@ object SpmvKernel {
       }
     }
     if (nnz == 0) null
-    else packTriples(outD.result(), outL.result(), outC.result(), nnz)
+    else TilePacks.packTriples(outD.result(), outL.result(), outC.result(), nnz)
   }
 
-  /** (dstLocal, label, count) triples → one FmtLabels byte pack. */
-  private def packTriples(dd: Array[Int], ll: Array[Double], cc: Array[Int],
-                          nnz: Int): Array[Byte] = {
-    val bytes = new Array[Byte](8 + 16 * nnz)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    bb.putInt(0, FmtLabels); bb.putInt(4, nnz)
-    bb.position(8)
-    bb.asIntBuffer().put(dd, 0, nnz)
-    bb.position(8 + 4 * nnz)
-    bb.asDoubleBuffer().put(ll, 0, nnz)
-    bb.position(8 + 12 * nnz)
-    bb.asIntBuffer().put(cc, 0, nnz)
-    bytes
-  }
-
-  /** Reusable open-addressing label→count map for the LPA mode's
-    * final combine. Labels are keyed by raw double bits — LPA labels
-    * are non-negative vertex ids, whose IEEE bit pattern is
-    * order-isomorphic to the value, so the bit-level `<` in argmax IS
-    * the label `<`. reset() is O(1) via an epoch stamp; argmax ties
-    * break toward the SMALLEST label — identical to
-    * algos.LabelPropagation's max(struct(cnt, -label)). */
-  private[graph] final class LabelCounter {
-    private var cap = 256
-    private var mask = cap - 1
-    private var keys = new Array[Long](cap)
-    private var cnts = new Array[Long](cap)
-    private var stamp = new Array[Int](cap)
-    private var usedIdx = new Array[Int](cap)
-    private var epoch = 0
-    private var size = 0
-    def reset(): Unit = { epoch += 1; size = 0 }
-    private def idx(k: Long): Int = {
-      var h = k * -7046029254386353131L
-      h ^= h >>> 32
-      (h & mask).toInt
+  /** Bucket a destination partition's FmtLabels packs by state slot
+    * (`inSlots(p)` maps source partition p's tile-local destinations to
+    * slots). Two passes over the packs — count, then place — so every
+    * array is allocated once at its exact size; within a slot, triples
+    * keep arrival order (sorted source partition, then pack order). */
+  def bucketBySlot(nSlots: Int, packIt: Iterator[((Int, Int), Array[Byte])],
+                   inSlots: Array[Array[Int]]): SlotBuckets = {
+    val packs = packIt.toArray
+    val offsets = new Array[Int](nSlots + 1)
+    packs.foreach { case ((_, p), bytes) =>
+      val slots = inSlots(p)
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      val ne = bb.getInt(4)
+      var t = 0
+      while (t < ne) { offsets(slots(bb.getInt(8 + 4 * t)) + 1) += 1; t += 1 }
     }
-    private def put(k: Long, c: Long): Unit = {
-      var i = idx(k)
-      while (stamp(i) == epoch && keys(i) != k) i = (i + 1) & mask
-      if (stamp(i) != epoch) {
-        keys(i) = k; cnts(i) = 0L; stamp(i) = epoch
-        usedIdx(size) = i; size += 1
-      }
-      cnts(i) += c
-    }
-    private def grow(): Unit = {
-      val ok = keys; val oc = cnts; val ou = usedIdx; val oldSize = size
-      cap <<= 1; mask = cap - 1
-      keys = new Array[Long](cap); cnts = new Array[Long](cap)
-      stamp = new Array[Int](cap); usedIdx = new Array[Int](cap)
-      size = 0
-      var j = 0
-      while (j < oldSize) {
-        val i = ou(j)
-        put(ok(i), oc(i))
-        j += 1
+    var s = 0
+    while (s < nSlots) { offsets(s + 1) += offsets(s); s += 1 }
+    val labs = new Array[Long](offsets(nSlots))
+    val cnts = new Array[Int](offsets(nSlots))
+    val cursor = java.util.Arrays.copyOf(offsets, nSlots)
+    packs.foreach { case ((_, p), bytes) =>
+      val slots = inSlots(p)
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      val ne = bb.getInt(4)
+      var t = 0
+      while (t < ne) {
+        val slot = slots(bb.getInt(8 + 4 * t))
+        val k = cursor(slot)
+        labs(k) = bb.getLong(8 + 4 * ne + 8 * t) // the label double's raw bits
+        cnts(k) = bb.getInt(8 + 12 * ne + 4 * t)
+        cursor(slot) = k + 1
+        t += 1
       }
     }
-    def add(label: Double, count: Int): Unit =
-      addBits(java.lang.Double.doubleToRawLongBits(label), count.toLong)
-    def addBits(labelBits: Long, count: Long): Unit = {
-      if (size * 3 >= cap * 2) grow()
-      put(labelBits, count)
-    }
-    /** Scans only this epoch's entries (the used list), not the table. */
-    def argmax(): Double = {
-      var bestCnt = -1L
-      var bestKey = 0L
-      var j = 0
-      while (j < size) {
-        val i = usedIdx(j)
-        val c = cnts(i); val k = keys(i)
-        if (c > bestCnt || (c == bestCnt && k < bestKey)) { bestCnt = c; bestKey = k }
-        j += 1
-      }
-      java.lang.Double.longBitsToDouble(bestKey)
-    }
-    /** Entry enumeration (insertion order — deterministic given a
-      * deterministic add order) for the delta fold, which must emit
-      * the nonzero nets rather than a single argmax. */
-    def entries: Int = size
-    def keyBitsAt(j: Int): Long = keys(usedIdx(j))
-    def countAt(j: Int): Long = cnts(usedIdx(j))
-  }
-
-  /** A destination partition's per-(state-slot, label) count multiset —
-    * what the LPA superstep arg-maxes over. Two renditions: the pooled
-    * [[LabelTable]] a FULL superstep builds from the complete recount,
-    * and the per-slot persistent [[SlotCounts]] the incremental
-    * supersteps evolve by structural sharing. */
-  private[graph] sealed trait SlotMultiset extends Serializable {
-    /** Arg-max over the slot's live labels — max count, ties toward the
-      * smallest label (nonnegative-double raw bits: bit `<` IS label
-      * `<`). Long.MinValue when the slot has no live entry. */
-    def argmax(slot: Int): Long
-    /** Per-slot copy-on-write view for the NEXT superstep: shares every
-      * slot's count array; the caller replaces touched slots' arrays
-      * wholesale (mergeSlot), so the receiver stays untouched — the
-      * retry/recompute contract a persisted PartState requires. */
-    def toSlotCounts: SlotCounts
-  }
-
-  private[graph] object SlotCounts {
-    /** Shared "override to no live labels" marker — distinguishes a
-      * slot whose counts all cancelled (scan nothing) from a slot with
-      * no override (scan the base slice). */
-    private val DeadLabs = new Array[Long](0)
-    private val DeadCnts = new Array[Int](0)
-  }
-
-  /** The incremental supersteps' persistent per-slot count store: a
-    * FLAT CSR base (offsets + parallel labelBits/count arrays — three
-    * big allocations at conversion time, no per-slot object storm)
-    * plus a per-slot OVERRIDE layer for slots whose counts have moved
-    * since the base was built. Copy-on-write clones only the two
-    * override pointer arrays (O(slots)); mergeSlot writes a fresh
-    * small override for each touched slot (O(changed)) and never
-    * mutates base or shared overrides — the retry/recompute contract
-    * a persisted PartState requires. Live counts are strictly
-    * positive. */
-  private[graph] final class SlotCounts(
-      private val offsets: Array[Int],
-      private val baseLabs: Array[Long],
-      private val baseCnts: Array[Int],
-      private val ovLabs: Array[Array[Long]],
-      private val ovCnts: Array[Array[Int]]) extends SlotMultiset {
-
-    private[graph] def this(offsets: Array[Int], baseLabs: Array[Long],
-                            baseCnts: Array[Int]) =
-      this(offsets, baseLabs, baseCnts,
-        new Array[Array[Long]](offsets.length - 1),
-        new Array[Array[Int]](offsets.length - 1))
-
-    def argmax(slot: Int): Long = {
-      val ov = ovLabs(slot)
-      var bestCnt = 0
-      var bestKey = Long.MinValue
-      if (ov != null) {
-        val cs = ovCnts(slot)
-        var i = 0
-        while (i < ov.length) {
-          val c = cs(i)
-          if (c > bestCnt || (c == bestCnt && c > 0 && ov(i) < bestKey)) {
-            bestCnt = c; bestKey = ov(i)
-          }
-          i += 1
-        }
-      } else {
-        var i = offsets(slot)
-        val end = offsets(slot + 1)
-        while (i < end) {
-          val c = baseCnts(i)
-          if (c > bestCnt || (c == bestCnt && c > 0 && baseLabs(i) < bestKey)) {
-            bestCnt = c; bestKey = baseLabs(i)
-          }
-          i += 1
-        }
-      }
-      bestKey
-    }
-
-    def toSlotCounts: SlotCounts =
-      new SlotCounts(offsets, baseLabs, baseCnts, ovLabs.clone(), ovCnts.clone())
-
-    /** Replace `slot`'s override with (current ⊎ deltas-from-`delta`),
-      * dropping labels whose counts net to zero. Only ever called on a
-      * freshly cloned override layer (toSlotCounts), so the receiver
-      * this was cloned from stays untouched. `counter` is the caller's
-      * reusable scratch (epoch-reset, O(slot's labels)). */
-    def mergeSlot(slot: Int, delta: LabelTable, counter: LabelCounter): Unit = {
-      counter.reset()
-      val ov = ovLabs(slot)
-      if (ov != null) {
-        val cs = ovCnts(slot)
-        var i = 0
-        while (i < ov.length) { counter.addBits(ov(i), cs(i)); i += 1 }
-      } else {
-        var i = offsets(slot)
-        val end = offsets(slot + 1)
-        while (i < end) { counter.addBits(baseLabs(i), baseCnts(i)); i += 1 }
-      }
-      delta.forSlot(slot)(counter.addBits)
-      var live = 0
-      var j = 0
-      while (j < counter.entries) {
-        if (counter.countAt(j) != 0L) live += 1
-        j += 1
-      }
-      if (live == 0) { ovLabs(slot) = SlotCounts.DeadLabs; ovCnts(slot) = SlotCounts.DeadCnts }
-      else {
-        val nl = new Array[Long](live)
-        val nc = new Array[Int](live)
-        var k = 0
-        j = 0
-        while (j < counter.entries) {
-          val c = counter.countAt(j)
-          if (c != 0L) { nl(k) = counter.keyBitsAt(j); nc(k) = c.toInt; k += 1 }
-          j += 1
-        }
-        ovLabs(slot) = nl; ovCnts(slot) = nc
-      }
-    }
-  }
-
-  /** The LPA mode's PERSISTENT per-(state-slot, label) count multiset —
-    * the destination-side aggregation state the incremental superstep
-    * maintains across iterations so it only has to absorb deltas from
-    * changed sources instead of recounting every in-edge (the frontier
-    * idea applied to the multiset combiner; the reference has no
-    * analog — its min-label LPA rides the scalar frontier kernel).
-    *
-    * Layout: an append-only entry pool (slot, labelBits, count) with a
-    * per-slot chain for O(slot's labels) arg-max, plus an open-
-    * addressing index keyed (slot, labelBits). Counts are exact ints
-    * (≥ 0 by the induction: every −1 removes a contribution a prior +1
-    * added). A full superstep rebuilds it from scratch; the first
-    * INCREMENTAL superstep after it converts to [[SlotCounts]] once
-    * (toSlotCounts, O(live entries)) and per-slot sharing takes over.
-    * Bounded by Σ distinct (dst, label) pairs alive ≤ the partition's
-    * in-edge count — the same order as the compiled tiles themselves. */
-  private[graph] final class LabelTable private (
-      private var slotArr: Array[Int],
-      private var labArr: Array[Long],
-      private var cntArr: Array[Int],
-      private var nextArr: Array[Int],
-      private var headArr: Array[Int],
-      private var idxTable: Array[Int],
-      private var size: Int) extends SlotMultiset {
-
-    def this(nSlots: Int) = this(new Array[Int](16), new Array[Long](16),
-      new Array[Int](16), new Array[Int](16),
-      { val h = new Array[Int](math.max(1, nSlots)); java.util.Arrays.fill(h, -1); h },
-      new Array[Int](64), 0)
-
-    /** Pre-sized for a known upper bound on entries (the incoming
-      * triple count): skips the pool-doubling copies and index
-      * rehashes a from-16 growth path would churn through — less
-      * transient garbage in the table-heaviest (early, full-recount)
-      * supersteps. */
-    def this(nSlots: Int, expectedEntries: Int) = this(
-      { var c = 16; while (c < expectedEntries && c < (1 << 30)) c <<= 1
-        new Array[Int](c) },
-      { var c = 16; while (c < expectedEntries && c < (1 << 30)) c <<= 1
-        new Array[Long](c) },
-      { var c = 16; while (c < expectedEntries && c < (1 << 30)) c <<= 1
-        new Array[Int](c) },
-      { var c = 16; while (c < expectedEntries && c < (1 << 30)) c <<= 1
-        new Array[Int](c) },
-      { val h = new Array[Int](math.max(1, nSlots)); java.util.Arrays.fill(h, -1); h },
-      { var c = 64; while (c.toLong * 2 < expectedEntries.toLong * 3 && c < (1 << 30)) c <<= 1
-        new Array[Int](c) }, 0)
-
-    def nonEmptyAt(slot: Int): Boolean = headArr(slot) >= 0
-
-    private def hashOf(slot: Int, lab: Long): Int = {
-      var h = (lab ^ (slot.toLong * 0x9E3779B97F4A7C15L)) * -7046029254386353131L
-      h ^= h >>> 32
-      h.toInt
-    }
-
-    /** Unconditional `<< 1` past 2^30 would overflow to a negative
-      * array size deep inside a superstep; fail with the actual limit
-      * instead (per-partition live (dst,label) cardinality > ~10^9
-      * means the partition count is wrong for the data). */
-    private def grownCap(cur: Int, what: String): Int = {
-      if (cur >= (1 << 30))
-        throw new IllegalStateException(
-          s"LabelTable $what exceeds 2^30 entries in one partition — " +
-            "raise the partition count so per-partition label cardinality fits")
-      cur << 1
-    }
-
-    private def growPool(): Unit = {
-      val cap = grownCap(slotArr.length, "entry pool")
-      slotArr = java.util.Arrays.copyOf(slotArr, cap)
-      labArr = java.util.Arrays.copyOf(labArr, cap)
-      cntArr = java.util.Arrays.copyOf(cntArr, cap)
-      nextArr = java.util.Arrays.copyOf(nextArr, cap)
-    }
-
-    private def rehash(): Unit = {
-      val cap = grownCap(idxTable.length, "hash index")
-      val mask = cap - 1
-      val nt = new Array[Int](cap)
-      var e = 0
-      while (e < size) {
-        var i = hashOf(slotArr(e), labArr(e)) & mask
-        while (nt(i) != 0) i = (i + 1) & mask
-        nt(i) = e + 1
-        e += 1
-      }
-      idxTable = nt
-    }
-
-    private def findOrInsert(slot: Int, lab: Long): Int = {
-      val mask = idxTable.length - 1
-      var i = hashOf(slot, lab) & mask
-      var e = idxTable(i)
-      while (e != 0) {
-        val p = e - 1
-        if (slotArr(p) == slot && labArr(p) == lab) return p
-        i = (i + 1) & mask
-        e = idxTable(i)
-      }
-      if (size == slotArr.length) growPool()
-      slotArr(size) = slot; labArr(size) = lab; cntArr(size) = 0
-      nextArr(size) = headArr(slot); headArr(slot) = size
-      idxTable(i) = size + 1
-      size += 1
-      if (size * 3 >= idxTable.length * 2) rehash()
-      size - 1
-    }
-
-    def add(slot: Int, lab: Long, d: Int): Unit = {
-      if (d == 0) return
-      val e = findOrInsert(slot, lab)
-      cntArr(e) += d
-    }
-
-    /** Visit the slot's live (labelBits, count ≠ 0) entries. */
-    def forSlot(slot: Int)(f: (Long, Long) => Unit): Unit = {
-      var e = headArr(slot)
-      while (e >= 0) {
-        if (cntArr(e) != 0) f(labArr(e), cntArr(e).toLong)
-        e = nextArr(e)
-      }
-    }
-
-    /** Arg-max over the slot's live labels — max count, ties toward
-      * the smallest label (nonnegative doubles: the raw-bits `<` IS
-      * the label `<`, same trick as LabelCounter). Long.MinValue when
-      * the slot has no live entry (then the caller keeps its label —
-      * only reachable when every count net-cancelled to zero, which
-      * for a constant per-dst total means the slot was never fed). */
-    def argmax(slot: Int): Long = {
-      var bestCnt = 0
-      var bestKey = Long.MinValue
-      var e = headArr(slot)
-      while (e >= 0) {
-        val c = cntArr(e)
-        if (c > bestCnt || (c == bestCnt && c > 0 && labArr(e) < bestKey)) {
-          bestCnt = c; bestKey = labArr(e)
-        }
-        e = nextArr(e)
-      }
-      bestKey
-    }
-
-    /** One-time conversion to the flat-CSR persistent layout — runs on
-      * the first incremental superstep after a full recount, then
-      * SlotCounts' override sharing takes over. Three big allocations
-      * (offsets + two flat arrays), no per-slot objects. Dead (count 0)
-      * entries are dropped; per-slot order follows the chain (argmax
-      * is order-independent, and counts are never serialized to a
-      * checkpoint, so the order is free). */
-    def toSlotCounts: SlotCounts = {
-      val nSlots = headArr.length
-      val offsets = new Array[Int](nSlots + 1)
-      var live = 0
-      var e = 0
-      while (e < size) { if (cntArr(e) != 0) { offsets(slotArr(e) + 1) += 1; live += 1 }; e = e + 1 }
-      var slot = 0
-      while (slot < nSlots) { offsets(slot + 1) += offsets(slot); slot += 1 }
-      val labs = new Array[Long](live)
-      val cnts = new Array[Int](live)
-      // fill via a moving cursor per slot (re-walk the pool; entries of
-      // one slot land contiguously in chain order)
-      val cursor = java.util.Arrays.copyOf(offsets, nSlots)
-      e = 0
-      while (e < size) {
-        if (cntArr(e) != 0) {
-          val s = slotArr(e)
-          val k = cursor(s)
-          labs(k) = labArr(e); cnts(k) = cntArr(e)
-          cursor(s) = k + 1
-        }
-        e += 1
-      }
-      new SlotCounts(offsets, labs, cnts)
-    }
-  }
-
-  /** Compile an edge table (src, dst[, w]) into the tiled kernel form.
-    * Three one-time shuffles: edges→hash(src), vertex-universe dedup,
-    * and the tile-destination-list exchange that precomputes every
-    * (p,q) slot mapping (+ one more, hub-edge re-routing, ONLY when a
-    * hub breaches the salting chunk). Deterministic: tile edges sorted
-    * (src, dst), tile destination lists sorted, so recompiles are
-    * bit-identical.
-    *
-    * `hubChunk` caps how many of one source's edges may concentrate in
-    * a single partition before the source row is SALTED — split across
-    * partitions in chunks keyed by hash(dst), the same rationale as
-    * the DataFrame engine's salted CSR (Adjacency.scala:89-105):
-    * message duplication is correct for gather, and stage 2 already
-    * merges by destination. 0 (the default) = auto:
-    * max(65536, E/(4·parts)) — only a vertex owning more than a
-    * quarter-partition of edges triggers, so ordinary graphs compile
-    * byte-identically to the unsalted layout. Receiving partitions get
-    * MIRROR source slots whose state is refreshed each superstep from
-    * a hub broadcast harvested by the convergence-count job (O(#hubs)
-    * ≤ 4·parts values — driver traffic in the kilobytes). */
-  def compile(edges: DataFrame, parts: Int, hubChunk: Long = 0L): CompiledGraph = {
-    val spark = edges.sparkSession
-    val weighted = edges.columns.contains("w")
-    val hp = new HashPartitioner(parts)
-    val idPart = new IdPartitioner(parts)
-    val P = parts
-    val wtd = weighted
-
-    // InternalRow scan (no per-row Row allocation) bucketed map-side
-    // into PACKED per-target EdgeChunks: the old per-edge boxed-tuple
-    // partitionBy was the compile's dominant cost (profiled 2.4 s of a
-    // 7.2 s compile at 28.8M edges/32c under Kryo, worse under the SQL
-    // session's JavaSerializer); the chunk exchange moves the same
-    // bytes as ~P² primitive-array records.
-    val scan =
-      (if (weighted)
-        edges.selectExpr("CAST(src AS LONG)", "CAST(dst AS LONG)",
-          "CAST(COALESCE(w, 1.0) AS DOUBLE)")
-      else
-        edges.selectExpr("CAST(src AS LONG)", "CAST(dst AS LONG)"))
-        .queryExecution.toRdd
-    val eParts: RDD[(Int, EdgeChunk)] = scan.mapPartitions { it =>
-      val bS = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
-      val bD = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
-      val bW = if (wtd) Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofDouble) else null
-      it.foreach { ir =>
-        val s = ir.getLong(0)
-        val q = hp.getPartition(s)
-        bS(q) += s; bD(q) += ir.getLong(1)
-        if (bW != null) bW(q) += ir.getDouble(2)
-      }
-      Iterator.range(0, P).flatMap { q =>
-        val ss = bS(q).result()
-        bS(q) = null
-        if (ss.isEmpty) Iterator.empty
-        else {
-          val dd = bD(q).result(); bD(q) = null
-          val ww = if (bW != null) { val w = bW(q).result(); bW(q) = null; w } else null
-          Iterator.single((q, EdgeChunk(ss, dd, ww)))
-        }
-      }
-    }.partitionBy(idPart).persist(StorageLevel.MEMORY_AND_DISK)
-
-    // hub detection + total edge count in ONE pass (which also
-    // materializes the chunk cache). Per-source counts are exact
-    // per-partition out-degrees here because un-salted routing is
-    // hash(src) — every source's edges sit wholly in one partition.
-    // The old separate degree reduceByKey + vertex reduceByKey tuple
-    // shuffles (profiled 0.6 s + 4.4 s at 28.8M/32c) are gone: degrees
-    // are recomputed partition-locally in compilePartition, and the
-    // vertex universe rides a packed distinct-vid chunk exchange below.
-    val floor = if (hubChunk > 0) hubChunk else 65536L
-    val (totalE, hubCands) = eParts.mapPartitions { it =>
-      var n = 0L
-      val cnt = new LongCounter(1 << 12)
-      it.foreach { case (_, c) =>
-        var i = 0
-        n += c.srcs.length
-        while (i < c.srcs.length) { cnt.add(c.srcs(i), 1L); i += 1 }
-      }
-      Iterator.single((n, cnt.entriesAbove(floor)))
-    }.fold((0L, List.empty[(Long, Long)])) {
-      case ((n1, l1), (n2, l2)) => (n1 + n2, l1 ::: l2)
-    }
-    val chunk =
-      if (hubChunk > 0) hubChunk
-      else math.max(65536L, totalE / (4L * parts))
-    val hubMap: Map[Long, Long] = hubCands.filter(_._2 > chunk).toMap
-
-    // distinct-vid chunks to each vid's owner partition (replaces the
-    // verts reduceByKey): per partition one dedup set over its chunk
-    // cache, then one packed array per owner
-    val vChunks: RDD[(Int, Array[Long])] = eParts.mapPartitions { it =>
-      val set = new LongCounter(1 << 12)
-      it.foreach { case (_, c) =>
-        var i = 0
-        while (i < c.srcs.length) { set.add(c.srcs(i), 1L); set.add(c.dsts(i), 1L); i += 1 }
-      }
-      val bufs = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
-      set.foreachEntry((v, _) => bufs(hp.getPartition(v)) += v)
-      Iterator.range(0, P).flatMap { q =>
-        val a = bufs(q).result()
-        if (a.isEmpty) Iterator.empty else Iterator.single((q, a))
-      }
-    }.partitionBy(idPart)
-
-    // hub edges re-route to a salted partition: chunk k = hash(dst) %
-    // nChunks, target = hash(src, k) — deterministic, so recompiles
-    // stay bit-identical. Non-hub graphs skip the extra shuffle.
-    val eTiles: RDD[(Int, EdgeChunk)] =
-      if (hubMap.isEmpty) eParts
-      else {
-        val hm = hubMap // bounded: ≤ E/chunk entries (≤ 4·parts in auto)
-        val ck = chunk
-        eParts.mapPartitions { it =>
-          val bS = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
-          val bD = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
-          val bW = if (wtd) Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofDouble) else null
-          it.foreach { case (_, c) =>
-            var i = 0
-            while (i < c.srcs.length) {
-              val s = c.srcs(i); val d = c.dsts(i)
-              val target = hm.get(s) match {
-                case Some(dg) =>
-                  val nc = math.min((dg + ck - 1) / ck, P.toLong).toInt
-                  val k = ((mix(d) >>> 33) % nc).toInt
-                  ((mix(s + 31L * (k + 1)) >>> 33) % P).toInt
-                case None => hp.getPartition(s)
-              }
-              bS(target) += s; bD(target) += d
-              if (bW != null) bW(target) += c.ws(i)
-              i += 1
-            }
-          }
-          Iterator.range(0, P).flatMap { q =>
-            val ss = bS(q).result()
-            bS(q) = null
-            if (ss.isEmpty) Iterator.empty
-            else {
-              val dd = bD(q).result(); bD(q) = null
-              val ww = if (bW != null) { val w = bW(q).result(); bW(q) = null; w } else null
-              Iterator.single((q, EdgeChunk(ss, dd, ww)))
-            }
-          }
-        }.partitionBy(idPart)
-      }
-
-    // No materializing count() here: the nV/nE fold job below computes
-    // `compiled` in its meta shuffle-map stage, which caches these
-    // partitions as a side effect — one job fewer per compile.
-    val compiled: RDD[(KernelPartition, Array[Array[Long]])] =
-      vChunks.zipPartitions(eTiles, preservesPartitioning = true) { (vIt, eIt) =>
-        Iterator.single(compilePartition(parts, hp, hubMap, vIt, eIt, weighted))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // one-time exchange of each tile's (sorted) destination-id list to
-    // its owner partition → per-(p,q) slot mappings
-    val meta: RDD[(Int, (Int, Array[Long]))] = compiled
-      .mapPartitionsWithIndex { (p, it) =>
-        val (_, dstVids) = it.next()
-        Iterator.range(0, parts).flatMap(q =>
-          if (dstVids(q) == null) Iterator.empty
-          else Iterator.single((q, (p, dstVids(q)))))
-      }.partitionBy(idPart)
-
-    val kernel: RDD[KernelPartition] = compiled.zipPartitions(meta,
-      preservesPartitioning = false) { (cIt, mIt) =>
-      val (kp, _) = cIt.next()
-      val vidSlot = new LongIntMap(kp.vids.length)
-      var vi = 0
-      while (vi < kp.vids.length) { vidSlot.put(kp.vids(vi), vi); vi += 1 }
-      val inSlots = new Array[Array[Int]](parts)
-      mIt.foreach { case (_, (p, dstVids)) =>
-        val arr = new Array[Int](dstVids.length)
-        var i = 0
-        while (i < dstVids.length) {
-          arr(i) = vidSlot.get(dstVids(i))
-          i += 1
-        }
-        inSlots(p) = arr
-      }
-      Iterator.single(kp.copy(inSlots = inSlots))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-
-    val (nV, nE, nMir) = kernel
-      .map(kp => (kp.vids.length.toLong,
-        kp.tiles.map(t => if (t == null) 0L else t.nEdges.toLong).sum,
-        kp.mirrorVids.length.toLong))
-      .fold((0L, 0L, 0L)) { case ((v1, e1, m1), (v2, e2, m2)) =>
-        (v1 + v2, e1 + e2, m1 + m2) }
-    eParts.unpersist(false) // kernel + compiled are materialized now
-    compiled.unpersist(false)
-    new CompiledGraph(kernel, spark, parts, nV, nE, weighted, nMir)
-  }
-
-  private def compilePartition(
-      P: Int, hp: HashPartitioner, hubMap: Map[Long, Long],
-      vIt: Iterator[(Int, Array[Long])], eIt: Iterator[(Int, EdgeChunk)],
-      weighted: Boolean): (KernelPartition, Array[Array[Long]]) = {
-    // owned vid universe: merge the per-sender distinct-vid chunks,
-    // sort, dedup in place
-    val vb = new scala.collection.mutable.ArrayBuilder.ofLong
-    vIt.foreach { case (_, a) => vb ++= a }
-    val vids = {
-      val raw = vb.result()
-      java.util.Arrays.sort(raw)
-      var u = -1; var i = 0
-      while (i < raw.length) {
-        if (u < 0 || raw(i) != raw(u)) { u += 1; raw(u) = raw(i) }
-        i += 1
-      }
-      java.util.Arrays.copyOf(raw, u + 1)
-    }
-    val nOwned = vids.length
-    val vidSlot = new LongIntMap(nOwned)
-    var vi = 0
-    while (vi < nOwned) { vidSlot.put(vids(vi), vi); vi += 1 }
-    val deg = new Array[Long](nOwned)
-
-    // bucket edges by destination partition, counting owned out-degrees
-    // as they stream by (un-salted sources are wholly local, so the
-    // local count IS the out-degree; salted hubs are overridden from
-    // hubMap below) and collecting the sources a salted compile routed
-    // here that this partition does NOT own
-    val bufS = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
-    val bufD = Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofLong)
-    val bufW = if (weighted) Array.fill(P)(new scala.collection.mutable.ArrayBuilder.ofDouble) else null
-    val mirrorB = new scala.collection.mutable.ArrayBuilder.ofLong
-    eIt.foreach { case (_, c) =>
-      var i = 0
-      while (i < c.srcs.length) {
-        val s = c.srcs(i); val d = c.dsts(i)
-        val q = hp.getPartition(d)
-        bufS(q) += s; bufD(q) += d
-        if (bufW != null) bufW(q) += c.ws(i)
-        val sl = vidSlot.getOrElse(s, -1)
-        if (sl < 0) mirrorB += s else deg(sl) += 1
-        i += 1
-      }
-    }
-    // owned salted hubs: the local count misses the chunks routed to
-    // other partitions — the hub map carries the full out-degree
-    hubMap.foreach { case (h, dg) =>
-      val sl = vidSlot.getOrElse(h, -1)
-      if (sl >= 0) deg(sl) = dg
-    }
-    // sorted, deduped mirror list → deterministic mirror slot order
-    val mirrorVids = {
-      val raw = mirrorB.result()
-      java.util.Arrays.sort(raw)
-      var u = -1; var i = 0
-      while (i < raw.length) {
-        if (u < 0 || raw(i) != raw(u)) { u += 1; raw(u) = raw(i) }
-        i += 1
-      }
-      java.util.Arrays.copyOf(raw, u + 1)
-    }
-    val mirrorSlot = new LongIntMap(math.max(1, mirrorVids.length))
-    var mi = 0
-    while (mi < mirrorVids.length) { mirrorSlot.put(mirrorVids(mi), mi); mi += 1 }
-    def slotOf(s: Long): Int = {
-      val o = vidSlot.getOrElse(s, -1)
-      if (o >= 0) o else nOwned + mirrorSlot.get(s)
-    }
-
-    // combined invDeg: owned (from the local counts / hub override
-    // above) ++ mirror (from the hub map — a mirror is by construction
-    // a hub, whose full out-degree the map carries)
-    val invDeg = new Array[Double](nOwned + mirrorVids.length)
-    var di0 = 0
-    while (di0 < nOwned) {
-      if (deg(di0) > 0) invDeg(di0) = 1.0 / deg(di0)
-      di0 += 1
-    }
-    mi = 0
-    while (mi < mirrorVids.length) {
-      invDeg(nOwned + mi) = 1.0 / hubMap(mirrorVids(mi))
-      mi += 1
-    }
-    // owned vids that are salted hubs (mirrored in other partitions):
-    // their state is harvested for the hub broadcast every superstep
-    val ownedHubSlots = hubMap.keysIterator
-      .map(h => vidSlot.getOrElse(h, -1)).filter(_ >= 0).toArray
-    java.util.Arrays.sort(ownedHubSlots)
-
-    val tiles = new Array[Tile](P)
-    val dstVids = new Array[Array[Long]](P)
-    var q = 0
-    while (q < P) {
-      val ss = bufS(q).result(); val dd = bufD(q).result()
-      val ww = if (bufW != null) bufW(q).result() else null
-      // release each tile's builders as soon as they are drained —
-      // result() copies, so holding the builder doubles the tile's
-      // bytes; across all P builders that peak OOM'd an 8-partition
-      // compile of the 460M-edge table (each partition stages E/8
-      // edges through these buffers)
-      bufS(q) = null; bufD(q) = null
-      if (bufW != null) bufW(q) = null
-      if (ss.nonEmpty) {
-        val n = ss.length
-        // deterministic tile layout: edges in ascending SOURCE-SLOT
-        // order (slot fits an Int, so (slot<<32 | idx) sorts as one
-        // primitive long — no boxed comparator). Per-destination sums
-        // are then added in ascending-source order every compile; dst
-        // order within a source row is irrelevant to the sums. Mirror
-        // slots sort after owned slots — also deterministic.
-        val order = new Array[Long](n)
-        var oi = 0
-        while (oi < n) { order(oi) = (slotOf(ss(oi)).toLong << 32) | oi; oi += 1 }
-        java.util.Arrays.sort(order)
-        // sorted distinct destination list → tile-local ids
-        val distinct = dd.clone()
-        java.util.Arrays.sort(distinct)
-        var u = 0; var i = 1
-        while (i < distinct.length) {
-          if (distinct(i) != distinct(u)) { u += 1; distinct(u) = distinct(i) }
-          i += 1
-        }
-        val tileDsts = java.util.Arrays.copyOf(distinct, u + 1)
-        val dstIdx = new LongIntMap(tileDsts.length)
-        var di = 0
-        while (di < tileDsts.length) { dstIdx.put(tileDsts(di), di); di += 1 }
-
-        val srcSlotsB = new scala.collection.mutable.ArrayBuilder.ofInt
-        val offsetsB = new scala.collection.mutable.ArrayBuilder.ofInt
-        val dstLocal = new Array[Int](n)
-        val wOut = if (ww != null) new Array[Double](n) else null
-        var lastSlot = -1
-        var k = 0
-        while (k < n) {
-          val slot = (order(k) >>> 32).toInt
-          val e = order(k).toInt
-          if (slot != lastSlot) {
-            srcSlotsB += slot
-            offsetsB += k
-            lastSlot = slot
-          }
-          dstLocal(k) = dstIdx.get(dd(e))
-          if (wOut != null) wOut(k) = ww(e)
-          k += 1
-        }
-        offsetsB += n
-        tiles(q) = Tile(srcSlotsB.result(), offsetsB.result(), dstLocal, wOut, tileDsts.length)
-        dstVids(q) = tileDsts
-      }
-      q += 1
-    }
-    (KernelPartition(vids, deg, invDeg, mirrorVids, ownedHubSlots, tiles,
-      inSlots = null), dstVids)
+    new SlotBuckets(offsets, labs, cnts)
   }
 }

@@ -135,8 +135,7 @@ object ScalingProbe {
       if (kernelMode && (algo == "lpa" || algo == "lpaf")) {
         // "lpaf" = the same kernel LPA with the incremental delta path
         // disabled (full recount every superstep) — the A/B twin that
-        // isolates what the persistent-LabelTable mode buys
-        if (algo == "lpaf") spark.conf.set("graft.lpa.incremental", "false")
+        // isolates what the persistent-counts mode buys
         val und = GraphShaping.shape(edges,
           EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
           .select("src", "dst")
@@ -144,7 +143,8 @@ object ScalingProbe {
         val tBuild = (System.nanoTime() - t0) / 1e9
         buildSec = tBuild
         println(f"[probe] mode=kernel-$algo cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$tBuild%.1f")
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(g.lpa(maxIters = iters))
+        val (r, pl) = PhaseListener.measure(spark.sparkContext)(
+          g.lpa(maxIters = iters, incremental = algo != "lpaf"))
         r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
         (s"kernel-$algo", g.numVertices, g.numEdges, r.iterations,
           r.metrics.map(_.wallMs), g.edgeImbalance, pl)

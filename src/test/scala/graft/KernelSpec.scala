@@ -181,16 +181,16 @@ class KernelSpec extends SparkTestBase {
   test("incremental LPA equals full-recount LPA (labels, iterations, checksum)") {
     // community structure with a long coalescing tail so several
     // supersteps pass the active·2 ≤ V gate and run the delta path
-    // (±label triples into the persistent LabelTable) — the full-only
+    // (±label triples into the persistent SlotCounts) — the full-only
     // twin recounts every edge every superstep; both must agree bit
-    // for bit. graft.lpa.incremental=false is the session A/B lever.
+    // for bit. incremental = false is the A/B lever.
     val clique = (0L until 10L).flatMap(a => (0L until 10L).map(b => (a, b)))
     val es = clique ++ (0L until 200L).map(i => (i, i + 1)) ++
       randomEdges(250, 500, seed = 211)
-    def run(): (Int, Double, Map[Long, Double], Boolean) = {
+    def run(incremental: Boolean): (Int, Double, Map[Long, Double], Boolean) = {
       val g = SpmvKernel.compile(edgesDF(es.map(e => (e._1, e._2)) ++ es.map(e => (e._2, e._1))), parts)
       try {
-        val r = g.lpa(maxIters = 25)
+        val r = g.lpa(maxIters = 25, incremental = incremental)
         // a non-final superstep with active·2 ≤ V means the NEXT one
         // ran the incremental delta path (the gate reads last count)
         val engaged = r.metrics.dropRight(1).exists(_.activeVertices * 2 <= g.numVertices)
@@ -198,10 +198,9 @@ class KernelSpec extends SparkTestBase {
           r.state.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap, engaged)
       } finally g.unpersist()
     }
-    val hybrid = run()
+    val hybrid = run(incremental = true)
     assert(hybrid._4, "test graph never passed the incremental gate — nothing exercised")
-    spark.conf.set("graft.lpa.incremental", "false")
-    val full = try run() finally spark.conf.unset("graft.lpa.incremental")
+    val full = run(incremental = false)
     assert(hybrid._1 == full._1, s"iterations: hybrid=${hybrid._1} full=${full._1}")
     assert(hybrid._2 == full._2, "checksum diverged")
     assert(hybrid._3 == full._3, "labels diverged between incremental and full LPA")

@@ -107,6 +107,32 @@ object ReferenceOracle {
     dist.toMap
   }
 
+  /** Synchronous frequency LPA on the undirected, deduped closure of
+    * `edges` without self-loops: every vertex starts with its own id;
+    * each round every vertex takes the label most frequent among its
+    * neighbours (max count, then min label), and a vertex with no
+    * neighbours keeps its label. Stops after a round that changed
+    * nothing or after `maxIters` rounds. Returns (labels, rounds). */
+  def lpa(edges: Seq[(Long, Long)], maxIters: Int): (Map[Long, Long], Int) = {
+    val nbrs = edges.filter(e => e._1 != e._2)
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    var label = vertices(edges).map(v => v -> v).toMap
+    var rounds = 0
+    var changed = label.nonEmpty
+    while (changed && rounds < maxIters) {
+      val next = label.map { case (v, l) =>
+        v -> nbrs.get(v).fold(l) { ns =>
+          ns.groupBy(label).toSeq.map { case (lab, xs) => (-xs.size, lab) }.min._2
+        }
+      }
+      changed = next != label
+      label = next
+      rounds += 1
+    }
+    (label, rounds)
+  }
+
   /** Exact triangle count of the undirected simple closure. */
   def triangles(edges: Seq[(Long, Long)]): Long = {
     val simple = edges.filter(e => e._1 != e._2)

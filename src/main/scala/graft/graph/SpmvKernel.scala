@@ -1245,442 +1245,3 @@ object SpmvKernel {
     java.util.Arrays.copyOf(raw, u + 1)
   }
 }
-
-/** The per-tile exchange formats: one byte array per tile message, a
-  * header of (format:int, count:int), then the payload — dense doubles,
-  * sparse (idx:int…, val:double…), or LPA (dstLocal:int…, label:double…,
-  * count:int…) triples. */
-private[graph] object TilePacks {
-  final val FmtDense = 0
-  final val FmtSparse = 1
-  // LPA label-count triples (dstLocal, label, count) — the mode
-  // combiner's partial aggregate, which is a multiset not a scalar
-  final val FmtLabels = 2
-
-  def packDense(acc: Array[Double]): Array[Byte] = {
-    val bytes = new Array[Byte](8 + acc.length * 8)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    bb.putInt(0, FmtDense); bb.putInt(4, acc.length)
-    bb.position(8)
-    bb.asDoubleBuffer().put(acc) // ONE bulk copy
-    bytes
-  }
-
-  /** Dense accumulator → whichever pack ships fewer bytes (sparse
-    * entry = 12 bytes vs dense slot = 8). `identity` marks absent. */
-  def packBest(acc: Array[Double], identity: Double): Array[Byte] = {
-    var nnz = 0
-    var i = 0
-    while (i < acc.length) { if (acc(i) != identity) nnz += 1; i += 1 }
-    if (12L * nnz >= 8L * acc.length) packDense(acc)
-    else {
-      val bytes = new Array[Byte](8 + 12 * nnz)
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      bb.putInt(0, FmtSparse); bb.putInt(4, nnz)
-      val ib = { bb.position(8); bb.asIntBuffer() }
-      val db = { bb.position(8 + 4 * nnz); bb.asDoubleBuffer() }
-      i = 0
-      while (i < acc.length) {
-        if (acc(i) != identity) { ib.put(i); db.put(acc(i)) }
-        i += 1
-      }
-      bytes
-    }
-  }
-
-  /** True SpMSpV tile pass: assemble (dstLocal, value) contributions
-    * from the frontier rows only, sort by (dst, edge-order) via one
-    * packed-long primitive sort (deterministic sum fold order), merge
-    * runs with the combiner, and pack sparse. Never touches an
-    * nDsts-sized array. */
-  def packSparseAssembled(rows: Array[Int], srcSlots: Array[Int],
-                                  offsets: Array[Int], dstLocal: Array[Int],
-                                  w: Array[Double], vids: Array[Long],
-                                  values: Array[Double], invDeg: Array[Double],
-                                  width: Int, aEdges: Int, sum: Boolean, eop: Int,
-                                  program: KernelProgram): Array[Byte] = {
-    val order = new Array[Long](aEdges) // (dstLocal << 32) | contribution index
-    val vals = new Array[Double](aEdges)
-    var k = 0
-    var r = 0
-    while (r < rows.length) {
-      val i = rows(r); val slot = srcSlots(i)
-      val msg = program.message(vids(slot), values, slot * width, invDeg(slot))
-      var e = offsets(i); val end = offsets(i + 1)
-      while (e < end) {
-        val v = eop match {
-          case 0 => msg
-          case 1 => if (w == null) msg else msg * w(e)
-          case 2 => if (w == null) msg + 1.0 else msg + w(e)
-        }
-        order(k) = (dstLocal(e).toLong << 32) | k
-        vals(k) = v
-        k += 1
-        e += 1
-      }
-      r += 1
-    }
-    java.util.Arrays.sort(order)
-    // merge-combine runs of equal dst (ascending contribution order
-    // within a dst → deterministic sums)
-    val outI = new Array[Int](aEdges)
-    val outV = new Array[Double](aEdges)
-    var nnz = 0
-    var t = 0
-    while (t < aEdges) {
-      val d = (order(t) >>> 32).toInt
-      var v = vals(order(t).toInt)
-      t += 1
-      while (t < aEdges && (order(t) >>> 32).toInt == d) {
-        val v2 = vals(order(t).toInt)
-        if (sum) v += v2 else if (v2 < v) v = v2
-        t += 1
-      }
-      outI(nnz) = d; outV(nnz) = v; nnz += 1
-    }
-    val bytes = new Array[Byte](8 + 12 * nnz)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    bb.putInt(0, FmtSparse); bb.putInt(4, nnz)
-    bb.position(8)
-    bb.asIntBuffer().put(outI, 0, nnz)
-    bb.position(8 + 4 * nnz)
-    bb.asDoubleBuffer().put(outV, 0, nnz)
-    bytes
-  }
-
-  /** (dstLocal, label, count) triples → one FmtLabels byte pack. */
-  def packTriples(dd: Array[Int], ll: Array[Double], cc: Array[Int],
-                          nnz: Int): Array[Byte] = {
-    val bytes = new Array[Byte](8 + 16 * nnz)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    bb.putInt(0, FmtLabels); bb.putInt(4, nnz)
-    bb.position(8)
-    bb.asIntBuffer().put(dd, 0, nnz)
-    bb.position(8 + 4 * nnz)
-    bb.asDoubleBuffer().put(ll, 0, nnz)
-    bb.position(8 + 12 * nnz)
-    bb.asIntBuffer().put(cc, 0, nnz)
-    bytes
-  }
-}
-
-/** The kernel's one hash table: primitive open-addressing Long→Long
-  * with insertion-order enumeration (`keyAt`/`valueAt` for j < size),
-  * an O(size) `clear`, and doubling growth clamped at 2^30 slots. It
-  * slots vids and tile destinations at compile time, counts hub
-  * out-degrees, re-slots checkpointed state, and folds LPA label
-  * counts (keys = raw label bits). Every Long is a valid key; a
-  * separate `used` mark tells free slots apart, and with no deletes a
-  * probe stops at the first free slot, so an absent key costs one
-  * short probe run. Layout (split key/value arrays, triangular
-  * probing) was picked over interleaved key/value and over linear
-  * probing by traced compile.task_cpu_ms and superstep.lpa.apply_cpu_ms
-  * (perfbench fresh_graph and kernel_loops, 4 cores). */
-private[graph] final class LongTable(expected: Int) {
-  private var mask = LongTable.capacityFor(expected) - 1
-  private var keys = new Array[Long](mask + 1)
-  private var vals = new Array[Long](mask + 1)
-  private var used = new Array[Boolean](mask + 1)
-  private var order = new Array[Int](LongTable.maxFill(mask + 1)) // slot of the j-th key
-  private var n = 0
-
-  def size: Int = n
-  def keyAt(j: Int): Long = keys(order(j))
-  def valueAt(j: Int): Long = vals(order(j))
-
-  /** The slot holding `k`, or the free slot where it would go. */
-  private def find(k: Long): Int = {
-    var h = k * -7046029254386353131L
-    h ^= h >>> 32
-    var i = h.toInt & mask
-    var step = 1 // triangular probing: visits every slot of a power-of-two table
-    while (used(i) && keys(i) != k) { i = (i + step) & mask; step += 1 }
-    i
-  }
-
-  /** The slot holding `k`, inserting it with value 0 when absent. */
-  private def slot(k: Long): Int = {
-    var i = find(k)
-    if (!used(i)) {
-      if (n == order.length) { grow(); i = find(k) }
-      used(i) = true; keys(i) = k; vals(i) = 0L
-      order(n) = i; n += 1
-    }
-    i
-  }
-
-  def get(k: Long, dflt: Long): Long = {
-    val i = find(k)
-    if (used(i)) vals(i) else dflt
-  }
-  def put(k: Long, v: Long): Unit = {
-    val i = slot(k) // may grow, replacing `vals`
-    vals(i) = v
-  }
-  def add(k: Long, d: Long): Unit = {
-    val i = slot(k)
-    vals(i) += d
-  }
-
-  def clear(): Unit = {
-    var j = 0
-    while (j < n) { used(order(j)) = false; j += 1 }
-    n = 0
-  }
-
-  private def grow(): Unit = {
-    val ok = keys; val ov = vals; val oo = order; val on = n
-    val cap = LongTable.grownCapacity(mask + 1)
-    mask = cap - 1
-    keys = new Array[Long](cap); vals = new Array[Long](cap)
-    used = new Array[Boolean](cap); order = new Array[Int](LongTable.maxFill(cap))
-    n = 0
-    var j = 0
-    while (j < on) { put(ok(oo(j)), ov(oo(j))); j += 1 }
-  }
-}
-
-private[graph] object LongTable {
-  /** Largest capacity: one more doubling would overflow the Int index
-    * space deep inside a task, so growth past it fails with the limit
-    * instead (more than ~7·10^8 keys in one partition means the
-    * partition count is wrong for the data). */
-  final val MaxCapacity = 1 << 30
-
-  def grownCapacity(cap: Int): Int = {
-    if (cap >= MaxCapacity)
-      throw new IllegalStateException(
-        s"LongTable capacity would exceed 2^30 slots (at $cap) — " +
-          "raise the partition count so per-partition key cardinality fits")
-    cap << 1
-  }
-
-  /** Smallest power-of-two capacity holding `expected` keys at load ≤ 1/2. */
-  private def capacityFor(expected: Int): Int = {
-    var c = 16
-    while (c / 2 < expected) c = grownCapacity(c)
-    c
-  }
-
-  /** Keys a table of capacity `cap` holds before it grows (load 2/3). */
-  private def maxFill(cap: Int): Int = (cap / 3) * 2
-
-  /** ks(i) → i over distinct keys — a vid or destination slot index. */
-  def positions(ks: Array[Long]): LongTable = {
-    val t = new LongTable(ks.length)
-    var i = 0
-    while (i < ks.length) { t.put(ks(i), i); i += 1 }
-    t
-  }
-}
-
-/** The LPA mode's PERSISTENT per-(state-slot, label) counts — the
-  * destination-side aggregation state an LPA superstep arg-maxes over
-  * and the incremental superstep carries across iterations, so it only
-  * has to absorb deltas from changed sources instead of recounting
-  * every in-edge (the frontier idea applied to the multiset combiner;
-  * the reference has no analog — its min-label LPA rides the scalar
-  * frontier kernel). Each slot holds its live (labelBits, count) pairs
-  * interleaved in one Array[Long] (null = no live label). Counts are
-  * exact and strictly positive (by induction: every −1 removes a
-  * contribution a prior +1 added). Bounded by Σ distinct (dst, label)
-  * pairs alive ≤ the partition's in-edge count — the same order as the
-  * compiled tiles themselves. */
-private[graph] final class SlotCounts(private val bySlot: Array[Array[Long]])
-    extends Serializable {
-
-  /** Arg-max over the slot's live labels — max count, ties toward the
-    * smallest label (LPA labels are nonnegative vertex ids, whose IEEE
-    * bit pattern is order-isomorphic to the value, so the raw-bits `<`
-    * IS the label `<` — identical to algos.LabelPropagation's
-    * max(struct(cnt, -label))). Long.MinValue when the slot has no live
-    * label (then the caller keeps its label). */
-  def argmax(slot: Int): Long = {
-    val e = bySlot(slot)
-    var bestCnt = 0L
-    var bestKey = Long.MinValue
-    if (e != null) {
-      var i = 0
-      while (i < e.length) {
-        val c = e(i + 1)
-        if (c > bestCnt || (c == bestCnt && e(i) < bestKey)) { bestCnt = c; bestKey = e(i) }
-        i += 2
-      }
-    }
-    bestKey
-  }
-
-  /** These counts with every fed slot's bucket merged in, dropping
-    * labels whose counts net to zero. Copy-on-write at SLOT
-    * granularity: the result shares every unfed slot's array and this
-    * receiver stays untouched, so a retried or recomputed task sees the
-    * old counts (the contract a persisted PartState requires) — O(V/P)
-    * pointer copy plus O(fed entries), never an O(E) pool copy, which
-    * would put a term proportional to E back into every small-frontier
-    * superstep. `table` is the caller's scratch. */
-  def merged(fed: SlotBuckets, table: LongTable): SlotCounts = {
-    val next = bySlot.clone()
-    var slot = 0
-    while (slot < next.length) {
-      val from = fed.offsets(slot); val until = fed.offsets(slot + 1)
-      if (until > from) {
-        table.clear()
-        val e = bySlot(slot)
-        if (e != null) {
-          var i = 0
-          while (i < e.length) { table.add(e(i), e(i + 1)); i += 2 }
-        }
-        var k = from
-        while (k < until) { table.add(fed.labs(k), fed.cnts(k)); k += 1 }
-        var live = 0
-        var j = 0
-        while (j < table.size) { if (table.valueAt(j) != 0L) live += 1; j += 1 }
-        if (live == 0) next(slot) = null
-        else {
-          val out = new Array[Long](2 * live)
-          var o = 0
-          j = 0
-          while (j < table.size) {
-            val c = table.valueAt(j)
-            if (c != 0L) { out(o) = table.keyAt(j); out(o + 1) = c; o += 2 }
-            j += 1
-          }
-          next(slot) = out
-        }
-      }
-      slot += 1
-    }
-    new SlotCounts(next)
-  }
-}
-
-private[graph] object SlotCounts {
-  /** No labels anywhere — the base a FULL superstep merges into. */
-  def empty(nSlots: Int): SlotCounts = new SlotCounts(new Array[Array[Long]](nSlots))
-}
-
-/** A destination partition's incoming LPA triples bucketed by state
-  * slot: a flat CSR (`offsets` by slot, then label bits and ±counts in
-  * arrival order). A slot is FED when its bucket is non-empty. */
-private[graph] final class SlotBuckets(val offsets: Array[Int], val labs: Array[Long],
-                                       val cnts: Array[Int])
-
-private[graph] object LabelCounts {
-  import graft.graph.SpmvKernel.{Tile, bitGet}
-
-  /** Stage-1 LPA tile pass: per destination, the net (label, ±count)
-    * contributions of the tile's source rows, packed as FmtLabels
-    * triples. `rows == null` is a FULL pass: every source ships +1 for
-    * its label over each out-edge. Otherwise only sources whose bit is
-    * set in `rows` ship — +1 for the new label and −1 for the previous
-    * one per out-edge — which keeps the destination's counts equal to
-    * the full recount at O(changed-edge) cost. Contributions are
-    * grouped by destination with one primitive long sort of
-    * (dstLocal << 32 | index) and folded in `table`; a ± pair that
-    * cancels ships nothing. Returns null when nothing ships. */
-  def packLabelDeltas(t: Tile, values: Array[Double], rows: Array[Long],
-                      table: LongTable): Array[Byte] = {
-    val srcSlots = t.srcSlots; val offsets = t.offsets; val dstLocal = t.dstLocal
-    val rowsB = new scala.collection.mutable.ArrayBuilder.ofInt
-    var aEdges = 0
-    var i = 0
-    while (i < srcSlots.length) {
-      if (rows == null || bitGet(rows, srcSlots(i))) {
-        rowsB += i; aEdges += offsets(i + 1) - offsets(i)
-      }
-      i += 1
-    }
-    val shipping = rowsB.result()
-    if (shipping.isEmpty) return null
-    // up to two contributions per shipping edge: (+new, −prev)
-    val maxK = if (rows == null) aEdges else 2 * aEdges
-    val order = new Array[Long](maxK)
-    val labs = new Array[Long](maxK)
-    val sign = new Array[Int](maxK)
-    var k = 0
-    var r = 0
-    while (r < shipping.length) {
-      val i2 = shipping(r); val slot = srcSlots(i2)
-      val cur = java.lang.Double.doubleToRawLongBits(values(slot * 2))
-      val prevD = values(slot * 2 + 1)
-      val hasPrev = rows != null && !prevD.isNaN
-      val prevBits =
-        if (hasPrev) java.lang.Double.doubleToRawLongBits(prevD) else 0L
-      var e = offsets(i2); val end = offsets(i2 + 1)
-      while (e < end) {
-        val key = dstLocal(e).toLong << 32
-        order(k) = key | k; labs(k) = cur; sign(k) = 1; k += 1
-        if (hasPrev) { order(k) = key | k; labs(k) = prevBits; sign(k) = -1; k += 1 }
-        e += 1
-      }
-      r += 1
-    }
-    java.util.Arrays.sort(order, 0, k)
-    // fold ± per (dst, label); emit the nonzero net deltas
-    val outD = new scala.collection.mutable.ArrayBuilder.ofInt
-    val outL = new scala.collection.mutable.ArrayBuilder.ofDouble
-    val outC = new scala.collection.mutable.ArrayBuilder.ofInt
-    var nnz = 0
-    var t2 = 0
-    while (t2 < k) {
-      val d = (order(t2) >>> 32).toInt
-      table.clear()
-      while (t2 < k && (order(t2) >>> 32).toInt == d) {
-        val j = order(t2).toInt
-        table.add(labs(j), sign(j))
-        t2 += 1
-      }
-      var j = 0
-      while (j < table.size) {
-        val c = table.valueAt(j)
-        if (c != 0L) {
-          outD += d
-          outL += java.lang.Double.longBitsToDouble(table.keyAt(j))
-          outC += c.toInt
-          nnz += 1
-        }
-        j += 1
-      }
-    }
-    if (nnz == 0) null
-    else TilePacks.packTriples(outD.result(), outL.result(), outC.result(), nnz)
-  }
-
-  /** Bucket a destination partition's FmtLabels packs by state slot
-    * (`inSlots(p)` maps source partition p's tile-local destinations to
-    * slots). Two passes over the packs — count, then place — so every
-    * array is allocated once at its exact size; within a slot, triples
-    * keep arrival order (sorted source partition, then pack order). */
-  def bucketBySlot(nSlots: Int, packIt: Iterator[((Int, Int), Array[Byte])],
-                   inSlots: Array[Array[Int]]): SlotBuckets = {
-    val packs = packIt.toArray
-    val offsets = new Array[Int](nSlots + 1)
-    packs.foreach { case ((_, p), bytes) =>
-      val slots = inSlots(p)
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      val ne = bb.getInt(4)
-      var t = 0
-      while (t < ne) { offsets(slots(bb.getInt(8 + 4 * t)) + 1) += 1; t += 1 }
-    }
-    var s = 0
-    while (s < nSlots) { offsets(s + 1) += offsets(s); s += 1 }
-    val labs = new Array[Long](offsets(nSlots))
-    val cnts = new Array[Int](offsets(nSlots))
-    val cursor = java.util.Arrays.copyOf(offsets, nSlots)
-    packs.foreach { case ((_, p), bytes) =>
-      val slots = inSlots(p)
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      val ne = bb.getInt(4)
-      var t = 0
-      while (t < ne) {
-        val slot = slots(bb.getInt(8 + 4 * t))
-        val k = cursor(slot)
-        labs(k) = bb.getLong(8 + 4 * ne + 8 * t) // the label double's raw bits
-        cnts(k) = bb.getInt(8 + 12 * ne + 4 * t)
-        cursor(slot) = k + 1
-        t += 1
-      }
-    }
-    new SlotBuckets(offsets, labs, cnts)
-  }
-}

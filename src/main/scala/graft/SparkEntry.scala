@@ -35,9 +35,10 @@ object SparkEntry {
   /** Exact row count of a projection over a single parquet relation,
     * read DRIVER-SIDE from the parquet footers (row-group counts) —
     * the same number `df.count()` returns, without launching a job.
-    * Falls back to `df.count()` for any other plan shape (filters,
-    * joins, checkpointed RDDs). */
-  private def fastRowCount(df: DataFrame): Long = {
+    * The footers are read on at most `FooterThreads` threads. Falls
+    * back to `df.count()` for any other plan shape (filters, joins,
+    * checkpointed RDDs) and when a footer cannot be read. */
+  private[graft] def fastRowCount(df: DataFrame): Long = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     @annotation.tailrec
@@ -51,18 +52,28 @@ object SparkEntry {
           if fs.fileFormat.isInstanceOf[
             org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
           val conf = df.sparkSession.sessionState.newHadoopConf()
-          try fs.location.inputFiles.map { f =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }.sum
+          val files = fs.location.inputFiles
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(
+            math.max(1, math.min(FooterThreads, files.length)))
+          try files.map { f =>
+            pool.submit[Long] { () =>
+              val in = org.apache.parquet.hadoop.util.HadoopInputFile
+                .fromPath(new org.apache.hadoop.fs.Path(f), conf)
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+              try r.getRecordCount finally r.close()
+            }
+          }.map(_.get).sum
           catch { case scala.util.control.NonFatal(_) => df.count() }
+          finally pool.shutdownNow()
         case _ => df.count()
       }
       case _ => df.count()
     }
   }
+
+  /** Footer-read threads of `fastRowCount`: footer reads wait on I/O,
+    * and a few in flight hide most of the latency. */
+  private val FooterThreads = 4
 
   /** Partition count sized to the graph: ~100k edges per partition,
     * capped at the session's shuffle partitions (so at real scale it
@@ -78,17 +89,97 @@ object SparkEntry {
   }
 
   /** Flagship: PageRank over the repo-link pipeline at tiny scale —
-    * corpus → edge extraction (sha256 invariant) → 10 supersteps →
-    * top-ranked repos. Exercises ingest + engine end-to-end. */
+    * corpus → edge extraction (sha256 invariant) → 10 kernel
+    * supersteps → top-ranked repos. Exercises ingest + kernel end-to-end. */
   def entry(spark: SparkSession): DataFrame = {
     import graft.ingest._
     val corpus = RepoCorpus.generate(spark, RepoCorpus.Config(nRepos = 300, filesPerRepo = 3))
     val (e, dict) = EdgeExtraction.ingest(EdgeExtraction.withSha(corpus))
-    val adj = Adjacency.build(e, parts(spark))
-    val pr = PageRank.run(adj, maxIters = 10)
+    val pr = onKernel(e, parts(spark))(_.pagerank(maxIters = 10))
     pr.state.join(dict, "vid").select(col("repo"), col("rank"))
       .orderBy(desc("rank"), asc("repo")).limit(20)
   }
+
+  /** Compiles `edges` into kernel tiles, runs `f` on them and releases
+    * the tiles; the kernel results are materialized on their own. */
+  private def onKernel[R](edges: DataFrame, parts: Int)(f: SpmvKernel.CompiledGraph => R): R = {
+    val g = SpmvKernel.compile(edges, parts)
+    try f(g) finally g.unpersist()
+  }
+
+  /** Undirected, parallel-edge-deduped closure of `e` (the reference's
+    * undirected load, graph.hpp:266-270), self-loops kept or dropped. */
+  private def undirected(e: DataFrame, selfLoops: Boolean): DataFrame =
+    GraphShaping.shape(e,
+      EdgeShaping(selfLoops = selfLoops, directed = false, parallelEdges = false))
+      .select("src", "dst")
+
+  /** The derived edge table with a deterministic integer-valued weight
+    * in [1, 5] (exact in double, so engine-portable). */
+  private def weightedEdges(spark: SparkSession, dir: String): DataFrame =
+    read(spark, dir, "lineitem").select(
+      (col("l_orderkey") % 1000).as("src"),
+      (col("l_partkey") % 1000).as("dst"),
+      (lit(1.0) + (col("l_linenumber") % 5).cast("double")).as("w"))
+
+  private type Query = (SparkSession, String) => DataFrame
+
+  // ---- the superstep algorithms, one kernel body each. Partitions are
+  // sized to the graph (graphParts): on these small derived graphs the
+  // supersteps are task-launch-bound, so full-width stages would cost
+  // more in scheduling than they save; at real scale graphParts IS
+  // spark.sql.shuffle.partitions.
+
+  /** Reference-exact PageRank (pr.h), a fixed 20-superstep budget
+    * (matches the 20-step unrolled oracle), top 25 ranks. */
+  private val pagerankTop: Query = (s, d) => {
+    val e = edges(s, d)
+    val r = onKernel(e, graphParts(s, e))(_.pagerank(maxIters = 20))
+    r.state.select(col("vid"), round(col("rank"), 6).as("rank"))
+      .orderBy(desc("rank"), asc("vid")).limit(25)
+  }
+
+  /** Connected components on the kernel's frontier (SpmvKernel SpMSpV)
+    * mode over the undirected closure: the size of each component,
+    * labelled by its min vid. */
+  private val ccSizes: Query = (s, d) => {
+    val e = edges(s, d)
+    val r = onKernel(undirected(e, selfLoops = true), graphParts(s, e))(
+      _.run(new CcKernelProgram, maxIters = 0))
+    r.state.groupBy(col("label").cast("long").as("label"))
+      .agg(count(lit(1)).as("size")).orderBy(asc("label"))
+  }
+
+  /** Frequency LPA (max count, then min label), 5 supersteps, through
+    * the kernel's label-count triple exchange: the 20 largest labels. */
+  private val lpaTop: Query = (s, d) => {
+    val e = edges(s, d)
+    val r = onKernel(undirected(e, selfLoops = false), graphParts(s, e))(_.lpa(maxIters = 5))
+    r.state.groupBy(col("label").cast("long").as("label")).agg(count(lit(1)).as("n"))
+      .orderBy(desc("n"), asc("label")).limit(20)
+  }
+
+  /** BFS from vid 0 on the frontier mode (hops = iter+1 at discovery):
+    * vertices per hop count, null for the unreached. */
+  private val bfsDepths: Query = (s, d) => {
+    val e = edges(s, d)
+    val r = onKernel(undirected(e, selfLoops = false), graphParts(s, e))(
+      _.run(new BfsKernelProgram(0L), maxIters = 0))
+    r.state.groupBy(col("hops").cast("long").as("hops"))
+      .agg(count(lit(1)).as("n")).orderBy(asc("hops"))
+  }
+
+  /** Directed SSSP from vid 0 on the frontier mode: vertices per
+    * reached distance. The relax is msg + w over a `w` column (the
+    * reference's -DHAS_WEIGHT build, sssp.h:49-66), msg + 1 without. */
+  private def ssspDists(s: SparkSession, e: DataFrame): DataFrame = {
+    val r = onKernel(e, graphParts(s, e))(_.run(new SsspKernelProgram(0L), maxIters = 0))
+    r.state.filter(col("dist").isNotNull)
+      .groupBy(col("dist")).agg(count(lit(1)).as("n")).orderBy(asc("dist"))
+  }
+
+  private val ssspUnweighted: Query = (s, d) => ssspDists(s, edges(s, d))
+  private val ssspWeighted: Query = (s, d) => ssspDists(s, weightedEdges(s, d))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- scans/aggregations over the driver tables (S-/A-family)
@@ -142,134 +233,28 @@ object SparkEntry {
       val sp = s; import sp.implicits._
       Seq(n).toDF("n_triangles")
     }),
-    "q_pagerank_top" -> ((s, d) => {
-      // graph-sized partitioning (guide §2: derive parts from input
-      // size): at sf0.1 the 20-superstep loop is task-launch-bound, not
-      // compute-bound — 32-wide stages cost more in scheduling than the
-      // ~100k-edge-per-partition gather saves; at real scale graphParts
-      // IS spark.sql.shuffle.partitions.
-      val e = edges(s, d)
-      val adj = Adjacency.build(e, graphParts(s, e))
-      PageRank.run(adj, maxIters = 20).state
-        .select(col("vid"), round(col("rank"), 6).as("rank"))
-        .orderBy(desc("rank"), asc("vid")).limit(25)
-    }),
-    "q_pagerank_kernel" -> ((s, d) => {
-      // the tile-compiled RDD SpMV fast path (graph/SpmvKernel) against
-      // the SAME 20-step unrolled DuckDB oracle as the Catalyst engine
-      // (q_pagerank_top) — both execution paths proven hash-identical
-      val e = edges(s, d)
-      val g = graph.SpmvKernel.compile(e, graphParts(s, e))
-      val r = g.pagerank(maxIters = 20)
-      g.unpersist()
-      r.state.select(col("vid"), round(col("rank"), 6).as("rank"))
-        .orderBy(desc("rank"), asc("vid")).limit(25)
-    }),
-    "q_cc_kernel" -> ((s, d) => {
-      // connected components on the compiled kernel's frontier
-      // (SpMSpV) mode — same shaping and the same recursive-CTE oracle
-      // as the Catalyst path (q_cc_sizes): both engines proven
-      // hash-identical
-      val e = edges(s, d)
-      val und = GraphShaping.shape(e,
-        EdgeShaping(directed = false, parallelEdges = false)).select("src", "dst")
-      val g = graph.SpmvKernel.compile(und, graphParts(s, e))
-      val r = g.run(new CcKernelProgram, maxIters = 0)
-      g.unpersist()
-      r.state.groupBy(col("label").cast("long").as("label"))
-        .agg(count(lit(1)).as("size")).orderBy(asc("label"))
-    }),
-    "q_bfs_kernel" -> ((s, d) => {
-      // BFS on the kernel frontier mode (iter-dependent apply: hops =
-      // iter+1 at discovery) vs the same shortest-hop oracle as
-      // q_bfs_depths
-      val e = edges(s, d)
-      val und = GraphShaping.shape(e,
-        EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
-        .select("src", "dst")
-      val g = graph.SpmvKernel.compile(und, graphParts(s, e))
-      val r = g.run(new BfsKernelProgram(0L), maxIters = 0)
-      g.unpersist()
-      r.state.groupBy(col("hops").cast("long").as("hops"))
-        .agg(count(lit(1)).as("n")).orderBy(asc("hops"))
-    }),
-    "q_sssp_kernel" -> ((s, d) => {
-      // unweighted SSSP (relax = dist+1) on the kernel frontier mode
-      // vs the same recursive-reachability oracle as q_sssp
-      val e = edges(s, d)
-      val g = graph.SpmvKernel.compile(e, graphParts(s, e))
-      val r = g.run(new SsspKernelProgram(0L), maxIters = 0)
-      g.unpersist()
-      r.state.filter(col("dist").isNotNull)
-        .groupBy(col("dist")).agg(count(lit(1)).as("n")).orderBy(asc("dist"))
-    }),
-    "q_ssspw_kernel" -> ((s, d) => {
-      // WEIGHTED relax (msg + w, the kernel's AddW opcode over the
-      // compiled tiles' weight arrays — the reference's -DHAS_WEIGHT
-      // build, sssp.h:49-66) on the frontier mode, same edge table and
-      // oracle as the Catalyst q_sssp_weighted
-      val e = read(s, d, "lineitem").select(
-        (col("l_orderkey") % 1000).as("src"),
-        (col("l_partkey") % 1000).as("dst"),
-        (lit(1.0) + (col("l_linenumber") % 5).cast("double")).as("w"))
-      val g = graph.SpmvKernel.compile(e, graphParts(s, e))
-      val r = g.run(new SsspKernelProgram(0L), maxIters = 0)
-      g.unpersist()
-      r.state.filter(col("dist").isNotNull)
-        .groupBy(col("dist")).agg(count(lit(1)).as("n")).orderBy(asc("dist"))
-    }),
+    // Each superstep algorithm has one body on the tile-compiled kernel
+    // (graph/SpmvKernel), bound to two names: the original query name
+    // and its `_kernel` name. Both keep their own oracle SQL.
+    "q_pagerank_top" -> pagerankTop,
+    "q_pagerank_kernel" -> pagerankTop,
+    "q_cc_kernel" -> ccSizes,
+    "q_bfs_kernel" -> bfsDepths,
+    "q_sssp_kernel" -> ssspUnweighted,
+    "q_ssspw_kernel" -> ssspWeighted,
     "q_degree_kernel" -> ((s, d) => {
       // the kernel's degree mode: ONE superstep with messenger ≡ 1 and
       // sum combine (reference Deg_Program, deg.h:32-52) — checked
       // against the same SQL as the relational q_degree_in
       val e = edges(s, d)
-      val g = graph.SpmvKernel.compile(e, graphParts(s, e))
-      val r = g.inDegrees
-      g.unpersist()
-      r
+      onKernel(e, graphParts(s, e))(_.inDegrees)
     }),
-    "q_cc_sizes" -> ((s, d) =>
-      { val e = edges(s, d); ConnectedComponents.sizes(ConnectedComponents.run(e, graphParts(s, e)).state) }
-        .orderBy(asc("label"))),
-    "q_lpa" -> ((s, d) => {
-      val e = edges(s, d)
-      val r = LabelPropagation.run(e, graphParts(s, e), maxIters = 5)
-      r.state.groupBy(col("label")).agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), asc("label")).limit(20)
-    }),
-    "q_lpa_kernel" -> ((s, d) => {
-      // frequency LPA on the compiled tiles (SpmvKernel.lpa — the mode
-      // combiner's label-count triple exchange) vs the SAME unrolled
-      // DuckDB oracle as the Catalyst q_lpa: both paths hash-identical
-      val e = edges(s, d)
-      val r = LabelPropagation.runKernel(e, graphParts(s, e), maxIters = 5)
-      r.state.groupBy(col("label")).agg(count(lit(1)).as("n"))
-        .orderBy(desc("n"), asc("label")).limit(20)
-    }),
-    "q_bfs_depths" -> ((s, d) => {
-      val e = edges(s, d)
-      val r = Traversal.bfs(e, root = 0L, graphParts(s, e))
-      r.state.groupBy(col("hops")).agg(count(lit(1)).as("n")).orderBy(asc("hops"))
-    }),
-    "q_sssp" -> ((s, d) => {
-      val e = edges(s, d)
-      val r = Traversal.sssp(e, root = 0L, graphParts(s, e))
-      r.state.filter(col("dist").isNotNull)
-        .groupBy(col("dist")).agg(count(lit(1)).as("n")).orderBy(asc("dist"))
-    }),
-    "q_sssp_weighted" -> ((s, d) => {
-      // the reference's actual SSSP build is weighted (-DHAS_WEIGHT,
-      // Makefile:27-28; relax at src/apps/sssp.h:49-66) — exercise the
-      // weighted relax end-to-end with a deterministic integer-valued
-      // weight (exact in double, so engine-portable).
-      val e = read(s, d, "lineitem").select(
-        (col("l_orderkey") % 1000).as("src"),
-        (col("l_partkey") % 1000).as("dst"),
-        (lit(1.0) + (col("l_linenumber") % 5).cast("double")).as("w"))
-      val r = Traversal.sssp(e, root = 0L, graphParts(s, e))
-      r.state.filter(col("dist").isNotNull)
-        .groupBy(col("dist")).agg(count(lit(1)).as("n")).orderBy(asc("dist"))
-    }),
+    "q_cc_sizes" -> ccSizes,
+    "q_lpa" -> lpaTop,
+    "q_lpa_kernel" -> lpaTop,
+    "q_bfs_depths" -> bfsDepths,
+    "q_sssp" -> ssspUnweighted,
+    "q_sssp_weighted" -> ssspWeighted,
 
     // ---- training-data ops: dedup / text / similarity
     "q_dedup_exact" -> ((s, d) => Dedup.exact(read(s, d, "documents"), "doc_id", "text")),
@@ -364,10 +349,7 @@ object SparkEntry {
     // checksum aggregate. Any corruption anywhere in the chain moves
     // a sum.
     "q_edgelist_roundtrip" -> ((s, d) => {
-      val e = read(s, d, "lineitem").select(
-        (col("l_orderkey") % 1000).as("src"),
-        (col("l_partkey") % 1000).as("dst"),
-        (lit(1.0) + (col("l_linenumber") % 5).cast("double")).as("w"))
+      val e = weightedEdges(s, d)
       val work = java.nio.file.Files.createTempDirectory("graft-el").toString
       sources.EdgeListSource.writeText(e, s"$work/text")
       java.nio.file.Files.writeString(
@@ -434,7 +416,7 @@ object SparkEntry {
       "(SELECT v, MIN(d) AS dist FROM r GROUP BY v) GROUP BY 1"
 
   /** Frequency-LPA unrolled to exactly `iters` synchronous steps —
-    * identical tie-break to LabelPropagation (max count, then min
+    * identical tie-break to the kernel LPA (max count, then min
     * label). A converged run is a fixpoint, so running the full
     * unrolled budget matches Spark's early-stop. */
   private def lpaSql(iters: Int): String = {
@@ -739,8 +721,7 @@ object SparkEntry {
     "q_quality" -> qualitySql,
     "q_lang_id" -> langIdSql,
     "q_cc_sizes" -> ccSizesSql,
-    // kernel-path runs of the same algorithms check against the SAME
-    // oracles — one oracle, two proven-identical execution engines
+    // each `_kernel` name runs its twin's body against its twin's oracle
     "q_cc_kernel" -> ccSizesSql,
     "q_bfs_kernel" -> bfsDepthsSql,
     "q_sssp_kernel" -> ssspSql,

@@ -200,12 +200,6 @@ object Engine {
       val metricName = s"graft_converge_$iter"
       val observed = applied.observe(metricName,
         sum(when(col("changed"), 1L).otherwise(0L)).as("active"))
-      // plan audit hook: GRAFT_EXPLAIN_SUPERSTEP=<iter> dumps the one
-      // physical plan that repeats every superstep (tools/Explain's
-      // simulation can drift from the real loop; this cannot).
-      if (sys.env.get("GRAFT_EXPLAIN_SUPERSTEP").contains(iter.toString))
-        System.err.println(s"[engine-plan] superstep $iter:\n" +
-          observed.queryExecution.executedPlan)
       val newState = observed.localCheckpoint(true)
       // the superstep's one job has run — drop the job group NOW so
       // follow-up jobs (observe-miss fallback count, checkpoint save)

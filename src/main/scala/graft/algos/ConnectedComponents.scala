@@ -52,9 +52,4 @@ object ConnectedComponents {
     val adj = Adjacency.build(und, parts, weighted = false)
     Engine.run(adj, new MinLabelProgram("cc"), RunConfig(maxIters = 0, ckpt = ckpt))
   }
-
-  /** Component size histogram (for verification / display — the
-    * reference's checksum1 mode/stats analog, vp:1963-2119). */
-  def sizes(state: DataFrame): DataFrame =
-    state.groupBy(col("label")).agg(count(lit(1)).as("size"))
 }

@@ -190,7 +190,7 @@ object ScalingProbe {
         // PageRank to the BASELINE convergence criterion (per-vertex
         // |Δrank| ≤ 1e-6, maxIters=0 → run until no vertex changed) on
         // the KERNEL path: proven hash-identical to the engine
-        // (KernelSpec / q_pagerank_kernel vs q_pagerank_top), so the
+        // (KernelSpec), so the
         // ITERATION COUNT is exactly what the engine would report, at
         // a fraction of the bench budget — which is what kept this
         // sample from being shed in round 4.

@@ -35,9 +35,8 @@ object SparkEntry {
   /** Exact row count of a projection over a single parquet relation,
     * read DRIVER-SIDE from the parquet footers (row-group counts) —
     * the same number `df.count()` returns, without launching a job.
-    * The footers are read on at most `FooterThreads` threads. Falls
-    * back to `df.count()` for any other plan shape (filters, joins,
-    * checkpointed RDDs) and when a footer cannot be read. */
+    * Falls back to `df.count()` for any other plan shape (filters,
+    * joins, checkpointed RDDs). */
   private[graft] def fastRowCount(df: DataFrame): Long = {
     import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -52,28 +51,18 @@ object SparkEntry {
           if fs.fileFormat.isInstanceOf[
             org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
           val conf = df.sparkSession.sessionState.newHadoopConf()
-          val files = fs.location.inputFiles
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.max(1, math.min(FooterThreads, files.length)))
-          try files.map { f =>
-            pool.submit[Long] { () =>
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              try r.getRecordCount finally r.close()
-            }
-          }.map(_.get).sum
+          try fs.location.inputFiles.map { f =>
+            val in = org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromPath(new org.apache.hadoop.fs.Path(f), conf)
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            try r.getRecordCount finally r.close()
+          }.sum
           catch { case scala.util.control.NonFatal(_) => df.count() }
-          finally pool.shutdownNow()
         case _ => df.count()
       }
       case _ => df.count()
     }
   }
-
-  /** Footer-read threads of `fastRowCount`: footer reads wait on I/O,
-    * and a few in flight hide most of the latency. */
-  private val FooterThreads = 4
 
   /** Partition count sized to the graph: ~100k edges per partition,
     * capped at the session's shuffle partitions (so at real scale it
@@ -107,12 +96,10 @@ object SparkEntry {
     try f(g) finally g.unpersist()
   }
 
-  /** Undirected, parallel-edge-deduped closure of `e` (the reference's
-    * undirected load, graph.hpp:266-270), self-loops kept or dropped. */
+  /** The undirected closure of `e` (EdgeShaping.undirected), without
+    * the unit weight column the kernel's unweighted programs ignore. */
   private def undirected(e: DataFrame, selfLoops: Boolean): DataFrame =
-    GraphShaping.shape(e,
-      EdgeShaping(selfLoops = selfLoops, directed = false, parallelEdges = false))
-      .select("src", "dst")
+    GraphShaping.shape(e, EdgeShaping.undirected(selfLoops)).select("src", "dst")
 
   /** The derived edge table with a deterministic integer-valued weight
     * in [1, 5] (exact in double, so engine-portable). */
@@ -150,12 +137,12 @@ object SparkEntry {
       .agg(count(lit(1)).as("size")).orderBy(asc("label"))
   }
 
-  /** Frequency LPA (max count, then min label), 5 supersteps, through
-    * the kernel's label-count triple exchange: the 20 largest labels. */
+  /** Frequency LPA (max count, then min label), 5 supersteps, on the
+    * kernel (LabelPropagation.runKernel): the 20 largest labels. */
   private val lpaTop: Query = (s, d) => {
     val e = edges(s, d)
-    val r = onKernel(undirected(e, selfLoops = false), graphParts(s, e))(_.lpa(maxIters = 5))
-    r.state.groupBy(col("label").cast("long").as("label")).agg(count(lit(1)).as("n"))
+    val r = LabelPropagation.runKernel(e, graphParts(s, e), maxIters = 5)
+    r.state.groupBy(col("label")).agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("label")).limit(20)
   }
 

@@ -47,7 +47,7 @@ object ConnectedComponents {
   def run(edges: DataFrame, parts: Int,
           ckpt: Option[graft.ckpt.CheckpointManager] = None): RunResult = {
     val und = GraphShaping.shape(edges,
-      EdgeShaping(directed = false, parallelEdges = false))
+      EdgeShaping.undirected(selfLoops = true))
     // min-label combine ignores weights → compact dst-only adjacency
     val adj = Adjacency.build(und, parts, weighted = false)
     Engine.run(adj, new MinLabelProgram("cc"), RunConfig(maxIters = 0, ckpt = ckpt))

@@ -24,7 +24,7 @@ object LabelPropagation {
   def run(edges: DataFrame, parts: Int, maxIters: Int = 10,
           ckpt: Option[CheckpointManager] = None): RunResult = {
     val und = GraphShaping.shape(edges,
-      EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
+      EdgeShaping.undirected(selfLoops = false))
     val adj = Adjacency.build(und, parts, weighted = false)
     runOnAdjacency(adj, maxIters, ckpt)
   }
@@ -37,7 +37,7 @@ object LabelPropagation {
   def runKernel(edges: DataFrame, parts: Int, maxIters: Int = 10,
                 ckpt: Option[CheckpointManager] = None): RunResult = {
     val und = GraphShaping.shape(edges,
-      EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
+      EdgeShaping.undirected(selfLoops = false))
       .select("src", "dst")
     val g = SpmvKernel.compile(und, parts)
     val r = g.lpa(maxIters, ckpt = ckpt)

@@ -79,7 +79,7 @@ object Traversal {
   def bfs(edges: DataFrame, root: Long, parts: Int,
           ckpt: Option[graft.ckpt.CheckpointManager] = None): RunResult = {
     val und = GraphShaping.shape(edges,
-      EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
+      EdgeShaping.undirected(selfLoops = false))
     // BFS messages carry the parent vid; weight unused → compact layout
     val adj = Adjacency.build(und, parts, weighted = false)
     Engine.run(adj, new BfsProgram(root), RunConfig(maxIters = 0, ckpt = ckpt))

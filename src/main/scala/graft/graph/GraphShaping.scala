@@ -22,6 +22,15 @@ final case class EdgeShaping(
     directed: Boolean = true,
     parallelEdges: Boolean = true)
 
+object EdgeShaping {
+
+  /** The undirected, parallel-edge-deduped closure the reference loads
+    * for CC, BFS and LPA (graph.hpp:266-285), self-loops kept or
+    * dropped. */
+  def undirected(selfLoops: Boolean): EdgeShaping =
+    EdgeShaping(selfLoops = selfLoops, directed = false, parallelEdges = false)
+}
+
 object GraphShaping {
 
   /** Apply shaping flags to an edge DataFrame with columns

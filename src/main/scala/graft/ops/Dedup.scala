@@ -235,7 +235,7 @@ object Dedup {
     * (vid, label: double, changed). */
   private def kernelCcState(edges: DataFrame, parts: Int): DataFrame = {
     val und = graft.graph.GraphShaping.shape(edges,
-      graft.graph.EdgeShaping(directed = false, parallelEdges = false))
+      graft.graph.EdgeShaping.undirected(selfLoops = true))
       .select("src", "dst")
     val g = graft.graph.SpmvKernel.compile(und, parts)
     val r = g.run(new graft.graph.CcKernelProgram, maxIters = 0)

@@ -91,7 +91,7 @@ object Apps {
         Summary("deg", 1, cks(d, "degree"), None, sec, topOf(d, "degree"), Some(d), "degree")
       case "cc" if kernel =>
         val und = GraphShaping.shape(edges,
-          EdgeShaping(directed = false, parallelEdges = false)).select("src", "dst")
+          EdgeShaping.undirected(selfLoops = true)).select("src", "dst")
         val g = comp(und, "und")
         val r = g.run(new CcKernelProgram, maxIters = 0)
         g.unpersist()
@@ -100,7 +100,7 @@ object Apps {
           Some(st.count()), sec, topOf(st, "label"), Some(st), "label")
       case "bfs" if kernel =>
         val und = GraphShaping.shape(edges,
-          EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
+          EdgeShaping.undirected(selfLoops = false))
           .select("src", "dst")
         val g = comp(und, "und-noself")
         val r = g.run(new BfsKernelProgram(root), maxIters = 0)

@@ -137,7 +137,7 @@ object ScalingProbe {
         // disabled (full recount every superstep) — the A/B twin that
         // isolates what the persistent-counts mode buys
         val und = GraphShaping.shape(edges,
-          EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
+          EdgeShaping.undirected(selfLoops = false))
           .select("src", "dst")
         val g = compiled(und, "lpa-und")
         val tBuild = (System.nanoTime() - t0) / 1e9
@@ -160,12 +160,12 @@ object ScalingProbe {
         // iterates (and the kernel twin reports) so the BENCH.md pair
         // rows are comparable; imbalance -1 = not measured here
         val nE = GraphShaping.shape(edges,
-          EdgeShaping(selfLoops = false, directed = false, parallelEdges = false)).count()
+          EdgeShaping.undirected(selfLoops = false)).count()
         ("engine-lpa", r.state.count(), nE, r.iterations,
           r.metrics.map(_.wallMs), -1.0, pl)
       } else if (kernelMode && algo == "cc") {
         val und = GraphShaping.shape(edges,
-          EdgeShaping(directed = false, parallelEdges = false)).select("src", "dst")
+          EdgeShaping.undirected(selfLoops = true)).select("src", "dst")
         val g = compiled(und, "cc-und")
         val tBuild = (System.nanoTime() - t0) / 1e9
         buildSec = tBuild
@@ -183,17 +183,16 @@ object ScalingProbe {
         r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
         // same shaped-count comparability contract as engine-lpa above
         val nE = GraphShaping.shape(edges,
-          EdgeShaping(directed = false, parallelEdges = false)).count()
+          EdgeShaping.undirected(selfLoops = true)).count()
         ("engine-cc", r.state.count(), nE, r.iterations,
           r.metrics.map(_.wallMs), -1.0, pl)
       } else if (algo == "conv") {
         // PageRank to the BASELINE convergence criterion (per-vertex
         // |Δrank| ≤ 1e-6, maxIters=0 → run until no vertex changed) on
         // the KERNEL path: proven hash-identical to the engine
-        // (KernelSpec), so the
-        // ITERATION COUNT is exactly what the engine would report, at
-        // a fraction of the bench budget — which is what kept this
-        // sample from being shed in round 4.
+        // (KernelSpec), so the ITERATION COUNT is exactly what the
+        // engine would report, at a fraction of the bench budget —
+        // which is what kept this sample from being shed in round 4.
         val g = compiled(edges, "raw")
         val tBuild = (System.nanoTime() - t0) / 1e9
         buildSec = tBuild

@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph._
+import graft.algos.SourceSemantics
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 
@@ -61,5 +62,86 @@ class KernelPropertySpec extends SparkTestBase {
     assert(res.passed, res.status)
     assert(salted > 0, "no generated graph salted a hub — mirrors never exercised")
     assert(engaged > 0, "no generated run passed the incremental gate")
+  }
+
+  private def check(prop: Prop): Unit = {
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(15)
+      .withWorkers(1).withInitialSeed(Seed(20261020L)), prop)
+    assert(res.passed, res.status)
+  }
+
+  private def undirected(es: Seq[(Long, Long)], selfLoops: Boolean) =
+    GraphShaping.shape(edgesDF(es), EdgeShaping.undirected(selfLoops)).select("src", "dst")
+
+  /** Runs `f` on the compiled graph and returns what it collects from
+    * the result state. */
+  private def onKernel[A](edges: org.apache.spark.sql.DataFrame)(
+      f: SpmvKernel.CompiledGraph => SpmvKernel.KernelResult)(
+      read: SpmvKernel.KernelResult => A): A = {
+    val g = SpmvKernel.compile(edges, parts)
+    try {
+      val r = f(g)
+      val out = read(r)
+      Engine.release(r.state)
+      out
+    } finally g.unpersist()
+  }
+
+  private def pagerank(es: Seq[(Long, Long)], iters: Int, mode: SourceSemantics): Map[Long, Double] =
+    mode match {
+      case SourceSemantics.Always =>
+        onKernel(edgesDF(es))(_.pagerank(maxIters = iters))(
+          _.state.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap)
+      case _ =>
+        val adj = Adjacency.build(edgesDF(es), parts)
+        try graft.algos.PageRank.run(adj, maxIters = iters, sources = mode).state
+          .select("vid", "rank").collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+        finally adj.unpersist()
+    }
+
+  private def components(es: Seq[(Long, Long)]): (Map[Long, Long], Int) =
+    onKernel(undirected(es, selfLoops = true))(_.run(new CcKernelProgram, maxIters = 0))(r =>
+      (r.state.select("vid", "label").collect().map(x => x.getLong(0) -> x.getDouble(1).toLong).toMap,
+        r.iterations))
+
+  private def bfs(es: Seq[(Long, Long)], root: Long): (Map[Long, (Long, Long)], Int) =
+    onKernel(undirected(es, selfLoops = false))(_.run(new BfsKernelProgram(root), maxIters = 0))(r =>
+      (r.state.select("vid", "parent", "hops").filter("hops IS NOT NULL").collect()
+        .map(x => x.getLong(0) -> (x.getDouble(1).toLong, x.getDouble(2).toLong)).toMap,
+        r.iterations))
+
+  private def sssp(es: Seq[(Long, Long, Double)], root: Long): Map[Long, Double] =
+    onKernel(wEdgesDF(es))(_.run(new SsspKernelProgram(root), maxIters = 0))(
+      _.state.select("vid", "dist").filter("dist IS NOT NULL").collect()
+        .map(x => x.getLong(0) -> x.getDouble(1)).toMap)
+
+  test("PageRank in all three source modes equals the reference oracle on generated graphs") {
+    val modes = Seq(SourceSemantics.Always -> "always", SourceSemantics.Never -> "never",
+      SourceSemantics.FinalFlush -> "flush")
+    check(Prop.forAllNoShrink(graphs, Gen.choose(1, 12)) { (es, iters) =>
+      modes.forall { case (mode, name) =>
+        val want = ReferenceOracle.pagerank(es, iters, mode = name)
+        val got = pagerank(es, iters, mode)
+        got.keySet == want.keySet &&
+          want.forall { case (v, x) => math.abs(got(v) - x) <= 1e-6 }
+      }
+    })
+  }
+
+  test("CC labels and superstep count equal the reference oracle on generated graphs") {
+    check(Prop.forAllNoShrink(graphs)(es => components(es) == ReferenceOracle.components(es)))
+  }
+
+  test("BFS hops, min-vid parents and superstep count equal the reference oracle on generated graphs") {
+    check(Prop.forAllNoShrink(graphs)(es => bfs(es, 0L) == ReferenceOracle.bfs(es, 0L)))
+  }
+
+  test("weighted SSSP distances equal Dijkstra on generated graphs") {
+    // integer weights in [1, 7] from each edge's index: every path sum
+    // is exact in double, so the comparison is exact
+    check(Prop.forAllNoShrink(graphs) { es =>
+      val wes = es.zipWithIndex.map { case ((s, d), i) => (s, d, 1.0 + i % 7) }
+      sssp(wes, 0L) == ReferenceOracle.sssp(wes, 0L)
+    })
   }
 }

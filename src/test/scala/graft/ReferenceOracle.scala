@@ -44,8 +44,12 @@ object ReferenceOracle {
     if (mode == "flush") sweep(rank, withSources = true) else rank
   }
 
-  /** Undirected connected components, label = min vid (union-find). */
-  def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  /** Undirected connected components, label = min vid (union-find),
+    * and the synchronous round count of min-label propagation: each
+    * round every vertex takes the min label among itself and its
+    * neighbours; the count includes the last round, which changed
+    * nothing. Returns (labels, rounds). */
+  def components(edges: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
     val vs = vertices(edges)
     val parent = mutable.Map(vs.map(v => v -> v): _*)
     def find(x: Long): Long = {
@@ -59,13 +63,26 @@ object ReferenceOracle {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    vs.map(v => v -> find(v)).toMap
+    val nbrs = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    var label = vs.map(v => v -> v).toMap
+    var rounds = 0
+    var changed = label.nonEmpty
+    while (changed) {
+      val next = label.map { case (v, l) => v -> (l +: nbrs(v).map(label)).min }
+      changed = next != label
+      label = next
+      rounds += 1
+    }
+    (vs.map(v => v -> find(v)).toMap, rounds)
   }
 
   /** Undirected BFS from root: hops + parent = min-vid in-neighbor on
     * the previous level (reference combiner=min over frontier vids,
-    * bfs.h:56-77). Unreached → absent. */
-  def bfs(edges: Seq[(Long, Long)], root: Long): Map[Long, (Long, Long)] = {
+    * bfs.h:56-77). Unreached → absent. Also returns the synchronous
+    * round count: one round per level, plus the last round, which
+    * discovered nothing. */
+  def bfs(edges: Seq[(Long, Long)], root: Long): (Map[Long, (Long, Long)], Int) = {
     val adj = mutable.Map.empty[Long, mutable.Set[Long]]
     edges.filter(e => e._1 != e._2).foreach { case (a, b) =>
       adj.getOrElseUpdate(a, mutable.Set.empty) += b
@@ -85,7 +102,7 @@ object ReferenceOracle {
       next.foreach { case (v, p) => res(v) = (p, hops) }
       frontier = next.keySet.toSet
     }
-    res.toMap
+    (res.toMap, hops.toInt)
   }
 
   /** Directed weighted SSSP (Dijkstra). */

@@ -12,10 +12,8 @@ import scala.collection.mutable
   *     identical PageRank job — synthetic repo corpus → edge
   *     extraction → parked parquet edge table → 10 supersteps — run at
   *     two parallelism levels on the SAME parked input, plus an
-  *     unsaturated-pair curve, a frontier-algorithm (CC) kernel-vs-
-  *     engine pair, a multiset-combiner (frequency LPA) kernel-vs-
-  *     engine pair, and the Catalyst-engine continuity pair. Each
-  *     sample runs in its own FORKED JVM (graft.tools.ScalingProbe) so
+  *     unsaturated-pair curve, a frontier-algorithm (CC) sample and a
+  *     multiset-combiner (frequency LPA) pair. Each sample runs in its own FORKED JVM (graft.tools.ScalingProbe) so
   *     GC state never bleeds between configurations; throughput =
   *     E / median superstep seconds.
   *
@@ -193,8 +191,7 @@ object Bench {
     * whole bench; only a config with ZERO surviving samples propagates
     * the failure. */
   private def prSampleBest(cpus: Int, edgePath: String, iters: Int,
-                           k: Int, kernel: Boolean = true,
-                           algo: String = "pr",
+                           k: Int, algo: String = "pr",
                            cacheDir: String = null): Sample = {
     val results = scala.collection.mutable.ArrayBuffer.empty[Sample]
     var lastErr: Throwable = null
@@ -204,7 +201,7 @@ object Bench {
     while (results.size < k && tries < k + 1 &&
            (tries == 0 || remainingSec > 0)) {
       tries += 1
-      try results += prSampleForked(cpus, edgePath, iters, kernel, algo, cacheDir)
+      try results += prSampleForked(cpus, edgePath, iters, algo, cacheDir)
       catch {
         case e: Throwable =>
           lastErr = e
@@ -218,12 +215,11 @@ object Bench {
     results.minBy(_.medianIterSec)
   }
 
-  /** One sample in a FORKED JVM. `kernel` picks the tile-compiled
-    * SpMV/SpMSpV fast path vs the Catalyst Engine path; `algo` picks
-    * fixed-iteration PageRank (stationary) or to-fixpoint CC
-    * (nonstationary frontier). */
+  /** One sample in a FORKED JVM. `algo` picks the ScalingProbe mode:
+    * fixed-iteration PageRank (stationary), to-fixpoint CC
+    * (nonstationary frontier), LPA, or PageRank to convergence. */
   private def prSampleForked(cpus: Int, edgePath: String,
-                             iters: Int, kernel: Boolean, algo: String,
+                             iters: Int, algo: String,
                              cacheDir: String = null): Sample = {
     settle()
     val w0 = System.nanoTime()
@@ -234,7 +230,6 @@ object Bench {
       "-cp", childClasspath, "graft.tools.ScalingProbe", cpus.toString, edgePath)
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("PROBE_ITERS", iters.toString)
-    pb.environment().put("PROBE_KERNEL", if (kernel) "1" else "0")
     pb.environment().put("PROBE_ALGO", algo)
     if (cacheDir != null) pb.environment().put("GRAFT_KERNEL_CACHE", cacheDir)
     pb.redirectErrorStream(true)
@@ -303,13 +298,6 @@ object Bench {
     val strongEff14 = eff(S.get("k4Q"), S.get("k1Q"), 4.0)
     val weakEff = eff(S.get("kHiE"), S.get("kLoQ"), hiCores.toDouble / loCores)
     val weakEffUnsat = eff(S.get("k4Q"), S.get("k1S"), 4.0)
-    val engineStrongEff = eff(S.get("eHiS"), S.get("eLoS"), hiCores.toDouble / loCores)
-    val kernelVsEngine = for (k <- S.get("kLoS"); e <- S.get("eLoS"); if e.tput > 0)
-      yield k.tput / e.tput
-    val ccSpeedup = for (k <- S.get("ccK"); e <- S.get("ccE"); if k.loopSec > 0)
-      yield e.loopSec / k.loopSec
-    val lpaSpeedup = for (k <- S.get("lpaK"); e <- S.get("lpaE"); if k.loopSec > 0)
-      yield e.loopSec / k.loopSec
     val lpaIncrSpeedup = for (k <- S.get("lpaK"); f <- S.get("lpaF"); if k.loopSec > 0)
       yield f.loopSec / k.loopSec
 
@@ -326,21 +314,10 @@ object Bench {
       s""""edges_quarter":${s.edges},"tput_lo_quarter":${f"${s.tput}%.0f"}""")
     weakEff.foreach(e => scalingFields += s""""weak_eff":${f3(e)}""")
     weakEffUnsat.foreach(e => scalingFields += s""""weak_eff_unsat":${f3(e)}""")
-    engineStrongEff.foreach(e => scalingFields += s""""engine_strong_eff":${f3(e)}""")
-    S.get("eLoS").foreach(s => scalingFields += s""""engine_tput_lo_16th":${f"${s.tput}%.0f"}""")
-    S.get("eHiS").foreach(s => scalingFields +=
-      s""""engine_tput_hi_16th":${f"${s.tput}%.0f"},"engine_med_barrier_ms_hi":${s.medBarrierMs}""")
-    kernelVsEngine.foreach(x => scalingFields += s""""kernel_vs_engine_tput":${f"$x%.1f"}""")
     S.get("ccK").foreach(s => scalingFields +=
       s""""cc_kernel_loop_sec":${f"${s.loopSec}%.2f"},"cc_kernel_iters":${s.iters}""")
-    S.get("ccE").foreach(s => scalingFields +=
-      s""""cc_engine_loop_sec":${f"${s.loopSec}%.2f"},"cc_engine_iters":${s.iters}""")
-    ccSpeedup.foreach(x => scalingFields += s""""cc_kernel_speedup":${f"$x%.1f"}""")
     S.get("lpaK").foreach(s => scalingFields +=
       s""""lpa_kernel_loop_sec":${f"${s.loopSec}%.2f"},"lpa_kernel_iters":${s.iters}""")
-    S.get("lpaE").foreach(s => scalingFields +=
-      s""""lpa_engine_loop_sec":${f"${s.loopSec}%.2f"},"lpa_engine_iters":${s.iters}""")
-    lpaSpeedup.foreach(x => scalingFields += s""""lpa_kernel_speedup":${f"$x%.1f"}""")
     S.get("lpaF").foreach(s => scalingFields +=
       s""""lpa_full_loop_sec":${f"${s.loopSec}%.2f"}""")
     lpaIncrSpeedup.foreach(x => scalingFields += s""""lpa_incremental_speedup":${f"$x%.2f"}""")
@@ -387,12 +364,8 @@ object Bench {
     row(s"kernel PR N=$loCores cores, E", "kLoE")
     row(s"kernel PR 4N=$hiCores cores, E", "kHiE")
     row(s"kernel PR N=$loCores cores, E/16", "kLoS")
-    row(s"engine PR N=$loCores cores, E/16", "eLoS")
-    row(s"engine PR 4N=$hiCores cores, E/16", "eHiS")
     row(s"kernel CC 4N=$hiCores cores, E/16", "ccK")
-    row(s"engine CC 4N=$hiCores cores, E/16", "ccE")
     row(s"kernel LPA 4N=$hiCores cores, E/16", "lpaK")
-    row(s"engine LPA 4N=$hiCores cores, E/16", "lpaE")
     row(s"kernel LPA full-only (no deltas) 4N=$hiCores, E/16", "lpaF")
     md ++= "\n"
     strongEff.foreach(e => md ++=
@@ -409,24 +382,6 @@ object Bench {
       (f"- KERNEL WEAK efficiency at the unsaturated pair (1 core on E/16 →%n" +
         f"  4 cores on E/4) = $e%.3f — cores and data ×4 with neither endpoint%n" +
         "  bus-capped: the cluster-growth regime this box can represent\n"))
-    engineStrongEff.foreach(e => md ++=
-      f"- ENGINE STRONG efficiency ($loCores→$hiCores on E/16) = $e%.3f (continuity row)%n")
-    kernelVsEngine.foreach(x => md ++=
-      f"- kernel vs engine PR at N=$loCores on E/16: $x%.1f× throughput;" +
-        S.get("kLoS").flatMap(k => S.get("eLoS").map(en =>
-          s" per-superstep barrier ${en.medBarrierMs} ms → ${k.medBarrierMs} ms")).getOrElse("") + "\n")
-    ccSpeedup.foreach(x => md ++=
-      (f"- FRONTIER (CC, to fixpoint) kernel vs engine at $hiCores cores on E/16:%n" +
-        f"  $x%.1f× faster end-to-end (" +
-        S.get("ccK").map(s => f"${s.loopSec}%.1f s/${s.iters} iters kernel").getOrElse("") +
-        S.get("ccE").map(s => f" vs ${s.loopSec}%.1f s/${s.iters} iters engine").getOrElse("") +
-        ") — the nonstationary SpMSpV mode\n"))
-    lpaSpeedup.foreach(x => md ++=
-      (f"- MULTISET COMBINER (frequency LPA, fixed 10-superstep budget) kernel vs%n" +
-        f"  engine at $hiCores cores on E/16: $x%.1f× faster end-to-end (" +
-        S.get("lpaK").map(s => f"${s.loopSec}%.1f s/${s.iters} iters kernel").getOrElse("") +
-        S.get("lpaE").map(s => f" vs ${s.loopSec}%.1f s/${s.iters} iters engine").getOrElse("") +
-        ") — the label-count triple exchange\n"))
     lpaIncrSpeedup.foreach(x => md ++=
       (f"- INCREMENTAL LPA (persistent per-(dst,label) counts + ±delta%n" +
         f"  exchange below the active·2 ≤ V gate) vs full recount every%n" +
@@ -434,7 +389,7 @@ object Bench {
     convOpt.foreach { case (it, sec, nr) => md ++=
       (f"- iterations to convergence (per-vertex |Δrank| ≤ 1e-6): $it%n" +
         f"  ($sec%.1f s loop at $hiCores cores on the $nr-repo E/16 table;%n" +
-        "  kernel path — hash-identical to the engine, same iteration count)\n")
+        "  kernel path)\n")
     }
     S.get("kHiE").foreach(s => md ++=
       f"- partition balance: kernel hash(src) imbalance max/mean−1 = ${s.imbalance}%.3f; breached(>0.2)=${s.breached}%n")
@@ -446,8 +401,7 @@ object Bench {
       md ++= s"- shed to fit the wall-clock budget: ${shed.mkString(", ")}\n"
     md ++= "\nSingle-box caveat: all \"executors\" are threads sharing one memory\n"
     md ++= "bus inside one VM with host-level jitter. The kernel's superstep\n"
-    md ++= "barrier is ~20 ms (vs the engine's ~0.2-0.5 s of per-iteration\n"
-    md ++= "Catalyst planning + task launch), so the remaining sub-1.0 strong\n"
+    md ++= "barrier is ~20 ms, so the remaining sub-1.0 strong\n"
     md ++= "efficiency is exchange memory bandwidth on the shared DRAM bus —\n"
     md ++= "traffic a real cluster spreads across per-node memory and network.\n"
     md ++= "Full methodology and efficiency-vs-size data: BASELINE.md.\n"
@@ -567,33 +521,23 @@ object Bench {
     take("k4Q", required = true)(prSampleBest(4, pQuarter, iters, samples))
     take("kHiE", required = true)(prSampleBest(hiCores, pMain, iters, samples))
     take("kLoE", required = true)(prSampleBest(loCores, pMain, iters, samples))
-    // frontier-algorithm pair: CC to fixpoint, kernel vs engine, on the
-    // 16th table (the engine loop at 460M edges would alone blow the
-    // budget — and the continuity signal only needs a trend)
+    // frontier algorithm (CC to fixpoint) and the multiset combiner
+    // (frequency LPA, fixed 10-superstep budget) on the 16th table
     lastCost = 120.0
     take("ccK", required = false)(
-      prSampleBest(hiCores, pSixteenth, iters, k = samples, kernel = true, algo = "cc"))
-    take("ccE", required = false)(
-      prSampleBest(hiCores, pSixteenth, iters, k = samples, kernel = false, algo = "cc"))
-    // multiset-combiner pair: frequency LPA, kernel vs engine, fixed
-    // 10-superstep budget on the 16th table (the label-count triple
-    // exchange vs the engine's two-hash-agg superstep)
+      prSampleBest(hiCores, pSixteenth, iters, k = samples, algo = "cc"))
     take("lpaK", required = false)(
-      prSampleBest(hiCores, pSixteenth, iters, k = samples, kernel = true, algo = "lpa"))
-    take("lpaE", required = false)(
-      prSampleBest(hiCores, pSixteenth, iters, k = samples, kernel = false, algo = "lpa"))
+      prSampleBest(hiCores, pSixteenth, iters, k = samples, algo = "lpa"))
     // incremental-vs-full A/B twin: the same kernel LPA with the
     // persistent-count delta path disabled (every superstep recounts
     // all E edges) — isolates what the incremental mode buys
     take("lpaF", required = false)(
-      prSampleBest(hiCores, pSixteenth, iters, k = samples, kernel = true, algo = "lpaf"))
-    // convergence criterion (kernel PR to |Δrank| ≤ 1e-6 on E/16 —
-    // proven hash-identical to the engine, so the iteration count is
-    // the engine's number at a fraction of the cost). Ranked ABOVE the
-    // optional curve points: round 4's driver run shed it and the
-    // round record lost pr_iters_to_convergence entirely.
+      prSampleBest(hiCores, pSixteenth, iters, k = samples, algo = "lpaf"))
+    // convergence criterion (kernel PR to |Δrank| ≤ 1e-6 on E/16).
+    // Ranked ABOVE the optional curve points: round 4's driver run
+    // shed it and the round record lost pr_iters_to_convergence.
     take("conv", required = false)(
-      prSampleBest(hiCores, pSixteenth, iters, k = 1, kernel = true, algo = "conv"))
+      prSampleBest(hiCores, pSixteenth, iters, k = 1, algo = "conv"))
     S.get("conv").foreach(s => convOpt = Some((s.iters, s.loopSec, sixteenthRepos)))
     // durable-compile-cache pair: a COLD fork compiles E/16 and saves
     // the tile cache, a WARM fork fingerprints, loads and skips the
@@ -601,15 +545,10 @@ object Bench {
     val kcacheDir = pSixteenth + s".kcache$hiCores"
     take("cacheC", required = false) {
       deleteRecursive(Paths.get(kcacheDir))
-      prSampleBest(hiCores, pSixteenth, 1, k = 1, kernel = true, cacheDir = kcacheDir)
+      prSampleBest(hiCores, pSixteenth, 1, k = 1, cacheDir = kcacheDir)
     }
     take("cacheW", required = false)(
-      prSampleBest(hiCores, pSixteenth, 1, k = 1, kernel = true, cacheDir = kcacheDir))
-    // engine continuity pair + same-table kernel reference point
-    take("eLoS", required = false)(
-      prSampleBest(loCores, pSixteenth, iters, k = 1, kernel = false))
-    take("eHiS", required = false)(
-      prSampleBest(hiCores, pSixteenth, iters, k = 1, kernel = false))
+      prSampleBest(hiCores, pSixteenth, 1, k = 1, cacheDir = kcacheDir))
     take("kLoS", required = false)(prSampleBest(loCores, pSixteenth, iters, samples))
     // weak-scaling endpoints
     take("k1S", required = false)(prSampleBest(1, pSixteenth, iters, samples))

@@ -138,10 +138,10 @@ object SparkEntry {
   }
 
   /** Frequency LPA (max count, then min label), 5 supersteps, on the
-    * kernel (LabelPropagation.runKernel): the 20 largest labels. */
+    * kernel (LabelPropagation.run): the 20 largest labels. */
   private val lpaTop: Query = (s, d) => {
     val e = edges(s, d)
-    val r = LabelPropagation.runKernel(e, graphParts(s, e), maxIters = 5)
+    val r = LabelPropagation.run(e, graphParts(s, e), maxIters = 5)
     r.state.groupBy(col("label")).agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("label")).limit(20)
   }

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.Adjacency
 
 /** Degree — the reference's Deg_Program (src/apps/deg.h:32-52):
   * messenger ≡ 1, combiner = sum, one stationary superstep ⇒ a plain
@@ -21,12 +20,4 @@ object Degree {
 
   def in(edges: DataFrame): DataFrame =
     edges.groupBy(col("dst").as("vid")).agg(count(lit(1)).as("degree"))
-
-  /** Out-degree recovered from the already-built (salted) CSR
-    * adjacency without touching the raw edge table: sum of neighbor
-    * chunk sizes per source. Co-partitioned with the adjacency, so no
-    * shuffle beyond the (tiny) per-vertex re-merge of salt chunks. */
-  def outFromAdjacency(adj: Adjacency): DataFrame =
-    adj.out.groupBy(col("src").as("vid"))
-      .agg(sum(size(col("nbrs"))).cast("long").as("degree"))
 }

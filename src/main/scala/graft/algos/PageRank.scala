@@ -1,8 +1,8 @@
 package graft.algos
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph._
+import graft.graph.SpmvKernel.KernelResult
 
 /** How PageRank treats messages from SOURCE vertices (no in-edges,
   * rank pinned at α). The reference family has three observable
@@ -14,8 +14,8 @@ import graft.graph._
   *    kernel: its `d` vector is seeded only for rows of the transposed
   *    matrix (tcsc_spmspv2.hpp:119-122), so `message_nnzcols` emits 0
   *    for in-edge-less vertices forever (tcsc_spmspv2.hpp:455-460; the
-  *    factored final pass is commented out, :136-167). Verified
-  *    against the compiled kernel in ReferenceParitySpec.
+  *    factored final pass is commented out, :136-167). Checked against
+  *    that kernel's printed output in ReferenceParitySpec.
   *  - [[SourceSemantics.FinalFlush]] — the distributed GraphTap with
   *    TCSC-CF computation factoring: source-row edges processed once,
   *    in ONE extra combine+apply after convergence
@@ -28,13 +28,13 @@ object SourceSemantics {
   case object FinalFlush extends SourceSemantics
 }
 
-/** PageRank with the reference's EXACT semantics (src/apps/pr.h):
+/** PageRank with the reference's EXACT semantics (src/apps/pr.h), on
+  * the kernel ([[graft.graph.PrKernelProgram]]):
   *
   *   - α = 0.15, tol = 1e-5 (pr.h:12-13) — both overridable;
   *   - rank₀ = α (pr.h:16, 28);
   *   - messenger: rank/degree, 0 when degree = 0 (pr.h:31-33) where
-  *     degree is the OUT-degree from the phase-1 Degree program
-  *     (pr.cpp:38-49, seeding join vp:466-501);
+  *     degree is the OUT-degree (pr.cpp:38-49);
   *   - combiner: y += msg · w (pr.h:35-37);
   *   - applicator: rank ← α + (1−α)·y, changed iff |Δrank| > tol
   *     (pr.h:43-47).
@@ -45,112 +45,51 @@ object SourceSemantics {
   * reference formula (SURVEY.md §2.8). Source-vertex message
   * scheduling is selected by [[SourceSemantics]].
   */
-final class PageRankProgram(degrees: DataFrame, alpha: Double, tol: Double,
-                            sourceMessages: Boolean = true)
-    extends VertexProgram {
-  val name = "pagerank"
-  val stationary = true
-
-  /** `degrees` must carry (vid, degree); init additionally marks
-    * vertices owning ≥1 in-edge via the `hasIn` column the caller
-    * provides on `vertices`. */
-  def init(vertices: DataFrame): DataFrame = {
-    val hasInCol =
-      if (vertices.columns.contains("hasIn")) coalesce(col("hasIn"), lit(false))
-      else lit(true) // unannotated vertex table: gate disabled
-    vertices
-      .join(degrees, Seq("vid"), "left_outer")
-      .select(
-        col("vid"),
-        coalesce(col("degree"), lit(0L)).as("degree"),
-        hasInCol.as("hasIn"),
-        lit(alpha).as("rank"),
-        lit(true).as("changed"))
-  }
-
-  def message(state: DataFrame): Column = {
-    val base = when(col("degree") > 0, col("rank") / col("degree")).otherwise(lit(0.0))
-    if (sourceMessages) base else when(col("hasIn"), base).otherwise(lit(0.0))
-  }
-
-  def edgeCombine(msg: Column, w: Column): Column = msg * w
-
-  def aggregate(v: Column): Column = sum(v)
-
-  def apply(joined: DataFrame, iter: Int): DataFrame = {
-    val newRank = lit(alpha) + lit(1.0 - alpha) * coalesce(col("y"), lit(0.0))
-    joined.select(
-      col("vid"),
-      col("degree"),
-      col("hasIn"),
-      newRank.as("rank"),
-      (abs(newRank - col("rank")) > tol).as("changed"))
-  }
-}
-
 object PageRank {
   val DefaultAlpha = 0.15
   val DefaultTol = 1e-5
 
-  /** Vertices annotated with an in-edge flag, derived from the CSR
-    * adjacency (one-time explode; no raw-edge pass needed). */
-  private def verticesWithInFlag(adj: Adjacency): DataFrame = {
-    val inSet = adj.out.select(explode(adj.nbrDsts).as("vid")).distinct()
-      .withColumn("hasIn", lit(true))
-    adj.vertices.join(inSet, Seq("vid"), "left_outer")
-      .select(col("vid"), coalesce(col("hasIn"), lit(false)).as("hasIn"))
-  }
-
-  /** Run PageRank over a prebuilt adjacency. `maxIters > 0` runs a
-    * fixed budget (the reference slurm runs use 20, graphtap.slurm:72);
-    * 0 runs to convergence (all |Δrank| ≤ tol). Degree is derived from
-    * the adjacency itself — no second pass over raw edges. */
-  def run(adj: Adjacency,
+  /** Run PageRank over an edge table (src, dst[, w]). `maxIters > 0`
+    * runs a fixed budget (the reference slurm runs use 20,
+    * graphtap.slurm:72); 0 runs to convergence (all |Δrank| ≤ tol).
+    * State (vid, rank, changed).
+    *
+    * `Never` runs `Always` on the edges whose source has an in-edge:
+    * those sources keep their full out-degree, and a source without
+    * in-edges never messages. Vertices outside that graph receive
+    * nothing, so they hold rank α. `FinalFlush` then applies one
+    * gather over the full edge table from the converged `Never` ranks
+    * (vp:423-429), which counts as one more iteration. */
+  def run(edges: DataFrame, parts: Int,
           maxIters: Int = 20,
           alpha: Double = DefaultAlpha,
           tol: Double = DefaultTol,
           sources: SourceSemantics = SourceSemantics.Always,
-          ckpt: Option[graft.ckpt.CheckpointManager] = None): RunResult = {
-    val degrees = Degree.outFromAdjacency(adj)
-    val sourceMsgs = sources == SourceSemantics.Always
-    val program = new PageRankProgram(degrees, alpha, tol, sourceMsgs)
+          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
+    def onGraph(e: DataFrame) = OnKernel(e, parts)(_.pagerank(maxIters, alpha, tol, ckpt = ckpt))
+    if (sources == SourceSemantics.Always) return onGraph(edges)
 
-    // smuggle the in-edge flag through the vertex table the program's
-    // init sees (Always mode never reads it, skip the extra pass)
-    val adjForInit =
-      if (sourceMsgs) new AdjacencyView(adj, adj.vertices.withColumn("hasIn", lit(true)))
-      else new AdjacencyView(adj, verticesWithInFlag(adj))
-
-    val base = Engine.run(adjForInit.asAdjacency, program,
-      RunConfig(maxIters = maxIters, ckpt = ckpt))
-
-    sources match {
+    val gated = onGraph(edges.join(edges.select(col("dst").as("src")), Seq("src"), "left_semi"))
+    val all = edges.select(col("src").as("vid")).union(edges.select(col("dst").as("vid"))).distinct()
+    val never = all.join(gated.state, Seq("vid"), "left_outer")
+      .select(col("vid"), coalesce(col("rank"), lit(alpha)).as("rank"),
+        coalesce(col("changed"), lit(false)).as("changed"))
+    val state = sources match {
       case SourceSemantics.FinalFlush =>
-        // one extra combine+apply with source messages enabled
-        // (vp:423-429): gather over ALL vertices, apply once.
-        val full = new PageRankProgram(degrees, alpha, tol, sourceMessages = true)
-        val msgs = base.state.select(col("vid"),
-          full.message(base.state).as("msg")).repartition(adj.parts, col("vid"))
-        val gathered = adj.out
-          .join(msgs, adj.out("src") === msgs("vid"), "inner")
-          .select(col("msg"), explode(col("nbrs")).as("e"))
-          .select(adj.dstOf(col("e")).as("vid"), (col("msg") * adj.wOf(col("e"))).as("mv"))
-          .groupBy(col("vid")).agg(sum(col("mv")).as("y"))
-        val flushed = full.apply(base.state.join(gathered, Seq("vid"), "left_outer"), base.iterations)
-          .localCheckpoint(true)
-        RunResult(flushed, base.iterations + 1, base.metrics)
-      case _ => base
+        val w = if (edges.columns.contains("w")) col("w") else lit(1.0)
+        val msgs = never.join(Degree.out(edges), "vid")
+          .select(col("vid").as("src"), (col("rank") / col("degree")).as("msg"))
+        val y = edges.select(col("src"), col("dst"), w.as("w")).join(msgs, "src")
+          .groupBy(col("dst").as("vid")).agg(sum(col("msg") * col("w")).as("y"))
+        val flushed = lit(alpha) + lit(1.0 - alpha) * coalesce(col("y"), lit(0.0))
+        never.join(y, Seq("vid"), "left_outer")
+          .select(col("vid"), flushed.as("rank"), (abs(flushed - col("rank")) > tol).as("changed"))
+      case _ => never
     }
+    val out = state.localCheckpoint(true)
+    graft.graph.Engine.release(gated.state)
+    val flush = if (sources == SourceSemantics.FinalFlush) 1 else 0
+    KernelResult(out, gated.iterations + flush, gated.metrics,
+      out.agg(coalesce(sum(col("rank")), lit(0.0))).head.getDouble(0))
   }
-
-  /** Convenience: edges → adjacency → run. */
-  def fromEdges(edges: DataFrame, parts: Int, maxIters: Int = 20): RunResult = {
-    val adj = Adjacency.build(edges, parts)
-    run(adj, maxIters)
-  }
-}
-
-/** Adjacency wrapper substituting an augmented vertex table. */
-private[algos] final class AdjacencyView(underlying: Adjacency, newVertices: DataFrame) {
-  def asAdjacency: Adjacency = Adjacency.withVertices(underlying, newVertices)
 }

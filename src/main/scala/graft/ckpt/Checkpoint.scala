@@ -82,7 +82,7 @@ final class CheckpointManager(root: String, val every: Int) extends Serializable
 
   /** Load with a fail-fast algorithm check: resuming algorithm X from
     * a snapshot written by algorithm Y would reinterpret state columns
-    * (e.g. an engine LPA's LONG label read as the kernel's DOUBLE) —
+    * (e.g. CC labels read as LPA labels) —
     * the same wrong-input class as resuming from a different graph,
     * which the kernel's slot lookup already rejects. */
   def load(spark: SparkSession, iter: Int, expectAlgo: String): DataFrame = {

@@ -1,14 +1,13 @@
 package graft.graph
 
-/** The compiled-kernel counterpart of [[VertexProgram]] — the same
-  * five reference virtuals (initializer / messenger / combiner /
+/** The vertex-program contract — the reference's five
+  * `Vertex_Program` virtuals (initializer / messenger / combiner /
   * applicator / infinity, reference src/vp/vertex_program.hpp:32-45)
   * expressed over primitive per-partition state arrays so the
-  * SpmvKernel tile loop can run them without Catalyst, boxing, or
-  * per-edge virtual dispatch.
+  * SpmvKernel tile loop can run them without boxing or per-edge
+  * virtual dispatch.
   *
-  * Contract differences from the DataFrame trait, forced by the
-  * primitive representation:
+  * Shape of the contract, forced by the primitive representation:
   *
   *  - State is `width` doubles per vertex, stored row-major in the
   *    partition's value array (`base = slot * width`). Double.NaN is
@@ -108,8 +107,8 @@ object KernelProgram {
           "Re-key the vertex ids (e.g. dense-rank them) first.")
 }
 
-/** PageRank on the kernel — identical math to the Catalyst
-  * PageRankProgram (algos/PageRank.scala) and the reference pr.h:
+/** PageRank on the kernel — the reference pr.h math
+  * (algos/PageRank.scala adds the source-message modes):
   * rank₀=α; msg = rank·(1/deg) (0 when deg=0); y = Σ msg·w;
   * rank ← α + (1−α)·y; changed iff |Δ| > tol. */
 final class PrKernelProgram(alpha: Double, tol: Double) extends KernelProgram {

@@ -9,10 +9,10 @@ import scala.collection.mutable.ArrayBuffer
 import graft.ckpt.IterMetrics
 import graft.graph.TilePacks._
 
-/** Tile-compiled kernel fast path for the superstep loop — the "drive
-  * the loop below Catalyst" half of the engine, generalized to the
-  * full [[KernelProgram]] (5-virtuals) contract with BOTH execution
-  * modes of the reference's app family:
+/** The tile-compiled superstep loop — the library's one executor for
+  * the vertex-program algorithms, over the full [[KernelProgram]]
+  * (5-virtuals) contract with BOTH execution modes of the reference's
+  * app family:
   *
   *  - STATIONARY SpMV (PR, Degree): every source row of every tile
   *    contributes every superstep (reference csc_spmv.hpp;
@@ -28,13 +28,10 @@ import graft.graph.TilePacks._
   *    over the same tiles (label-count triple exchange) — the whole
   *    reference app family runs compiled.
   *
-  * The DataFrame Engine (graph/Engine.scala) re-analyzes, re-plans and
-  * re-launches a Catalyst job every superstep; the plan is IDENTICAL
-  * every iteration (PLAN.md), so at small per-superstep runtimes the
-  * fixed driver barrier (~0.3-0.5 s of planning + task launch at
-  * local[32]) dominates, and inside the stages the generic hash
-  * aggregate pays a DRAM-random probe per edge. This kernel is the
-  * reference's answer re-expressed on Spark RDDs: GraphTap compiles
+  * A Catalyst superstep would re-analyze, re-plan and re-launch an
+  * identical job every iteration, and its generic hash aggregate pays
+  * a DRAM-random probe per edge. This kernel is the reference's answer
+  * re-expressed on Spark RDDs: GraphTap compiles
   * the matrix ONCE into per-tile compressed columns
   * (src/ds/compressed_column.hpp:63-1120, 2D tiling at
   * src/mat/matrix.hpp:271-368) and its superstep loop re-plans nothing
@@ -66,22 +63,19 @@ import graft.graph.TilePacks._
   *    superstep is one job submission (~10 ms class).
   *  - the per-superstep changed/frontier count is returned THROUGH the
   *    job (`sc.runJob` reading each partition's counter from the
-  *    materialized state) — exactly-once under task retry, matching
-  *    the Engine's `observe()` exactness, where the previous
+  *    materialized state) — exactly-once under task retry, where an
   *    accumulator could over-count a retried stage.
   *
   * Scale shape at 100 TB: the per-superstep exchange is bounded by
-  * Σ_pq |distinct dsts of tile (p,q)| doubles ≤ min(E, P·V) — the same
-  * V-bounded exchange as the DataFrame path, but packed, and on a
-  * shrinking frontier it degrades further to O(frontier-edges);
+  * Σ_pq |distinct dsts of tile (p,q)| doubles ≤ min(E, P·V), packed,
+  * and on a shrinking frontier it degrades further to O(frontier-edges);
   * per-tile accumulators are V/P-sized (or frontier-sized), so
   * executor memory per task stays flat as P grows with the cluster.
-  * Known trade-off vs the salted DataFrame path: edges partition by
-  * hash(src), so a pathological hub vertex concentrates its out-edges
-  * in one partition (the DataFrame engine salts those rows; the
-  * reference's 2D grid has the matching limitation per rank row).
-  * `edgeImbalance` reports the realized skew; the DataFrame engine
-  * remains the general path (arbitrary Column-expression programs).
+  * Edges partition by hash(src), so a pathological hub vertex would
+  * concentrate its out-edges in one partition (the reference's 2D grid
+  * has the matching limitation per rank row); `compile` salts such
+  * hubs across partitions, and `edgeImbalance` reports the realized
+  * skew.
   */
 object SpmvKernel {
 
@@ -175,8 +169,7 @@ object SpmvKernel {
     * index to a slot here.
     *
     * Salted-hub support (reference Matrix::balance's skew problem,
-    * matrix.hpp:562-687, answered the way Adjacency.scala:89-105 salts
-    * the DataFrame CSR): a source whose out-degree exceeds the compile
+    * matrix.hpp:562-687): a source whose out-degree exceeds the compile
     * chunk has its edge rows SPLIT across partitions, so tiles here may
     * reference MIRROR sources this partition does not own. Mirrors get
     * slots [nOwned, nOwned+nMirror) in the combined index space the
@@ -490,8 +483,9 @@ object SpmvKernel {
       * (the per-vertex convergence check is disabled for stationary
       * programs, vp:412-413; an empty frontier still ends a
       * nonstationary run — further supersteps are provably no-ops);
-      * 0 = run until no vertex changed. `ckpt` gives the fast path the
-      * same durable resume contract as the Engine loop. */
+      * 0 = run until no vertex changed. `ckpt` resumes from the latest
+      * complete snapshot and saves every `ckpt.every` supersteps plus a
+      * final snapshot. */
     def run(program: KernelProgram, maxIters: Int,
             lineageTruncateEvery: Int = 20,
             ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
@@ -672,8 +666,8 @@ object SpmvKernel {
               }
             }
           }
-          // apply over EVERY slot (y = identity where silent), exactly
-          // like the Engine's left-outer apply join
+          // apply over EVERY slot (y = identity where silent): a vertex
+          // that heard nothing still runs its applicator
           val nv = old.values.clone()
           val bits = new Array[Long]((n + 63) >>> 6)
           var changed = 0L
@@ -687,8 +681,7 @@ object SpmvKernel {
           Iterator.single(PartState(nv, bits, changed))
         }.persist(StorageLevel.MEMORY_AND_DISK)
 
-        // RDD lineage (unlike the Engine's per-superstep eager
-        // localCheckpoint) grows one zip+shuffle layer per iteration —
+        // RDD lineage grows one zip+shuffle layer per iteration —
         // truncate periodically so task closures stay O(1)
         if (lineageTruncateEvery > 0 && (iter + 1) % lineageTruncateEvery == 0)
           newState.localCheckpoint()
@@ -781,17 +774,15 @@ object SpmvKernel {
       * `incremental = false` forces full supersteps (the A/B twin the
       * bench's full-only row and the parity spec use).
       *
-      * The arg-max uses the SAME deterministic tie-break as
-      * algos.LabelPropagation (max count, then min label); counts are
-      * integers and label ids exact below 2^53 (checked at init), so
-      * the result is bit-reproducible regardless of tile arrival
-      * order. Semantics match the Catalyst loop exactly: the mode
-      * must see ALL in-neighbor labels (which is why the COUNTS are
-      * maintained rather than any message skipped), a vertex with no
-      * in-messages keeps its label, and the loop stops when no label
-      * changed or at `maxIters`. Compile the UNDIRECTED deduped
-      * shape first (GraphShaping — algos.LabelPropagation.run's
-      * shaping), or use LabelPropagation.runKernel which does both. */
+      * The arg-max uses a deterministic tie-break (max count, then min
+      * label); counts are integers and label ids exact below 2^53
+      * (checked at init), so the result is bit-reproducible regardless
+      * of tile arrival order. The mode must see ALL in-neighbor labels
+      * (which is why the COUNTS are maintained rather than any message
+      * skipped), a vertex with no in-messages keeps its label, and the
+      * loop stops when no label changed or at `maxIters`. Compile the
+      * UNDIRECTED deduped shape first (GraphShaping), or use
+      * algos.LabelPropagation.run, which does both. */
     def lpa(maxIters: Int, lineageTruncateEvery: Int = 20,
             ckpt: Option[graft.ckpt.CheckpointManager] = None,
             incremental: Boolean = true): KernelResult = {
@@ -878,8 +869,7 @@ object SpmvKernel {
           val counts = base.merged(fed, new LongTable(64))
           // arg-max every fed slot with the deterministic tie-break (max
           // count, min label). An unfed slot's mode is unchanged by
-          // construction, and a slot with no live label keeps its label,
-          // exactly like the Engine's left-outer apply.
+          // construction, and a slot with no live label keeps its label.
           val nv = old.values.clone()
           val bits = new Array[Long]((n + 63) >>> 6)
           var changed = 0L
@@ -960,8 +950,7 @@ object SpmvKernel {
     *
     * `hubChunk` caps how many of one source's edges may concentrate in
     * a single partition before the source row is SALTED — split across
-    * partitions in chunks keyed by hash(dst), the same rationale as
-    * the DataFrame engine's salted CSR (Adjacency.scala:89-105):
+    * partitions in chunks keyed by hash(dst):
     * message duplication is correct for gather, and stage 2 already
     * merges by destination. 0 (the default) = auto:
     * max(65536, E/(4·parts)) — only a vertex owning more than a

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * Link structure: each file embeds 0..k import/require lines
   * referencing OTHER repos, with targets drawn from a power-law
   * (Zipf-ish) distribution so low-id repos become heavy in-link hubs —
-  * exercising exactly the skew the salted adjacency (graft.graph
-  * .Adjacency) exists for. A configurable fraction of repos is
+  * exercising the skew the kernel compile's hub salting
+  * (SpmvKernel.compile) exists for. A configurable fraction of repos is
   * dangling (no out-links — PageRank sink-leak semantics, reference
   * pr.h:31-33) or isolated.
   */

@@ -182,47 +182,32 @@ object Dedup {
   /** Near-duplicate CLUSTERS from a candidate-pair table (id_a, id_b):
     * connected components over the pair graph, canonical id = min doc
     * id per cluster — the standard "keep one representative per
-    * duplicate cluster" step, computed with the graph engine itself
-    * (exact min-label semantics). Returns (doc_id, canonical_id); docs
-    * absent from any pair are their own canonical.
-    *
-    * `kernel = true` (default) runs the CC loop on the tile-compiled
-    * SpMSpV fast path (graph/SpmvKernel — the two CC engines are
-    * proven hash-identical, KernelSpec/q_cc_kernel): at 100 TB the
-    * dedup clustering step IS a frontier graph job, and the kernel's
-    * per-superstep cost is a compiled tile loop + one packed exchange
-    * instead of a Catalyst re-plan per iteration. `kernel = false`
-    * keeps the DataFrame engine (graft.algos.ConnectedComponents). */
-  def duplicateClusters(pairs: DataFrame, parts: Int,
-                        kernel: Boolean = true): DataFrame = {
-    // materialize the candidate pairs once — CC's shaping + adjacency
-    // build would otherwise re-execute the pair pipeline per action
+    * duplicate cluster" step, computed with the graph kernel itself
+    * (exact min-label semantics, graft.algos.ConnectedComponents on the
+    * SpmvKernel frontier loop). Returns (doc_id, canonical_id); docs
+    * absent from any pair are their own canonical. */
+  def duplicateClusters(pairs: DataFrame, parts: Int): DataFrame = {
+    // materialize the candidate pairs once — CC's shaping + compile
+    // would otherwise re-execute the pair pipeline per action
     // (when `pairs` comes from minhashCandidates it is already an
     // eager localCheckpoint, so this copy is a cheap block read)
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .localCheckpoint(true)
+    // kernel CC carries labels as IEEE doubles — exact only for
+    // 0 <= vid < 2^53 (KernelProgram.MaxExactVid). Doc ids outside
+    // that window (negative, or 64-bit content hashes / snowflakes
+    // — the COMMON shape at 100 TB) are re-keyed through a dense-id
+    // dictionary; the bounds agg is one tiny job over checkpointed blocks.
+    val b = edges.agg(
+      min(least(col("src"), col("dst"))).as("lo"),
+      max(greatest(col("src"), col("dst"))).as("hi")).head
+    val inWindow = b.isNullAt(0) ||
+      (b.getLong(0) >= 0L && b.getLong(1) < (1L << 53))
     val out =
-      if (!kernel)
+      if (inWindow)
         graft.algos.ConnectedComponents.run(edges, parts).state
           .select(col("vid").as("doc_id"), col("label").as("canonical_id"))
-      else {
-        // kernel CC carries labels as IEEE doubles — exact only for
-        // 0 <= vid < 2^53 (KernelProgram.MaxExactVid). Doc ids outside
-        // that window (negative, or 64-bit content hashes / snowflakes
-        // — the COMMON shape at 100 TB) are re-keyed through a dense-id
-        // dictionary so clustering always rides the kernel frontier
-        // loop; the bounds agg is one tiny job over checkpointed blocks.
-        val b = edges.agg(
-          min(least(col("src"), col("dst"))).as("lo"),
-          max(greatest(col("src"), col("dst"))).as("hi")).head
-        val inWindow = b.isNullAt(0) ||
-          (b.getLong(0) >= 0L && b.getLong(1) < (1L << 53))
-        if (inWindow)
-          kernelCcState(edges, parts)
-            .select(col("vid").as("doc_id"),
-              col("label").cast("long").as("canonical_id"))
-        else rekeyedKernelClusters(edges, parts)
-      }
+      else rekeyedKernelClusters(edges, parts)
     // the result above is (or selects from) an EAGER localCheckpoint,
     // so the pair-edge blocks are never read again — free them now
     // instead of leaking one block set per invocation.
@@ -230,28 +215,14 @@ object Dedup {
     out
   }
 
-  /** Kernel CC over an edge frame (same undirected shaping
-    * ConnectedComponents.run applies); returns the materialized state
-    * (vid, label: double, changed). */
-  private def kernelCcState(edges: DataFrame, parts: Int): DataFrame = {
-    val und = graft.graph.GraphShaping.shape(edges,
-      graft.graph.EdgeShaping.undirected(selfLoops = true))
-      .select("src", "dst")
-    val g = graft.graph.SpmvKernel.compile(und, parts)
-    val r = g.run(new graft.graph.CcKernelProgram, maxIters = 0)
-    g.unpersist()
-    r.state
-  }
-
   /** Kernel CC for doc ids OUTSIDE [0, 2^53): re-key through a dense-id
     * dictionary, run the compiled frontier CC over the new ids, map
     * back. The dictionary is the distinct id set range-partitioned and
     * sorted, then zipWithIndex'd — new ids are DENSE (< |V| « 2^53) and
     * MONOTONE in the original ids, so the kernel's min-label semantics
-    * pick exactly the cluster member with the smallest ORIGINAL id:
-    * canonical-id semantics are preserved bit-for-bit vs the engine
-    * path. Cost: one |V|-sized sort + two dictionary joins each way —
-    * noise next to the CC loop itself, which is the 8×-faster part.
+    * pick exactly the cluster member with the smallest ORIGINAL id,
+    * as in the in-window path. Cost: one |V|-sized sort + two
+    * dictionary joins each way.
     */
   private def rekeyedKernelClusters(edges: DataFrame, parts: Int): DataFrame = {
     val spark = edges.sparkSession
@@ -279,14 +250,13 @@ object Dedup {
       .join(dict.select(col("id").as("src"), col("nid").as("nsrc")), "src")
       .join(dict.select(col("id").as("dst"), col("nid").as("ndst")), "dst")
       .select(col("nsrc").as("src"), col("ndst").as("dst"))
-    val st = kernelCcState(rekeyed, parts) // (nid, nlabel) — materialized
-    val out = st
-      .select(col("vid"), col("label").cast("long").as("nlabel"))
+    val cc = graft.algos.ConnectedComponents.run(rekeyed, parts) // (nid, nlabel)
+    val out = cc.state
+      .select(col("vid"), col("label").as("nlabel"))
       .join(dict.select(col("nid").as("vid"), col("id").as("doc_id")), "vid")
       .join(dict.select(col("nid").as("nlabel"), col("id").as("canonical_id")), "nlabel")
       .select(col("doc_id"), col("canonical_id"))
       .localCheckpoint(true)
-    graft.graph.Engine.release(st)
     graft.graph.Engine.release(dict)
     out
   }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    no DataFrame-source equivalent (fixed-width raw structs).
   *
   * Both return (src: long, dst: long, w: double) ready for
-  * GraphShaping / Adjacency.
+  * GraphShaping / SpmvKernel.compile.
   */
 object EdgeListSource {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.EdgeListSource
 import graft.graph._
-import graft.algos._
+import graft.algos.{LabelPropagation, TriangleCount}
 
 /** CLI drop-in for the reference's per-algorithm binaries
   * (`bin/{pr,deg,cc,bfs,sssp,tc}` — /root/reference/src/apps/ pr.cpp
@@ -48,15 +48,13 @@ object Apps {
       .orderBy(desc("v"), asc("vid")).limit(5)
       .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
 
-  /** `kernel=true` routes pr/deg/cc/bfs/sssp/lpa through the tile-compiled
-    * SpmvKernel (graph/SpmvKernel) instead of the Catalyst Engine —
-    * identical results (KernelSpec/AppsSpec parity), reference-style
-    * single-binary semantics: the reference runs its whole app family
-    * on compiled kernels (src/singlenode/, vp:1331-1506). `tc` has no
-    * kernel analog (a 2-join wedge count, not a superstep loop). */
+  /** Every superstep app runs on the tile-compiled SpmvKernel
+    * (graph/SpmvKernel) — the reference likewise runs its whole app
+    * family on compiled kernels (src/singlenode/, vp:1331-1506). `tc`
+    * is a 2-join wedge count, not a superstep loop. */
   def run(spark: SparkSession, app: String, file: String, iters: Int,
           root: Long, parts: Int, weighted: Boolean,
-          kernel: Boolean = false, cache: Option[String] = None): Summary = {
+          cache: Option[String] = None): Summary = {
     val edges = load(spark, file, weighted)
     val t0 = System.nanoTime()
     def sec: Double = (System.nanoTime() - t0) / 1e9
@@ -76,20 +74,20 @@ object Apps {
       }
     }
     app match {
-      case "pr" if kernel =>
+      case "pr" =>
         val g = comp(edges, "raw")
         val r = g.pagerank(maxIters = if (iters > 0) iters else 20)
         g.unpersist()
         Summary("pr", r.iterations, r.checksum, None, sec,
           topOf(r.state, "rank"), Some(r.state), "rank")
-      case "deg" if kernel =>
+      case "deg" =>
         // the kernel's degree phase: out-degrees straight off the
         // compiled matrix (pr.cpp:40-49) — no superstep needed
         val g = comp(edges, "raw")
         val d = g.outDegrees.localCheckpoint(true)
         g.unpersist()
         Summary("deg", 1, cks(d, "degree"), None, sec, topOf(d, "degree"), Some(d), "degree")
-      case "cc" if kernel =>
+      case "cc" =>
         val und = GraphShaping.shape(edges,
           EdgeShaping.undirected(selfLoops = true)).select("src", "dst")
         val g = comp(und, "und")
@@ -98,7 +96,7 @@ object Apps {
         val st = r.state.select(col("vid"), col("label").cast("long").as("label"))
         Summary("cc", r.iterations, cks(st, "label"),
           Some(st.count()), sec, topOf(st, "label"), Some(st), "label")
-      case "bfs" if kernel =>
+      case "bfs" =>
         val und = GraphShaping.shape(edges,
           EdgeShaping.undirected(selfLoops = false))
           .select("src", "dst")
@@ -110,7 +108,7 @@ object Apps {
         val reached = st.filter(col("hops").isNotNull)
         Summary("bfs", r.iterations, cks(reached, "hops"),
           Some(reached.count()), sec, topOf(reached, "hops"), Some(st), "hops")
-      case "sssp" if kernel =>
+      case "sssp" =>
         val g = comp(edges, "raw")
         val r = g.run(new SsspKernelProgram(root), maxIters = 0)
         g.unpersist()
@@ -119,36 +117,11 @@ object Apps {
           Some(reached.count()), sec, topOf(reached, "dist"), Some(r.state), "dist")
       case "lpa" =>
         val mi = if (iters > 0) iters else 10
-        // both paths return RunResult with identical (vid,label) state
-        val r = if (kernel) graft.algos.LabelPropagation.runKernel(edges, parts, maxIters = mi)
-                else graft.algos.LabelPropagation.run(edges, parts, maxIters = mi)
+        val r = LabelPropagation.run(edges, parts, maxIters = mi)
         val st = r.state.select(col("vid"), col("label"))
         Summary("lpa", r.iterations, cks(st, "label"),
           Some(st.select("label").distinct().count()), sec,
           topOf(st, "label"), Some(st), "label")
-      case "pr" =>
-        val adj = Adjacency.build(edges, parts)
-        val r = PageRank.run(adj, maxIters = if (iters > 0) iters else 20)
-        Summary("pr", r.iterations, r.checksum("rank"), None, sec,
-          topOf(r.state, "rank"), Some(r.state), "rank")
-      case "deg" =>
-        val d = Degree.out(edges)
-        val c = cks(d, "degree")
-        Summary("deg", 1, c, None, sec, topOf(d, "degree"), Some(d), "degree")
-      case "cc" =>
-        val r = ConnectedComponents.run(edges, parts)
-        Summary("cc", r.iterations, cks(r.state, "label"),
-          Some(r.state.count()), sec, topOf(r.state, "label"), Some(r.state), "label")
-      case "bfs" =>
-        val r = Traversal.bfs(edges, root, parts)
-        val reached = r.state.filter(col("hops").isNotNull)
-        Summary("bfs", r.iterations, cks(reached, "hops"),
-          Some(reached.count()), sec, topOf(reached, "hops"), Some(r.state), "hops")
-      case "sssp" =>
-        val r = Traversal.sssp(edges, root, parts)
-        val reached = r.state.filter(col("dist").isNotNull)
-        Summary("sssp", r.iterations, cks(reached, "dist"),
-          Some(reached.count()), sec, topOf(reached, "dist"), Some(r.state), "dist")
       case "tc" =>
         val n = TriangleCount.count(edges, parts)
         Summary("tc", 1, n.toDouble, None, sec, Seq.empty)
@@ -161,7 +134,7 @@ object Apps {
     if (args.length < 2) {
       System.err.println("Usage: Apps <pr|deg|cc|bfs|sssp|tc|lpa> <file> " +
         "[<num_vertices>] [<num_iterations>] [root=N] [weighted=true|false] " +
-        "[cores=N] [kernel=true|false] [cache=<tile-cache-dir>]")
+        "[cores=N] [cache=<tile-cache-dir>]")
       sys.exit(1)
     }
     val app = args(0)
@@ -177,7 +150,6 @@ object Apps {
       .getOrElse(math.min(8, Runtime.getRuntime.availableProcessors()))
     val weighted = kv.get("weighted").map(_.toBoolean)
       .getOrElse(app == "sssp" && file.endsWith(".bin"))
-    val kernel = kv.get("kernel").exists(_.toBoolean)
     val cache = kv.get("cache")
 
     val spark = SparkSession.builder()
@@ -188,7 +160,7 @@ object Apps {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
-    val s = run(spark, app, file, iters, root, parts = cores, weighted, kernel, cache)
+    val s = run(spark, app, file, iters, root, parts = cores, weighted, cache)
     println(s"Iterations: ${s.iterations}")
     println(f"Value checksum: ${s.checksum}%.6f")
     s.reachable.foreach(n => println(s"Reachable vertices: $n"))

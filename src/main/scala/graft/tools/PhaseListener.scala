@@ -8,17 +8,18 @@ import scala.collection.concurrent.TrieMap
   * (Makefile:5-6), which reports init / scatter_gather / combine /
   * apply sums ± stddev per run (vertex_program.hpp:2134-2152).
   *
-  * Both superstep loops label each iteration's single job with job
-  * group `graft-superstep-<iter>` (Engine.runLoop, SpmvKernel
-  * .pagerank). A superstep job has exactly one shuffle boundary, so:
+  * The kernel's superstep loops (SpmvKernel CompiledGraph.run and
+  * .lpa) label each iteration's single job with job group
+  * `graft-superstep-<iter>`. A superstep job has exactly one shuffle
+  * boundary, so:
   *
-  *   - GATHER = the shuffle-map stage(s): scatter + per-edge combine +
-  *     map-side partial aggregation (reference scatter_gather +
+  *   - GATHER = the shuffle-map stage(s): scatter + per-edge combine
+  *     into one packed accumulator per tile (reference scatter_gather +
   *     combine, vp:688-861, 1058-1113);
   *   - APPLY  = the result stage: final combine + applicator + state
   *     materialization (vp:1641-1802);
   *   - BARRIER = iteration wall time minus the two stage spans — the
-  *     driver residue (planning, task launch, scheduling gaps): the
+  *     driver residue (job submission, task launch, scheduling gaps): the
   *     MPI-barrier analog this library's scaling work targets.
   *
   * Wall spans use stage submission→completion; `cpuMs` sums

@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import graft.ingest._
 import graft.graph._
-import graft.algos._
 
 /** Per-iteration breakdown of the PageRank superstep loop at one
   * parallelism level — the profiling companion to Bench's scaling
@@ -84,21 +83,16 @@ object ScalingProbe {
       }
     val parts = sys.env.get("PROBE_PARTS").map(_.toInt).getOrElse(cores)
     val iters = sys.env.get("PROBE_ITERS").map(_.toInt).getOrElse(10)
-    // PROBE_KERNEL=0 → the general DataFrame Engine path (Catalyst
-    // superstep jobs); default = the tile-compiled SpmvKernel fast
-    // path, which is what a production fixed-iteration PageRank run
-    // uses. Both are measured with the PhaseListener so the probe
-    // reports the reference's TIMING split (scatter_gather/combine vs
-    // apply vs barrier).
-    val kernelMode = sys.env.getOrElse("PROBE_KERNEL", "1") != "0"
+    // Every mode runs on the tile-compiled SpmvKernel and is measured
+    // with the PhaseListener, so the probe reports the reference's
+    // TIMING split (scatter_gather/combine vs apply vs barrier).
     // PROBE_ALGO=cc → connected components to the fixpoint instead of
     // fixed-iteration PageRank: the NONSTATIONARY (frontier/SpMSpV)
-    // benchmark — kernel bitset-frontier loop vs the Catalyst engine's
-    // frontier joins. Same undirected dedup shaping on both paths.
-    // PROBE_ALGO=lpa → frequency label propagation (fixed PROBE_ITERS
-    // budget; both paths stop at the same superstep by parity): the
-    // MULTISET-combiner benchmark — the kernel's label-count triple
-    // exchange vs the engine's two-hash-aggregation superstep.
+    // benchmark. PROBE_ALGO=lpa → frequency label propagation (fixed
+    // PROBE_ITERS budget): the MULTISET-combiner benchmark (the
+    // label-count triple exchange); lpaf = the same with the
+    // incremental delta path disabled. PROBE_ALGO=conv → PageRank to
+    // the 1e-6 convergence criterion.
     val algo = sys.env.getOrElse("PROBE_ALGO", "pr")
 
     // Round-6: kernel samples on a PARKED table route their compile
@@ -127,116 +121,38 @@ object ScalingProbe {
         }
       }
 
-    // build/compile-or-load seconds where the branch has a distinct
-    // build phase (-1 = not applicable) — surfaced in probe-json so
-    // Bench can record cold vs warm compile cost
-    var buildSec = -1.0
-    val (mode, nV, nE, rIters, iterWalls, imbalance, pl) =
-      if (kernelMode && (algo == "lpa" || algo == "lpaf")) {
-        // "lpaf" = the same kernel LPA with the incremental delta path
-        // disabled (full recount every superstep) — the A/B twin that
-        // isolates what the persistent-counts mode buys
-        val und = GraphShaping.shape(edges,
-          EdgeShaping.undirected(selfLoops = false))
-          .select("src", "dst")
-        val g = compiled(und, "lpa-und")
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        buildSec = tBuild
-        println(f"[probe] mode=kernel-$algo cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$tBuild%.1f")
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(
-          g.lpa(maxIters = iters, incremental = algo != "lpaf"))
-        r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-        (s"kernel-$algo", g.numVertices, g.numEdges, r.iterations,
-          r.metrics.map(_.wallMs), g.edgeImbalance, pl)
-      } else if (algo == "lpa") {
-        // no buildSec here: the engine builds its adjacency inside the
-        // measured run, so there is no distinct build phase to report
-        // (a post-measure capture printed the whole loop as "build")
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(
-          LabelPropagation.run(edges.repartition(parts), parts, maxIters = iters))
-        println(s"[probe] mode=engine-lpa cores=$cores parts=$parts")
-        r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-        // report the SAME shaped undirected edge set the engine
-        // iterates (and the kernel twin reports) so the BENCH.md pair
-        // rows are comparable; imbalance -1 = not measured here
-        val nE = GraphShaping.shape(edges,
-          EdgeShaping.undirected(selfLoops = false)).count()
-        ("engine-lpa", r.state.count(), nE, r.iterations,
-          r.metrics.map(_.wallMs), -1.0, pl)
-      } else if (kernelMode && algo == "cc") {
-        val und = GraphShaping.shape(edges,
-          EdgeShaping.undirected(selfLoops = true)).select("src", "dst")
-        val g = compiled(und, "cc-und")
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        buildSec = tBuild
-        println(f"[probe] mode=kernel-cc cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$tBuild%.1f")
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(
-          g.run(new CcKernelProgram, maxIters = 0))
-        r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-        ("kernel-cc", g.numVertices, g.numEdges, r.iterations,
-          r.metrics.map(_.wallMs), g.edgeImbalance, pl)
-      } else if (algo == "cc") {
-        // same as engine-lpa: adjacency build happens inside run()
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(
-          ConnectedComponents.run(edges.repartition(parts), parts))
-        println(s"[probe] mode=engine-cc cores=$cores parts=$parts")
-        r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-        // same shaped-count comparability contract as engine-lpa above
-        val nE = GraphShaping.shape(edges,
-          EdgeShaping.undirected(selfLoops = true)).count()
-        ("engine-cc", r.state.count(), nE, r.iterations,
-          r.metrics.map(_.wallMs), -1.0, pl)
-      } else if (algo == "conv") {
-        // PageRank to the BASELINE convergence criterion (per-vertex
-        // |Δrank| ≤ 1e-6, maxIters=0 → run until no vertex changed) on
-        // the KERNEL path: proven hash-identical to the engine
-        // (KernelSpec), so the ITERATION COUNT is exactly what the
-        // engine would report, at a fraction of the bench budget —
-        // which is what kept this sample from being shed in round 4.
-        val g = compiled(edges, "raw")
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        buildSec = tBuild
-        println(f"[probe] mode=kernel-conv cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$tBuild%.1f")
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(
-          g.pagerank(maxIters = 0, tol = 1e-6))
-        r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-        ("kernel-conv", g.numVertices, g.numEdges, r.iterations,
-          r.metrics.map(_.wallMs), g.edgeImbalance, pl)
-      } else if (kernelMode) {
-        // GRAFT_KERNEL_CACHE=<dir> routes the compile through the
-        // durable tile cache: a fingerprint-matching dir loads instead
-        // of compiling (warm buildSec ≈ read cost), a miss compiles and
-        // saves — the Bench cold/warm pair measures both
-        val g = compiled(edges, "raw")
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        buildSec = tBuild
-        // mirrors > 0 ⇒ the auto hub-salting engaged (a source owned
-        // more than a quarter-partition of edges); the imbalance field
-        // below then reports the SALTED balance
-        println(f"[probe] mode=kernel cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$tBuild%.1f " +
-          f"exchangeMBPerIter=${g.exchangeDoubles * 8.0 / 1e6}%.1f mirrors=${g.mirrorCount}")
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(g.pagerank(maxIters = iters))
-        r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-        ("kernel", g.numVertices, g.numEdges, r.iterations,
-          r.metrics.map(_.wallMs), g.edgeImbalance, pl)
-      } else {
-        // PROBE_WEIGHTED=0 → compact dst-only CSR (PageRank ignores
-        // weights; the reference pr app builds without -DHAS_WEIGHT).
-        // Default stays the struct layout: interleaved A/B at 32c/115M
-        // measured the compact layout ~35% SLOWER (6.5 vs 8.8 s/iter)
-        // and equal at 8c — the halved cache bytes don't pay for the
-        // long-array Generate path here.
-        val wtd = sys.env.getOrElse("PROBE_WEIGHTED", "1") != "0"
-        val adj = Adjacency.build(edges.repartition(parts), parts, weighted = wtd)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        buildSec = tBuild
-        println(f"[probe] mode=engine cores=$cores parts=$parts V=${adj.numVertices} E=${adj.numEdges} buildSec=$tBuild%.1f")
-        val (r, pl) = PhaseListener.measure(spark.sparkContext)(PageRank.run(adj, maxIters = iters))
-        r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-        val bal = BalanceAudit.audit(adj)
-        ("engine", adj.numVertices, adj.numEdges, r.iterations,
-          r.metrics.map(_.wallMs), bal.imbalance, pl)
-      }
+    // CC and LPA run on the undirected deduped closure (self-loops kept
+    // for CC, dropped for LPA), PageRank on the raw table. With
+    // GRAFT_KERNEL_CACHE=<dir> a fingerprint-matching dir loads instead
+    // of compiling (warm buildSec ≈ read cost), a miss compiles and
+    // saves — the Bench cold/warm pair measures both.
+    def und(selfLoops: Boolean) =
+      GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops)).select("src", "dst")
+    val g = algo match {
+      case "lpa" | "lpaf" => compiled(und(selfLoops = false), "lpa-und")
+      case "cc" => compiled(und(selfLoops = true), "cc-und")
+      case _ => compiled(edges, "raw")
+    }
+    val buildSec = (System.nanoTime() - t0) / 1e9
+    val mode = if (algo == "pr") "kernel" else s"kernel-$algo"
+    // mirrors > 0 ⇒ the auto hub-salting engaged (a source owned more
+    // than a quarter-partition of edges); the imbalance field below
+    // then reports the SALTED balance
+    println(f"[probe] mode=$mode cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$buildSec%.1f " +
+      f"exchangeMBPerIter=${g.exchangeDoubles * 8.0 / 1e6}%.1f mirrors=${g.mirrorCount}")
+    val (r, pl) = PhaseListener.measure(spark.sparkContext)(algo match {
+      // "lpaf" = the same LPA with the incremental delta path disabled
+      // (full recount every superstep) — the A/B twin that isolates
+      // what the persistent-counts mode buys
+      case "lpa" | "lpaf" => g.lpa(maxIters = iters, incremental = algo != "lpaf")
+      case "cc" => g.run(new CcKernelProgram, maxIters = 0)
+      // the BASELINE convergence criterion: per-vertex |Δrank| ≤ 1e-6
+      case "conv" => g.pagerank(maxIters = 0, tol = 1e-6)
+      case _ => g.pagerank(maxIters = iters)
+    })
+    r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
+    val (nE, rIters, iterWalls) = (g.numEdges, r.iterations, r.metrics.map(_.wallMs))
+    val imbalance = g.edgeImbalance
 
     val loopSec = iterWalls.sum / 1000.0
     val sorted = iterWalls.sorted

@@ -15,21 +15,3 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
-
-/** Re-binds a DataFrame's logical plan to another session of the SAME
-  * SparkContext (`Dataset.ofRows` is private[sql], hence the bridge).
-  * Used by the superstep loops to run on a CLONED session whose
-  * tuning (AQE off, hash-join preference) cannot leak into concurrent
-  * queries on the caller's session. Cached/checkpointed data is
-  * unaffected: the CacheManager and block manager live at the shared
-  * context level, so a rebound plan still hits the same cache
-  * entries. */
-object SessionBridge {
-  import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-
-  def rebind(spark: SparkSession, df: DataFrame): DataFrame = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val plan = df.queryExecution.logical
-    org.apache.spark.sql.classic.Dataset.ofRows(cs, plan)
-  }
-}

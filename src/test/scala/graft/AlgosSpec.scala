@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.graph._
 import graft.algos._
 
 /** Analytic micro-graph fixtures (FIXTURES.md §3). */
@@ -21,12 +19,9 @@ object Fixtures {
 class PageRankSpec extends SparkTestBase {
 
   private def runPr(es: Seq[(Long, Long)], iters: Int): Map[Long, Double] = {
-    val adj = Adjacency.build(edgesDF(es), parts)
-    val r = PageRank.run(adj, maxIters = iters)
-    val out = r.state.select("vid", "rank").collect()
+    val r = PageRank.run(edgesDF(es), parts, maxIters = iters)
+    r.state.select("vid", "rank").collect()
       .map(row => row.getLong(0) -> row.getDouble(1)).toMap
-    adj.unpersist()
-    out
   }
 
   private def assertClose(got: Map[Long, Double], want: Map[Long, Double], tol: Double = 1e-6): Unit = {
@@ -67,31 +62,6 @@ class PageRankSpec extends SparkTestBase {
     val got = runPr(es, 0)
     val want = ReferenceOracle.pagerank(es, 0)
     assertClose(got, want, tol = 1e-4) // both stop at |Δ|≤1e-5; same loop
-  }
-
-  test("shuffle gather path (no broadcast) matches oracle") {
-    val es = randomEdges(150, 900, seed = 17)
-    val adj = Adjacency.build(edgesDF(es), parts)
-    val degrees = Degree.outFromAdjacency(adj)
-    val r = Engine.run(adj, new PageRankProgram(degrees, 0.15, 1e-5),
-      RunConfig(maxIters = 15, broadcastMaxVertices = 0)) // force co-partitioned shuffle join
-    val got = r.state.select("vid", "rank").collect()
-      .map(row => row.getLong(0) -> row.getDouble(1)).toMap
-    adj.unpersist()
-    assertClose(got, ReferenceOracle.pagerank(es, 15))
-  }
-
-  test("salting (tiny chunk) does not change results") {
-    val es = randomEdges(60, 600, seed = 13)
-    val adj = Adjacency.build(edgesDF(es), parts, chunk = 4)
-    // hub rows must actually be split
-    val maxNbrs = adj.out.select(max(size(col("nbrs")))).head.getInt(0)
-    assert(maxNbrs <= 6 * 4, s"salt chunks unexpectedly large: $maxNbrs")
-    val r = PageRank.run(adj, maxIters = 10)
-    val got = r.state.select("vid", "rank").collect()
-      .map(row => row.getLong(0) -> row.getDouble(1)).toMap
-    adj.unpersist()
-    assertClose(got, ReferenceOracle.pagerank(es, 10))
   }
 }
 
@@ -206,50 +176,16 @@ class LabelPropagationSpec extends SparkTestBase {
     assert(low.intersect(high).isEmpty)
   }
 
-  test("engine loop tuning never leaks into the caller's session (cloned-session AQE)") {
-    // The superstep loop disables AQE + sort-merge preference — on a
-    // CLONED session. A concurrent analytical query on the caller's
-    // session must keep AQE; assert the caller conf is intact WHILE the
-    // loop is live (program.apply runs on the driver mid-loop).
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    var checkedMidLoop = false
-    val und = GraphShaping.shape(edgesDF(Fixtures.k4),
-      EdgeShaping(selfLoops = false, directed = false, parallelEdges = false))
-    val adj = Adjacency.build(und, parts)
-    val inner = new MinLabelProgram("cc")
-    val probe = new VertexProgram {
-      val name = "cc-aqe-probe"
-      val stationary = false
-      def init(v: org.apache.spark.sql.DataFrame) = inner.init(v)
-      def message(s: org.apache.spark.sql.DataFrame) = inner.message(s)
-      def edgeCombine(m: org.apache.spark.sql.Column, w: org.apache.spark.sql.Column) =
-        inner.edgeCombine(m, w)
-      def aggregate(v: org.apache.spark.sql.Column) = inner.aggregate(v)
-      def apply(joined: org.apache.spark.sql.DataFrame, iter: Int) = {
-        assert(TestSpark.spark.conf.get("spark.sql.adaptive.enabled") == "true",
-          "engine loop leaked AQE=false into the caller session")
-        checkedMidLoop = true
-        inner.apply(joined, iter)
-      }
-    }
-    val r = Engine.run(adj, probe, RunConfig(maxIters = 0))
-    assert(checkedMidLoop && r.iterations >= 1)
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    // and the returned state is bound back to the caller's session
-    assert(r.state.sparkSession eq spark)
-    adj.unpersist()
-  }
-
   test("long runs keep a bounded block-manager footprint (checkpoint eviction)") {
-    // Each superstep localCheckpoints new state; the previous
-    // iteration's blocks must be dropped (Engine.unpersistCheckpointed)
-    // or a 100-iteration run accrues 100 V-sized block sets.
+    // Each superstep persists new state; the previous superstep's
+    // blocks must be dropped or a 100-iteration run accrues 100
+    // V-sized block sets.
     val before = spark.sparkContext.getPersistentRDDs.size
     val es = randomEdges(80, 300, seed = 53)
     val r = LabelPropagation.run(edgesDF(es), parts, maxIters = 25)
     r.state.count()
     val after = spark.sparkContext.getPersistentRDDs.size
-    // allowed residue: final state + adjacency out/vertices caches (+1 slack)
+    // allowed residue: the exported final state (+ slack)
     assert(after - before <= 4,
       s"block sets grew $before -> $after over ${r.iterations} supersteps")
   }

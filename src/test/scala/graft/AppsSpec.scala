@@ -42,37 +42,37 @@ class AppsSpec extends SparkTestBase {
 
   test("kernel=true routes every app through the compiled path with unchanged checksums") {
     assume(Files.exists(java.nio.file.Paths.get(sampleBin)))
-    // same assertions as the engine-path tests above — the kernel path
-    // must be a checksum-for-checksum drop-in (VertexProgram contract
-    // on compiled tiles, graph/SpmvKernel)
-    val pr = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
-      weighted = false, kernel = true)
-    val prEngine = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
-      weighted = false)
-    assert(pr.iterations == 5 && math.abs(pr.checksum - prEngine.checksum) <= 1e-9)
-    // same top-5 vertices; values agree to 1e-9 (the two paths sum
+    // PageRank against the in-memory oracle on the same records: same
+    // checksum and top-5 vertices; values agree to 1e-9 (the two sum
     // contributions in different orders, so last-ulp drift is expected)
-    assert(pr.top.map(_._1) == prEngine.top.map(_._1))
-    pr.top.zip(prEngine.top).foreach { case ((_, a), (_, b)) =>
+    val pr = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
+      weighted = false)
+    val es = graft.sources.EdgeListSource.readBinary(spark, sampleBin).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val want = ReferenceOracle.pagerank(es, iters = 5)
+    val wantTop = want.toSeq.sortBy { case (v, x) => (-x, v) }.take(5)
+    assert(pr.iterations == 5 && math.abs(pr.checksum - want.values.sum) <= 1e-9)
+    assert(pr.top.map(_._1) == wantTop.map(_._1))
+    pr.top.zip(wantTop).foreach { case ((_, a), (_, b)) =>
       assert(math.abs(a - b) <= 1e-9)
     }
     val deg = Apps.run(spark, "deg", sampleBin, iters = 0, root = 0, parts,
-      weighted = false, kernel = true)
-    assert(deg.checksum == 16384.0) // Σ out-degree = E, same as the engine row
+      weighted = false)
+    assert(deg.checksum == 16384.0) // Σ out-degree = E
 
     // cache=<dir>: a second run of the same app loads the tile cache
     // instead of recompiling and must be checksum-identical; a second
     // APP on the same cache root must not collide (per-variant subdirs)
     val kc = Files.createTempDirectory("graft-apps-kcache").toString
     val prC1 = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
-      weighted = false, kernel = true, cache = Some(kc))
+      weighted = false, cache = Some(kc))
     val prC2 = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
-      weighted = false, kernel = true, cache = Some(kc))
+      weighted = false, cache = Some(kc))
     assert(prC1.checksum == prC2.checksum && prC1.checksum == pr.checksum)
     val ccC = Apps.run(spark, "cc", sampleBin, iters = 0, root = 0, parts,
-      weighted = false, kernel = true, cache = Some(kc))
+      weighted = false, cache = Some(kc))
     val ccPlain = Apps.run(spark, "cc", sampleBin, iters = 0, root = 0, parts,
-      weighted = false, kernel = true)
+      weighted = false)
     assert(ccC.checksum == ccPlain.checksum && ccC.reachable == ccPlain.reachable)
 
     val dir = Files.createTempDirectory("graft-apps-kernel").toString
@@ -83,22 +83,22 @@ class AppsSpec extends SparkTestBase {
         |8 9
         |""".stripMargin)
     val bfs = Apps.run(spark, "bfs", s"$dir/g.txt", iters = 0, root = 0, parts,
-      weighted = false, kernel = true)
+      weighted = false)
     assert(bfs.reachable.contains(4L) && bfs.checksum == 0 + 1 + 2 + 3)
     val cc = Apps.run(spark, "cc", s"$dir/g.txt", iters = 0, root = 0, parts,
-      weighted = false, kernel = true)
+      weighted = false)
     assert(cc.reachable.contains(6L) && cc.checksum == 0 * 4 + 8 * 2)
     val sp = Apps.run(spark, "sssp", s"$dir/g.txt", iters = 0, root = 0, parts,
-      weighted = false, kernel = true)
+      weighted = false)
     assert(sp.reachable.contains(4L) && sp.checksum == 0 + 1 + 3 + 4)
 
-    // lpa: the undirected path 0-1-2-3 plus pair 8-9; both paths must
-    // agree checksum-for-checksum and in distinct-label count
-    val lpaK = Apps.run(spark, "lpa", s"$dir/g.txt", iters = 5, root = 0, parts,
-      weighted = false, kernel = true)
-    val lpaE = Apps.run(spark, "lpa", s"$dir/g.txt", iters = 5, root = 0, parts,
+    // lpa: the undirected path 0-1-2-3 plus pair 8-9 against the oracle:
+    // checksum, distinct-label count and iterations
+    val lpa = Apps.run(spark, "lpa", s"$dir/g.txt", iters = 5, root = 0, parts,
       weighted = false)
-    assert(lpaK.checksum == lpaE.checksum && lpaK.reachable == lpaE.reachable
-      && lpaK.iterations == lpaE.iterations)
+    val (labels, rounds) = ReferenceOracle.lpa(Seq((0L, 1L), (1L, 2L), (2L, 3L), (8L, 9L)), 5)
+    assert(lpa.checksum == labels.values.sum.toDouble
+      && lpa.reachable.contains(labels.values.toSet.size.toLong)
+      && lpa.iterations == rounds)
   }
 }

@@ -7,37 +7,34 @@ import graft.ckpt.CheckpointManager
 
 class CheckpointSpec extends SparkTestBase {
 
-  private def ranks(r: RunResult): Map[Long, Double] =
+  private def ranks(r: SpmvKernel.KernelResult): Map[Long, Double] =
     r.state.select("vid", "rank").collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
 
   test("resume from mid-run checkpoint reproduces the uninterrupted run") {
     val es = randomEdges(120, 700, seed = 51)
-    val adj = Adjacency.build(edgesDF(es), parts)
 
     // uninterrupted: 14 supersteps
-    val straight = ranks(PageRank.run(adj, maxIters = 14))
+    val straight = ranks(PageRank.run(edgesDF(es), parts, maxIters = 14))
 
-    // interrupted: run 7, then a NEW engine run resumes from the
+    // interrupted: run 7, then a NEW run (and compile) resumes from the
     // snapshot and finishes the remaining budget
     val dir = Files.createTempDirectory("graft-ckpt").toString
     val mgr = new CheckpointManager(dir, every = 7)
-    PageRank.run(adj, maxIters = 7, ckpt = Some(mgr))
-    val resumed = ranks(PageRank.run(adj, maxIters = 14, ckpt = Some(mgr)))
+    PageRank.run(edgesDF(es), parts, maxIters = 7, ckpt = Some(mgr))
+    val resumed = ranks(PageRank.run(edgesDF(es), parts, maxIters = 14, ckpt = Some(mgr)))
 
     assert(straight.keySet == resumed.keySet)
     straight.foreach { case (v, x) =>
       assert(math.abs(x - resumed(v)) <= 1e-9, s"vid=$v straight=$x resumed=${resumed(v)}")
     }
-    adj.unpersist()
   }
 
   test("manifest carries iteration, per-partition lineage and metrics") {
     val es = randomEdges(50, 200, seed = 53)
-    val adj = Adjacency.build(edgesDF(es), parts)
     val dir = Files.createTempDirectory("graft-ckpt2").toString
     val mgr = new CheckpointManager(dir, every = 2)
-    PageRank.run(adj, maxIters = 4, ckpt = Some(mgr))
+    PageRank.run(edgesDF(es), parts, maxIters = 4, ckpt = Some(mgr))
     assert(mgr.latestIter().contains(4))
     val manifest = Files.readString(
       java.nio.file.Paths.get(dir, "iter=00004", "manifest.json"))
@@ -47,7 +44,6 @@ class CheckpointSpec extends SparkTestBase {
     assert(manifest.contains("\"snapshotId\""))
     // intermediate snapshot exists too
     assert(Files.exists(java.nio.file.Paths.get(dir, "iter=00002", "manifest.json")))
-    adj.unpersist()
   }
 
   test("LPA resumes from a mid-run snapshot with identical final labels") {
@@ -138,20 +134,20 @@ class CheckpointSpec extends SparkTestBase {
 
   test("kernel LPA resumes from a mid-run snapshot with identical final labels") {
     val es = randomEdges(150, 600, seed = 73)
-    def labelsOf(r: RunResult): Set[(Long, Long)] =
+    def labelsOf(r: SpmvKernel.KernelResult): Set[(Long, Long)] =
       r.state.select("vid", "label").collect()
         .map(x => (x.getLong(0), x.getLong(1))).toSet
 
-    val straight = labelsOf(LabelPropagation.runKernel(edgesDF(es), parts, maxIters = 6))
+    val straight = labelsOf(LabelPropagation.run(edgesDF(es), parts, maxIters = 6))
 
     // "killed" after 3 supersteps, then a fresh compile+run resumes at
     // iter=3 (the non-scalar label state rides the same stateFromDF
     // re-slot path) and finishes the same 6-superstep budget
     val dir = Files.createTempDirectory("graft-ckpt-lpa-kernel").toString
     val mgr = new CheckpointManager(dir, every = 3)
-    LabelPropagation.runKernel(edgesDF(es), parts, maxIters = 3, ckpt = Some(mgr))
+    LabelPropagation.run(edgesDF(es), parts, maxIters = 3, ckpt = Some(mgr))
     assert(mgr.latestIter().contains(3))
-    val resumed = labelsOf(LabelPropagation.runKernel(edgesDF(es), parts, maxIters = 6, ckpt = Some(mgr)))
+    val resumed = labelsOf(LabelPropagation.run(edgesDF(es), parts, maxIters = 6, ckpt = Some(mgr)))
     assert(resumed == straight, "kernel LPA resume diverged from the uninterrupted run")
   }
 
@@ -175,14 +171,14 @@ class CheckpointSpec extends SparkTestBase {
     val es = randomEdges(60, 200, seed = 79)
     val dir = Files.createTempDirectory("graft-ckpt-algo").toString
     val mgr = new CheckpointManager(dir, every = 1)
-    // engine LPA writes long-typed labels under algo "lpa"; a kernel
-    // LPA resume (algo "lpa-kernel") from it would reinterpret the
-    // columns — it must be rejected at load, not silently mis-read
-    LabelPropagation.run(edgesDF(es), parts, maxIters = 2, ckpt = Some(mgr))
+    // CC writes its labels under algo "cc-kernel"; an LPA resume (algo
+    // "lpa-kernel") from them would read another algorithm's state —
+    // it must be rejected at load, not silently mis-read
+    ConnectedComponents.run(edgesDF(es), parts, ckpt = Some(mgr))
     val e = intercept[IllegalArgumentException] {
-      LabelPropagation.runKernel(edgesDF(es), parts, maxIters = 4, ckpt = Some(mgr))
+      LabelPropagation.run(edgesDF(es), parts, maxIters = 4, ckpt = Some(mgr))
     }
-    assert(e.getMessage.contains("written by algorithm 'lpa'"),
+    assert(e.getMessage.contains("written by algorithm 'cc-kernel'"),
       s"expected the algo-mismatch diagnostic, got: ${e.getMessage}")
   }
 
@@ -194,12 +190,9 @@ class CheckpointSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-ckpt3").toString
     val mgr = new CheckpointManager(dir, every = 1)
     // first run to fixpoint with snapshots, then "resume" — must be a no-op
-    val und = GraphShaping.shape(edgesDF(es), EdgeShaping(directed = false, parallelEdges = false))
-    val adj = Adjacency.build(und, parts)
-    Engine.run(adj, new MinLabelProgram("cc"), RunConfig(maxIters = 0, ckpt = Some(mgr)))
-    val resumed = Engine.run(adj, new MinLabelProgram("cc"), RunConfig(maxIters = 0, ckpt = Some(mgr)))
+    ConnectedComponents.run(edgesDF(es), parts, ckpt = Some(mgr))
+    val resumed = ConnectedComponents.run(edgesDF(es), parts, ckpt = Some(mgr))
       .state.select("vid", "label").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(resumed == straight)
-    adj.unpersist()
   }
 }

@@ -60,8 +60,7 @@ class IngestSpec extends SparkTestBase {
 
   test("end-to-end: corpus → edges → PageRank runs and ranks hubs higher") {
     val (edges, dict) = EdgeExtraction.ingest(corpus)
-    val adj = graft.graph.Adjacency.build(edges, parts)
-    val r = graft.algos.PageRank.run(adj, maxIters = 10)
+    val r = graft.algos.PageRank.run(edges, parts, maxIters = 10)
     assert(r.iterations == 10)
     val ranks = r.state.select("vid", "rank").collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
@@ -69,6 +68,5 @@ class IngestSpec extends SparkTestBase {
     // Zipf skew: low-id repos are link targets far more often; the
     // highest-ranked vertex should carry rank well above the floor
     assert(ranks.values.max > 0.3)
-    adj.unpersist()
   }
 }

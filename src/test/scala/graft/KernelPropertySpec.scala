@@ -1,13 +1,14 @@
 package graft
 
 import graft.graph._
-import graft.algos.SourceSemantics
+import graft.algos.{ConnectedComponents, PageRank, SourceSemantics, Traversal}
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 
-/** Property tests of the kernel against [[ReferenceOracle]] on
-  * generated graphs. ScalaCheck runs directly from `test(...)` (no
-  * scalatestplus bridge). */
+/** Property tests of the kernel — through the algorithm API, shaping
+  * included — against [[ReferenceOracle]] on generated graphs.
+  * ScalaCheck runs directly from `test(...)` (no scalatestplus
+  * bridge). */
 class KernelPropertySpec extends SparkTestBase {
 
   /** Up to ~200 vertices, at least one edge between two of them:
@@ -70,49 +71,32 @@ class KernelPropertySpec extends SparkTestBase {
     assert(res.passed, res.status)
   }
 
-  private def undirected(es: Seq[(Long, Long)], selfLoops: Boolean) =
-    GraphShaping.shape(edgesDF(es), EdgeShaping.undirected(selfLoops)).select("src", "dst")
-
-  /** Runs `f` on the compiled graph and returns what it collects from
-    * the result state. */
-  private def onKernel[A](edges: org.apache.spark.sql.DataFrame)(
-      f: SpmvKernel.CompiledGraph => SpmvKernel.KernelResult)(
-      read: SpmvKernel.KernelResult => A): A = {
-    val g = SpmvKernel.compile(edges, parts)
-    try {
-      val r = f(g)
-      val out = read(r)
-      Engine.release(r.state)
-      out
-    } finally g.unpersist()
+  /** Collects `read` from an algorithm's state, then releases it. */
+  private def collected[A](r: SpmvKernel.KernelResult)(read: org.apache.spark.sql.DataFrame => A): A = {
+    val out = read(r.state)
+    Engine.release(r.state)
+    out
   }
 
   private def pagerank(es: Seq[(Long, Long)], iters: Int, mode: SourceSemantics): Map[Long, Double] =
-    mode match {
-      case SourceSemantics.Always =>
-        onKernel(edgesDF(es))(_.pagerank(maxIters = iters))(
-          _.state.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap)
-      case _ =>
-        val adj = Adjacency.build(edgesDF(es), parts)
-        try graft.algos.PageRank.run(adj, maxIters = iters, sources = mode).state
-          .select("vid", "rank").collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-        finally adj.unpersist()
-    }
+    collected(PageRank.run(edgesDF(es), parts, maxIters = iters, sources = mode))(
+      _.select("vid", "rank").collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap)
 
-  private def components(es: Seq[(Long, Long)]): (Map[Long, Long], Int) =
-    onKernel(undirected(es, selfLoops = true))(_.run(new CcKernelProgram, maxIters = 0))(r =>
-      (r.state.select("vid", "label").collect().map(x => x.getLong(0) -> x.getDouble(1).toLong).toMap,
-        r.iterations))
+  private def components(es: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
+    val r = ConnectedComponents.run(edgesDF(es), parts)
+    (collected(r)(_.select("vid", "label").collect().map(x => x.getLong(0) -> x.getLong(1)).toMap),
+      r.iterations)
+  }
 
-  private def bfs(es: Seq[(Long, Long)], root: Long): (Map[Long, (Long, Long)], Int) =
-    onKernel(undirected(es, selfLoops = false))(_.run(new BfsKernelProgram(root), maxIters = 0))(r =>
-      (r.state.select("vid", "parent", "hops").filter("hops IS NOT NULL").collect()
-        .map(x => x.getLong(0) -> (x.getDouble(1).toLong, x.getDouble(2).toLong)).toMap,
-        r.iterations))
+  private def bfs(es: Seq[(Long, Long)], root: Long): (Map[Long, (Long, Long)], Int) = {
+    val r = Traversal.bfs(edgesDF(es), root, parts)
+    (collected(r)(_.select("vid", "parent", "hops").filter("hops IS NOT NULL").collect()
+      .map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2))).toMap), r.iterations)
+  }
 
   private def sssp(es: Seq[(Long, Long, Double)], root: Long): Map[Long, Double] =
-    onKernel(wEdgesDF(es))(_.run(new SsspKernelProgram(root), maxIters = 0))(
-      _.state.select("vid", "dist").filter("dist IS NOT NULL").collect()
+    collected(Traversal.sssp(wEdgesDF(es), root, parts))(
+      _.select("vid", "dist").filter("dist IS NOT NULL").collect()
         .map(x => x.getLong(0) -> x.getDouble(1)).toMap)
 
   test("PageRank in all three source modes equals the reference oracle on generated graphs") {

@@ -47,15 +47,9 @@ class DedupSpec extends SparkTestBase {
     val s = spark; import s.implicits._
     val pairs = Seq((1L, 2L), (2L, 7L), (5L, 9L)).toDF("id_a", "id_b")
     val want = Map(1L -> 1L, 2L -> 1L, 7L -> 1L, 5L -> 5L, 9L -> 5L)
-    // default = the tile-compiled kernel CC; the Catalyst engine path
-    // must produce the identical clustering (the two CC engines are
-    // hash-identical — this guards the duplicateClusters plumbing)
     val got = Dedup.duplicateClusters(pairs, parts).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
-    val gotEngine = Dedup.duplicateClusters(pairs, parts, kernel = false).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotEngine == want, "Catalyst-engine clustering diverged from the kernel path")
   }
 
   test("duplicate clusters re-key ids outside the kernel-exact window and STAY on the kernel") {
@@ -64,7 +58,7 @@ class DedupSpec extends SparkTestBase {
     // hashes / snowflakes — the common shape at 100 TB); the kernel
     // path carries labels as doubles, so these are re-keyed through a
     // dense-id dictionary (monotone, so canonical = min ORIGINAL id is
-    // preserved) instead of falling back to the 8×-slower engine
+    // preserved)
     val big = (1L << 53) + 5L
     val big2 = Long.MaxValue - 17L
     val pairs = Seq((-3L, 8L), (8L, big), (big2, -40L)).toDF("id_a", "id_b")
@@ -72,10 +66,6 @@ class DedupSpec extends SparkTestBase {
     val got = Dedup.duplicateClusters(pairs, parts).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
-    // the engine path must agree exactly (same canonical semantics)
-    val gotEngine = Dedup.duplicateClusters(pairs, parts, kernel = false).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotEngine == want, "engine clustering diverged from the re-keyed kernel path")
   }
 
   test("LSH self-join reads the persisted bucket frame on both sides") {

@@ -124,6 +124,28 @@ object ReferenceOracle {
     dist.toMap
   }
 
+  /** Synchronous Bellman-Ford rounds from `root`: each round relaxes
+    * every edge out of a vertex whose distance dropped in the round
+    * before; the count includes the last round, which changed nothing. */
+  def ssspRounds(edges: Seq[(Long, Long, Double)], root: Long): Int = {
+    var dist = Map(root -> 0.0)
+    var frontier = Set(root)
+    var rounds = 0
+    while (frontier.nonEmpty) {
+      val next = mutable.Map.empty[Long, Double]
+      edges.foreach { case (u, v, w) =>
+        if (frontier(u)) {
+          val nd = dist(u) + w
+          if (nd < next.getOrElse(v, dist.getOrElse(v, Double.PositiveInfinity))) next(v) = nd
+        }
+      }
+      dist = dist ++ next
+      frontier = next.keySet.toSet
+      rounds += 1
+    }
+    rounds
+  }
+
   /** Synchronous frequency LPA on the undirected, deduped closure of
     * `edges` without self-loops: every vertex starts with its own id;
     * each round every vertex takes the label most frequent among its

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.EdgeListSource
 import graft.ingest.Rmat
-import graft.graph.{Adjacency, BalanceAudit, Stats}
+import graft.graph.Stats
 
 class SourcesSpec extends SparkTestBase {
 
@@ -72,14 +72,6 @@ class SourcesSpec extends SparkTestBase {
     // power-law-ish: top vertex holds many more edges than the median
     val bySrc = e1.groupBy(_._1).view.mapValues(_.size).values.toSeq.sorted
     assert(bySrc.last > 4 * bySrc(bySrc.size / 2))
-  }
-
-  test("balance audit reports per-partition spread on skewed input") {
-    val adj = Adjacency.build(Rmat.edges(spark, scale = 9), parts, chunk = 64)
-    val rep = BalanceAudit.audit(adj)
-    assert(rep.partitions > 1 && rep.maxEdges >= rep.minEdges)
-    assert(BalanceAudit.perPartition(adj).count() == rep.partitions)
-    adj.unpersist()
   }
 
   test("stats summary matches hand computation") {

@@ -53,6 +53,26 @@ object EdgeListSource {
     rows.toDF("src", "dst", "w")
   }
 
+  /** Fill `buf` with one LE record: src, dst [, w] as uint32. A field
+    * that is not a whole number in [0, 2^32) throws: wrapped or
+    * truncated, it would silently name another vertex or weight. */
+  private def putRecord(buf: java.nio.ByteBuffer, src: Long, dst: Long,
+                        w: Double, weighted: Boolean): Unit = {
+    def u32(v: Long): Int =
+      if (v >= 0 && v <= 0xFFFFFFFFL) v.toInt
+      else throw new IllegalArgumentException(
+        s"vid $v is outside [0, 2^32), the range of a binary edge record")
+    buf.clear()
+    buf.putInt(u32(src))
+    buf.putInt(u32(dst))
+    if (weighted) {
+      if (w != math.floor(w) || w < 0 || w >= 4294967296.0)
+        throw new IllegalArgumentException(
+          s"weight $w is not a whole number in [0, 2^32), the range of a binary edge record")
+      buf.putInt(w.toLong.toInt)
+    }
+  }
+
   /** Format converter (reference src/misc/converter.cpp:16-170):
     * writes an edge DataFrame as fixed-width LE binary records.
     * Single-file output for tool interop (driver-side stream over a
@@ -66,7 +86,10 @@ object EdgeListSource {
     *    weight and synthesize one in [1, 128] per record (reference
     *    converter.cpp:130 `1 + rand() % 128`) — deterministic here via
     *    the splitmix64 finalizer over (seed, record index) instead of
-    *    C rand(), so exports are reproducible. */
+    *    C rand(), so exports are reproducible.
+    *
+    * A vid (after displacement) or weight that is not a whole number
+    * in [0, 2^32) throws IllegalArgumentException naming the value. */
   def writeBinary(edges: DataFrame, path: String, weighted: Boolean = false,
                   displace: Long = 0L,
                   synthWeightSeed: Option[Long] = None): Unit = {
@@ -90,15 +113,17 @@ object EdgeListSource {
               val buf = java.nio.ByteBuffer.allocate(12)
                 .order(java.nio.ByteOrder.LITTLE_ENDIAN)
               it.foreach { r =>
-                buf.clear()
-                buf.putInt((r.getLong(0) + disp).toInt)
-                buf.putInt((r.getLong(1) + disp).toInt)
-                if (wtd) buf.putInt(r.getDouble(2).toInt)
+                putRecord(buf, r.getLong(0) + disp, r.getLong(1) + disp, r.getDouble(2), wtd)
                 bos.write(buf.array(), 0, if (wtd) 12 else 8)
               }
               Iterator.single(bos.toByteArray)
             }
-          blobs.toLocalIterator.foreach(out.write)
+          // a bad field fails the encoding task; rethrow its own error
+          try blobs.toLocalIterator.foreach(out.write)
+          catch {
+            case e: org.apache.spark.SparkException
+                if e.getCause.isInstanceOf[IllegalArgumentException] => throw e.getCause
+          }
         case Some(seed) =>
           // synthetic weights depend on the GLOBAL record index, which
           // only the driver's sequential walk knows — keep the row loop
@@ -109,13 +134,8 @@ object EdgeListSource {
           var i = 0L
           while (it.hasNext) {
             val r = it.next()
-            buf.clear()
-            buf.putInt((r.getLong(0) + displace).toInt)
-            buf.putInt((r.getLong(1) + displace).toInt)
-            if (weighted) {
-              buf.putInt(
-                (1L + (graft.functions.StableHash.mix64(seed ^ i) >>> 1) % 128L).toInt)
-            }
+            putRecord(buf, r.getLong(0) + displace, r.getLong(1) + displace,
+              (1L + (graft.functions.StableHash.mix64(seed ^ i) >>> 1) % 128L).toDouble, weighted)
             out.write(buf.array(), 0, if (weighted) 12 else 8)
             i += 1
           }

@@ -63,6 +63,33 @@ class SourcesSpec extends SparkTestBase {
       Files.readAllBytes(java.nio.file.Paths.get(f2))))
   }
 
+  test("binary export rejects a vid outside uint32 instead of wrapping it") {
+    val f = Files.createTempFile("graft-bin-range", ".bin").toString
+    val neg = intercept[IllegalArgumentException](
+      EdgeListSource.writeBinary(wEdgesDF(Seq((0L, 1L, 1.0), (-1L, 2L, 1.0))), f))
+    assert(neg.getMessage.contains("vid -1 "), neg.getMessage)
+    // in range before displacement, 2^32 after it
+    val big = intercept[IllegalArgumentException](
+      EdgeListSource.writeBinary(wEdgesDF(Seq((4294967290L, 1L, 1.0))), f, displace = 6L))
+    assert(big.getMessage.contains("vid 4294967296 "), big.getMessage)
+    val synth = intercept[IllegalArgumentException](
+      EdgeListSource.writeBinary(wEdgesDF(Seq((1L, 1L << 32, 1.0))), f, weighted = true,
+        synthWeightSeed = Some(7L)))
+    assert(synth.getMessage.contains("vid 4294967296 "), synth.getMessage)
+  }
+
+  test("binary export rejects a fractional weight instead of truncating it") {
+    val dir = Files.createTempDirectory("graft-binw-frac").toString
+    Files.writeString(java.nio.file.Paths.get(dir, "g.txt"), "0 1 2.5\n1 2 3\n")
+    val f = Files.createTempFile("graft-binw-frac", ".bin").toString
+    val e = intercept[IllegalArgumentException](
+      EdgeListSource.writeBinary(EdgeListSource.readText(spark, dir), f, weighted = true))
+    assert(e.getMessage.contains("weight 2.5 "), e.getMessage)
+    // unweighted records carry no weight, so the same edges export
+    EdgeListSource.writeBinary(EdgeListSource.readText(spark, dir), f)
+    assert(Files.size(java.nio.file.Paths.get(f)) == 2L * 8)
+  }
+
   test("rmat: deterministic, right cardinality, skewed") {
     val e1 = Rmat.edges(spark, scale = 10).collect().map(r => (r.getLong(0), r.getLong(1)))
     val e2 = Rmat.edges(spark, scale = 10).repartition(7)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph._
+import graft.graph.SpmvKernel.onKernel
 import graft.algos._
 import graft.ops._
 
@@ -87,13 +88,6 @@ object SparkEntry {
     val pr = onKernel(e, parts(spark))(_.pagerank(maxIters = 10))
     pr.state.join(dict, "vid").select(col("repo"), col("rank"))
       .orderBy(desc("rank"), asc("repo")).limit(20)
-  }
-
-  /** Compiles `edges` into kernel tiles, runs `f` on them and releases
-    * the tiles; the kernel results are materialized on their own. */
-  private def onKernel[R](edges: DataFrame, parts: Int)(f: SpmvKernel.CompiledGraph => R): R = {
-    val g = SpmvKernel.compile(edges, parts)
-    try f(g) finally g.unpersist()
   }
 
   /** The undirected closure of `e` (EdgeShaping.undirected), without

@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import graft.graph._
-import graft.graph.SpmvKernel.KernelResult
+import graft.graph.SpmvKernel.{KernelResult, onKernel}
 
 /** Connected components = min-label propagation, the reference's
   * CC_Program (src/apps/cc.h) on the kernel's frontier mode
@@ -23,6 +23,6 @@ object ConnectedComponents {
           ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
     val und = GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops = true))
       .select("src", "dst")
-    OnKernel(und, parts, "label")(_.run(new CcKernelProgram, maxIters = 0, ckpt = ckpt))
+    onKernel(und, parts)(_.run(new CcKernelProgram, maxIters = 0, ckpt = ckpt)).withLongs("label")
   }
 }

@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import graft.graph._
-import graft.graph.SpmvKernel.KernelResult
+import graft.graph.SpmvKernel.{KernelResult, onKernel}
 import graft.ckpt.CheckpointManager
 
 /** Synchronous label propagation (community detection) — the
@@ -24,6 +24,6 @@ object LabelPropagation {
           ckpt: Option[CheckpointManager] = None): KernelResult = {
     val und = GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops = false))
       .select("src", "dst")
-    OnKernel(und, parts, "label")(_.lpa(maxIters, ckpt = ckpt))
+    onKernel(und, parts)(_.lpa(maxIters, ckpt = ckpt)).withLongs("label")
   }
 }

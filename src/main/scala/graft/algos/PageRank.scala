@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.SpmvKernel.KernelResult
+import graft.graph.SpmvKernel.{KernelResult, onKernel}
 
 /** How PageRank treats messages from SOURCE vertices (no in-edges,
   * rank pinned at α). The reference family has three observable
@@ -66,7 +66,7 @@ object PageRank {
           tol: Double = DefaultTol,
           sources: SourceSemantics = SourceSemantics.Always,
           ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
-    def onGraph(e: DataFrame) = OnKernel(e, parts)(_.pagerank(maxIters, alpha, tol, ckpt = ckpt))
+    def onGraph(e: DataFrame) = onKernel(e, parts)(_.pagerank(maxIters, alpha, tol, ckpt = ckpt))
     if (sources == SourceSemantics.Always) return onGraph(edges)
 
     val gated = onGraph(edges.join(edges.select(col("dst").as("src")), Seq("src"), "left_semi"))

@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import graft.graph._
-import graft.graph.SpmvKernel.KernelResult
+import graft.graph.SpmvKernel.{KernelResult, onKernel}
 
 /** BFS and SSSP on the kernel's frontier mode.
   *
@@ -25,11 +25,11 @@ object Traversal {
           ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
     val und = GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops = false))
       .select("src", "dst")
-    OnKernel(und, parts, "parent", "hops")(
-      _.run(new BfsKernelProgram(root), maxIters = 0, ckpt = ckpt))
+    onKernel(und, parts)(_.run(new BfsKernelProgram(root), maxIters = 0, ckpt = ckpt))
+      .withLongs("parent", "hops")
   }
 
   def sssp(edges: DataFrame, root: Long, parts: Int,
            ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
-    OnKernel(edges, parts)(_.run(new SsspKernelProgram(root), maxIters = 0, ckpt = ckpt))
+    onKernel(edges, parts)(_.run(new SsspKernelProgram(root), maxIters = 0, ckpt = ckpt))
 }

@@ -236,7 +236,22 @@ object SpmvKernel {
   }
 
   final case class KernelResult(state: DataFrame, iterations: Int,
-                                metrics: Seq[IterMetrics], checksum: Double)
+                                metrics: Seq[IterMetrics], checksum: Double) {
+    /** This result with the state columns `cols` — vertex ids or hop
+      * counts, which the kernel stores as doubles — cast to long. */
+    def withLongs(cols: String*): KernelResult = {
+      import org.apache.spark.sql.functions.col
+      copy(state = state.select(state.columns.toSeq.map(c =>
+        if (cols.contains(c)) col(c).cast("long").as(c) else col(c)): _*))
+    }
+  }
+
+  /** Compiles `edges` into kernel tiles, runs `f` on them and releases
+    * the tiles; kernel results are materialized on their own. */
+  def onKernel[R](edges: DataFrame, parts: Int)(f: CompiledGraph => R): R = {
+    val g = compile(edges, parts)
+    try f(g) finally g.unpersist()
+  }
 
   /** Per-row edge-combine into a dense accumulator — the specialized
     * inner loops (one per combiner × edge-op × weightedness) the

@@ -1,6 +1,8 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.LogicalRDD
 
 object Engine {
 
@@ -13,10 +15,13 @@ object Engine {
     * operators (Dedup.minhashCandidates / simhashCandidates,
     * Similarity.cosineNearDup) return their frames under: call
     * `Engine.release(result)` when done with the frame, so a
-    * long-lived session never accumulates per-invocation block sets. */
+    * long-lived session never accumulates per-invocation block sets.
+    * A projection of such a frame (the algos' results, whose id columns
+    * KernelResult.withLongs casts to long) releases the frame beneath. */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: LogicalRDD => l.rdd.unpersist(false)
+      case Project(_, l: LogicalRDD) => l.rdd.unpersist(false)
       case _ => ()
     }
 }

@@ -257,6 +257,7 @@ object Dedup {
       .join(dict.select(col("nid").as("nlabel"), col("id").as("canonical_id")), "nlabel")
       .select(col("doc_id"), col("canonical_id"))
       .localCheckpoint(true)
+    graft.graph.Engine.release(cc.state)
     graft.graph.Engine.release(dict)
     out
   }

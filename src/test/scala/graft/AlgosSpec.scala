@@ -188,5 +188,9 @@ class LabelPropagationSpec extends SparkTestBase {
     // allowed residue: the exported final state (+ slack)
     assert(after - before <= 4,
       s"block sets grew $before -> $after over ${r.iterations} supersteps")
+    // the result's long-typed labels project the kernel's export;
+    // releasing the result frees the export beneath
+    graft.graph.Engine.release(r.state)
+    assert(spark.sparkContext.getPersistentRDDs.size < after, "release freed no block set")
   }
 }

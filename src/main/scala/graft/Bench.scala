@@ -13,8 +13,9 @@ import scala.collection.mutable
   *     extraction → parked parquet edge table → 10 supersteps — run at
   *     two parallelism levels on the SAME parked input, plus an
   *     unsaturated-pair curve, a frontier-algorithm (CC) sample and a
-  *     multiset-combiner (frequency LPA) pair. Each sample runs in its own FORKED JVM (graft.tools.ScalingProbe) so
-  *     GC state never bleeds between configurations; throughput =
+  *     multiset-combiner (frequency LPA, incremental vs full) pair.
+  *     Each sample runs in its own FORKED JVM (graft.tools.ScalingProbe)
+  *     so GC state never bleeds between configurations; throughput =
   *     E / median superstep seconds.
   *
   * ARTIFACT-FIRST contract (round-3 fix — the driver's bench run must

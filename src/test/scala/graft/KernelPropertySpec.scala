@@ -2,6 +2,7 @@ package graft
 
 import graft.graph._
 import graft.algos.{ConnectedComponents, PageRank, SourceSemantics, Traversal}
+import graft.ckpt.CheckpointManager
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 
@@ -65,8 +66,8 @@ class KernelPropertySpec extends SparkTestBase {
     assert(engaged > 0, "no generated run passed the incremental gate")
   }
 
-  private def check(prop: Prop): Unit = {
-    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(15)
+  private def check(prop: Prop, trials: Int = 15): Unit = {
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(trials)
       .withWorkers(1).withInitialSeed(Seed(20261020L)), prop)
     assert(res.passed, res.status)
   }
@@ -118,6 +119,43 @@ class KernelPropertySpec extends SparkTestBase {
 
   test("BFS hops, min-vid parents and superstep count equal the reference oracle on generated graphs") {
     check(Prop.forAllNoShrink(graphs)(es => bfs(es, 0L) == ReferenceOracle.bfs(es, 0L)))
+  }
+
+  test("a run resumed at a random superstep equals the uninterrupted run (PR, CC, BFS, SSSP, LPA)") {
+    // one weighted compile per graph serves all five programs; hubChunk
+    // = 4 salts every vertex of degree > 4, so the resume must rebuild
+    // the mirror slots' hub broadcast
+    val budget = 8
+    var salted = 0
+    check(Prop.forAllNoShrink(graphs, Gen.choose(1, budget)) { (es, k) =>
+      val wes = es.zipWithIndex.map { case ((s, d), i) => (s, d, 1.0 + i % 7) }
+      val g = SpmvKernel.compile(wEdgesDF(wes), parts, hubChunk = 4)
+      try {
+        if (g.mirrorCount > 0) salted += 1
+        val programs: Seq[(Int, Option[CheckpointManager]) => SpmvKernel.KernelResult] = Seq(
+          (n, c) => g.pagerank(n, ckpt = c),
+          (n, c) => g.run(new CcKernelProgram, n, ckpt = c),
+          (n, c) => g.run(new BfsKernelProgram(0L), n, ckpt = c),
+          (n, c) => g.run(new SsspKernelProgram(0L), n, ckpt = c),
+          (n, c) => g.lpa(n, ckpt = c))
+        programs.forall { run =>
+          def outcome(r: SpmvKernel.KernelResult) =
+            (r.iterations, collected(r)(_.collect().toSet))
+          val straight = outcome(run(budget, None))
+          val dir = java.nio.file.Files.createTempDirectory("graft-resume").toFile
+          val cm = new CheckpointManager(dir.toString, every = 0)
+          try {
+            val first = run(k, Some(cm))
+            Engine.release(first.state)
+            val resumed = run(budget, Some(cm))
+            // the second call continued from the snapshot, not from init
+            resumed.metrics.map(_.iter) == (first.iterations + 1 to resumed.iterations) &&
+              outcome(resumed) == straight
+          } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+        }
+      } finally g.unpersist()
+    }, trials = 10)
+    assert(salted > 0, "no generated graph salted a hub — mirrors never exercised")
   }
 
   test("weighted SSSP distances equal Dijkstra on generated graphs") {

@@ -172,6 +172,21 @@ class KernelSpec extends SparkTestBase {
     }
   }
 
+  test("LPA's budget counts supersteps: lpa(0) runs none, lpa(3) runs three") {
+    // synchronous LPA on one undirected edge swaps the two labels every
+    // superstep and never settles, so a budget of 0 cannot mean "until
+    // nothing changes" here
+    val g = SpmvKernel.compile(edgesDF(Seq((0L, 1L), (1L, 0L))), parts)
+    try {
+      def labels(maxIters: Int): (Int, Map[Long, Long]) = {
+        val r = g.lpa(maxIters)
+        (r.iterations, r.state.collect().map(x => x.getLong(0) -> x.getDouble(1).toLong).toMap)
+      }
+      assert(labels(0) == ((0, Map(0L -> 0L, 1L -> 1L))))
+      assert(labels(3) == ((3, Map(0L -> 1L, 1L -> 0L))))
+    } finally g.unpersist()
+  }
+
   test("incremental LPA equals full-recount LPA (labels, iterations, checksum)") {
     // community structure with a long coalescing tail so several
     // supersteps pass the active·2 ≤ V gate and run the delta path

@@ -89,6 +89,9 @@ object SpmvKernel {
     z ^ (z >>> 31)
   }
 
+  /** Supersteps between truncations of the state RDD's lineage. */
+  private final val LineageTruncateEvery = 20
+
   /** Identity partitioner for pre-bucketed (Int-keyed) tile traffic. */
   private final class IdPartitioner(val numPartitions: Int) extends Partitioner {
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
@@ -490,9 +493,8 @@ object SpmvKernel {
       * [[PrKernelProgram]] for the math. Kept as the named entry point
       * (Bench/Apps/specs); delegates to the generalized loop. */
     def pagerank(maxIters: Int, alpha: Double = 0.15, tol: Double = 1e-5,
-                 lineageTruncateEvery: Int = 20,
                  ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
-      run(new PrKernelProgram(alpha, tol), maxIters, lineageTruncateEvery, ckpt)
+      run(new PrKernelProgram(alpha, tol), maxIters, ckpt)
 
     /** The generalized superstep loop. `maxIters > 0` = fixed budget
       * (the per-vertex convergence check is disabled for stationary
@@ -502,7 +504,6 @@ object SpmvKernel {
       * complete snapshot and saves every `ckpt.every` supersteps plus a
       * final snapshot. */
     def run(program: KernelProgram, maxIters: Int,
-            lineageTruncateEvery: Int = 20,
             ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
       val P = parts
       val width = program.width
@@ -554,14 +555,6 @@ object SpmvKernel {
       while (keepGoing) {
         val t0 = System.nanoTime()
         val frontier = if (stationary) numVertices else active
-        // GRAFT_KERNEL_PROFILE=1 → split pure tile-compute ns from the
-        // framework residue (iterator/serialization/shuffle); profiling
-        // only — retry-inflation is acceptable here, unlike the
-        // convergence count below, which rides the job result.
-        val profAcc =
-          if (sys.env.contains("GRAFT_KERNEL_PROFILE"))
-            Some(sc.longAccumulator(s"graft_spmv_compute_ns_$iter"))
-          else None
 
         // ---- stage 1: per-tile gather — dense accumulate or sparse
         // assemble, then pack. Packed byte arrays take the serializer's
@@ -580,7 +573,6 @@ object SpmvKernel {
               val t = kp.tiles(q)
               if (t == null) Iterator.empty
               else {
-                val c0 = if (profAcc.isDefined) System.nanoTime() else 0L
                 val srcSlots = t.srcSlots; val offsets = t.offsets
                 val dstLocal = t.dstLocal; val w = t.weights
                 val out: Array[Byte] =
@@ -632,7 +624,6 @@ object SpmvKernel {
                         vids, values, invDeg, width, aEdges.toInt, sum, eop, program)
                     }
                   }
-                profAcc.foreach(_.add(System.nanoTime() - c0))
                 if (out == null) Iterator.empty else Iterator.single(((q, p), out))
               }
             }
@@ -698,7 +689,7 @@ object SpmvKernel {
 
         // RDD lineage grows one zip+shuffle layer per iteration —
         // truncate periodically so task closures stay O(1)
-        if (lineageTruncateEvery > 0 && (iter + 1) % lineageTruncateEvery == 0)
+        if ((iter + 1) % LineageTruncateEvery == 0)
           newState.localCheckpoint()
         // the ONE action per superstep: materializes newState AND
         // returns each partition's changed count from the successful
@@ -710,8 +701,6 @@ object SpmvKernel {
         val (nActive, hubNew) =
           try countAndHarvest(newState, width)
           finally sc.clearJobGroup() // ckpt/export jobs are NOT the superstep
-        profAcc.foreach(a => System.err.println(
-          s"[kernel-profile] iter=$iter computeMs=${a.value / 1000000}"))
         active = nActive
         if (hubNew != null) {
           // the old snapshot served this superstep's stage 1, which the
@@ -798,7 +787,7 @@ object SpmvKernel {
       * loop stops when no label changed or at `maxIters`. Compile the
       * UNDIRECTED deduped shape first (GraphShaping), or use
       * algos.LabelPropagation.run, which does both. */
-    def lpa(maxIters: Int, lineageTruncateEvery: Int = 20,
+    def lpa(maxIters: Int,
             ckpt: Option[graft.ckpt.CheckpointManager] = None,
             incremental: Boolean = true): KernelResult = {
       val P = parts
@@ -907,7 +896,7 @@ object SpmvKernel {
           Iterator.single(PartState(nv, bits, changed, counts))
         }.persist(StorageLevel.MEMORY_AND_DISK)
 
-        if (lineageTruncateEvery > 0 && (iter + 1) % lineageTruncateEvery == 0)
+        if ((iter + 1) % LineageTruncateEvery == 0)
           newState.localCheckpoint()
         sc.setJobGroup(s"graft-superstep-$iter", s"lpa superstep $iter",
           interruptOnCancel = false)

@@ -24,9 +24,9 @@ import graft.graph.TilePacks._
   *    and each tile ships its accumulator SPARSE ([idx…][val…]) when
   *    that is smaller than the dense double array;
   *  - plus [[CompiledGraph.lpa]]: frequency LPA's mode combiner is a
-  *    multiset, not a scalar monoid, so it runs as its own stage pair
-  *    over the same tiles (label-count triple exchange) — the whole
-  *    reference app family runs compiled.
+  *    multiset, not a scalar monoid, so it brings its own pass pair
+  *    (label-count triple exchange) to the same loop and tiles — the
+  *    whole reference app family runs compiled.
   *
   * A Catalyst superstep would re-analyze, re-plan and re-launch an
   * identical job every iteration, and its generic hash aggregate pays
@@ -42,7 +42,9 @@ import graft.graph.TilePacks._
   *    partition q: source rows as state-slot indices, destinations as
   *    TILE-LOCAL dense indices (0..nDsts-1), weights optional. All
   *    indices int, all static, built once, cached.
-  *  - each superstep is ONE two-stage RDD job:
+  *  - each superstep is ONE two-stage RDD job, run by one driver
+  *    loop for every algorithm; `run` and `lpa` differ only in the
+  *    pass pair they hand it:
   *      stage 1 (scatter_gather+combine, vp:688-861): per tile, a
   *        tight primitive-array loop over the (active) source rows
   *        accumulates program.edgeCombine values into a DENSE per-tile
@@ -58,7 +60,7 @@ import graft.graph.TilePacks._
   *        source-partition order — deterministic float sums with a
   *        real spill path (the shuffle reader's ExternalSorter),
   *        instead of buffering every tile on-heap — folds them into
-  *        its V/P-sized y vector, and runs program.apply in place.
+  *        its V/P-sized y vector, and applies the program.
   *    No Catalyst, no per-iteration planning; driver overhead per
   *    superstep is one job submission (~10 ms class).
   *  - the per-superstep changed/frontier count is returned THROUGH the
@@ -92,27 +94,27 @@ object SpmvKernel {
   /** Supersteps between truncations of the state RDD's lineage. */
   private final val LineageTruncateEvery = 20
 
-  /** Identity partitioner for pre-bucketed (Int-keyed) tile traffic. */
-  private final class IdPartitioner(val numPartitions: Int) extends Partitioner {
-    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  /** Routes pre-bucketed traffic to the partition its key names: an
+    * Int key (the compile exchanges) or the q of a ((q, p), bytes) tile
+    * message, whose p half drives the reduce-side sort that makes the
+    * fold order deterministic. */
+  private final class KeyPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key match {
+      case (q: Int, _) => q
+      case q: Int => q
+    }
     override def equals(o: Any): Boolean = o match {
-      case p: IdPartitioner => p.numPartitions == numPartitions
+      case p: KeyPartitioner => p.numPartitions == numPartitions
       case _ => false
     }
     override def hashCode: Int = numPartitions
   }
 
-  /** Routes ((q, p), bytes) tile messages to partition q; the p half
-    * of the key drives the reduce-side sort that makes the fold order
-    * deterministic. */
-  private final class TileKeyPartitioner(val numPartitions: Int) extends Partitioner {
-    def getPartition(key: Any): Int = key.asInstanceOf[(Int, Int)]._1
-    override def equals(o: Any): Boolean = o match {
-      case p: TileKeyPartitioner => p.numPartitions == numPartitions
-      case _ => false
-    }
-    override def hashCode: Int = numPartitions
-  }
+  /** Per-superstep hub-state snapshot for mirror slots: vid →
+    * (state values, active bit). Bounded by the number of salted
+    * hubs (≤ 4·parts in auto mode) — a few KB of driver traffic
+    * riding the job that already returns the convergence count. */
+  private type HubStates = scala.collection.Map[Long, (Array[Double], Boolean)]
 
   /** One packed edge chunk of the compile exchange: parallel primitive
     * arrays instead of per-edge (Long,(Long,Double)) tuples — the
@@ -206,6 +208,17 @@ object SpmvKernel {
   private[graph] def bitGet(bits: Array[Long], i: Int): Boolean =
     (bits(i >>> 6) & (1L << (i & 63))) != 0
 
+  /** A partition's stage-1 view of the previous superstep: state
+    * values, active bits and vids over its owned ++ mirror slots. */
+  private[graph] final case class GatherInputs(
+      values: Array[Double], active: Array[Long], vids: Array[Long])
+
+  /** What a superstep's two passes read besides their partition: the
+    * 0-based superstep number, the active count the previous superstep
+    * left, and whether the state came from init or a checkpoint rather
+    * than from a superstep of this call. */
+  private[graph] final case class Step(iter: Int, active: Long, fresh: Boolean)
+
   /** Combined (owned ++ mirror) views of a partition's superstep
     * inputs for the stage-1 tile loop. Identity (no copies) when the
     * partition has no mirrors; otherwise the mirror tail is filled
@@ -213,10 +226,9 @@ object SpmvKernel {
     * the same order as the value scan stage 1 does anyway. Static so
     * the task closure never captures the CompiledGraph. */
   private def combinedInputs(kp: KernelPartition, ps: PartState, width: Int,
-                             hub: scala.collection.Map[Long, (Array[Double], Boolean)])
-      : (Array[Double], Array[Long], Array[Long]) = {
+                             hub: HubStates): GatherInputs = {
     val nMir = kp.mirrorVids.length
-    if (nMir == 0) (ps.values, ps.active, kp.vids)
+    if (nMir == 0) GatherInputs(ps.values, ps.active, kp.vids)
     else {
       val nOwned = kp.vids.length
       val cv = java.util.Arrays.copyOf(ps.values, (nOwned + nMir) * width)
@@ -234,7 +246,7 @@ object SpmvKernel {
         cvids(nOwned + m) = v
         m += 1
       }
-      (cv, ca, cvids)
+      GatherInputs(cv, ca, cvids)
     }
   }
 
@@ -317,14 +329,8 @@ object SpmvKernel {
       val mirrorCount: Long = 0L) {
 
     private val sc = spark.sparkContext
-    private val tilePart = new TileKeyPartitioner(parts)
+    private val tilePart = new KeyPartitioner(parts)
     private def hasMirrors: Boolean = mirrorCount > 0
-
-    /** Per-superstep hub-state snapshot for mirror slots: vid →
-      * (state values, active bit). Bounded by the number of salted
-      * hubs (≤ 4·parts in auto mode) — a few KB of driver traffic
-      * riding the job that already returns the convergence count. */
-    private type HubStates = scala.collection.Map[Long, (Array[Double], Boolean)]
 
     /** Materialize a state RDD and return (Σ changed, hub snapshot).
       * The count rides the successful task attempts (exactly-once
@@ -414,9 +420,9 @@ object SpmvKernel {
     /** Re-slot a saved state frame into the kernel's partition layout —
       * the resume half of the checkpoint contract. Nulls become NaN;
       * a missing `changed` column means all-active (only legacy
-      * pagerank snapshots, a stationary program, lack it). Takes the
-      * raw state shape (width, column names) so non-scalar programs
-      * (the LPA mode) share the same resume path. */
+      * pagerank snapshots, a stationary program, lack it). Slot
+      * columns beyond the exported `stateCols` (LPA's prev-label
+      * scratch) resume as NaN. */
     private def stateFromDF(width: Int, stateCols: Seq[String], df: DataFrame): RDD[PartState] = {
       val hp = new HashPartitioner(parts)
       // explicit casts: the manifest algo check rejects cross-ALGORITHM
@@ -428,15 +434,16 @@ object SpmvKernel {
         stateCols.map(c => s"CAST($c AS DOUBLE) AS $c")
       val hasChanged = df.columns.contains("changed")
       val sel = if (hasChanged) cols :+ "CAST(changed AS BOOLEAN) AS changed" else cols
+      val take = stateCols.length
       val keyed = df.selectExpr(sel: _*).queryExecution.toRdd
         .map { ir =>
-          val vs = new Array[Double](width)
+          val vs = Array.fill(width)(Double.NaN)
           var c = 0
-          while (c < width) {
-            vs(c) = if (ir.isNullAt(1 + c)) Double.NaN else ir.getDouble(1 + c)
+          while (c < take) {
+            if (!ir.isNullAt(1 + c)) vs(c) = ir.getDouble(1 + c)
             c += 1
           }
-          val act = !hasChanged || ir.getBoolean(1 + width)
+          val act = !hasChanged || ir.getBoolean(1 + take)
           (ir.getLong(0), (vs, act))
         }
         .partitionBy(hp)
@@ -496,32 +503,33 @@ object SpmvKernel {
                  ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
       run(new PrKernelProgram(alpha, tol), maxIters, ckpt)
 
-    /** The generalized superstep loop. `maxIters > 0` = fixed budget
-      * (the per-vertex convergence check is disabled for stationary
-      * programs, vp:412-413; an empty frontier still ends a
-      * nonstationary run — further supersteps are provably no-ops);
-      * 0 = run until no vertex changed. `ckpt` resumes from the latest
-      * complete snapshot and saves every `ckpt.every` supersteps plus a
-      * final snapshot. */
-    def run(program: KernelProgram, maxIters: Int,
-            ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
+    /** The one superstep loop behind [[run]] and [[lpa]] — the
+      * two-stage job of the header. It owns resume (with the exact-id
+      * check), the initial frontier count, the hub broadcast, lineage
+      * truncation, the `graft-superstep-N` job group, [[IterMetrics]],
+      * checkpoint saves tagged `<name>-kernel`, the checksum and the
+      * export. The caller supplies `init` (one vertex's fresh state at
+      * `values[base..base+width)`, returning its active bit),
+      * `more(iter, active)` (its stop rule; an empty graph runs none),
+      * `gather` (stage 1: one tile → a packed message, or null) and
+      * `absorb` (stage 2: a partition's tiles, sorted by source
+      * partition, + old state → new state). `stationary` reports V
+      * rather than the active count as `gatherRows`. */
+    private def superstepLoop(name: String, width: Int, columns: Seq[String],
+                              exactVids: Boolean, stationary: Boolean,
+                              ckpt: Option[graft.ckpt.CheckpointManager])(
+        init: (Long, Array[Double], Int) => Boolean,
+        more: (Int, Long) => Boolean,
+        gather: (Step, KernelPartition, GatherInputs, Tile) => Array[Byte],
+        absorb: (Step, Iterator[((Int, Int), Array[Byte])], KernelPartition, PartState) => PartState)
+        : KernelResult = {
       val P = parts
-      val width = program.width
-      val sum = program.combineOp eq KernelProgram.Sum
-      val identity = program.combineOp.identity
-      val eop = program.edgeOp match {
-        case KernelProgram.MsgOnly => 0
-        case KernelProgram.MulW => 1
-        case KernelProgram.AddW => 2
-      }
-      val stationary = program.stationary
+      val tag = s"$name-kernel"
       val metrics = ArrayBuffer.empty[IterMetrics]
-
-      val resumed = ckpt.flatMap(c => c.latestIter().map(i =>
-        (i, c.load(spark, i, s"${program.name}-kernel"))))
-      if (resumed.isDefined && program.requiresExactVids) requireExactVids(program.name)
+      val resumed = ckpt.flatMap(c => c.latestIter().map(i => (i, c.load(spark, i, tag))))
+      if (resumed.isDefined && exactVids) requireExactVids(name)
       var state: RDD[PartState] = resumed
-        .map { case (_, df) => stateFromDF(width, program.columns, df) }
+        .map { case (_, df) => stateFromDF(width, columns, df) }
         .getOrElse(kernel.map { kp =>
           val n = kp.vids.length
           val values = new Array[Double](n * width)
@@ -529,7 +537,7 @@ object SpmvKernel {
           var changed = 0L
           var i = 0
           while (i < n) {
-            if (program.init(kp.vids(i), values, i * width)) {
+            if (init(kp.vids(i), values, i * width)) {
               bits(i >>> 6) |= 1L << (i & 63); changed += 1
             }
             i += 1
@@ -541,108 +549,187 @@ object SpmvKernel {
       // (plus the hub snapshot for mirror slots on a salted compile)
       val init0 = countAndHarvest(state, width)
       var active = init0._1
-      var hubBc: org.apache.spark.broadcast.Broadcast[
-        scala.collection.Map[Long, (Array[Double], Boolean)]] =
+      var hubBc: org.apache.spark.broadcast.Broadcast[HubStates] =
         if (init0._2 != null) sc.broadcast(init0._2) else null
       var prev: RDD[PartState] = null
-      var iter = resumed.map(_._1).getOrElse(0)
+      val start = resumed.map(_._1).getOrElse(0)
+      var iter = start
 
-      def keepGoing: Boolean =
-        if (numVertices == 0) false
-        else if (maxIters > 0) iter < maxIters && (stationary || active > 0)
-        else active > 0
-
-      while (keepGoing) {
+      while (numVertices > 0 && more(iter, active)) {
         val t0 = System.nanoTime()
-        val frontier = if (stationary) numVertices else active
-
-        // ---- stage 1: per-tile gather — dense accumulate or sparse
-        // assemble, then pack. Packed byte arrays take the serializer's
-        // bulk path (a block copy), where a boxed record pays
-        // elementwise object-stream writes — measured 10-20× the
-        // kernel's actual compute time at local[32].
+        val step = Step(iter, active, fresh = iter == start)
         val hubBcLocal = hubBc
+        // stage 1: packed byte arrays take the serializer's bulk path
+        // (a block copy), where a boxed record pays elementwise
+        // object-stream writes — measured 10-20× the kernel's actual
+        // compute time at local[32]
         val msgs: RDD[((Int, Int), Array[Byte])] =
           kernel.zipPartitions(state, preservesPartitioning = false) { (kIt, sIt) =>
             val kp = kIt.next(); val ps = sIt.next()
             val p = TaskContext.getPartitionId()
-            val (values, act, vids) = combinedInputs(kp, ps, width,
+            val in = combinedInputs(kp, ps, width,
               if (hubBcLocal == null) null else hubBcLocal.value)
-            val invDeg = kp.invDeg
             Iterator.range(0, P).flatMap { q =>
               val t = kp.tiles(q)
-              if (t == null) Iterator.empty
-              else {
-                val srcSlots = t.srcSlots; val offsets = t.offsets
-                val dstLocal = t.dstLocal; val w = t.weights
-                val out: Array[Byte] =
-                  if (stationary) {
-                    // dense loop over every source row (SpMV)
-                    val acc = new Array[Double](t.nDsts)
-                    if (!sum) java.util.Arrays.fill(acc, identity)
-                    var i = 0
-                    while (i < srcSlots.length) {
-                      val slot = srcSlots(i)
-                      val msg = program.message(vids(slot), values, slot * width, invDeg(slot))
-                      accumRow(acc, dstLocal, w, offsets(i), offsets(i + 1), msg, sum, eop)
-                      i += 1
-                    }
-                    packDense(acc)
-                  } else {
-                    // frontier pass: find the tile's active rows first
-                    // (a bit-test scan of srcSlots — ~1 ns/row; rows
-                    // with no active source skip ALL per-edge work)
-                    val rowsB = new scala.collection.mutable.ArrayBuilder.ofInt
-                    var aEdges = 0L
-                    var i = 0
-                    while (i < srcSlots.length) {
-                      if (bitGet(act, srcSlots(i))) {
-                        rowsB += i; aEdges += offsets(i + 1) - offsets(i)
-                      }
-                      i += 1
-                    }
-                    val rows = rowsB.result()
-                    if (rows.isEmpty) null
-                    else if (aEdges >= t.nDsts.toLong / 4) {
-                      // dense-enough frontier: same dense accumulate,
-                      // then pack sparse iff that ships fewer bytes
-                      val acc = new Array[Double](t.nDsts)
-                      if (!sum) java.util.Arrays.fill(acc, identity)
-                      var r = 0
-                      while (r < rows.length) {
-                        val i2 = rows(r); val slot = srcSlots(i2)
-                        val msg = program.message(vids(slot), values, slot * width, invDeg(slot))
-                        accumRow(acc, dstLocal, w, offsets(i2), offsets(i2 + 1), msg, sum, eop)
-                        r += 1
-                      }
-                      packBest(acc, identity)
-                    } else {
-                      // true SpMSpV: assemble (dst, value) pairs from
-                      // the frontier edges only — no nDsts-sized
-                      // touch at all (tcsc_spmspv2.hpp's sparse y)
-                      packSparseAssembled(rows, srcSlots, offsets, dstLocal, w,
-                        vids, values, invDeg, width, aEdges.toInt, sum, eop, program)
-                    }
-                  }
-                if (out == null) Iterator.empty else Iterator.single(((q, p), out))
-              }
+              val out = if (t == null) null else gather(step, kp, in, t)
+              if (out == null) Iterator.empty else Iterator.single(((q, p), out))
             }
           }
+        // exchange + stage 2: the (q, p) key routes by q and sorts by p
+        // (spill-capable), so tiles stream in source-partition order
+        val newState = msgs.repartitionAndSortWithinPartitions(tilePart)
+          .zipPartitions(kernel, state, preservesPartitioning = false) { (mIt, kIt, sIt) =>
+            Iterator.single(absorb(step, mIt, kIt.next(), sIt.next()))
+          }.persist(StorageLevel.MEMORY_AND_DISK)
 
-        // ---- exchange + stage 2: the (q, p) key routes by q and sorts
-        // by p on the reduce side (spill-capable), so the fold below
-        // streams tiles in deterministic source-partition order with
-        // O(tile) — not O(V) — transient memory.
-        val shuffled = msgs.repartitionAndSortWithinPartitions(tilePart)
-        val newState = shuffled.zipPartitions(kernel, state,
-          preservesPartitioning = false) { (mIt, kIt, sIt) =>
-          val kp = kIt.next(); val old = sIt.next()
+        // RDD lineage grows one zip+shuffle layer per iteration —
+        // truncate periodically so task closures stay O(1)
+        if ((iter + 1) % LineageTruncateEvery == 0)
+          newState.localCheckpoint()
+        // the ONE action per superstep: materializes newState AND
+        // returns each partition's changed count from the successful
+        // task attempt — exactly-once under retries (a recomputed
+        // partition returns its own deterministic count; nothing
+        // accumulates across attempts).
+        sc.setJobGroup(s"graft-superstep-$iter", s"$name superstep $iter",
+          interruptOnCancel = false)
+        val (nActive, hubNew) =
+          try countAndHarvest(newState, width)
+          finally sc.clearJobGroup() // ckpt/export jobs are NOT the superstep
+        active = nActive
+        if (hubNew != null) {
+          // the old snapshot served this superstep's stage 1, which the
+          // job above has fully materialized — safe to release now
+          val old = hubBc
+          hubBc = sc.broadcast(hubNew)
+          if (old != null) old.unpersist(false)
+        }
+        if (prev != null) prev.unpersist(false)
+        prev = state
+        state = newState
+        iter += 1
+        metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000,
+          if (stationary) numVertices else step.active)
+        ckpt.foreach { c =>
+          if (c.shouldCheckpoint(iter))
+            c.save(tag, iter, stateDF(width, columns, state), metrics.toSeq)
+        }
+      }
+      ckpt.foreach(c => c.save(tag, iter, stateDF(width, columns, state), metrics.toSeq))
+
+      // deterministic checksum: per-partition sums folded in partition
+      // order (first state column, NaN skipped)
+      val partSums = sc.runJob(state, (it: Iterator[PartState]) => {
+        val ps = it.next()
+        var s = 0.0
+        var i = 0
+        while (i * width < ps.values.length) {
+          val v = ps.values(i * width)
+          if (!v.isNaN) s += v
+          i += 1
+        }
+        s
+      })
+      val checksum = partSums.foldLeft(0.0)(_ + _)
+      // SELF-CONTAINED result: materialize the export as an eager
+      // localCheckpoint, then drop the loop's internal state blocks —
+      // the returned frame never depends on kernel/state lineage, so
+      // the caller may unpersist() the CompiledGraph in any order.
+      // Release the result itself with Engine.release(result.state).
+      val df = stateDF(width, columns, state).localCheckpoint(true)
+      state.unpersist(false)
+      if (prev != null) prev.unpersist(false)
+      if (hubBc != null) hubBc.unpersist(false)
+      KernelResult(df, iter, metrics.toSeq, checksum)
+    }
+
+    /** Any [[KernelProgram]] on the shared loop: SpMV gather and
+      * Sum/Min fold + apply. `maxIters > 0` = fixed budget (the
+      * per-vertex convergence check is disabled for stationary
+      * programs, vp:412-413; an empty frontier still ends a
+      * nonstationary run — further supersteps are provably no-ops);
+      * 0 = run until no vertex changed. `ckpt` resumes from the latest
+      * complete snapshot and saves every `ckpt.every` supersteps plus a
+      * final snapshot. */
+    def run(program: KernelProgram, maxIters: Int,
+            ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
+      val width = program.width
+      val stationary = program.stationary
+      val sum = program.combineOp eq KernelProgram.Sum
+      val identity = program.combineOp.identity
+      val eop = program.edgeOp match {
+        case KernelProgram.MsgOnly => 0
+        case KernelProgram.MulW => 1
+        case KernelProgram.AddW => 2
+      }
+      superstepLoop(program.name, width, program.columns, program.requiresExactVids,
+        stationary, ckpt)(
+        init = program.init,
+        more = (iter, active) =>
+          if (maxIters > 0) iter < maxIters && (stationary || active > 0)
+          else active > 0,
+        // per tile: dense accumulate or sparse assemble, then pack
+        gather = (_, kp, in, t) => {
+          val values = in.values; val vids = in.vids; val invDeg = kp.invDeg
+          val srcSlots = t.srcSlots; val offsets = t.offsets
+          val dstLocal = t.dstLocal; val w = t.weights
+          if (stationary) {
+            // dense loop over every source row (SpMV)
+            val acc = new Array[Double](t.nDsts)
+            if (!sum) java.util.Arrays.fill(acc, identity)
+            var i = 0
+            while (i < srcSlots.length) {
+              val slot = srcSlots(i)
+              val msg = program.message(vids(slot), values, slot * width, invDeg(slot))
+              accumRow(acc, dstLocal, w, offsets(i), offsets(i + 1), msg, sum, eop)
+              i += 1
+            }
+            packDense(acc)
+          } else {
+            // frontier pass: find the tile's active rows first
+            // (a bit-test scan of srcSlots — ~1 ns/row; rows
+            // with no active source skip ALL per-edge work)
+            val rowsB = new scala.collection.mutable.ArrayBuilder.ofInt
+            var aEdges = 0L
+            var i = 0
+            while (i < srcSlots.length) {
+              if (bitGet(in.active, srcSlots(i))) {
+                rowsB += i; aEdges += offsets(i + 1) - offsets(i)
+              }
+              i += 1
+            }
+            val rows = rowsB.result()
+            if (rows.isEmpty) null
+            else if (aEdges >= t.nDsts.toLong / 4) {
+              // dense-enough frontier: same dense accumulate,
+              // then pack sparse iff that ships fewer bytes
+              val acc = new Array[Double](t.nDsts)
+              if (!sum) java.util.Arrays.fill(acc, identity)
+              var r = 0
+              while (r < rows.length) {
+                val i2 = rows(r); val slot = srcSlots(i2)
+                val msg = program.message(vids(slot), values, slot * width, invDeg(slot))
+                accumRow(acc, dstLocal, w, offsets(i2), offsets(i2 + 1), msg, sum, eop)
+                r += 1
+              }
+              packBest(acc, identity)
+            } else {
+              // true SpMSpV: assemble (dst, value) pairs from
+              // the frontier edges only — no nDsts-sized
+              // touch at all (tcsc_spmspv2.hpp's sparse y)
+              packSparseAssembled(rows, srcSlots, offsets, dstLocal, w,
+                vids, values, invDeg, width, aEdges.toInt, sum, eop, program)
+            }
+          }
+        },
+        // fold the tiles into the V/P-sized y vector, then apply
+        absorb = (step, tiles, kp, old) => {
           val n = kp.vids.length
           val y = new Array[Double](n)
           if (!sum) java.util.Arrays.fill(y, identity)
           var scratchD = new Array[Double](0)
           var scratchI = new Array[Int](0)
-          mIt.foreach { case ((_, p), bytes) =>
+          tiles.foreach { case ((_, p), bytes) =>
             val slots = kp.inSlots(p)
             val bb = java.nio.ByteBuffer.wrap(bytes)
             val fmt = bb.getInt(0); val cnt = bb.getInt(4)
@@ -679,84 +766,25 @@ object SpmvKernel {
           var changed = 0L
           var i = 0
           while (i < n) {
-            if (program.apply(nv, i * width, y(i), iter)) {
+            if (program.apply(nv, i * width, y(i), step.iter)) {
               bits(i >>> 6) |= 1L << (i & 63); changed += 1
             }
             i += 1
           }
-          Iterator.single(PartState(nv, bits, changed))
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-
-        // RDD lineage grows one zip+shuffle layer per iteration —
-        // truncate periodically so task closures stay O(1)
-        if ((iter + 1) % LineageTruncateEvery == 0)
-          newState.localCheckpoint()
-        // the ONE action per superstep: materializes newState AND
-        // returns each partition's changed count from the successful
-        // task attempt — exactly-once under retries (a recomputed
-        // partition returns its own deterministic count; nothing
-        // accumulates across attempts).
-        sc.setJobGroup(s"graft-superstep-$iter", s"${program.name} superstep $iter",
-          interruptOnCancel = false)
-        val (nActive, hubNew) =
-          try countAndHarvest(newState, width)
-          finally sc.clearJobGroup() // ckpt/export jobs are NOT the superstep
-        active = nActive
-        if (hubNew != null) {
-          // the old snapshot served this superstep's stage 1, which the
-          // job above has fully materialized — safe to release now
-          val old = hubBc
-          hubBc = sc.broadcast(hubNew)
-          if (old != null) old.unpersist(false)
-        }
-        if (prev != null) prev.unpersist(false)
-        prev = state
-        state = newState
-        iter += 1
-        metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000, frontier)
-        ckpt.foreach { c =>
-          if (c.shouldCheckpoint(iter))
-            c.save(s"${program.name}-kernel", iter, stateDF(width, program.columns, state), metrics.toSeq)
-        }
-      }
-      ckpt.foreach(c => c.save(s"${program.name}-kernel", iter, stateDF(width, program.columns, state), metrics.toSeq))
-
-      // deterministic checksum: per-partition sums folded in partition
-      // order (first state column, NaN skipped)
-      val partSums = sc.runJob(state, (it: Iterator[PartState]) => {
-        val ps = it.next()
-        var s = 0.0
-        var i = 0
-        while (i * width < ps.values.length) {
-          val v = ps.values(i * width)
-          if (!v.isNaN) s += v
-          i += 1
-        }
-        s
-      })
-      val checksum = partSums.foldLeft(0.0)(_ + _)
-      // SELF-CONTAINED result: materialize the export as an eager
-      // localCheckpoint, then drop the loop's internal state blocks —
-      // the returned frame never depends on kernel/state lineage, so
-      // the caller may unpersist() the CompiledGraph in any order.
-      // Release the result itself with Engine.release(result.state).
-      val df = stateDF(width, program.columns, state).localCheckpoint(true)
-      state.unpersist(false)
-      if (prev != null) prev.unpersist(false)
-      if (hubBc != null) hubBc.unpersist(false)
-      KernelResult(df, iter, metrics.toSeq, checksum)
+          PartState(nv, bits, changed)
+        })
     }
 
     /** Frequency-based label propagation on the compiled tiles — the
       * north_rule's fourth algorithm on the kernel fast path. LPA's
       * mode combiner is a MULTISET aggregate, not a scalar, so it does
-      * not fit the KernelProgram Sum/Min contract; it gets its own
-      * stage pair over the same tiles:
+      * not fit the KernelProgram Sum/Min contract; it brings its own
+      * pass pair to the shared loop:
       *
-      *  - stage 1 pre-aggregates each tile into (dstLocal, label,
+      *  - gather pre-aggregates each tile into (dstLocal, label,
       *    ±count) triples ([[LabelCounts.packLabelDeltas]]) — the
       *    analog of Catalyst's map-side partial count;
-      *  - stage 2 buckets the incoming triples by slot and merges them
+      *  - absorb buckets the incoming triples by slot and merges them
       *    into a PERSISTENT per-(slot, label) count store
       *    ([[SlotCounts]]), then re-arg-maxes every slot it fed.
       *
@@ -784,92 +812,34 @@ object SpmvKernel {
       * of tile arrival order. The mode must see ALL in-neighbor labels
       * (which is why the COUNTS are maintained rather than any message
       * skipped), a vertex with no in-messages keeps its label, and the
-      * loop stops when no label changed or at `maxIters`. Compile the
+      * loop stops when no label changed or after `maxIters` supersteps
+      * (0 runs none: synchronous LPA need not settle). Compile the
       * UNDIRECTED deduped shape first (GraphShaping), or use
       * algos.LabelPropagation.run, which does both. */
     def lpa(maxIters: Int,
             ckpt: Option[graft.ckpt.CheckpointManager] = None,
             incremental: Boolean = true): KernelResult = {
-      val P = parts
-      val cols = Seq("label")
+      val nV = numVertices
+      val incr = (s: Step) => incremental && !s.fresh && s.active * 2 <= nV
       // Internal state is TWO doubles per slot: [label, prevLabel].
       // prevLabel (NaN = none) is what the incremental delta pass must
       // remove from the destination counts when a source changed; it is
-      // never exported (stateDF takes cols.length = 1 leading columns).
-      val width = 2
-      val metrics = ArrayBuffer.empty[IterMetrics]
-      val resumed = ckpt.flatMap(c => c.latestIter().map(i =>
-        (i, c.load(spark, i, "lpa-kernel"))))
-      if (resumed.isDefined) requireExactVids("lpa")
-      var state: RDD[PartState] = resumed
-        .map { case (_, df) =>
-          // snapshots carry (vid, label, changed) only; widen to
-          // [label, NaN] — the full-mode superstep below rebuilds the
-          // destination counts, so prev is not needed across a resume
-          stateFromDF(1, cols, df).map { ps =>
-            val n = ps.values.length
-            val wide = new Array[Double](n * 2)
-            var i = 0
-            while (i < n) {
-              wide(i * 2) = ps.values(i)
-              wide(i * 2 + 1) = Double.NaN
-              i += 1
-            }
-            PartState(wide, ps.active, ps.changed)
-          }
-        }
-        .getOrElse(kernel.map { kp =>
+      // never exported or checkpointed, and resumes as NaN (the first
+      // superstep after a resume runs full)
+      superstepLoop("lpa", 2, Seq("label"), exactVids = true, stationary = true, ckpt)(
+        init = (vid, values, base) => {
+          KernelProgram.checkExactVid(vid, "lpa")
+          values(base) = vid.toDouble
+          values(base + 1) = Double.NaN
+          true
+        },
+        more = (iter, active) => active > 0 && iter < maxIters,
+        gather = (step, _, in, t) => LabelCounts.packLabelDeltas(t, in.values,
+          if (incr(step)) in.active else null, new LongTable(64)),
+        absorb = (step, tiles, kp, old) => {
           val n = kp.vids.length
-          val values = new Array[Double](n * 2)
-          val bits = new Array[Long]((n + 63) >>> 6)
-          var i = 0
-          while (i < n) {
-            KernelProgram.checkExactVid(kp.vids(i), "lpa")
-            values(i * 2) = kp.vids(i).toDouble
-            values(i * 2 + 1) = Double.NaN
-            bits(i >>> 6) |= 1L << (i & 63)
-            i += 1
-          }
-          PartState(values, bits, n.toLong)
-        })
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val init0 = countAndHarvest(state, width)
-      var active = init0._1
-      var hubBc: org.apache.spark.broadcast.Broadcast[
-        scala.collection.Map[Long, (Array[Double], Boolean)]] =
-        if (init0._2 != null) sc.broadcast(init0._2) else null
-      var prev: RDD[PartState] = null
-      var iter = resumed.map(_._1).getOrElse(0)
-      var haveCounts = false
-
-      while (active > 0 && iter < maxIters) {
-        val t0 = System.nanoTime()
-        val hubBcLocal = hubBc
-        val incr = haveCounts && incremental && active * 2 <= numVertices
-        val msgs: RDD[((Int, Int), Array[Byte])] =
-          kernel.zipPartitions(state, preservesPartitioning = false) { (kIt, sIt) =>
-            val kp = kIt.next(); val ps = sIt.next()
-            val p = TaskContext.getPartitionId()
-            val (values, act, _) = combinedInputs(kp, ps, 2,
-              if (hubBcLocal == null) null else hubBcLocal.value)
-            val rows = if (incr) act else null
-            val table = new LongTable(64)
-            Iterator.range(0, P).flatMap { q =>
-              val t = kp.tiles(q)
-              if (t == null) Iterator.empty
-              else {
-                val out = LabelCounts.packLabelDeltas(t, values, rows, table)
-                if (out == null) Iterator.empty else Iterator.single(((q, p), out))
-              }
-            }
-          }
-        val shuffled = msgs.repartitionAndSortWithinPartitions(tilePart)
-        val newState = shuffled.zipPartitions(kernel, state,
-          preservesPartitioning = false) { (mIt, kIt, sIt) =>
-          val kp = kIt.next(); val old = sIt.next()
-          val n = kp.vids.length
-          val fed = LabelCounts.bucketBySlot(n, mIt, kp.inSlots)
-          val base = if (incr) old.counts else SlotCounts.empty(n)
+          val fed = LabelCounts.bucketBySlot(n, tiles, kp.inSlots)
+          val base = if (incr(step)) old.counts else SlotCounts.empty(n)
           val counts = base.merged(fed, new LongTable(64))
           // arg-max every fed slot with the deterministic tie-break (max
           // count, min label). An unfed slot's mode is unchanged by
@@ -893,52 +863,8 @@ object SpmvKernel {
             }
             slot += 1
           }
-          Iterator.single(PartState(nv, bits, changed, counts))
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-
-        if ((iter + 1) % LineageTruncateEvery == 0)
-          newState.localCheckpoint()
-        sc.setJobGroup(s"graft-superstep-$iter", s"lpa superstep $iter",
-          interruptOnCancel = false)
-        val (nActive, hubNew) =
-          try countAndHarvest(newState, width)
-          finally sc.clearJobGroup()
-        active = nActive
-        haveCounts = true
-        if (hubNew != null) {
-          val old = hubBc
-          hubBc = sc.broadcast(hubNew)
-          if (old != null) old.unpersist(false)
-        }
-        if (prev != null) prev.unpersist(false)
-        prev = state
-        state = newState
-        iter += 1
-        metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000, numVertices)
-        ckpt.foreach { c =>
-          if (c.shouldCheckpoint(iter))
-            c.save("lpa-kernel", iter, stateDF(width, cols, state), metrics.toSeq)
-        }
-      }
-      ckpt.foreach(c => c.save("lpa-kernel", iter, stateDF(width, cols, state), metrics.toSeq))
-
-      val partSums = sc.runJob(state, (it: Iterator[PartState]) => {
-        val ps = it.next()
-        var s = 0.0
-        var i = 0
-        while (i * width < ps.values.length) {
-          val v = ps.values(i * width)
-          if (!v.isNaN) s += v
-          i += 1
-        }
-        s
-      })
-      val checksum = partSums.foldLeft(0.0)(_ + _)
-      val df = stateDF(width, cols, state).localCheckpoint(true)
-      state.unpersist(false)
-      if (prev != null) prev.unpersist(false)
-      if (hubBc != null) hubBc.unpersist(false)
-      KernelResult(df, iter, metrics.toSeq, checksum)
+          PartState(nv, bits, changed, counts)
+        })
     }
 
     def unpersist(): Unit = kernel.unpersist(false)
@@ -967,7 +893,7 @@ object SpmvKernel {
     val spark = edges.sparkSession
     val weighted = edges.columns.contains("w")
     val hp = new HashPartitioner(parts)
-    val idPart = new IdPartitioner(parts)
+    val idPart = new KeyPartitioner(parts)
     val P = parts
     val wtd = weighted
 

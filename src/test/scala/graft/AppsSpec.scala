@@ -40,7 +40,7 @@ class AppsSpec extends SparkTestBase {
     assert(sp.reachable.contains(4L) && sp.checksum == 0 + 1 + 3 + 4)
   }
 
-  test("kernel=true routes every app through the compiled path with unchanged checksums") {
+  test("pr/deg against the oracle on the sample binary, cache=<dir> reruns, and bfs/cc/sssp/lpa checksums on a text graph") {
     assume(Files.exists(java.nio.file.Paths.get(sampleBin)))
     // PageRank against the in-memory oracle on the same records: same
     // checksum and top-5 vertices; values agree to 1e-9 (the two sum

@@ -330,7 +330,6 @@ object SpmvKernel {
 
     private val sc = spark.sparkContext
     private val tilePart = new KeyPartitioner(parts)
-    private def hasMirrors: Boolean = mirrorCount > 0
 
     /** Materialize a state RDD and return (Σ changed, hub snapshot).
       * The count rides the successful task attempts (exactly-once
@@ -339,7 +338,7 @@ object SpmvKernel {
       * and is null otherwise — the unsalted path is byte-identical
       * to the pre-salting loop. */
     private def countAndHarvest(state: RDD[PartState], width: Int): (Long, HubStates) =
-      if (!hasMirrors)
+      if (mirrorCount == 0)
         (sc.runJob(state, (it: Iterator[PartState]) => it.next().changed).sum, null)
       else {
         val res = kernel.zipPartitions(state, preservesPartitioning = false) { (kIt, sIt) =>
@@ -357,7 +356,6 @@ object SpmvKernel {
         }.collect()
         (res.iterator.map(_._1).sum, res.iterator.flatMap(_._2).toMap)
       }
-
 
     /** Exact per-superstep DENSE exchange volume in DOUBLES: Σ over
       * tiles of |distinct destinations| — the stationary upper bound
@@ -547,10 +545,9 @@ object SpmvKernel {
         .persist(StorageLevel.MEMORY_AND_DISK)
       // materialize + read the initial frontier in one exactly-once job
       // (plus the hub snapshot for mirror slots on a salted compile)
-      val init0 = countAndHarvest(state, width)
-      var active = init0._1
-      var hubBc: org.apache.spark.broadcast.Broadcast[HubStates] =
-        if (init0._2 != null) sc.broadcast(init0._2) else null
+      val (active0, hub0) = countAndHarvest(state, width)
+      var active = active0
+      var hubBc = if (hub0 != null) sc.broadcast(hub0) else null
       var prev: RDD[PartState] = null
       val start = resumed.map(_._1).getOrElse(0)
       var iter = start
@@ -619,18 +616,11 @@ object SpmvKernel {
 
       // deterministic checksum: per-partition sums folded in partition
       // order (first state column, NaN skipped)
-      val partSums = sc.runJob(state, (it: Iterator[PartState]) => {
-        val ps = it.next()
-        var s = 0.0
-        var i = 0
-        while (i * width < ps.values.length) {
-          val v = ps.values(i * width)
-          if (!v.isNaN) s += v
-          i += 1
-        }
-        s
-      })
-      val checksum = partSums.foldLeft(0.0)(_ + _)
+      val checksum = sc.runJob(state, (it: Iterator[PartState]) => {
+        val vs = it.next().values
+        Iterator.range(0, vs.length / width).map(i => vs(i * width))
+          .filterNot(_.isNaN).foldLeft(0.0)(_ + _)
+      }).foldLeft(0.0)(_ + _)
       // SELF-CONTAINED result: materialize the export as an eager
       // localCheckpoint, then drop the loop's internal state blocks —
       // the returned frame never depends on kernel/state lineage, so
@@ -732,31 +722,19 @@ object SpmvKernel {
           tiles.foreach { case ((_, p), bytes) =>
             val slots = kp.inSlots(p)
             val bb = java.nio.ByteBuffer.wrap(bytes)
-            val fmt = bb.getInt(0); val cnt = bb.getInt(4)
-            bb.position(8)
-            if (fmt == FmtDense) {
-              if (scratchD.length < cnt) scratchD = new Array[Double](cnt)
-              bb.asDoubleBuffer().get(scratchD, 0, cnt) // one bulk copy back out
-              var t = 0
-              if (sum) while (t < cnt) { y(slots(t)) += scratchD(t); t += 1 }
-              else while (t < cnt) {
-                val s = slots(t); val v = scratchD(t)
-                if (v < y(s)) y(s) = v
-                t += 1
-              }
-            } else {
-              if (scratchI.length < cnt) scratchI = new Array[Int](cnt)
-              if (scratchD.length < cnt) scratchD = new Array[Double](cnt)
-              bb.asIntBuffer().get(scratchI, 0, cnt)
-              bb.position(8 + 4 * cnt)
-              bb.asDoubleBuffer().get(scratchD, 0, cnt)
-              var t = 0
-              if (sum) while (t < cnt) { y(slots(scratchI(t))) += scratchD(t); t += 1 }
-              else while (t < cnt) {
-                val s = slots(scratchI(t)); val v = scratchD(t)
-                if (v < y(s)) y(s) = v
-                t += 1
-              }
+            val dense = bb.getInt(0) == FmtDense; val cnt = bb.getInt(4)
+            if (scratchD.length < cnt) {
+              scratchD = new Array[Double](cnt); scratchI = new Array[Int](cnt)
+            }
+            // one bulk copy back out per array: sparse indices, then values
+            if (!dense) { bb.position(8); bb.asIntBuffer().get(scratchI, 0, cnt) }
+            bb.position(if (dense) 8 else 8 + 4 * cnt)
+            bb.asDoubleBuffer().get(scratchD, 0, cnt)
+            var t = 0
+            while (t < cnt) {
+              val s = slots(if (dense) t else scratchI(t)); val v = scratchD(t)
+              if (sum) y(s) += v else if (v < y(s)) y(s) = v
+              t += 1
             }
           }
           // apply over EVERY slot (y = identity where silent): a vertex

@@ -19,7 +19,7 @@ object LabelPropagation {
 
   /** State (vid, label: long, changed). `ckpt` resumes from the latest
     * complete snapshot and saves every `ckpt.every` supersteps plus a
-    * final snapshot. */
+    * final snapshot, unless that iteration is already on disk. */
   def run(edges: DataFrame, parts: Int, maxIters: Int = 10,
           ckpt: Option[CheckpointManager] = None): KernelResult = {
     val und = GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops = false))

@@ -3,7 +3,6 @@ package graft.ckpt
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** One superstep's worth of run telemetry (north_rule: checkpoints
   * carry per-partition lineage + metrics). */
@@ -21,10 +20,11 @@ final case class IterMetrics(
   * `iceberg-spark-runtime` later changes only this class).
   *
   * The manifest records: algorithm, iteration, snapshot id, row count,
-  * per-partition row counts (lineage), and the full iteration-metrics
-  * history — enough for exact resume (north_rule) and for a post-hoc
-  * skew audit (the reference's `Matrix::balance` report,
-  * src/mat/matrix.hpp:562-687, reborn as data).
+  * per-partition row counts (lineage, one written file per non-empty
+  * partition), and the full iteration-metrics history — enough for
+  * exact resume (north_rule) and for a post-hoc skew audit (the
+  * reference's `Matrix::balance` report, src/mat/matrix.hpp:562-687,
+  * reborn as data).
   */
 final class CheckpointManager(root: String, val every: Int) extends Serializable {
 
@@ -32,25 +32,19 @@ final class CheckpointManager(root: String, val every: Int) extends Serializable
 
   def shouldCheckpoint(iter: Int): Boolean = every > 0 && iter > 0 && iter % every == 0
 
-  def save(algo: String, iter: Int, state: DataFrame, metrics: Seq[IterMetrics]): Unit = {
+  /** Write `state` in one parquet job, then the manifest. The caller
+    * gives `partRows`, (partition id, rows) per non-empty partition. */
+  def save(algo: String, iter: Int, state: DataFrame, partRows: Seq[(Int, Long)],
+           metrics: Seq[IterMetrics]): Unit = {
     val dir = iterDir(iter)
-    val stateDir = dir.resolve("state").toString
-    state.write.mode("overwrite").parquet(stateDir)
-
-    // Per-partition lineage: row count per physical partition of the
-    // snapshot we just wrote (read back so counts describe the files).
-    val spark = state.sparkSession
-    val perPart = spark.read.parquet(stateDir)
-      .groupBy(spark_partition_id().as("pid")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val rows = perPart.map(_._2).sum
-
+    state.write.mode("overwrite").parquet(dir.resolve("state").toString)
+    val rows = partRows.map(_._2).sum
     val snapshotId = java.util.UUID.nameUUIDFromBytes(
       s"$algo/$iter/$rows".getBytes("UTF-8")).toString
     val metricsJson = metrics.map(m =>
       s"""{"iter":${m.iter},"active":${m.activeVertices},"wallMs":${m.wallMs},"gatherRows":${m.gatherRows}}"""
     ).mkString("[", ",", "]")
-    val partsJson = perPart.map { case (p, c) => s"""{"pid":$p,"rows":$c}""" }
+    val partsJson = partRows.map { case (p, c) => s"""{"pid":$p,"rows":$c}""" }
       .mkString("[", ",", "]")
     val manifest =
       s"""{"algo":"${algo}","iteration":$iter,"snapshotId":"$snapshotId",
@@ -62,8 +56,7 @@ final class CheckpointManager(root: String, val every: Int) extends Serializable
   def manifestAlgo(iter: Int): Option[String] = {
     val m = iterDir(iter).resolve("manifest.json")
     if (!Files.exists(m)) None
-    else """"algo"\s*:\s*"([^"]*)"""".r
-      .findFirstMatchIn(Files.readString(m)).map(_.group(1))
+    else """"algo"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(Files.readString(m)).map(_.group(1))
   }
 
   /** Latest complete snapshot (has a manifest), if any. */
@@ -77,9 +70,6 @@ final class CheckpointManager(root: String, val every: Int) extends Serializable
       .toSeq.sorted.lastOption
   }
 
-  def load(spark: SparkSession, iter: Int): DataFrame =
-    spark.read.parquet(iterDir(iter).resolve("state").toString)
-
   /** Load with a fail-fast algorithm check: resuming algorithm X from
     * a snapshot written by algorithm Y would reinterpret state columns
     * (e.g. CC labels read as LPA labels) —
@@ -90,6 +80,6 @@ final class CheckpointManager(root: String, val every: Int) extends Serializable
       throw new IllegalArgumentException(
         s"checkpoint at $root iter=$iter was written by algorithm '$a', " +
           s"cannot resume '$expectAlgo' from it"))
-    load(spark, iter)
+    spark.read.parquet(iterDir(iter).resolve("state").toString)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import graft.ckpt.IterMetrics
 import graft.graph.CompiledGraph._
 import graft.graph.SpmvKernel._
@@ -31,10 +32,8 @@ final class CompiledGraph private[graph] (
 
   /** Materialize a state RDD and return (Σ changed, hub snapshot).
     * The count rides the successful task attempts (exactly-once
-    * under retry, same contract as before); the hub snapshot is
-    * harvested in the same job when the compile salted any hubs,
-    * and is null otherwise — the unsalted path is byte-identical
-    * to the pre-salting loop. */
+    * under retry); the hub snapshot is harvested in the same job
+    * when the compile salted any hubs, and is null otherwise. */
   private def countAndHarvest(state: RDD[PartState], width: Int): (Long, HubStates) =
     if (mirrorCount == 0)
       (sc.runJob(state, (it: Iterator[PartState]) => it.next().changed).sum, null)
@@ -100,27 +99,24 @@ final class CompiledGraph private[graph] (
       .select(col("vid"), col("degree").cast("long").as("degree"))
   }
 
-  /** Re-assert the 2^53 exact-id window over the compiled vids (they
-    * are sorted per partition, so first/last suffice) — the resume
-    * path's twin of the per-vertex init() check, which never runs on
-    * a checkpoint resume. One tiny job over the cached tiles. */
-  private def requireExactVids(program: String): Unit =
-    kernel.map(kp =>
-      if (kp.vids.isEmpty) null
-      else (kp.vids(0), kp.vids(kp.vids.length - 1)))
-      .collect().filter(_ != null).foreach { case (lo, hi) =>
-        KernelProgram.checkExactVid(lo, program)
-        KernelProgram.checkExactVid(hi, program)
-      }
+  /** (kernel partition, slot count) per non-empty partition: the rows
+    * `stateDF` emits there, so one snapshot file each. One tiny job at
+    * the graph's first checkpoint save. */
+  private lazy val partRows: Seq[(Int, Long)] =
+    sc.runJob(kernel, (it: Iterator[KernelPartition]) => it.next().vids.length.toLong)
+      .zipWithIndex.collect { case (n, p) if n > 0 => (p, n) }.toSeq
 
   /** Re-slot a saved state frame into the kernel's partition layout —
     * the resume half of the checkpoint contract. Nulls become NaN;
     * a missing `changed` column means all-active (only legacy
     * pagerank snapshots, a stationary program, lack it). Slot
     * columns beyond the exported `stateCols` (LPA's prev-label
-    * scratch) resume as NaN. */
-  private def stateFromDF(width: Int, stateCols: Seq[String], df: DataFrame): RDD[PartState] = {
-    val hp = new HashPartitioner(parts)
+    * scratch) resume as NaN. Each task rejects a vid the graph lacks,
+    * re-asserts an `exactName` program's 2^53 window (init() never
+    * runs on a resume) and adds (partition, missing, first missing
+    * vid) to `gaps` when the snapshot lacks some of its vertices. */
+  private def stateFromDF(width: Int, stateCols: Seq[String], df: DataFrame, exactName: String,
+      gaps: org.apache.spark.util.CollectionAccumulator[(Int, Int, Long)]): RDD[PartState] = {
     // explicit casts: the manifest algo check rejects cross-ALGORITHM
     // resumes, but a same-algo snapshot written with different column
     // types (e.g. a long-typed label) must still read as the doubles
@@ -142,14 +138,18 @@ final class CompiledGraph private[graph] (
         val act = !hasChanged || ir.getBoolean(1 + take)
         (ir.getLong(0), (vs, act))
       }
-      .partitionBy(hp)
+      .partitionBy(new HashPartitioner(parts))
     kernel.zipPartitions(keyed, preservesPartitioning = false) { (kIt, rIt) =>
       val kp = kIt.next()
       val n = kp.vids.length
+      if (exactName != null && n > 0) // vids are sorted: the ends suffice
+        Seq(kp.vids(0), kp.vids(n - 1)).foreach(KernelProgram.checkExactVid(_, exactName))
       val slot = LongTable.positions(kp.vids)
       val values = new Array[Double](n * width)
       val bits = new Array[Long]((n + 63) >>> 6)
+      val filled = new Array[Long]((n + 63) >>> 6)
       var changed = 0L
+      var nFilled = 0
       rIt.foreach { case (v, (vs, act)) =>
         // reachable from user input: a snapshot of a different graph
         // carries vids this compile never slotted
@@ -157,9 +157,12 @@ final class CompiledGraph private[graph] (
         if (s < 0) throw new IllegalArgumentException(
           s"vid $v is not present in the compiled graph " +
             "(resuming from a checkpoint of a different edge table?)")
+        if (!bitGet(filled, s)) { filled(s >>> 6) |= 1L << (s & 63); nFilled += 1 }
         System.arraycopy(vs, 0, values, s * width, width)
         if (act) { bits(s >>> 6) |= 1L << (s & 63); changed += 1 }
       }
+      if (nFilled < n) gaps.add((TaskContext.getPartitionId(), n - nFilled,
+        kp.vids(Iterator.range(0, n).find(!bitGet(filled, _)).get)))
       Iterator.single(PartState(values, bits, changed))
     }
   }
@@ -223,9 +226,9 @@ final class CompiledGraph private[graph] (
     val tag = s"$name-kernel"
     val metrics = ArrayBuffer.empty[IterMetrics]
     val resumed = ckpt.flatMap(c => c.latestIter().map(i => (i, c.load(spark, i, tag))))
-    if (resumed.isDefined && exactVids) requireExactVids(name)
+    val gaps = sc.collectionAccumulator[(Int, Int, Long)]
     var state: RDD[PartState] = resumed
-      .map { case (_, df) => stateFromDF(width, columns, df) }
+      .map { case (_, df) => stateFromDF(width, columns, df, if (exactVids) name else null, gaps) }
       .getOrElse(kernel.map { kp =>
         val n = kp.vids.length
         val values = new Array[Double](n * width)
@@ -244,11 +247,21 @@ final class CompiledGraph private[graph] (
     // materialize + read the initial frontier in one exactly-once job
     // (plus the hub snapshot for mirror slots on a salted compile)
     val (active0, hub0) = countAndHarvest(state, width)
+    // raised after the job, so a foreign vid (thrown in-task) wins the diagnosis
+    gaps.value.asScala.minByOption(_._1).foreach { case (p, k, v) =>
+      throw new IllegalArgumentException(s"the checkpoint lacks $k of kernel partition $p's " +
+        s"vertices (e.g. vid $v) — resuming from a checkpoint of a different edge table?")
+    }
     var active = active0
     var hubBc = if (hub0 != null) sc.broadcast(hub0) else null
     var prev: RDD[PartState] = null
     val start = resumed.map(_._1).getOrElse(0)
     var iter = start
+    var saved = if (resumed.isDefined) start else -1 // the last iter on disk
+    def save(c: graft.ckpt.CheckpointManager): Unit = {
+      c.save(tag, iter, stateDF(width, columns, state), partRows, metrics.toSeq)
+      saved = iter
+    }
 
     while (numVertices > 0 && more(iter, active)) {
       val t0 = System.nanoTime()
@@ -305,12 +318,9 @@ final class CompiledGraph private[graph] (
       iter += 1
       metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000,
         if (stationary) numVertices else step.active)
-      ckpt.foreach { c =>
-        if (c.shouldCheckpoint(iter))
-          c.save(tag, iter, stateDF(width, columns, state), metrics.toSeq)
-      }
+      ckpt.filter(_.shouldCheckpoint(iter)).foreach(save)
     }
-    ckpt.foreach(c => c.save(tag, iter, stateDF(width, columns, state), metrics.toSeq))
+    if (iter != saved) ckpt.foreach(save) // the final snapshot
 
     // deterministic checksum: per-partition sums folded in partition
     // order (first state column, NaN skipped)
@@ -338,7 +348,7 @@ final class CompiledGraph private[graph] (
     * nonstationary run — further supersteps are provably no-ops);
     * 0 = run until no vertex changed. `ckpt` resumes from the latest
     * complete snapshot and saves every `ckpt.every` supersteps plus a
-    * final snapshot. */
+    * final snapshot, unless that iteration is already on disk. */
   def run(program: KernelProgram, maxIters: Int,
           ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
     val width = program.width

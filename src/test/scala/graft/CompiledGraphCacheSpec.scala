@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.graph.{CompiledGraphCache, SpmvKernel}
 import graft.ckpt.CheckpointManager
 
@@ -10,7 +9,7 @@ import graft.ckpt.CheckpointManager
 class CompiledGraphCacheSpec extends SparkTestBase {
 
   private def parkEdges(es: Seq[(Long, Long)]): String = {
-    val dir = Files.createTempDirectory("graft-edges").toString
+    val dir = tempDir("graft-edges")
     edgesDF(es).repartition(2).write.mode("overwrite").parquet(dir)
     dir
   }
@@ -21,7 +20,7 @@ class CompiledGraphCacheSpec extends SparkTestBase {
 
   test("cold compileOrLoad saves; warm load skips the compile bit-identically") {
     val edgeDir = parkEdges(randomEdges(200, 1200, seed = 301))
-    val cacheDir = Files.createTempDirectory("graft-kcache").toString
+    val cacheDir = tempDir("graft-kcache")
     val df = spark.read.parquet(edgeDir)
 
     val cold = CompiledGraphCache.compileOrLoad(df, parts, cacheDir)
@@ -43,7 +42,7 @@ class CompiledGraphCacheSpec extends SparkTestBase {
 
   test("a changed edge table misses the cache instead of loading a stale graph") {
     val edgeDir = parkEdges(randomEdges(100, 500, seed = 307))
-    val cacheDir = Files.createTempDirectory("graft-kcache").toString
+    val cacheDir = tempDir("graft-kcache")
     val g = CompiledGraphCache.compileOrLoad(spark.read.parquet(edgeDir), parts, cacheDir)
     g.unpersist()
     // overwrite the table: sizes/mtimes change → new fingerprint
@@ -65,12 +64,12 @@ class CompiledGraphCacheSpec extends SparkTestBase {
     // cache, checkpoints mid-run and dies (unpersist stands in for the
     // JVM exit); process 2 LOADS the graph — no compile — and resumes
     val edgeDir = parkEdges(randomEdges(150, 900, seed = 313))
-    val cacheDir = Files.createTempDirectory("graft-kcache").toString
+    val cacheDir = tempDir("graft-kcache")
     val df = spark.read.parquet(edgeDir)
 
     val g1 = CompiledGraphCache.compileOrLoad(df, parts, cacheDir)
     val straight = ranks(g1, iters = 12)
-    val ckptDir = Files.createTempDirectory("graft-ckpt").toString
+    val ckptDir = tempDir("graft-ckpt")
     val mgr = new CheckpointManager(ckptDir, every = 6)
     g1.pagerank(maxIters = 6, ckpt = Some(mgr))
     g1.unpersist() // "process 1 exits"
@@ -85,11 +84,11 @@ class CompiledGraphCacheSpec extends SparkTestBase {
 
   test("weighted and salted compiles round-trip (weights, mirrors preserved)") {
     // weighted: SSSP relax depends on the tile weight arrays
-    val wDir = Files.createTempDirectory("graft-edges-w").toString
+    val wDir = tempDir("graft-edges-w")
     wEdgesDF(Seq((0L, 1L, 2.0), (1L, 2L, 0.5), (0L, 2L, 5.0), (2L, 3L, 1.0)))
       .write.mode("overwrite").parquet(wDir)
     val wdf = spark.read.parquet(wDir)
-    val wCache = Files.createTempDirectory("graft-kcache-w").toString
+    val wCache = tempDir("graft-kcache-w")
     val gw = CompiledGraphCache.compileOrLoad(wdf, parts, wCache)
     def dists(g: SpmvKernel.CompiledGraph) =
       g.run(new graft.graph.SsspKernelProgram(0L), maxIters = 0).state.collect()
@@ -105,7 +104,7 @@ class CompiledGraphCacheSpec extends SparkTestBase {
     val hub = 0L
     val sDir = parkEdges((1L to 300L).map(d => (hub, d)) :+ (300L, hub))
     val sdf = spark.read.parquet(sDir)
-    val sCache = Files.createTempDirectory("graft-kcache-s").toString
+    val sCache = tempDir("graft-kcache-s")
     val gs = CompiledGraphCache.compileOrLoad(sdf, parts, sCache, hubChunk = 32)
     assert(gs.mirrorCount > 0, "expected a salted compile")
     val wantR = ranks(gs)

@@ -21,6 +21,22 @@ abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val parts: Int = 8
 
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh temp directory, deleted when the current test ends. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.toString
+  }
+
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally {
+      tempDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      tempDirs.clear()
+    }
+
   def edgesDF(es: Seq[(Long, Long)]): DataFrame = {
     val s = spark; import s.implicits._
     es.toDF("src", "dst")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph._
 import graft.graph.SpmvKernel.onKernel
 import graft.algos._
 import graft.ops._
@@ -85,15 +84,10 @@ object SparkEntry {
     import graft.ingest._
     val corpus = RepoCorpus.generate(spark, RepoCorpus.Config(nRepos = 300, filesPerRepo = 3))
     val (e, dict) = EdgeExtraction.ingest(EdgeExtraction.withSha(corpus))
-    val pr = onKernel(e, parts(spark))(_.pagerank(maxIters = 10))
+    val pr = PageRank.run(e, parts(spark), maxIters = 10)
     pr.state.join(dict, "vid").select(col("repo"), col("rank"))
       .orderBy(desc("rank"), asc("repo")).limit(20)
   }
-
-  /** The undirected closure of `e` (EdgeShaping.undirected), without
-    * the unit weight column the kernel's unweighted programs ignore. */
-  private def undirected(e: DataFrame, selfLoops: Boolean): DataFrame =
-    GraphShaping.shape(e, EdgeShaping.undirected(selfLoops)).select("src", "dst")
 
   /** The derived edge table with a deterministic integer-valued weight
     * in [1, 5] (exact in double, so engine-portable). */
@@ -105,17 +99,18 @@ object SparkEntry {
 
   private type Query = (SparkSession, String) => DataFrame
 
-  // ---- the superstep algorithms, one kernel body each. Partitions are
-  // sized to the graph (graphParts): on these small derived graphs the
-  // supersteps are task-launch-bound, so full-width stages would cost
-  // more in scheduling than they save; at real scale graphParts IS
-  // spark.sql.shuffle.partitions.
+  // ---- the superstep algorithms, one body each over the algos API,
+  // which decides each algorithm's edge shape and program. Partitions
+  // are sized to the graph (graphParts): on these small derived graphs
+  // the supersteps are task-launch-bound, so full-width stages would
+  // cost more in scheduling than they save; at real scale graphParts
+  // IS spark.sql.shuffle.partitions.
 
   /** Reference-exact PageRank (pr.h), a fixed 20-superstep budget
     * (matches the 20-step unrolled oracle), top 25 ranks. */
   private val pagerankTop: Query = (s, d) => {
     val e = edges(s, d)
-    val r = onKernel(e, graphParts(s, e))(_.pagerank(maxIters = 20))
+    val r = PageRank.run(e, graphParts(s, e), maxIters = 20)
     r.state.select(col("vid"), round(col("rank"), 6).as("rank"))
       .orderBy(desc("rank"), asc("vid")).limit(25)
   }
@@ -125,9 +120,8 @@ object SparkEntry {
     * labelled by its min vid. */
   private val ccSizes: Query = (s, d) => {
     val e = edges(s, d)
-    val r = onKernel(undirected(e, selfLoops = true), graphParts(s, e))(
-      _.run(new CcKernelProgram, maxIters = 0))
-    r.state.groupBy(col("label").cast("long").as("label"))
+    val r = ConnectedComponents.run(e, graphParts(s, e))
+    r.state.groupBy(col("label"))
       .agg(count(lit(1)).as("size")).orderBy(asc("label"))
   }
 
@@ -144,9 +138,8 @@ object SparkEntry {
     * vertices per hop count, null for the unreached. */
   private val bfsDepths: Query = (s, d) => {
     val e = edges(s, d)
-    val r = onKernel(undirected(e, selfLoops = false), graphParts(s, e))(
-      _.run(new BfsKernelProgram(0L), maxIters = 0))
-    r.state.groupBy(col("hops").cast("long").as("hops"))
+    val r = Traversal.bfs(e, 0L, graphParts(s, e))
+    r.state.groupBy(col("hops"))
       .agg(count(lit(1)).as("n")).orderBy(asc("hops"))
   }
 
@@ -154,7 +147,7 @@ object SparkEntry {
     * reached distance. The relax is msg + w over a `w` column (the
     * reference's -DHAS_WEIGHT build, sssp.h:49-66), msg + 1 without. */
   private def ssspDists(s: SparkSession, e: DataFrame): DataFrame = {
-    val r = onKernel(e, graphParts(s, e))(_.run(new SsspKernelProgram(0L), maxIters = 0))
+    val r = Traversal.sssp(e, 0L, graphParts(s, e))
     r.state.filter(col("dist").isNotNull)
       .groupBy(col("dist")).agg(count(lit(1)).as("n")).orderBy(asc("dist"))
   }

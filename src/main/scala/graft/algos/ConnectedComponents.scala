@@ -15,14 +15,15 @@ import graft.graph.SpmvKernel.{KernelResult, onKernel}
   */
 object ConnectedComponents {
 
-  /** Components of the UNDIRECTED closure of `edges` (the reference
-    * loads CC undirected, cc.cpp:26); returns state (vid, label: long,
+  /** The edges CC runs on: the UNDIRECTED closure of `edges`, self-loops
+    * kept (the reference loads CC undirected, cc.cpp:26). */
+  def shape(edges: DataFrame): DataFrame = GraphShaping.undirected(edges, selfLoops = true)
+
+  /** Components of [[shape]]`(edges)`; returns state (vid, label: long,
     * changed) where label = min vid of the component — exact,
     * deterministic (north_rule: component assignments exact). */
   def run(edges: DataFrame, parts: Int,
-          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
-    val und = GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops = true))
-      .select("src", "dst")
-    onKernel(und, parts)(_.run(new CcKernelProgram, maxIters = 0, ckpt = ckpt)).withLongs("label")
-  }
+          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
+    onKernel(shape(edges), parts)(_.run(new CcKernelProgram, maxIters = 0, ckpt = ckpt))
+      .withLongs("label")
 }

@@ -17,13 +17,13 @@ import graft.ckpt.CheckpointManager
   */
 object LabelPropagation {
 
+  /** The edges LPA runs on. */
+  def shape(edges: DataFrame): DataFrame = GraphShaping.undirected(edges, selfLoops = false)
+
   /** State (vid, label: long, changed). `ckpt` resumes from the latest
     * complete snapshot and saves every `ckpt.every` supersteps plus a
     * final snapshot, unless that iteration is already on disk. */
   def run(edges: DataFrame, parts: Int, maxIters: Int = 10,
-          ckpt: Option[CheckpointManager] = None): KernelResult = {
-    val und = GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops = false))
-      .select("src", "dst")
-    onKernel(und, parts)(_.lpa(maxIters, ckpt = ckpt)).withLongs("label")
-  }
+          ckpt: Option[CheckpointManager] = None): KernelResult =
+    onKernel(shape(edges), parts)(_.lpa(maxIters, ckpt = ckpt)).withLongs("label")
 }

@@ -1,7 +1,6 @@
 package graft.algos
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.graph.SpmvKernel.{KernelResult, onKernel}
 
 /** How PageRank treats messages from SOURCE vertices (no in-edges,
@@ -54,42 +53,19 @@ object PageRank {
     * graphtap.slurm:72); 0 runs to convergence (all |Δrank| ≤ tol).
     * State (vid, rank, changed).
     *
-    * `Never` runs `Always` on the edges whose source has an in-edge:
-    * those sources keep their full out-degree, and a source without
-    * in-edges never messages. Vertices outside that graph receive
-    * nothing, so they hold rank α. `FinalFlush` then applies one
-    * gather over the full edge table from the converged `Never` ranks
-    * (vp:423-429), which counts as one more iteration. */
+    * Every mode compiles the table once and runs in the kernel
+    * ([[graft.graph.CompiledGraph.pagerank]]). `Never` gates each
+    * source row in the program's message: a vertex with no in-edge
+    * sends 0 and keeps its full out-degree, so it holds rank α.
+    * `FinalFlush` runs `Never`, then one more superstep with the gate
+    * open (vp:423-429), which counts as one more iteration. A gated
+    * mode checkpoints under its own program name and keeps its
+    * snapshot at the last gated superstep. */
   def run(edges: DataFrame, parts: Int,
           maxIters: Int = 20,
           alpha: Double = DefaultAlpha,
           tol: Double = DefaultTol,
           sources: SourceSemantics = SourceSemantics.Always,
-          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
-    def onGraph(e: DataFrame) = onKernel(e, parts)(_.pagerank(maxIters, alpha, tol, ckpt = ckpt))
-    if (sources == SourceSemantics.Always) return onGraph(edges)
-
-    val gated = onGraph(edges.join(edges.select(col("dst").as("src")), Seq("src"), "left_semi"))
-    val all = edges.select(col("src").as("vid")).union(edges.select(col("dst").as("vid"))).distinct()
-    val never = all.join(gated.state, Seq("vid"), "left_outer")
-      .select(col("vid"), coalesce(col("rank"), lit(alpha)).as("rank"),
-        coalesce(col("changed"), lit(false)).as("changed"))
-    val state = sources match {
-      case SourceSemantics.FinalFlush =>
-        val w = if (edges.columns.contains("w")) col("w") else lit(1.0)
-        val msgs = never.join(Degree.out(edges), "vid")
-          .select(col("vid").as("src"), (col("rank") / col("degree")).as("msg"))
-        val y = edges.select(col("src"), col("dst"), w.as("w")).join(msgs, "src")
-          .groupBy(col("dst").as("vid")).agg(sum(col("msg") * col("w")).as("y"))
-        val flushed = lit(alpha) + lit(1.0 - alpha) * coalesce(col("y"), lit(0.0))
-        never.join(y, Seq("vid"), "left_outer")
-          .select(col("vid"), flushed.as("rank"), (abs(flushed - col("rank")) > tol).as("changed"))
-      case _ => never
-    }
-    val out = state.localCheckpoint(true)
-    graft.graph.Engine.release(gated.state)
-    val flush = if (sources == SourceSemantics.FinalFlush) 1 else 0
-    KernelResult(out, gated.iterations + flush, gated.metrics,
-      out.agg(coalesce(sum(col("rank")), lit(0.0))).head.getDouble(0))
-  }
+          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
+    onKernel(edges, parts)(_.pagerank(maxIters, alpha, tol, ckpt, sources))
 }

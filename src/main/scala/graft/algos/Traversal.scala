@@ -21,13 +21,13 @@ import graft.graph.SpmvKernel.{KernelResult, onKernel}
   */
 object Traversal {
 
+  /** The edges BFS runs on (bfs.cpp:26-30). */
+  def bfsShape(edges: DataFrame): DataFrame = GraphShaping.undirected(edges, selfLoops = false)
+
   def bfs(edges: DataFrame, root: Long, parts: Int,
-          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult = {
-    val und = GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops = false))
-      .select("src", "dst")
-    onKernel(und, parts)(_.run(new BfsKernelProgram(root), maxIters = 0, ckpt = ckpt))
+          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
+    onKernel(bfsShape(edges), parts)(_.run(new BfsKernelProgram(root), maxIters = 0, ckpt = ckpt))
       .withLongs("parent", "hops")
-  }
 
   def sssp(edges: DataFrame, root: Long, parts: Int,
            ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructFiel
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import graft.algos.SourceSemantics
 import graft.ckpt.IterMetrics
 import graft.graph.CompiledGraph._
 import graft.graph.SpmvKernel._
@@ -107,15 +108,16 @@ final class CompiledGraph private[graph] (
       .zipWithIndex.collect { case (n, p) if n > 0 => (p, n) }.toSeq
 
   /** Re-slot a saved state frame into the kernel's partition layout —
-    * the resume half of the checkpoint contract. Nulls become NaN;
-    * a missing `changed` column means all-active (only legacy
-    * pagerank snapshots, a stationary program, lack it). Slot
-    * columns beyond the exported `stateCols` (LPA's prev-label
-    * scratch) resume as NaN. Each task rejects a vid the graph lacks,
-    * re-asserts an `exactName` program's 2^53 window (init() never
-    * runs on a resume) and adds (partition, missing, first missing
-    * vid) to `gaps` when the snapshot lacks some of its vertices. */
-  private def stateFromDF(width: Int, stateCols: Seq[String], df: DataFrame, exactName: String,
+    * the resume half of the checkpoint contract. `init` runs on every
+    * slot first (re-asserting an exact-id program's 2^53 window), then
+    * the snapshot's `stateCols` are laid over it: nulls become NaN,
+    * and slot columns beyond them (LPA's prev-label scratch, the
+    * PageRank source gate) keep their init values. A missing `changed`
+    * column means all-active (only legacy pagerank snapshots, a
+    * stationary program, lack it). Each task rejects a vid the graph
+    * lacks and adds (partition, missing, first missing vid) to `gaps`
+    * when the snapshot lacks some of its vertices. */
+  private def stateFromDF(width: Int, stateCols: Seq[String], df: DataFrame, init: Init,
       gaps: org.apache.spark.util.CollectionAccumulator[(Int, Int, Long)]): RDD[PartState] = {
     // explicit casts: the manifest algo check rejects cross-ALGORITHM
     // resumes, but a same-algo snapshot written with different column
@@ -129,7 +131,7 @@ final class CompiledGraph private[graph] (
     val take = stateCols.length
     val keyed = df.selectExpr(sel: _*).queryExecution.toRdd
       .map { ir =>
-        val vs = Array.fill(width)(Double.NaN)
+        val vs = Array.fill(take)(Double.NaN)
         var c = 0
         while (c < take) {
           if (!ir.isNullAt(1 + c)) vs(c) = ir.getDouble(1 + c)
@@ -142,10 +144,8 @@ final class CompiledGraph private[graph] (
     kernel.zipPartitions(keyed, preservesPartitioning = false) { (kIt, rIt) =>
       val kp = kIt.next()
       val n = kp.vids.length
-      if (exactName != null && n > 0) // vids are sorted: the ends suffice
-        Seq(kp.vids(0), kp.vids(n - 1)).foreach(KernelProgram.checkExactVid(_, exactName))
       val slot = LongTable.positions(kp.vids)
-      val values = new Array[Double](n * width)
+      val values = initState(kp, width, init).values
       val bits = new Array[Long]((n + 63) >>> 6)
       val filled = new Array[Long]((n + 63) >>> 6)
       var changed = 0L
@@ -158,7 +158,7 @@ final class CompiledGraph private[graph] (
           s"vid $v is not present in the compiled graph " +
             "(resuming from a checkpoint of a different edge table?)")
         if (!bitGet(filled, s)) { filled(s >>> 6) |= 1L << (s & 63); nFilled += 1 }
-        System.arraycopy(vs, 0, values, s * width, width)
+        System.arraycopy(vs, 0, values, s * width, take)
         if (act) { bits(s >>> 6) |= 1L << (s & 63); changed += 1 }
       }
       if (nFilled < n) gaps.add((TaskContext.getPartitionId(), n - nFilled,
@@ -196,28 +196,30 @@ final class CompiledGraph private[graph] (
   }
 
   /** Reference-exact PageRank (src/apps/pr.h) on the kernel — see
-    * [[PrKernelProgram]] for the math. Kept as the named entry point
-    * (Bench/Apps/specs); delegates to the generalized loop. */
+    * [[PrKernelProgram]] for the math and the `sources` modes. Kept as
+    * the named entry point (Bench/Apps/specs); delegates to [[run]]. */
   def pagerank(maxIters: Int, alpha: Double = 0.15, tol: Double = 1e-5,
-               ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
-    run(new PrKernelProgram(alpha, tol), maxIters, ckpt)
+               ckpt: Option[graft.ckpt.CheckpointManager] = None,
+               sources: SourceSemantics = SourceSemantics.Always): KernelResult =
+    run(new PrKernelProgram(alpha, tol, sources), maxIters, ckpt)
 
   /** The one superstep loop behind [[run]] and [[lpa]] — the
-    * two-stage job of the header. It owns resume (with the exact-id
-    * check), the initial frontier count, the hub broadcast, lineage
-    * truncation, the `graft-superstep-N` job group, [[IterMetrics]],
-    * checkpoint saves tagged `<name>-kernel`, the checksum and the
-    * export. The caller supplies `init` (one vertex's fresh state at
-    * `values[base..base+width)`, returning its active bit),
-    * `more(iter, active)` (its stop rule; an empty graph runs none),
-    * `gather` (stage 1: one tile → a packed message, or null) and
-    * `absorb` (stage 2: a partition's tiles, sorted by source
-    * partition, + old state → new state). `stationary` reports V
-    * rather than the active count as `gatherRows`. */
+    * two-stage job of the header. It owns resume, the initial frontier
+    * count, the hub broadcast, lineage truncation, the
+    * `graft-superstep-N` job group, [[IterMetrics]], checkpoint saves
+    * tagged `<name>-kernel`, the checksum and the export. The caller
+    * supplies `init` ([[KernelProgram.init]], also run under a
+    * resumed snapshot), `more(iter, active)` (its stop rule; an empty
+    * graph runs none), `gather` (stage 1: one tile → a packed message,
+    * or null) and `absorb` (stage 2: a partition's tiles, sorted by
+    * source partition, + old state → new state). `flush` adds one
+    * unsaved superstep after the final snapshot, with `Step.flush`
+    * set. `stationary` reports V rather than the active count as
+    * `gatherRows`. */
   private def superstepLoop(name: String, width: Int, columns: Seq[String],
-                            exactVids: Boolean, stationary: Boolean,
+                            stationary: Boolean, flush: Boolean,
                             ckpt: Option[graft.ckpt.CheckpointManager])(
-      init: (Long, Array[Double], Int) => Boolean,
+      init: Init,
       more: (Int, Long) => Boolean,
       gather: (Step, KernelPartition, GatherInputs, Tile) => Array[Byte],
       absorb: (Step, Iterator[((Int, Int), Array[Byte])], KernelPartition, PartState) => PartState)
@@ -228,21 +230,8 @@ final class CompiledGraph private[graph] (
     val resumed = ckpt.flatMap(c => c.latestIter().map(i => (i, c.load(spark, i, tag))))
     val gaps = sc.collectionAccumulator[(Int, Int, Long)]
     var state: RDD[PartState] = resumed
-      .map { case (_, df) => stateFromDF(width, columns, df, if (exactVids) name else null, gaps) }
-      .getOrElse(kernel.map { kp =>
-        val n = kp.vids.length
-        val values = new Array[Double](n * width)
-        val bits = new Array[Long]((n + 63) >>> 6)
-        var changed = 0L
-        var i = 0
-        while (i < n) {
-          if (init(kp.vids(i), values, i * width)) {
-            bits(i >>> 6) |= 1L << (i & 63); changed += 1
-          }
-          i += 1
-        }
-        PartState(values, bits, changed)
-      })
+      .map { case (_, df) => stateFromDF(width, columns, df, init, gaps) }
+      .getOrElse(kernel.map(initState(_, width, init)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // materialize + read the initial frontier in one exactly-once job
     // (plus the hub snapshot for mirror slots on a salted compile)
@@ -263,9 +252,9 @@ final class CompiledGraph private[graph] (
       saved = iter
     }
 
-    while (numVertices > 0 && more(iter, active)) {
+    def superstep(flushStep: Boolean): Unit = {
       val t0 = System.nanoTime()
-      val step = Step(iter, active, fresh = iter == start)
+      val step = Step(iter, active, fresh = iter == start, flushStep)
       val hubBcLocal = hubBc
       // stage 1: packed byte arrays take the serializer's bulk path
       // (a block copy), where a boxed record pays elementwise
@@ -318,9 +307,14 @@ final class CompiledGraph private[graph] (
       iter += 1
       metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000,
         if (stationary) numVertices else step.active)
+    }
+
+    while (numVertices > 0 && more(iter, active)) {
+      superstep(flushStep = false)
       ckpt.filter(_.shouldCheckpoint(iter)).foreach(save)
     }
     if (iter != saved) ckpt.foreach(save) // the final snapshot
+    if (flush && numVertices > 0) superstep(flushStep = true)
 
     // deterministic checksum: per-partition sums folded in partition
     // order (first state column, NaN skipped)
@@ -360,14 +354,15 @@ final class CompiledGraph private[graph] (
       case KernelProgram.MulW => 1
       case KernelProgram.AddW => 2
     }
-    superstepLoop(program.name, width, program.columns, program.requiresExactVids,
-      stationary, ckpt)(
+    val flushing = program.flush
+    superstepLoop(program.name, width, program.columns, stationary, flushing != null, ckpt)(
       init = program.init,
       more = (iter, active) =>
         if (maxIters > 0) iter < maxIters && (stationary || active > 0)
         else active > 0,
       // per tile: dense accumulate or sparse assemble, then pack
-      gather = (_, kp, in, t) => {
+      gather = (step, kp, in, t) => {
+        val prog = if (step.flush) flushing else program
         val values = in.values; val vids = in.vids; val invDeg = kp.invDeg
         val srcSlots = t.srcSlots; val offsets = t.offsets
         val dstLocal = t.dstLocal; val w = t.weights
@@ -378,7 +373,7 @@ final class CompiledGraph private[graph] (
           var i = 0
           while (i < srcSlots.length) {
             val slot = srcSlots(i)
-            val msg = program.message(vids(slot), values, slot * width, invDeg(slot))
+            val msg = prog.message(vids(slot), values, slot * width, invDeg(slot))
             accumRow(acc, dstLocal, w, offsets(i), offsets(i + 1), msg, sum, eop)
             i += 1
           }
@@ -406,7 +401,7 @@ final class CompiledGraph private[graph] (
             var r = 0
             while (r < rows.length) {
               val i2 = rows(r); val slot = srcSlots(i2)
-              val msg = program.message(vids(slot), values, slot * width, invDeg(slot))
+              val msg = prog.message(vids(slot), values, slot * width, invDeg(slot))
               accumRow(acc, dstLocal, w, offsets(i2), offsets(i2 + 1), msg, sum, eop)
               r += 1
             }
@@ -416,7 +411,7 @@ final class CompiledGraph private[graph] (
             // the frontier edges only — no nDsts-sized
             // touch at all (tcsc_spmspv2.hpp's sparse y)
             packSparseAssembled(rows, srcSlots, offsets, dstLocal, w,
-              vids, values, invDeg, width, aEdges.toInt, sum, eop, program)
+              vids, values, invDeg, width, aEdges.toInt, sum, eop, prog)
           }
         }
       },
@@ -512,8 +507,8 @@ final class CompiledGraph private[graph] (
     // remove from the destination counts when a source changed; it is
     // never exported or checkpointed, and resumes as NaN (the first
     // superstep after a resume runs full)
-    superstepLoop("lpa", 2, Seq("label"), exactVids = true, stationary = true, ckpt)(
-      init = (vid, values, base) => {
+    superstepLoop("lpa", 2, Seq("label"), stationary = true, flush = false, ckpt)(
+      init = (vid, _, values, base) => {
         KernelProgram.checkExactVid(vid, "lpa")
         values(base) = vid.toDouble
         values(base + 1) = Double.NaN
@@ -565,6 +560,29 @@ private object CompiledGraph {
     * hubs (≤ 4·parts in auto mode) — a few KB of driver traffic
     * riding the job that already returns the convergence count. */
   private type HubStates = scala.collection.Map[Long, (Array[Double], Boolean)]
+
+  /** [[KernelProgram.init]]'s shape: (vid, hasIn, values, base) → active. */
+  private type Init = (Long, Boolean, Array[Double], Int) => Boolean
+
+  /** A partition's fresh state: `init` on every owned slot, told
+    * whether the slot receives an edge, i.e. whether some source
+    * partition's tile lists it in `inSlots`. */
+  private def initState(kp: KernelPartition, width: Int, init: Init): PartState = {
+    val n = kp.vids.length
+    val hasIn = new Array[Long]((n + 63) >>> 6)
+    kp.inSlots.foreach(s => if (s != null) s.foreach(i => hasIn(i >>> 6) |= 1L << (i & 63)))
+    val values = new Array[Double](n * width)
+    val bits = new Array[Long]((n + 63) >>> 6)
+    var changed = 0L
+    var i = 0
+    while (i < n) {
+      if (init(kp.vids(i), bitGet(hasIn, i), values, i * width)) {
+        bits(i >>> 6) |= 1L << (i & 63); changed += 1
+      }
+      i += 1
+    }
+    PartState(values, bits, changed)
+  }
 
   /** Combined (owned ++ mirror) views of a partition's superstep
     * inputs for the stage-1 tile loop. Identity (no copies) when the

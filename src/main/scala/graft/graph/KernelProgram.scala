@@ -1,5 +1,7 @@
 package graft.graph
 
+import graft.algos.SourceSemantics
+
 /** The vertex-program contract — the reference's five
   * `Vertex_Program` virtuals (initializer / messenger / combiner /
   * applicator / infinity, reference src/vp/vertex_program.hpp:32-45)
@@ -56,8 +58,10 @@ trait KernelProgram extends Serializable {
 
   /** Initialize vertex `vid`'s state at `values[base..base+width)`;
     * returns the initial active bit (reference initializer's boolean,
-    * vp:32-33). */
-  def init(vid: Long, values: Array[Double], base: Int): Boolean
+    * vp:32-33). `hasIn` = the vertex receives at least one edge. Runs
+    * on a checkpoint resume too, before the snapshot's columns are
+    * laid over it. */
+  def init(vid: Long, hasIn: Boolean, values: Array[Double], base: Int): Boolean
 
   /** Message payload for an (active) source vertex; `invDeg` is the
     * compile-time 1/out-degree (0 for degree-0), the reference's
@@ -70,11 +74,10 @@ trait KernelProgram extends Serializable {
     * the reference's iteration-dependent applies (bfs.h:65-77). */
   def apply(values: Array[Double], base: Int, y: Double, iter: Int): Boolean
 
-  /** true when the program carries VERTEX IDS through double-typed
-    * messages (CC labels, BFS parents) — exact only below 2^53. The
-    * loop re-asserts the window on checkpoint RESUME, where init() (the
-    * fresh-start check site) never runs. */
-  def requiresExactVids: Boolean = false
+  /** The program of ONE more superstep after the stop rule, on the
+    * same state layout, or null for none. That superstep is not
+    * checkpointed: it is a pure function of the final snapshot. */
+  private[graph] def flush: KernelProgram = null
 }
 
 object KernelProgram {
@@ -107,28 +110,48 @@ object KernelProgram {
           "Re-key the vertex ids (e.g. dense-rank them) first.")
 }
 
-/** PageRank on the kernel — the reference pr.h math
-  * (algos/PageRank.scala adds the source-message modes):
+/** PageRank on the kernel — the reference pr.h math:
   * rank₀=α; msg = rank·(1/deg) (0 when deg=0); y = Σ msg·w;
-  * rank ← α + (1−α)·y; changed iff |Δ| > tol. */
-final class PrKernelProgram(alpha: Double, tol: Double) extends KernelProgram {
-  val name = "pagerank"
+  * rank ← α + (1−α)·y; changed iff |Δ| > tol.
+  *
+  * `sources` ([[SourceSemantics]]) gates the message of a source, a
+  * vertex with no in-edge. A gated program keeps a second slot column,
+  * 1.0 when the vertex has an in-edge and 0.0 when it has none: init
+  * sets it, so a resume rebuilds it, and a salted hub's mirror reads
+  * it off the hub broadcast with the rank. `Never`: a source messages
+  * 0 and keeps its out-degree (tcsc_spmspv2.hpp:119-122, 455-460).
+  * `FinalFlush`: the same, then one superstep of the `open` twin, whose
+  * sources message too (vp:423-429, 1282-1317). */
+final class PrKernelProgram private[graph] (alpha: Double, tol: Double,
+    sources: SourceSemantics, open: Boolean = false) extends KernelProgram {
+  val name = sources match {
+    case SourceSemantics.Always => "pagerank"
+    case SourceSemantics.Never => "pagerank-never"
+    case SourceSemantics.FinalFlush => "pagerank-flush"
+  }
   val stationary = true
-  val width = 1
+  val width = if (sources == SourceSemantics.Always) 1 else 2
+  private val gated = width == 2 && !open
   val columns = Seq("rank")
   val combineOp = KernelProgram.Sum
   val edgeOp = KernelProgram.MulW
-  def init(vid: Long, values: Array[Double], base: Int): Boolean = {
-    values(base) = alpha; true
+  def init(vid: Long, hasIn: Boolean, values: Array[Double], base: Int): Boolean = {
+    values(base) = alpha
+    if (width == 2) values(base + 1) = if (hasIn) 1.0 else 0.0
+    true
   }
   def message(vid: Long, values: Array[Double], base: Int, invDeg: Double): Double =
-    values(base) * invDeg
+    if (gated && values(base + 1) == 0.0) 0.0 else values(base) * invDeg
   def apply(values: Array[Double], base: Int, y: Double, iter: Int): Boolean = {
     val nr = alpha + (1.0 - alpha) * y
     val changed = math.abs(nr - values(base)) > tol
     values(base) = nr
     changed
   }
+  override private[graph] def flush: KernelProgram =
+    if (sources == SourceSemantics.FinalFlush && !open)
+      new PrKernelProgram(alpha, tol, sources, open = true)
+    else null
 }
 
 /** Min-label connected components — the reference CC_Program
@@ -142,8 +165,7 @@ final class CcKernelProgram extends KernelProgram {
   val columns = Seq("label")
   val combineOp = KernelProgram.Min
   val edgeOp = KernelProgram.MsgOnly
-  override val requiresExactVids = true
-  def init(vid: Long, values: Array[Double], base: Int): Boolean = {
+  def init(vid: Long, hasIn: Boolean, values: Array[Double], base: Int): Boolean = {
     KernelProgram.checkExactVid(vid, name)
     values(base) = vid.toDouble; true
   }
@@ -165,8 +187,7 @@ final class BfsKernelProgram(root: Long) extends KernelProgram {
   val columns = Seq("parent", "hops")
   val combineOp = KernelProgram.Min
   val edgeOp = KernelProgram.MsgOnly
-  override val requiresExactVids = true
-  def init(vid: Long, values: Array[Double], base: Int): Boolean = {
+  def init(vid: Long, hasIn: Boolean, values: Array[Double], base: Int): Boolean = {
     KernelProgram.checkExactVid(vid, name)
     if (vid == root) { values(base) = vid.toDouble; values(base + 1) = 0.0; true }
     else { values(base) = Double.NaN; values(base + 1) = Double.NaN; false }
@@ -191,7 +212,7 @@ final class SsspKernelProgram(root: Long) extends KernelProgram {
   val columns = Seq("dist")
   val combineOp = KernelProgram.Min
   val edgeOp = KernelProgram.AddW
-  def init(vid: Long, values: Array[Double], base: Int): Boolean =
+  def init(vid: Long, hasIn: Boolean, values: Array[Double], base: Int): Boolean =
     if (vid == root) { values(base) = 0.0; true }
     else { values(base) = Double.NaN; false }
   def message(vid: Long, values: Array[Double], base: Int, invDeg: Double): Double =
@@ -217,7 +238,7 @@ final class DegreeKernelProgram extends KernelProgram {
   val columns = Seq("degree")
   val combineOp = KernelProgram.Sum
   val edgeOp = KernelProgram.MsgOnly
-  def init(vid: Long, values: Array[Double], base: Int): Boolean = {
+  def init(vid: Long, hasIn: Boolean, values: Array[Double], base: Int): Boolean = {
     values(base) = 0.0; true
   }
   def message(vid: Long, values: Array[Double], base: Int, invDeg: Double): Double = 1.0

@@ -154,9 +154,10 @@ object SpmvKernel {
 
   /** What a superstep's two passes read besides their partition: the
     * 0-based superstep number, the active count the previous superstep
-    * left, and whether the state came from init or a checkpoint rather
-    * than from a superstep of this call. */
-  private[graph] final case class Step(iter: Int, active: Long, fresh: Boolean)
+    * left, whether the state came from init or a checkpoint rather
+    * than from a superstep of this call, and whether this is the
+    * program's flush superstep ([[KernelProgram.flush]]). */
+  private[graph] final case class Step(iter: Int, active: Long, fresh: Boolean, flush: Boolean)
 
   final case class KernelResult(state: DataFrame, iterations: Int,
                                 metrics: Seq[IterMetrics], checksum: Double) {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.EdgeListSource
 import graft.graph._
-import graft.algos.{LabelPropagation, TriangleCount}
+import graft.algos.{ConnectedComponents, LabelPropagation, Traversal, TriangleCount}
 
 /** CLI drop-in for the reference's per-algorithm binaries
   * (`bin/{pr,deg,cc,bfs,sssp,tc}` — /root/reference/src/apps/ pr.cpp
@@ -61,7 +61,7 @@ object Apps {
     // cache=<dir> → durable tile cache (CompiledGraphCache): a rerun on
     // the same file loads the compiled graph instead of re-tiling. One
     // subdir per shaping variant — raw (pr/deg/sssp) and the undirected
-    // shapes (cc/bfs) must never share tiles.
+    // shapes (cc/bfs, as the algos define them) must never share tiles.
     def comp(df: org.apache.spark.sql.DataFrame, shape: String) = {
       // weightedness changes the tile layout (weight arrays), so a
       // weighted and an unweighted load of the same file must not
@@ -88,19 +88,14 @@ object Apps {
         g.unpersist()
         Summary("deg", 1, cks(d, "degree"), None, sec, topOf(d, "degree"), Some(d), "degree")
       case "cc" =>
-        val und = GraphShaping.shape(edges,
-          EdgeShaping.undirected(selfLoops = true)).select("src", "dst")
-        val g = comp(und, "und")
+        val g = comp(ConnectedComponents.shape(edges), "und")
         val r = g.run(new CcKernelProgram, maxIters = 0)
         g.unpersist()
         val st = r.state.select(col("vid"), col("label").cast("long").as("label"))
         Summary("cc", r.iterations, cks(st, "label"),
           Some(st.count()), sec, topOf(st, "label"), Some(st), "label")
       case "bfs" =>
-        val und = GraphShaping.shape(edges,
-          EdgeShaping.undirected(selfLoops = false))
-          .select("src", "dst")
-        val g = comp(und, "und-noself")
+        val g = comp(Traversal.bfsShape(edges), "und-noself")
         val r = g.run(new BfsKernelProgram(root), maxIters = 0)
         g.unpersist()
         val st = r.state.select(col("vid"), col("parent").cast("long").as("parent"),

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import graft.ingest._
 import graft.graph._
+import graft.algos.{ConnectedComponents, LabelPropagation}
 
 /** Per-iteration breakdown of the PageRank superstep loop at one
   * parallelism level — the profiling companion to Bench's scaling
@@ -126,11 +127,9 @@ object ScalingProbe {
     // GRAFT_KERNEL_CACHE=<dir> a fingerprint-matching dir loads instead
     // of compiling (warm buildSec ≈ read cost), a miss compiles and
     // saves — the Bench cold/warm pair measures both.
-    def und(selfLoops: Boolean) =
-      GraphShaping.shape(edges, EdgeShaping.undirected(selfLoops)).select("src", "dst")
     val g = algo match {
-      case "lpa" | "lpaf" => compiled(und(selfLoops = false), "lpa-und")
-      case "cc" => compiled(und(selfLoops = true), "cc-und")
+      case "lpa" | "lpaf" => compiled(LabelPropagation.shape(edges), "lpa-und")
+      case "cc" => compiled(ConnectedComponents.shape(edges), "cc-und")
       case _ => compiled(edges, "raw")
     }
     val buildSec = (System.nanoTime() - t0) / 1e9

@@ -57,6 +57,30 @@ class PageRankSpec extends SparkTestBase {
     assertClose(runPr(es, 20), ReferenceOracle.pagerank(es, 20))
   }
 
+  test("Never on the hub→leaves star, where no source has an in-edge: every rank is α") {
+    // the only sender, the hub, is gated: each superstep of the budget
+    // leaves every rank at α, and `iterations` counts them (a
+    // convergence run stops after its first, unchanged superstep)
+    for ((iters, want) <- Seq(20 -> 20, 0 -> 1)) {
+      val r = PageRank.run(edgesDF(Fixtures.star8), parts, maxIters = iters,
+        sources = SourceSemantics.Never)
+      val ranks = r.state.select("vid", "rank").collect()
+        .map(row => row.getLong(0) -> row.getDouble(1)).toMap
+      assert(ranks == (0L to 8L).map(_ -> PageRank.DefaultAlpha).toMap)
+      assert(r.iterations == want)
+    }
+  }
+
+  test("Never and FinalFlush launch no more jobs than Always, plus the one flush superstep") {
+    val es = randomEdges(120, 500, seed = 13)
+    def jobs(mode: SourceSemantics): Int =
+      withJobs(PageRank.run(edgesDF(es), parts, maxIters = 6, sources = mode))._2
+    jobs(SourceSemantics.Always) // warm-up: first-use costs are not a mode's
+    val always = jobs(SourceSemantics.Always)
+    assert(jobs(SourceSemantics.Never) <= always)
+    assert(jobs(SourceSemantics.FinalFlush) <= always + 1)
+  }
+
   test("convergence mode (maxIters=0) reaches tol fixpoint") {
     val es = randomEdges(100, 500, seed = 11)
     val got = runPr(es, 0)

@@ -22,7 +22,7 @@ class AppsSpec extends SparkTestBase {
   }
 
   test("bfs/cc/sssp over a text edge list with comments") {
-    val dir = Files.createTempDirectory("graft-apps").toString
+    val dir = tempDir("graft-apps")
     Files.writeString(java.nio.file.Paths.get(dir, "g.txt"),
       """# path graph 0-1-2-3 plus isolated pair 8-9
         |0 1
@@ -63,7 +63,7 @@ class AppsSpec extends SparkTestBase {
     // cache=<dir>: a second run of the same app loads the tile cache
     // instead of recompiling and must be checksum-identical; a second
     // APP on the same cache root must not collide (per-variant subdirs)
-    val kc = Files.createTempDirectory("graft-apps-kcache").toString
+    val kc = tempDir("graft-apps-kcache")
     val prC1 = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
       weighted = false, cache = Some(kc))
     val prC2 = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
@@ -75,7 +75,7 @@ class AppsSpec extends SparkTestBase {
       weighted = false)
     assert(ccC.checksum == ccPlain.checksum && ccC.reachable == ccPlain.reachable)
 
-    val dir = Files.createTempDirectory("graft-apps-kernel").toString
+    val dir = tempDir("graft-apps-kernel")
     Files.writeString(java.nio.file.Paths.get(dir, "g.txt"),
       """0 1
         |1 2 2

@@ -209,6 +209,19 @@ class CheckpointSpec extends SparkTestBase {
       s"expected the algo-mismatch diagnostic, got: ${e.getMessage}")
   }
 
+  test("resuming PageRank Never from an Always snapshot fails fast") {
+    val g = SpmvKernel.compile(edgesDF(randomEdges(60, 200, seed = 87)), parts)
+    try {
+      val mgr = new CheckpointManager(tempDir("graft-ckpt-pr-mode"), every = 1)
+      g.pagerank(maxIters = 2, ckpt = Some(mgr))
+      val e = intercept[IllegalArgumentException] {
+        g.pagerank(maxIters = 4, ckpt = Some(mgr), sources = SourceSemantics.Never)
+      }
+      assert(e.getMessage.contains("written by algorithm 'pagerank-kernel'"),
+        s"expected the algo-mismatch diagnostic, got: ${e.getMessage}")
+    } finally g.unpersist()
+  }
+
   test("exact-state algorithms resume bit-identically (CC)") {
     val es = randomEdges(200, 400, seed = 57)
     val straight = ConnectedComponents.run(edgesDF(es), parts)

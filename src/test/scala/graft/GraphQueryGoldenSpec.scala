@@ -20,7 +20,7 @@ class GraphQueryGoldenSpec extends SparkTestBase {
   private val expectedClustered = load(GraphQueryRows.clusteredResource)
 
   private lazy val clusteredDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-clustered").toString
+    val dir = suiteTempDir("graft-clustered")
     GraphQueryRows.writeClustered(spark, dir)
     dir
   }

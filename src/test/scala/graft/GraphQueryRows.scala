@@ -55,10 +55,10 @@ object GraphQueryRows {
     val spark = TestSpark.spark
     val clustered = Files.createTempDirectory("graft-clustered").toString
     writeClustered(spark, clustered)
-    Seq(resource -> dataDir, clusteredResource -> clustered).foreach { case (res, dir) =>
+    try Seq(resource -> dataDir, clusteredResource -> clustered).foreach { case (res, dir) =>
       val lines = queries.flatMap(q => render(q, SparkEntry.queries(q)(spark, dir)))
       Files.write(Paths.get(out + res), lines.mkString("", "\n", "\n").getBytes(UTF_8))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(clustered))
     spark.stop()
   }
 }

@@ -124,36 +124,50 @@ class KernelPropertySpec extends SparkTestBase {
   test("a run resumed at a random superstep equals the uninterrupted run (PR, CC, BFS, SSSP, LPA)") {
     // one weighted compile per graph serves all five programs; hubChunk
     // = 4 salts every vertex of degree > 4, so the resume must rebuild
-    // the mirror slots' hub broadcast
+    // the mirror slots' hub broadcast. The gated PageRank modes run on
+    // an unweighted twin compile, where their ranks must also equal
+    // the oracle's, so the resume must rebuild the source gate too.
     val budget = 8
     var salted = 0
+    type Run = (Int, Option[CheckpointManager]) => SpmvKernel.KernelResult
     check(Prop.forAllNoShrink(graphs, Gen.choose(1, budget)) { (es, k) =>
       val wes = es.zipWithIndex.map { case ((s, d), i) => (s, d, 1.0 + i % 7) }
       val g = SpmvKernel.compile(wEdgesDF(wes), parts, hubChunk = 4)
+      val gu = SpmvKernel.compile(edgesDF(es), parts, hubChunk = 4)
       try {
         if (g.mirrorCount > 0) salted += 1
-        val programs: Seq[(Int, Option[CheckpointManager]) => SpmvKernel.KernelResult] = Seq(
-          (n, c) => g.pagerank(n, ckpt = c),
-          (n, c) => g.run(new CcKernelProgram, n, ckpt = c),
-          (n, c) => g.run(new BfsKernelProgram(0L), n, ckpt = c),
-          (n, c) => g.run(new SsspKernelProgram(0L), n, ckpt = c),
-          (n, c) => g.lpa(n, ckpt = c))
-        programs.forall { run =>
+        def gated(mode: SourceSemantics): Run = (n, c) => gu.pagerank(n, ckpt = c, sources = mode)
+        // (program, supersteps it runs after its last snapshot, oracle mode)
+        val programs: Seq[(Run, Int, String)] = Seq(
+          ((n, c) => g.pagerank(n, ckpt = c), 0, null),
+          ((n, c) => g.run(new CcKernelProgram, n, ckpt = c), 0, null),
+          ((n, c) => g.run(new BfsKernelProgram(0L), n, ckpt = c), 0, null),
+          ((n, c) => g.run(new SsspKernelProgram(0L), n, ckpt = c), 0, null),
+          ((n, c) => g.lpa(n, ckpt = c), 0, null),
+          (gated(SourceSemantics.Never), 0, "never"),
+          (gated(SourceSemantics.FinalFlush), 1, "flush"))
+        programs.forall { case (run, flushes, mode) =>
           def outcome(r: SpmvKernel.KernelResult) =
             (r.iterations, collected(r)(_.collect().toSet))
           val straight = outcome(run(budget, None))
           val dir = java.nio.file.Files.createTempDirectory("graft-resume").toFile
           val cm = new CheckpointManager(dir.toString, every = 0)
-          try {
+          val resumes = try {
             val first = run(k, Some(cm))
             Engine.release(first.state)
             val resumed = run(budget, Some(cm))
             // the second call continued from the snapshot, not from init
-            resumed.metrics.map(_.iter) == (first.iterations + 1 to resumed.iterations) &&
+            resumed.metrics.map(_.iter) == (first.iterations - flushes + 1 to resumed.iterations) &&
               outcome(resumed) == straight
           } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+          resumes && (mode == null || {
+            val want = ReferenceOracle.pagerank(es, budget, mode = mode)
+            val got = straight._2.map(x => x.getLong(0) -> x.getDouble(1)).toMap
+            got.keySet == want.keySet &&
+              want.forall { case (v, x) => math.abs(got(v) - x) <= 1e-6 }
+          })
         }
-      } finally g.unpersist()
+      } finally { g.unpersist(); gu.unpersist() }
     }, trials = 10)
     assert(salted > 0, "no generated graph salted a hub — mirrors never exercised")
   }

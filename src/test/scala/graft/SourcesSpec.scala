@@ -9,7 +9,7 @@ import graft.graph.Stats
 class SourcesSpec extends SparkTestBase {
 
   test("text edge list: comments skipped, optional weight, whitespace-split") {
-    val dir = Files.createTempDirectory("graft-el").toString
+    val dir = tempDir("graft-el")
     Files.writeString(java.nio.file.Paths.get(dir, "edges.txt"),
       """# comment line
         |% matrix-market style comment
@@ -26,7 +26,7 @@ class SourcesSpec extends SparkTestBase {
   test("binary round-trip: write LE uint32 records, read back identically") {
     val es = randomEdges(100, 300, seed = 83).map { case (s, d) => (s, d, 1.0) }
     val df = wEdgesDF(es)
-    val f = Files.createTempFile("graft-bin", ".bin").toString
+    val f = tempFile("graft-bin", ".bin")
     EdgeListSource.writeBinary(df, f, weighted = false)
     assert(Files.size(java.nio.file.Paths.get(f)) == 300L * 8)
     val back = EdgeListSource.readBinary(spark, f, weighted = false).collect()
@@ -36,7 +36,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("binary weighted round-trip (12-byte records, reference sssp format)") {
     val es = Seq((1L, 2L, 5.0), (3L, 4L, 9.0))
-    val f = Files.createTempFile("graft-binw", ".bin").toString
+    val f = tempFile("graft-binw", ".bin")
     EdgeListSource.writeBinary(wEdgesDF(es), f, weighted = true)
     assert(Files.size(java.nio.file.Paths.get(f)) == 2L * 12)
     val back = EdgeListSource.readBinary(spark, f, weighted = true).collect()
@@ -46,7 +46,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("converter extras: vid displacement and synthetic weights (reference converter.cpp:81,130)") {
     val es = Seq((1L, 2L, 1.0), (3L, 4L, 1.0), (5L, 6L, 1.0))
-    val f = Files.createTempFile("graft-binx", ".bin").toString
+    val f = tempFile("graft-binx", ".bin")
     EdgeListSource.writeBinary(wEdgesDF(es), f, weighted = true,
       displace = 100L, synthWeightSeed = Some(7L))
     val back = EdgeListSource.readBinary(spark, f, weighted = true).collect()
@@ -55,7 +55,7 @@ class SourcesSpec extends SparkTestBase {
       es.map(e => (e._1 + 100, e._2 + 100)).toSet)
     // synthesized weights land in [1,128] and are seed-deterministic
     assert(back.forall(t => t._3 >= 1.0 && t._3 <= 128.0))
-    val f2 = Files.createTempFile("graft-binx2", ".bin").toString
+    val f2 = tempFile("graft-binx2", ".bin")
     EdgeListSource.writeBinary(wEdgesDF(es), f2, weighted = true,
       displace = 100L, synthWeightSeed = Some(7L))
     assert(java.util.Arrays.equals(
@@ -64,7 +64,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("binary export rejects a vid outside uint32 instead of wrapping it") {
-    val f = Files.createTempFile("graft-bin-range", ".bin").toString
+    val f = tempFile("graft-bin-range", ".bin")
     val neg = intercept[IllegalArgumentException](
       EdgeListSource.writeBinary(wEdgesDF(Seq((0L, 1L, 1.0), (-1L, 2L, 1.0))), f))
     assert(neg.getMessage.contains("vid -1 "), neg.getMessage)
@@ -79,9 +79,9 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("binary export rejects a fractional weight instead of truncating it") {
-    val dir = Files.createTempDirectory("graft-binw-frac").toString
+    val dir = tempDir("graft-binw-frac")
     Files.writeString(java.nio.file.Paths.get(dir, "g.txt"), "0 1 2.5\n1 2 3\n")
-    val f = Files.createTempFile("graft-binw-frac", ".bin").toString
+    val f = tempFile("graft-binw-frac", ".bin")
     val e = intercept[IllegalArgumentException](
       EdgeListSource.writeBinary(EdgeListSource.readText(spark, dir), f, weighted = true))
     assert(e.getMessage.contains("weight 2.5 "), e.getMessage)

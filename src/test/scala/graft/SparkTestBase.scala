@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.commons.io.FileUtils
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession across all suites (getOrCreate). */
@@ -17,25 +23,62 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
 }
 
-abstract class SparkTestBase extends AnyFunSuite {
+abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   lazy val parts: Int = 8
 
-  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+  private val temps = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+  private val suiteTemps = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
 
   /** A fresh temp directory, deleted when the current test ends. */
   def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    tempDirs += d
+    val d = Files.createTempDirectory(prefix).toFile
+    temps += d
+    d.toString
+  }
+
+  /** A fresh empty temp file, deleted when the current test ends. */
+  def tempFile(prefix: String, suffix: String): String = {
+    val f = Files.createTempFile(prefix, suffix).toFile
+    temps += f
+    f.toString
+  }
+
+  /** A fresh temp directory, deleted when the suite ends (for fixtures
+    * that several tests share). */
+  def suiteTempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix).toFile
+    suiteTemps += d
     d.toString
   }
 
   override def withFixture(test: NoArgTest): org.scalatest.Outcome =
     try super.withFixture(test)
     finally {
-      tempDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-      tempDirs.clear()
+      temps.foreach(FileUtils.deleteQuietly)
+      temps.clear()
     }
+
+  override def afterAll(): Unit =
+    try suiteTemps.foreach(FileUtils.deleteQuietly)
+    finally super.afterAll()
+
+  /** `f`'s value and the number of Spark jobs started while it ran
+    * (the suites run one at a time, so these are `f`'s jobs). */
+  def withJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    ListenerBridge.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val v = f
+      ListenerBridge.drain(sc)
+      (v, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   def edgesDF(es: Seq[(Long, Long)]): DataFrame = {
     val s = spark; import s.implicits._

@@ -35,7 +35,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("bounded file-stream window agg equals the batch groupBy") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream")
     val events = Seq(
       (1L, ts(1), "click", 2.5), (2L, ts(3), "click", 1.0),
       (3L, ts(4), "error", 4.0), (4L, ts(59), "click", 0.5))

@@ -2,7 +2,7 @@ package graft
 
 import scala.io.Source
 
-/** Offline result gate for the superstep graph queries: each query's
+/** Offline result gate for the graph queries: each query's
   * collected rows over `perfbench/data/lineitem.parquet` and over the
   * clustered table of [[GraphQueryRows.writeClustered]] equal the
   * checked-in rows (see [[GraphQueryRows]]). PageRank ranks match
@@ -44,6 +44,13 @@ class GraphQueryGoldenSpec extends SparkTestBase {
   test("the resource holds every gated query") {
     assert(expected.keySet == GraphQueryRows.queries.toSet)
     assert(expectedClustered.keySet == GraphQueryRows.queries.toSet)
+  }
+
+  test("q_degree_kernel's checked-in rows equal q_degree_in's") {
+    def rows(e: Map[String, Seq[String]], q: String) = e(q).map(_.split('\t').tail.toSeq)
+    Seq(expected, expectedClustered).foreach { e =>
+      assert(rows(e, "q_degree_kernel") == rows(e, "q_degree_in"))
+    }
   }
 
   GraphQueryRows.queries.foreach { q =>

@@ -4,10 +4,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Collected rows of the six superstep graph queries, in the line
+/** Collected rows of the twelve gated graph queries, in the line
   * format of the checked-in resources: per query a header
   * `@name<TAB>column…`, then one `name<TAB>value…` line per row, each
-  * value as `String.valueOf` prints it. Two inputs are gated: the sf0.01
+  * value as `String.valueOf` prints it. The degree queries have no
+  * ORDER BY, so their lines are sorted. Two inputs are gated: the sf0.01
   * `lineitem` copy in `perfbench/data` (`resource`) and the small
   * clustered table of `writeClustered` (`clusteredResource`).
   *
@@ -19,11 +20,16 @@ object GraphQueryRows {
   val resource = "/graph_query_rows.tsv"
   val clusteredResource = "/graph_query_rows_clustered.tsv"
   val queries = Seq("q_pagerank_top", "q_cc_sizes", "q_lpa",
-    "q_bfs_depths", "q_sssp", "q_sssp_weighted")
+    "q_bfs_depths", "q_sssp", "q_sssp_weighted",
+    "q_degree_in", "q_degree_out", "q_degree_kernel", "q_mode_degree",
+    "q_vertex_classes", "q_triangles")
+  private val unordered = Set("q_degree_in", "q_degree_out", "q_degree_kernel")
 
-  def render(name: String, df: DataFrame): Seq[String] =
+  def render(name: String, df: DataFrame): Seq[String] = {
+    val rows = df.collect().toSeq.map(r => (name +: r.toSeq.map(String.valueOf)).mkString("\t"))
     (("@" + name) +: df.columns.toSeq).mkString("\t") +:
-      df.collect().toSeq.map(r => (name +: r.toSeq.map(String.valueOf)).mkString("\t"))
+      (if (unordered(name)) rows.sorted else rows)
+  }
 
   /** Writes `dir/lineitem.parquet` (one file) whose derived graph —
     * src = l_orderkey, dst = l_partkey, both below 1000 so the queries'

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.SpmvKernel.onKernel
 import graft.algos._
 import graft.ops._
 
@@ -155,6 +154,11 @@ object SparkEntry {
   private val ssspUnweighted: Query = (s, d) => ssspDists(s, edges(s, d))
   private val ssspWeighted: Query = (s, d) => ssspDists(s, weightedEdges(s, d))
 
+  /** In-degree per vertex: the reference's Deg_Program (deg.h:32-52)
+    * is one sum superstep, which the count aggregation computes
+    * directly. */
+  private val degreeIn: Query = (s, d) => Degree.in(edges(s, d))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- scans/aggregations over the driver tables (S-/A-family)
     "q_checksum" -> ((s, d) => read(s, d, "lineitem")
@@ -182,7 +186,7 @@ object SparkEntry {
 
     // ---- graph: degree / filtering / classification (F-family)
     "q_degree_out" -> ((s, d) => Degree.out(edges(s, d))),
-    "q_degree_in" -> ((s, d) => Degree.in(edges(s, d))),
+    "q_degree_in" -> degreeIn,
     "q_vertex_classes" -> ((s, d) => {
       // reference classify_vertices (matrix.hpp:1125-1282): regular =
       // in∩out, source = out-only, sink = in-only. The three class
@@ -209,20 +213,15 @@ object SparkEntry {
     }),
     // Each superstep algorithm has one body on the tile-compiled kernel
     // (graph/SpmvKernel), bound to two names: the original query name
-    // and its `_kernel` name. Both keep their own oracle SQL.
+    // and its `_kernel` name; `q_degree_kernel` is `q_degree_in`. Each
+    // name keeps its own oracle SQL.
     "q_pagerank_top" -> pagerankTop,
     "q_pagerank_kernel" -> pagerankTop,
     "q_cc_kernel" -> ccSizes,
     "q_bfs_kernel" -> bfsDepths,
     "q_sssp_kernel" -> ssspUnweighted,
     "q_ssspw_kernel" -> ssspWeighted,
-    "q_degree_kernel" -> ((s, d) => {
-      // the kernel's degree mode: ONE superstep with messenger ≡ 1 and
-      // sum combine (reference Deg_Program, deg.h:32-52) — checked
-      // against the same SQL as the relational q_degree_in
-      val e = edges(s, d)
-      onKernel(e, graphParts(s, e))(_.inDegrees)
-    }),
+    "q_degree_kernel" -> degreeIn,
     "q_cc_sizes" -> ccSizes,
     "q_lpa" -> lpaTop,
     "q_lpa_kernel" -> lpaTop,

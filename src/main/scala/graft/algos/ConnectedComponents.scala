@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import graft.graph._
-import graft.graph.SpmvKernel.{KernelResult, onKernel}
+import graft.graph.SpmvKernel.{KernelResult, compiled}
 
 /** Connected components = min-label propagation, the reference's
   * CC_Program (src/apps/cc.h) on the kernel's frontier mode
@@ -15,15 +15,15 @@ import graft.graph.SpmvKernel.{KernelResult, onKernel}
   */
 object ConnectedComponents {
 
-  /** The edges CC runs on: the UNDIRECTED closure of `edges`, self-loops
-    * kept (the reference loads CC undirected, cc.cpp:26). */
-  def shape(edges: DataFrame): DataFrame = GraphShaping.undirected(edges, selfLoops = true)
-
-  /** Components of [[shape]]`(edges)`; returns state (vid, label: long,
-    * changed) where label = min vid of the component — exact,
-    * deterministic (north_rule: component assignments exact). */
+  /** Components of the UNDIRECTED closure of `edges`, self-loops kept
+    * (the reference loads CC undirected, cc.cpp:26); returns state
+    * (vid, label: long, changed) where label = min vid of the
+    * component — exact, deterministic (north_rule: component
+    * assignments exact). `cache` is a tile-cache dir
+    * ([[SpmvKernel.compiled]]). */
   def run(edges: DataFrame, parts: Int,
-          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
-    onKernel(shape(edges), parts)(_.run(new CcKernelProgram, maxIters = 0, ckpt = ckpt))
-      .withLongs("label")
+          ckpt: Option[graft.ckpt.CheckpointManager] = None,
+          cache: Option[String] = None): KernelResult =
+    compiled(edges, Shape.Undirected, parts, cache)(
+      _.run(new CcKernelProgram, maxIters = 0, ckpt = ckpt)).withLongs("label")
 }

@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import graft.graph._
-import graft.graph.SpmvKernel.{KernelResult, onKernel}
+import graft.graph.SpmvKernel.{KernelResult, compiled}
 import graft.ckpt.CheckpointManager
 
 /** Synchronous label propagation (community detection) — the
@@ -17,13 +17,13 @@ import graft.ckpt.CheckpointManager
   */
 object LabelPropagation {
 
-  /** The edges LPA runs on. */
-  def shape(edges: DataFrame): DataFrame = GraphShaping.undirected(edges, selfLoops = false)
-
   /** State (vid, label: long, changed). `ckpt` resumes from the latest
     * complete snapshot and saves every `ckpt.every` supersteps plus a
-    * final snapshot, unless that iteration is already on disk. */
+    * final snapshot, unless that iteration is already on disk. `cache`
+    * is a tile-cache dir ([[SpmvKernel.compiled]]). */
   def run(edges: DataFrame, parts: Int, maxIters: Int = 10,
-          ckpt: Option[CheckpointManager] = None): KernelResult =
-    onKernel(shape(edges), parts)(_.lpa(maxIters, ckpt = ckpt)).withLongs("label")
+          ckpt: Option[CheckpointManager] = None,
+          cache: Option[String] = None): KernelResult =
+    compiled(edges, Shape.UndirectedNoSelf, parts, cache)(_.lpa(maxIters, ckpt = ckpt))
+      .withLongs("label")
 }

@@ -1,7 +1,8 @@
 package graft.algos
 
 import org.apache.spark.sql.DataFrame
-import graft.graph.SpmvKernel.{KernelResult, onKernel}
+import graft.graph.Shape
+import graft.graph.SpmvKernel.{KernelResult, compiled}
 
 /** How PageRank treats messages from SOURCE vertices (no in-edges,
   * rank pinned at α). The reference family has three observable
@@ -60,12 +61,14 @@ object PageRank {
     * `FinalFlush` runs `Never`, then one more superstep with the gate
     * open (vp:423-429), which counts as one more iteration. A gated
     * mode checkpoints under its own program name and keeps its
-    * snapshot at the last gated superstep. */
+    * snapshot at the last gated superstep. `cache` is a tile-cache
+    * dir ([[graft.graph.SpmvKernel.compiled]]). */
   def run(edges: DataFrame, parts: Int,
           maxIters: Int = 20,
           alpha: Double = DefaultAlpha,
           tol: Double = DefaultTol,
           sources: SourceSemantics = SourceSemantics.Always,
-          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
-    onKernel(edges, parts)(_.pagerank(maxIters, alpha, tol, ckpt, sources))
+          ckpt: Option[graft.ckpt.CheckpointManager] = None,
+          cache: Option[String] = None): KernelResult =
+    compiled(edges, Shape.Raw, parts, cache)(_.pagerank(maxIters, alpha, tol, ckpt, sources))
 }

@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import graft.graph._
-import graft.graph.SpmvKernel.{KernelResult, onKernel}
+import graft.graph.SpmvKernel.{KernelResult, compiled}
 
 /** BFS and SSSP on the kernel's frontier mode.
   *
@@ -18,18 +18,20 @@ import graft.graph.SpmvKernel.{KernelResult, onKernel}
   *    the distance dropped (sssp.h:58-66). Without a `w` column the
   *    relax is msg + 1, the reference's unweighted fallback. State
   *    (vid, dist, changed); null = unreached.
+  *
+  * `cache` is a tile-cache dir ([[SpmvKernel.compiled]]).
   */
 object Traversal {
 
-  /** The edges BFS runs on (bfs.cpp:26-30). */
-  def bfsShape(edges: DataFrame): DataFrame = GraphShaping.undirected(edges, selfLoops = false)
-
   def bfs(edges: DataFrame, root: Long, parts: Int,
-          ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
-    onKernel(bfsShape(edges), parts)(_.run(new BfsKernelProgram(root), maxIters = 0, ckpt = ckpt))
-      .withLongs("parent", "hops")
+          ckpt: Option[graft.ckpt.CheckpointManager] = None,
+          cache: Option[String] = None): KernelResult =
+    compiled(edges, Shape.UndirectedNoSelf, parts, cache)(
+      _.run(new BfsKernelProgram(root), maxIters = 0, ckpt = ckpt)).withLongs("parent", "hops")
 
   def sssp(edges: DataFrame, root: Long, parts: Int,
-           ckpt: Option[graft.ckpt.CheckpointManager] = None): KernelResult =
-    onKernel(edges, parts)(_.run(new SsspKernelProgram(root), maxIters = 0, ckpt = ckpt))
+           ckpt: Option[graft.ckpt.CheckpointManager] = None,
+           cache: Option[String] = None): KernelResult =
+    compiled(edges, Shape.Raw, parts, cache)(
+      _.run(new SsspKernelProgram(root), maxIters = 0, ckpt = ckpt))
 }

@@ -74,32 +74,6 @@ final class CompiledGraph private[graph] (
     if (mean == 0) 0.0 else counts.max / mean - 1.0
   }
 
-  /** Out-degree per vertex straight off the compiled matrix — no
-    * superstep, no shuffle: every partition owns its source rows
-    * (the reference reuses its compiled matrix for the degree phase
-    * the same way, pr.cpp:40-49). Vertices with no out-edges are
-    * absent, matching algos.Degree.out. */
-  def outDegrees: DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    kernel.mapPartitions { kIt =>
-      val kp = kIt.next()
-      Iterator.range(0, kp.vids.length)
-        .filter(i => kp.deg(i) > 0)
-        .map(i => (kp.vids(i), kp.deg(i)))
-    }.toDF("vid", "degree")
-  }
-
-  /** In-degree via ONE kernel superstep (messenger ≡ 1, sum — the
-    * reference Deg_Program, deg.h:32-52) — the degree mode of the
-    * compiled path. Matches algos.Degree.in. */
-  def inDegrees: DataFrame = {
-    import org.apache.spark.sql.functions._
-    val r = run(new DegreeKernelProgram, maxIters = 1)
-    r.state.filter(col("degree") > 0)
-      .select(col("vid"), col("degree").cast("long").as("degree"))
-  }
-
   /** (kernel partition, slot count) per non-empty partition: the rows
     * `stateDF` emits there, so one snapshot file each. One tiny job at
     * the graph's first checkpoint save. */

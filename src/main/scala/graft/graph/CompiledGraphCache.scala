@@ -61,10 +61,10 @@ object CompiledGraphCache {
     * the frame has no input files (in-memory data — nothing stable to
     * key on; callers then compile unconditionally). `variant` must name
     * any TRANSFORMATION between the files and the compiled frame (e.g.
-    * "und-noself" for an undirected dedup shaping): two different
-    * shapes of the same files must never share a fingerprint. */
+    * [[Shape.variant]]): two different shapes of the same files must
+    * never share a fingerprint. */
   def fingerprint(edges: DataFrame, parts: Int, hubChunk: Long = 0L,
-                  variant: String = "raw"): Option[String] = {
+                  variant: String = Shape.Raw.name): Option[String] = {
     val files = edges.inputFiles
     if (files.isEmpty) None
     else {
@@ -186,7 +186,7 @@ object CompiledGraphCache {
     * fingerprint; otherwise compile and (when fingerprintable) save.
     * The one-line log makes the chosen path auditable in bench runs. */
   def compileOrLoad(edges: DataFrame, parts: Int, dir: String,
-                    hubChunk: Long = 0L, variant: String = "raw"): CompiledGraph = {
+                    hubChunk: Long = 0L, variant: String = Shape.Raw.name): CompiledGraph = {
     val spark = edges.sparkSession
     val fp = fingerprint(edges, parts, hubChunk, variant)
     fp.flatMap(f => load(spark, dir, Some(f))) match {

@@ -38,11 +38,42 @@ object GraphShaping {
     e
   }
 
+}
+
+/** The edge table an algorithm compiles: a transform of the loaded
+  * edges plus the name its tiles are cached under (see
+  * [[SpmvKernel.compiled]]). */
+sealed abstract class Shape(val name: String) {
+  def apply(edges: DataFrame): DataFrame
+
+  /** The tile-cache variant: the shape's name, plus `-w` when the
+    * shaped table has a `w` column (weights change the tile layout). */
+  def variant(shaped: DataFrame): String =
+    if (shaped.columns.contains("w")) s"$name-w" else name
+}
+
+object Shape {
+  /** The edges as loaded (PageRank, SSSP), without the unit `w` column
+    * `GraphShaping.shape` would add. */
+  case object Raw extends Shape("raw") {
+    def apply(edges: DataFrame): DataFrame = edges
+  }
+
   /** The undirected, parallel-edge-deduped closure the reference loads
-    * for CC, BFS and LPA (graph.hpp:266-285), self-loops kept or
-    * dropped, without the unit weight column the kernel's unweighted
-    * programs ignore. */
-  def undirected(edges: DataFrame, selfLoops: Boolean): DataFrame =
-    shape(edges, EdgeShaping(selfLoops = selfLoops, directed = false, parallelEdges = false))
+    * for CC (cc.cpp:26), self-loops kept. */
+  case object Undirected extends Shape("und") {
+    def apply(edges: DataFrame): DataFrame = undirected(edges, selfLoops = true)
+  }
+
+  /** The same closure with self-loops dropped, for BFS (bfs.cpp:26-30)
+    * and LPA. */
+  case object UndirectedNoSelf extends Shape("und-noself") {
+    def apply(edges: DataFrame): DataFrame = undirected(edges, selfLoops = false)
+  }
+
+  // the unweighted programs ignore `w`, so the closure drops it
+  private def undirected(edges: DataFrame, selfLoops: Boolean): DataFrame =
+    GraphShaping.shape(edges,
+      EdgeShaping(selfLoops = selfLoops, directed = false, parallelEdges = false))
       .select("src", "dst")
 }

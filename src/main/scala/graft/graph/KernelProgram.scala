@@ -82,7 +82,7 @@ trait KernelProgram extends Serializable {
 
 object KernelProgram {
   sealed abstract class CombineOp(val identity: Double)
-  /** y += v (PR, Degree). Identity 0. */
+  /** y += v (PR). Identity 0. */
   case object Sum extends CombineOp(0.0)
   /** y = min(y, v) (CC, BFS, SSSP). Identity +∞. */
   case object Min extends CombineOp(Double.PositiveInfinity)
@@ -221,28 +221,5 @@ final class SsspKernelProgram(root: Long) extends KernelProgram {
     if (y == Double.PositiveInfinity) return false
     val old = values(base)
     if (old.isNaN || y < old) { values(base) = y; true } else false
-  }
-}
-
-/** In-degree as one kernel superstep — the reference Deg_Program
-  * (src/apps/deg.h:32-52): messenger ≡ 1, combiner = sum, one
-  * stationary superstep. (Out-degree needs no superstep at all on the
-  * compiled matrix — every partition owns its source rows — and is
-  * served from the compile-time degree array, CompiledGraph
-  * .outDegrees; the reference's PR likewise reuses its compiled
-  * matrix for the degree phase, pr.cpp:40-49.) */
-final class DegreeKernelProgram extends KernelProgram {
-  val name = "degree"
-  val stationary = true
-  val width = 1
-  val columns = Seq("degree")
-  val combineOp = KernelProgram.Sum
-  val edgeOp = KernelProgram.MsgOnly
-  def init(vid: Long, hasIn: Boolean, values: Array[Double], base: Int): Boolean = {
-    values(base) = 0.0; true
-  }
-  def message(vid: Long, values: Array[Double], base: Int, invDeg: Double): Double = 1.0
-  def apply(values: Array[Double], base: Int, y: Double, iter: Int): Boolean = {
-    values(base) = y; false
   }
 }

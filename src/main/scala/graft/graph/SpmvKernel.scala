@@ -9,7 +9,7 @@ import graft.ckpt.IterMetrics
   * (5-virtuals) contract with BOTH execution modes of the reference's
   * app family:
   *
-  *  - STATIONARY SpMV (PR, Degree): every source row of every tile
+  *  - STATIONARY SpMV (PR): every source row of every tile
   *    contributes every superstep (reference csc_spmv.hpp;
   *    vp:688-861);
   *  - NONSTATIONARY SpMSpV (CC, BFS, SSSP): only rows whose vertex
@@ -176,10 +176,17 @@ object SpmvKernel {
 
   type CompiledGraph = graft.graph.CompiledGraph
 
-  /** Compiles `edges` into kernel tiles, runs `f` on them and releases
-    * the tiles; kernel results are materialized on their own. */
-  def onKernel[R](edges: DataFrame, parts: Int)(f: CompiledGraph => R): R = {
-    val g = compile(edges, parts)
+  /** The one entry onto the kernel: compiles `shape(edges)` into
+    * `parts` partitions, runs `f` on the tiles and releases them;
+    * kernel results are materialized on their own. With a `cache` dir
+    * the tiles load from, or are saved to,
+    * `<cache>/<variant>-p<parts>` ([[CompiledGraphCache.compileOrLoad]]). */
+  def compiled[R](edges: DataFrame, shape: Shape, parts: Int,
+                  cache: Option[String] = None)(f: CompiledGraph => R): R = {
+    val shaped = shape(edges)
+    val v = shape.variant(shaped)
+    val g = cache.fold(compile(shaped, parts))(d =>
+      CompiledGraphCache.compileOrLoad(shaped, parts, s"$d/$v-p$parts", variant = v))
     try f(g) finally g.unpersist()
   }
 }

@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.EdgeListSource
-import graft.graph._
-import graft.algos.{ConnectedComponents, LabelPropagation, Traversal, TriangleCount}
+import graft.algos.{ConnectedComponents, Degree, LabelPropagation, PageRank, Traversal,
+  TriangleCount}
 
 /** CLI drop-in for the reference's per-algorithm binaries
   * (`bin/{pr,deg,cc,bfs,sssp,tc}` — /root/reference/src/apps/ pr.cpp
@@ -48,71 +48,47 @@ object Apps {
       .orderBy(desc("v"), asc("vid")).limit(5)
       .collect().toSeq.map(r => (r.getLong(0), r.getDouble(1)))
 
-  /** Every superstep app runs on the tile-compiled SpmvKernel
-    * (graph/SpmvKernel) — the reference likewise runs its whole app
-    * family on compiled kernels (src/singlenode/, vp:1331-1506). `tc`
-    * is a 2-join wedge count, not a superstep loop. */
+  /** Every superstep app runs its `graft.algos` call, which compiles
+    * the edges to the shape that algorithm needs on the tile-compiled
+    * SpmvKernel (graph/SpmvKernel) — the reference likewise runs its
+    * whole app family on compiled kernels (src/singlenode/,
+    * vp:1331-1506). `cache=<dir>` keeps those tiles in a durable
+    * cache, one subdir per shape, so a rerun on the same file loads
+    * them instead of re-tiling. `deg` is a count aggregation and `tc`
+    * a 2-join wedge count, not superstep loops. */
   def run(spark: SparkSession, app: String, file: String, iters: Int,
           root: Long, parts: Int, weighted: Boolean,
           cache: Option[String] = None): Summary = {
     val edges = load(spark, file, weighted)
     val t0 = System.nanoTime()
     def sec: Double = (System.nanoTime() - t0) / 1e9
-    // cache=<dir> → durable tile cache (CompiledGraphCache): a rerun on
-    // the same file loads the compiled graph instead of re-tiling. One
-    // subdir per shaping variant — raw (pr/deg/sssp) and the undirected
-    // shapes (cc/bfs, as the algos define them) must never share tiles.
-    def comp(df: org.apache.spark.sql.DataFrame, shape: String) = {
-      // weightedness changes the tile layout (weight arrays), so a
-      // weighted and an unweighted load of the same file must not
-      // share a variant either
-      val variant = if (df.columns.contains("w")) s"$shape-w" else shape
-      cache match {
-        case Some(d) => CompiledGraphCache.compileOrLoad(df, parts,
-          s"$d/$variant-p$parts", variant = variant)
-        case None => SpmvKernel.compile(df, parts)
-      }
-    }
     app match {
       case "pr" =>
-        val g = comp(edges, "raw")
-        val r = g.pagerank(maxIters = if (iters > 0) iters else 20)
-        g.unpersist()
+        val r = PageRank.run(edges, parts, maxIters = if (iters > 0) iters else 20, cache = cache)
         Summary("pr", r.iterations, r.checksum, None, sec,
           topOf(r.state, "rank"), Some(r.state), "rank")
       case "deg" =>
-        // the kernel's degree phase: out-degrees straight off the
-        // compiled matrix (pr.cpp:40-49) — no superstep needed
-        val g = comp(edges, "raw")
-        val d = g.outDegrees.localCheckpoint(true)
-        g.unpersist()
+        val d = Degree.out(edges)
         Summary("deg", 1, cks(d, "degree"), None, sec, topOf(d, "degree"), Some(d), "degree")
       case "cc" =>
-        val g = comp(ConnectedComponents.shape(edges), "und")
-        val r = g.run(new CcKernelProgram, maxIters = 0)
-        g.unpersist()
-        val st = r.state.select(col("vid"), col("label").cast("long").as("label"))
+        val r = ConnectedComponents.run(edges, parts, cache = cache)
+        val st = r.state.select("vid", "label")
         Summary("cc", r.iterations, cks(st, "label"),
           Some(st.count()), sec, topOf(st, "label"), Some(st), "label")
       case "bfs" =>
-        val g = comp(Traversal.bfsShape(edges), "und-noself")
-        val r = g.run(new BfsKernelProgram(root), maxIters = 0)
-        g.unpersist()
-        val st = r.state.select(col("vid"), col("parent").cast("long").as("parent"),
-          col("hops").cast("long").as("hops"))
+        val r = Traversal.bfs(edges, root, parts, cache = cache)
+        val st = r.state.select("vid", "parent", "hops")
         val reached = st.filter(col("hops").isNotNull)
         Summary("bfs", r.iterations, cks(reached, "hops"),
           Some(reached.count()), sec, topOf(reached, "hops"), Some(st), "hops")
       case "sssp" =>
-        val g = comp(edges, "raw")
-        val r = g.run(new SsspKernelProgram(root), maxIters = 0)
-        g.unpersist()
+        val r = Traversal.sssp(edges, root, parts, cache = cache)
         val reached = r.state.filter(col("dist").isNotNull)
         Summary("sssp", r.iterations, cks(reached, "dist"),
           Some(reached.count()), sec, topOf(reached, "dist"), Some(r.state), "dist")
       case "lpa" =>
         val mi = if (iters > 0) iters else 10
-        val r = LabelPropagation.run(edges, parts, maxIters = mi)
+        val r = LabelPropagation.run(edges, parts, maxIters = mi, cache = cache)
         val st = r.state.select(col("vid"), col("label"))
         Summary("lpa", r.iterations, cks(st, "label"),
           Some(st.select("label").distinct().count()), sec,

@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import graft.ingest._
 import graft.graph._
-import graft.algos.{ConnectedComponents, LabelPropagation}
 
 /** Per-iteration breakdown of the PageRank superstep loop at one
   * parallelism level — the profiling companion to Bench's scaling
@@ -76,12 +75,11 @@ object ScalingProbe {
     val t0 = System.nanoTime()
     // 2nd arg: either a repo count (synthesize) or a parked edge
     // parquet path (read back — same contract as Bench's samples).
-    val edges =
-      if (args.length > 1 && isPath(args(1))) spark.read.parquet(args(1))
-      else {
-        val corpus = RepoCorpus.generate(spark, RepoCorpus.Config(nRepos = nRepos, filesPerRepo = 4))
-        EdgeExtraction.ingest(EdgeExtraction.withSha(corpus))._1
-      }
+    val parked = args.lift(1).filter(isPath)
+    val edges = parked.map(spark.read.parquet(_)).getOrElse {
+      val corpus = RepoCorpus.generate(spark, RepoCorpus.Config(nRepos = nRepos, filesPerRepo = 4))
+      EdgeExtraction.ingest(EdgeExtraction.withSha(corpus))._1
+    }
     val parts = sys.env.get("PROBE_PARTS").map(_.toInt).getOrElse(cores)
     val iters = sys.env.get("PROBE_ITERS").map(_.toInt).getOrElse(10)
     // Every mode runs on the tile-compiled SpmvKernel and is measured
@@ -96,62 +94,45 @@ object ScalingProbe {
     // the 1e-6 convergence criterion.
     val algo = sys.env.getOrElse("PROBE_ALGO", "pr")
 
-    // Round-6: kernel samples on a PARKED table route their compile
-    // through the durable tile cache, one subdir per (shaping variant,
-    // parts) — r5 verdict item 1: the bench's forked JVMs each paid the
-    // full three-shuffle compile (multi-minute at 460M edges / 1 core)
-    // for byte-identical tiles; with the cache the driver's recorded
-    // run (the bench runs warmup + samples) loads in seconds and the
-    // freed wall budget lands the optional samples. The reported loop
-    // metrics are computed fresh every run either way — only the
-    // build phase is cached, exactly like the parked edge tables
-    // themselves. An EXPLICIT GRAFT_KERNEL_CACHE (the bench's
-    // cold/warm cache pair) keeps its flat single-dir contract; the
-    // synthesized-corpus mode has no files to fingerprint and
-    // compiles unconditionally.
-    val parkedPath = if (args.length > 1 && isPath(args(1))) Some(args(1)) else None
-    def compiled(df: org.apache.spark.sql.DataFrame,
-                 variant: String): graft.graph.SpmvKernel.CompiledGraph =
-      sys.env.get("GRAFT_KERNEL_CACHE") match {
-        case Some(d) => graft.graph.CompiledGraphCache.compileOrLoad(
-          df, parts, d, variant = variant)
-        case None => parkedPath match {
-          case Some(p) => graft.graph.CompiledGraphCache.compileOrLoad(
-            df, parts, s"$p.kcache/$variant-p$parts", variant = variant)
-          case None => graft.graph.SpmvKernel.compile(df, parts)
-        }
-      }
-
-    // CC and LPA run on the undirected deduped closure (self-loops kept
-    // for CC, dropped for LPA), PageRank on the raw table. With
-    // GRAFT_KERNEL_CACHE=<dir> a fingerprint-matching dir loads instead
-    // of compiling (warm buildSec ≈ read cost), a miss compiles and
-    // saves — the Bench cold/warm pair measures both.
-    val g = algo match {
-      case "lpa" | "lpaf" => compiled(LabelPropagation.shape(edges), "lpa-und")
-      case "cc" => compiled(ConnectedComponents.shape(edges), "cc-und")
-      case _ => compiled(edges, "raw")
+    // Kernel samples on a PARKED table keep their tiles in a durable
+    // cache next to it, one subdir per (shape, parts): the bench's
+    // forked JVMs would otherwise each pay the full compile
+    // (multi-minute at 460M edges / 1 core) for byte-identical tiles.
+    // The loop metrics are computed fresh every run either way — only
+    // the build phase is cached, like the parked edge tables
+    // themselves. GRAFT_KERNEL_CACHE=<dir> (the bench's cold/warm cache
+    // pair) names the cache root instead; the synthesized-corpus mode
+    // has no files to fingerprint and compiles unconditionally.
+    val cache = sys.env.get("GRAFT_KERNEL_CACHE").orElse(parked.map(_ + ".kcache"))
+    // CC runs on the undirected deduped closure with self-loops, LPA
+    // without them, PageRank on the raw table.
+    val shape = algo match {
+      case "lpa" | "lpaf" => Shape.UndirectedNoSelf
+      case "cc" => Shape.Undirected
+      case _ => Shape.Raw
     }
-    val buildSec = (System.nanoTime() - t0) / 1e9
     val mode = if (algo == "pr") "kernel" else s"kernel-$algo"
-    // mirrors > 0 ⇒ the auto hub-salting engaged (a source owned more
-    // than a quarter-partition of edges); the imbalance field below
-    // then reports the SALTED balance
-    println(f"[probe] mode=$mode cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$buildSec%.1f " +
-      f"exchangeMBPerIter=${g.exchangeDoubles * 8.0 / 1e6}%.1f mirrors=${g.mirrorCount}")
-    val (r, pl) = PhaseListener.measure(spark.sparkContext)(algo match {
-      // "lpaf" = the same LPA with the incremental delta path disabled
-      // (full recount every superstep) — the A/B twin that isolates
-      // what the persistent-counts mode buys
-      case "lpa" | "lpaf" => g.lpa(maxIters = iters, incremental = algo != "lpaf")
-      case "cc" => g.run(new CcKernelProgram, maxIters = 0)
-      // the BASELINE convergence criterion: per-vertex |Δrank| ≤ 1e-6
-      case "conv" => g.pagerank(maxIters = 0, tol = 1e-6)
-      case _ => g.pagerank(maxIters = iters)
-    })
+    val (buildSec, nE, imbalance, r, pl) = SpmvKernel.compiled(edges, shape, parts, cache) { g =>
+      val buildSec = (System.nanoTime() - t0) / 1e9
+      // mirrors > 0 ⇒ the auto hub-salting engaged (a source owned more
+      // than a quarter-partition of edges); the imbalance field below
+      // then reports the SALTED balance
+      println(f"[probe] mode=$mode cores=$cores parts=$parts V=${g.numVertices} E=${g.numEdges} buildSec=$buildSec%.1f " +
+        f"exchangeMBPerIter=${g.exchangeDoubles * 8.0 / 1e6}%.1f mirrors=${g.mirrorCount}")
+      val (r, pl) = PhaseListener.measure(spark.sparkContext)(algo match {
+        // "lpaf" = the same LPA with the incremental delta path disabled
+        // (full recount every superstep) — the A/B twin that isolates
+        // what the persistent-counts mode buys
+        case "lpa" | "lpaf" => g.lpa(maxIters = iters, incremental = algo != "lpaf")
+        case "cc" => g.run(new CcKernelProgram, maxIters = 0)
+        // the BASELINE convergence criterion: per-vertex |Δrank| ≤ 1e-6
+        case "conv" => g.pagerank(maxIters = 0, tol = 1e-6)
+        case _ => g.pagerank(maxIters = iters)
+      })
+      (buildSec, g.numEdges, g.edgeImbalance, r, pl)
+    }
     r.metrics.foreach(m => println(s"[probe] iter=${m.iter} wallMs=${m.wallMs} active=${m.activeVertices}"))
-    val (nE, rIters, iterWalls) = (g.numEdges, r.iterations, r.metrics.map(_.wallMs))
-    val imbalance = g.edgeImbalance
+    val (rIters, iterWalls) = (r.iterations, r.metrics.map(_.wallMs))
 
     val loopSec = iterWalls.sum / 1000.0
     val sorted = iterWalls.sorted

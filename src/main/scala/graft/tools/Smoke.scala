@@ -31,10 +31,23 @@ object Smoke {
     println(s"[smoke] corpus files=${withSha.count()} repos=${dict.count()} " +
       s"edges=${edges.count()} shaViolations=$shaViolations")
 
-    val g = SpmvKernel.compile(edges, parts = 8)
-    println(s"[smoke] compiled: V=${g.numVertices} E=${g.numEdges} parts=${g.parts}")
-
-    val pr = g.pagerank(maxIters = 20)
+    // checkpoint + resume: 10 iters with a snapshot at 5, then resume
+    // to 10; the balance audit is max/mean − 1 of per-partition edges
+    // (the reference flags > 0.2, matrix.hpp:614-626)
+    val dir = java.nio.file.Files.createTempDirectory("graft-smoke-ckpt").toString
+    val (pr, imbalance) = SpmvKernel.compiled(edges, Shape.Raw, parts = 8) { g =>
+      println(s"[smoke] compiled: V=${g.numVertices} E=${g.numEdges} parts=${g.parts}")
+      val pr = g.pagerank(maxIters = 20)
+      val mgr5 = new CheckpointManager(dir, every = 5)
+      g.pagerank(maxIters = 5, ckpt = Some(mgr5))
+      val resumed = g.pagerank(maxIters = 10, ckpt = Some(mgr5))
+      val straight = g.pagerank(maxIters = 10)
+      val maxDelta = resumed.state.select(col("vid"), col("rank").as("r1"))
+        .join(straight.state.select(col("vid"), col("rank").as("r2")), "vid")
+        .agg(coalesce(max(abs(col("r1") - col("r2"))), lit(0.0))).head.getDouble(0)
+      println(s"[smoke] resume-vs-straight maxDelta=$maxDelta (snapshot at iter 5, dir=$dir)")
+      (pr, g.edgeImbalance)
+    }
     val top = pr.state.select("vid", "rank").orderBy(desc("rank")).limit(3)
       .collect().map(r => s"${r.getLong(0)}:${"%.4f".format(r.getDouble(1))}").mkString(", ")
     println(s"[smoke] pagerank: iters=${pr.iterations} checksum=${pr.checksum} top3=[$top]")
@@ -48,26 +61,11 @@ object Smoke {
     val tc = TriangleCount.count(edges, parts = 8)
     println(s"[smoke] triangles=$tc")
 
-    // checkpoint + resume: 10 iters with a snapshot at 5, then resume to 10
-    val dir = java.nio.file.Files.createTempDirectory("graft-smoke-ckpt").toString
-    val mgr5 = new CheckpointManager(dir, every = 5)
-    g.pagerank(maxIters = 5, ckpt = Some(mgr5))
-    val resumed = g.pagerank(maxIters = 10, ckpt = Some(mgr5))
-    val straight = g.pagerank(maxIters = 10)
-    val maxDelta = resumed.state.select(col("vid"), col("rank").as("r1"))
-      .join(straight.state.select(col("vid"), col("rank").as("r2")), "vid")
-      .agg(coalesce(max(abs(col("r1") - col("r2"))), lit(0.0))).head.getDouble(0)
-    println(s"[smoke] resume-vs-straight maxDelta=$maxDelta (snapshot at iter 5, dir=$dir)")
-
-    // sources + stats + balance: binary round-trip through the
-    // reference's record format, checksum/summary sinks, skew audit
-    // (max/mean − 1 of per-partition edges; the reference flags > 0.2,
-    // matrix.hpp:614-626)
+    // sources + stats: binary round-trip through the reference's
+    // record format, checksum/summary sinks
     val binPath = java.nio.file.Files.createTempFile("graft-smoke", ".bin").toString
     graft.sources.EdgeListSource.writeBinary(edges.limit(1000), binPath)
     val back = graft.sources.EdgeListSource.readBinary(spark, binPath).count()
-    val imbalance = g.edgeImbalance
-    g.unpersist()
     val summ = graft.graph.Stats.summary(pr.state, "rank").head()
     println(s"[smoke] binary round-trip rows=$back; balance imbalance=${"%.3f".format(imbalance)} " +
       s"breached=${imbalance > 0.2}; rank mean=${"%.4f".format(summ.getAs[Double]("mean"))} " +

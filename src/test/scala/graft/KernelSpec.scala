@@ -240,20 +240,6 @@ class KernelSpec extends SparkTestBase {
     assert(once() == once())
   }
 
-  test("degree modes: compiled out-degrees and one-superstep in-degrees match the relational path") {
-    val es = randomEdges(120, 700, seed = 113) ++ Seq((5L, 5L), (5L, 5L)) // parallel self-loops count
-    val g = SpmvKernel.compile(edgesDF(es), parts)
-    val gotOut = g.outDegrees.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    val gotIn = g.inDegrees.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    g.unpersist()
-    val wantOut = graft.algos.Degree.out(edgesDF(es)).collect()
-      .map(x => (x.getLong(0), x.getLong(1))).toSet
-    val wantIn = graft.algos.Degree.in(edgesDF(es)).collect()
-      .map(x => (x.getLong(0), x.getLong(1))).toSet
-    assert(gotOut == wantOut)
-    assert(gotIn == wantIn)
-  }
-
   test("compile audit: V/E counts and bounded imbalance on a skewed graph") {
     val es = randomEdges(300, 4000, seed = 99)
     val g = SpmvKernel.compile(edgesDF(es), parts)
@@ -300,11 +286,6 @@ class KernelSpec extends SparkTestBase {
           if (x.isNullAt(1)) -1.0 else x.getDouble(1),
           if (x.isNullAt(2)) -1.0 else x.getDouble(2))).toSet
       assert(bfs(flat) == bfs(salted), "BFS diverged under salting")
-
-      // degree family: integer-valued sums → exact
-      def indeg(g: SpmvKernel.CompiledGraph) = g.inDegrees.collect()
-        .map(x => x.getLong(0) -> x.getLong(1)).toMap
-      assert(indeg(flat) == indeg(salted), "in-degrees diverged under salting")
 
       // multiset combiner (LPA): integer counts → labels AND iterations exact
       def lpa(g: SpmvKernel.CompiledGraph) = {

@@ -320,20 +320,25 @@ object SparkEntry {
     // planted #/% comment file the scan must skip) → fixed-width LE
     // binary via the converter → binary reader → order-independent
     // checksum aggregate. Any corruption anywhere in the chain moves
-    // a sum.
+    // a sum. The one-row result is collected before the work dir is
+    // deleted.
     "q_edgelist_roundtrip" -> ((s, d) => {
       val e = weightedEdges(s, d)
-      val work = java.nio.file.Files.createTempDirectory("graft-el").toString
-      sources.EdgeListSource.writeText(e, s"$work/text")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$work/text/zz-comments.txt"),
-        "# generated edge list\n% matrix-market style comment\n\n")
-      val t = sources.EdgeListSource.readText(s, s"$work/text")
-      sources.EdgeListSource.writeBinary(t, s"$work/edges.bin", weighted = true)
-      val b = sources.EdgeListSource.readBinary(s, s"$work/edges.bin", weighted = true)
-      b.agg(count(lit(1)).as("n_edges"),
-        sum(col("src")).as("sum_src"), sum(col("dst")).as("sum_dst"),
-        round(sum(col("w")), 2).as("sum_w"))
+      val dir = java.nio.file.Files.createTempDirectory("graft-el")
+      val work = dir.toString
+      try {
+        sources.EdgeListSource.writeText(e, s"$work/text")
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$work/text/zz-comments.txt"),
+          "# generated edge list\n% matrix-market style comment\n\n")
+        val t = sources.EdgeListSource.readText(s, s"$work/text")
+        sources.EdgeListSource.writeBinary(t, s"$work/edges.bin", weighted = true)
+        val b = sources.EdgeListSource.readBinary(s, s"$work/edges.bin", weighted = true)
+        val sums = b.agg(count(lit(1)).as("n_edges"),
+          sum(col("src")).as("sum_src"), sum(col("dst")).as("sum_dst"),
+          round(sum(col("w")), 2).as("sum_w"))
+        s.createDataFrame(java.util.Arrays.asList(sums.collect(): _*), sums.schema)
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }),
 
     // ---- streaming end-to-end: the windowed event aggregation run as

@@ -41,15 +41,18 @@ object LinkStream {
     // a single-FILE parquet source trips the file-stream's partition
     // inference ("Option 'basePath' must be a directory"); FileStream
     // wants a directory (or glob) — stream a temp dir holding a
-    // symlink to the file instead
+    // symlink to the file instead, deleted once the query has run (the
+    // memory sink holds the rows)
     val p = java.nio.file.Paths.get(path)
-    val srcPath =
-      if (java.nio.file.Files.isRegularFile(p)) {
+    val linkDir =
+      if (!java.nio.file.Files.isRegularFile(p)) None
+      else {
         val d = java.nio.file.Files.createTempDirectory("graft-stream-src")
         java.nio.file.Files.createSymbolicLink(
           d.resolve(p.getFileName.toString), p.toAbsolutePath)
-        d.toString
-      } else path
+        Some(d)
+      }
+    val srcPath = linkDir.fold(path)(_.toString)
     // a previous run's memory-sink view would collide on re-use of the
     // same sink name within one session
     spark.catalog.dropTempView(sinkName)
@@ -57,7 +60,7 @@ object LinkStream {
     // across micro-batch carve-ups, so the streamed total is exactly
     // the batch oracle's total by construction (a double sum's value
     // depends on accumulation order)
-    val q = spark.readStream.schema(schema).parquet(srcPath)
+    try spark.readStream.schema(schema).parquet(srcPath)
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), "1 hour"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -68,7 +71,8 @@ object LinkStream {
       .queryName(sinkName)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
+    finally linkDir.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
     // 1-hour tumbling windows are epoch-aligned, so window.start is
     // exactly date_trunc('hour', ts) — flat, oracle-friendly shape
     spark.table(sinkName).select(

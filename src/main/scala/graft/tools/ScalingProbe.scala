@@ -24,40 +24,32 @@ object ScalingProbe {
     //  - CSR cache uncompressed + 64k-row batches: the adjacency is
     //    re-scanned every superstep; decompression and per-batch
     //    overhead dominate the gather (7.0s → 6.4s/iter).
-    // -D system properties still win (sys.props lookup) for
-    // experiments.
-    def tuned(k: String, dflt: String) = sys.props.getOrElse(k, dflt)
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-probe-$cores")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("PROBE_AQE", "true"))
-      .config("spark.shuffle.compress", tuned("spark.shuffle.compress", "false"))
-      .config("spark.shuffle.spill.compress", tuned("spark.shuffle.spill.compress", "false"))
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        tuned("spark.sql.inMemoryColumnarStorage.compressed", "false"))
-      .config("spark.sql.inMemoryColumnarStorage.batchSize",
-        tuned("spark.sql.inMemoryColumnarStorage.batchSize", "65536"))
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.shuffle.compress", "false")
+      .config("spark.shuffle.spill.compress", "false")
+      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+      .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
       // vectorized first-level agg hash map: the superstep's dst-keyed
       // aggregation probes a multi-million-key map per task; the
       // columnar layout cuts per-probe DRAM traffic (measured
       // 8.6→7.6 s/iter at 32c/115M, −12% at 8c, −3% at 2c — gains
       // grow with core count because the bus is the contended
       // resource). Off by default in Spark; safe for this plan shape.
-      .config("spark.sql.codegen.aggregate.map.vectorized.enable",
-        tuned("spark.sql.codegen.aggregate.map.vectorized.enable", "true"))
+      .config("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
       // Kryo: fast primitive/array paths for the kernel's RDD-level
       // shuffles (Java object streams were measured 10-20× the
       // kernel's compute time on the packed-accumulator exchange)
-      .config("spark.serializer",
-        tuned("spark.serializer", "org.apache.spark.serializer.KryoSerializer"))
+      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // Force the sort-based shuffle writer: the bypass-merge writer
       // (default below 200 partitions) opens P files per map task —
       // P² file opens per superstep, measured 3× the whole iteration
       // on this VM's virtio disk. A production cluster runs with
       // >200 partitions where the sort writer is the default anyway.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        tuned("spark.shuffle.sort.bypassMergeThreshold", "1"))
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       // long superstep loops produce one ~E-sized shuffle per
       // iteration; ContextCleaner only reaps the files after a driver
       // GC notices the dropped references (default periodic GC 30min —
@@ -66,8 +58,7 @@ object ScalingProbe {
       // the launcher's -XX:+ExplicitGCInvokesConcurrent makes that
       // firing a concurrent cycle, not the 6 s stop-the-world full
       // collection that was spiking one random superstep per run.
-      .config("spark.cleaner.periodicGC.interval",
-        tuned("spark.cleaner.periodicGC.interval", "120s"))
+      .config("spark.cleaner.periodicGC.interval", "120s")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -80,7 +71,7 @@ object ScalingProbe {
       val corpus = RepoCorpus.generate(spark, RepoCorpus.Config(nRepos = nRepos, filesPerRepo = 4))
       EdgeExtraction.ingest(EdgeExtraction.withSha(corpus))._1
     }
-    val parts = sys.env.get("PROBE_PARTS").map(_.toInt).getOrElse(cores)
+    val parts = cores
     val iters = sys.env.get("PROBE_ITERS").map(_.toInt).getOrElse(10)
     // Every mode runs on the tile-compiled SpmvKernel and is measured
     // with the PhaseListener, so the probe reports the reference's

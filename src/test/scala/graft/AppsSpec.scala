@@ -40,6 +40,34 @@ class AppsSpec extends SparkTestBase {
     assert(sp.reachable.contains(4L) && sp.checksum == 0 + 1 + 3 + 4)
   }
 
+  test("cache=<dir>: a rerun loads the tiles, one subdir per shape, results equal the uncached run") {
+    val dir = tempDir("graft-apps-cache")
+    val r = new scala.util.Random(7)
+    val lines = (0 until 600).map(_ => s"${r.nextInt(150)} ${r.nextInt(150)} ${1 + r.nextInt(5)}")
+    Files.writeString(java.nio.file.Paths.get(dir, "g.txt"),
+      ("# weighted random graph" +: lines).mkString("", "\n", "\n"))
+    val file = s"$dir/g.txt"
+    val kc = s"$dir/kcache"
+    def app(name: String, cache: Option[String]) =
+      Apps.run(spark, name, file, iters = 0, root = 3, parts, weighted = false, cache = cache)
+
+    val (cold, coldJobs) = withJobs(app("pr", Some(kc)))
+    val (warm, warmJobs) = withJobs(app("pr", Some(kc)))
+    assert(warmJobs < coldJobs, s"warm run took $warmJobs jobs, cold $coldJobs")
+    assert(warm.checksum == cold.checksum)
+
+    val apps = Seq("pr", "cc", "bfs", "sssp", "lpa")
+    apps.foreach { name =>
+      val (c, u) = (app(name, Some(kc)), app(name, None))
+      assert((c.iterations, c.checksum, c.reachable, c.top) ==
+        (u.iterations, u.checksum, u.reachable, u.top), name)
+    }
+    // a text load carries `w`, so the raw shape is cached as `raw-w`;
+    // the undirected shapes drop it; bfs and lpa share one shape
+    val subdirs = new java.io.File(kc).list().toSet
+    assert(subdirs == Set(s"raw-w-p$parts", s"und-p$parts", s"und-noself-p$parts"), subdirs)
+  }
+
   test("pr/deg against the oracle on the sample binary, cache=<dir> reruns, and bfs/cc/sssp/lpa checksums on a text graph") {
     assume(Files.exists(java.nio.file.Paths.get(sampleBin)))
     // PageRank against the in-memory oracle on the same records: same

@@ -15,8 +15,10 @@ import graft.graph.TilePacks._
 
 /** Compiled graph handle: `run` any [[KernelProgram]] (or the
   * `pagerank` convenience) any number of times; call `unpersist()`
-  * when done with the graph. Construct via [[SpmvKernel.compile]] or
-  * [[CompiledGraphCache.compileOrLoad]]. */
+  * when done with the graph. Callers outside `graft.graph` reach it
+  * through [[SpmvKernel.compiled]], which builds it with
+  * [[SpmvKernel.compile]] or [[CompiledGraphCache.compileOrLoad]] and
+  * releases it. */
 final class CompiledGraph private[graph] (
     private[graph] val kernel: RDD[KernelPartition],
     val spark: SparkSession,

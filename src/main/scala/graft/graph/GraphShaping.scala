@@ -37,7 +37,6 @@ object GraphShaping {
     if (!f.parallelEdges) e = e.dropDuplicates("src", "dst")
     e
   }
-
 }
 
 /** The edge table an algorithm compiles: a transform of the loaded
